@@ -41,6 +41,11 @@ from concurrent import futures
 from pathlib import Path
 
 from pyspark.rdd import RDD
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from .catalog import table
+from .registry import register
 
 #: The one tokenizer definition the wordcount-family oracles pin.
 #: Python ``str.split()`` splits on ALL Unicode whitespace (NBSP, U+2028,
@@ -71,11 +76,6 @@ def _wait_pool() -> futures.ThreadPoolExecutor:
             max_workers=8, thread_name_prefix="mrs-wait"
         )
     return _WAIT_POOL
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from .catalog import table
-from .registry import register
 
 # ---------------------------------------------------------------------------
 # Partition functions (parity: mrs hash_partition / mod_partition /
@@ -259,9 +259,14 @@ class Job:
             ),
             preservesPartitioning=True,
         )
+        ds = Dataset(reduced, n)
         if outdir is not None:
+            # the save fills the cache, so a later wait or collect reads
+            # it instead of running the reducer again
+            reduced.cache()
             reduced.map(lambda kv: f"{kv[0]}\t{kv[1]}").saveAsTextFile(outdir)
-        return Dataset(reduced, n)
+            ds._materialized = True
+        return ds
 
     def reduce_data_sorted(
         self,
@@ -354,32 +359,20 @@ class Job:
                     ds._future = None
         return [ds for ds in datasets if ds._materialized]
 
-    def _count_in_group(self, rdd: RDD, group: str) -> int:
-        """Run the materializing action under a job group (pool thread).
+    def _count_in_group(self, rdd: RDD, group: str) -> None:
+        """Fill the dataset's cache under its own job group and FAIR pool.
 
-        PySpark job groups are thread-local, so tagging inside the worker
-        thread scopes exactly this dataset's action — the handle
-        ``progress`` uses to find its tasks in the status tracker.
-
-        The scheduler POOL is set per dataset too. Measured on this
-        stack (fresh JVMs, 2x16 one-second tasks on 8 slots, second job
-        submitted 50 ms later): scheduler.mode=FIFO completes ZERO
-        second-job tasks before the first drains (true starvation);
-        FAIR completes 4 — slots split evenly once the first wave
-        frees — with or without this pool property. The per-dataset
-        pool is still set because it is the documented contract for
-        fair sharing across concurrently-submitted jobs (equal-weight
-        pools, created on first reference); relying on the default
-        pool's measured-but-unspecified internal behavior would couple
-        Job.wait's semantics to a scheduler implementation detail.
-        tests/test_mapreduce.py::test_fair_scheduler_concurrent_wait_
-        and_progress pins the sharing with a threshold (>= 3/16) that
-        the measured FIFO behavior (0/16) cannot reach.
+        Job groups are thread-local, so tagging inside the pool thread
+        scopes exactly this action for ``progress``, and the per-dataset
+        pool lets concurrent waits share slots. The count runs on the JVM
+        side of the cached PythonRDD: the one Python pass that computes
+        each partition fills the cache, where PySpark's ``RDD.count()``
+        would run a second Python pass over every cached partition.
         """
         self.sc.setJobGroup(group, "mrs dataset materialization")
         self.sc.setLocalProperty("spark.scheduler.pool", group)
         try:
-            return rdd.count()
+            rdd._jrdd.count()
         finally:
             self.sc.setJobGroup("", "")
             self.sc.setLocalProperty("spark.scheduler.pool", None)
@@ -459,9 +452,11 @@ class IterativeMR:
     scale="""
     Runs the reference's actual pipeline: generator map, map-side combine
     (shrinks the shuffle from one pair per word occurrence to one per
-    distinct word per partition), hash shuffle, sort-group reduce. The
-    DataFrame twin of this plan (explode+groupBy) is what production code
-    should use — see bench.py for the measured gap.
+    distinct word per partition), hash shuffle, sort-group reduce. Splits
+    follow the session (``sc.defaultParallelism``), so the task count
+    tracks its slots. The DataFrame twin of this plan (explode+groupBy)
+    is what production code should use — see bench.py for the measured
+    gap.
     """,
 )
 def reduce_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -470,10 +465,10 @@ def reduce_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     program = WordCount()
     docs = table(spark, sf_dir, "documents")
-    job = Job(spark, default_splits=8)
+    job = Job(spark)
     ds0 = job.dataframe_data(docs, "doc_id", "text")
     ds1 = job.map_data(ds0, program.map, combiner=program.combine)
-    ds2 = job.reduce_data(ds1, program.reduce, splits=8)
+    ds2 = job.reduce_data(ds1, program.reduce)
     return spark.createDataFrame(ds2.rdd, "word string, cnt long")
 
 
@@ -500,7 +495,7 @@ def mr_reducemap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     program = WordCount()
     docs = table(spark, sf_dir, "documents")
-    job = Job(spark, default_splits=8)
+    job = Job(spark)
     ds0 = job.dataframe_data(docs, "doc_id", "text")
     ds1 = job.map_data(ds0, program.map, combiner=program.combine)
     # fused: reduce per word, immediately re-key by first letter
@@ -508,9 +503,8 @@ def mr_reducemap(spark: SparkSession, sf_dir: str) -> DataFrame:
         ds1,
         program.reduce,
         lambda word, count: iter([(word[:1], count)]),
-        splits=8,
     )
-    ds3 = job.reduce_data(ds2, program.reduce, splits=4)
+    ds3 = job.reduce_data(ds2, program.reduce)
     return spark.createDataFrame(ds3.rdd, "letter string, total long")
 
 
@@ -532,7 +526,7 @@ def mr_reducemap(spark: SparkSession, sf_dir: str) -> DataFrame:
 def mr_map_only(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grep-style map-only job through the parity layer."""
     docs = table(spark, sf_dir, "documents")
-    job = Job(spark, default_splits=8)
+    job = Job(spark)
     ds0 = job.dataframe_data(docs, "doc_id", "text")
     ds1 = job.map_data(
         ds0,
@@ -605,12 +599,12 @@ def mr_secondary_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         F.struct("ts_ns", "event_id", "event_type").alias("v"),
     )
-    job = Job(spark, default_splits=8)
+    job = Job(spark)
     ds0 = Dataset(
         pairs.rdd.map(lambda r: (r[0], (r[1][0], r[1][1], r[1][2]))),
         pairs.rdd.getNumPartitions(),
     )
-    ds1 = job.reduce_data_sorted(ds0, _session_reduce, splits=8)
+    ds1 = job.reduce_data_sorted(ds0, _session_reduce)
     flat = ds1.rdd.map(
         lambda kv: (kv[0], kv[1][0], kv[1][1], kv[1][2], kv[1][3])
     )

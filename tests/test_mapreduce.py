@@ -80,6 +80,70 @@ def test_file_data_and_sink(spark, tmp_path):
     assert sorted(lines) == ["hello\t2", "spark\t1", "world\t1"]
 
 
+def test_reduce_data_outdir_runs_reducer_once(spark, tmp_path):
+    """The save to ``outdir`` fills the cache, so a later wait and collect
+    read it instead of running the reducer again."""
+    calls = spark.sparkContext.accumulator(0)
+
+    def reducer(key, values):
+        calls.add(1)
+        yield sum(values)
+
+    job = Job(spark, default_splits=2)
+    ds0 = job.local_data([(0, "a b a"), (1, "b c")], splits=2)
+    ds1 = job.map_data(ds0, WordCount().map)
+    ds2 = job.reduce_data(ds1, reducer, splits=2, outdir=str(tmp_path / "out"))
+    assert job.wait(ds2) == [ds2]
+    assert job.progress(ds2) == 1.0
+    assert dict(ds2.collect()) == {"a": 2, "b": 2, "c": 1}
+    assert calls.value == 3
+
+
+def _load_pso_example():
+    import importlib.util
+    from pathlib import Path
+
+    path = Path(__file__).resolve().parent.parent / "examples/pso.py"
+    spec = importlib.util.spec_from_file_location("pso", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_wait_materializes_without_python_count(spark, monkeypatch):
+    """``Job.wait`` fills the cache with a JVM-side count: with PySpark's
+    ``RDD.count`` unusable, a 3-generation PSO on ``Job`` still matches
+    its ``BypassJob`` twin."""
+    from pyspark import RDD
+
+    from mrs_mapreduce_spark.mockparallel import make_job
+
+    def no_python_count(self):
+        raise AssertionError("RDD.count() runs a second Python pass")
+
+    monkeypatch.setattr(RDD, "count", no_python_count)
+    pso = _load_pso_example()
+    results = []
+    for job in (make_job("spark", spark, default_splits=4), make_job("bypass")):
+        program = pso.PsoProgram(job, n_particles=16)
+        assert IterativeMR(program).run(job, max_iterations=3) == 3
+        results.append((program.best, program.gbest_pos, sorted(program.state)))
+    assert results[0] == results[1]
+
+
+def test_parity_query_splits_follow_session(spark, sf_dir, monkeypatch):
+    """The registered parity queries take ``Job``'s default splits, so
+    their task count follows the session's slots."""
+    from pyspark import SparkContext
+
+    from mrs_mapreduce_spark.mapreduce import reduce_sum
+
+    df = reduce_sum(spark, sf_dir)
+    assert df.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    monkeypatch.setattr(SparkContext, "defaultParallelism", property(lambda _: 3))
+    assert reduce_sum(spark, sf_dir).rdd.getNumPartitions() == 3
+
+
 def test_monte_carlo_pi(spark):
     """The paper's benchmark family: deterministic seeded pi estimate."""
     job = Job(spark, default_splits=2)
@@ -201,13 +265,7 @@ def test_reduce_data_sorted_orders_values(spark):
 def test_pso_example_converges_deterministically(spark):
     """The reference's flagship workload (PSO via IterativeMR): the swarm
     must improve on its initial best and two runs must agree exactly."""
-    import importlib.util
-    from pathlib import Path
-
-    path = Path(__file__).resolve().parent.parent / "examples/pso.py"
-    spec = importlib.util.spec_from_file_location("pso", path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    mod = _load_pso_example()
     start, best, iters = mod.run(spark, n_particles=16, generations=6)
     assert best < start
     assert 1 <= iters <= 6
