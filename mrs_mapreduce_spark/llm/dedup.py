@@ -131,7 +131,12 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation collapses them for free, so a pre-dedup would only add a
     full extra shuffle of the widest intermediate.
     """
-    return _minhash_sig(table(spark, sf_dir, "documents"))
+    return _sig_wide(table(spark, sf_dir, "documents")).select(
+        "doc_id",
+        F.posexplode(
+            F.array(*[F.col(f"h{i}") for i in range(_SEEDS)])
+        ).alias("seed", "minhash"),
+    )
 
 
 def _sig_wide(d: DataFrame) -> DataFrame:
@@ -153,30 +158,12 @@ def _sig_wide(d: DataFrame) -> DataFrame:
     )
 
 
-def _sig_long(sig_wide: DataFrame) -> DataFrame:
-    """Wide signature -> the declared (doc_id, seed, minhash) format."""
-    return sig_wide.select(
-        "doc_id",
-        F.posexplode(
-            F.array(*[F.col(f"h{i}") for i in range(_SEEDS)])
-        ).alias("seed", "minhash"),
-    )
-
-
-def _minhash_sig(d: DataFrame) -> DataFrame:
-    """dedup_minhash's signature pipeline over an arbitrary (doc_id, text)
-    frame — shared with the collapsed-edge components path, which runs it
-    over one representative per distinct content instead of the corpus."""
-    return _sig_long(_sig_wide(d))
-
-
 def _bands_of(sig_wide: DataFrame) -> DataFrame:
     """(doc_id, band, band_key) derived from the WIDE signature row by a
     pure projection — the seed-ordered minhashes of band b are columns
     h_{4b}..h_{4b+3}, so the band key (md5 of their ','-joined decimal
-    strings) needs NO groupBy: this produces byte-identical keys to
-    ``_band_keys`` over the long format while removing one full shuffle
-    (+ a per-group sort) from every banding consumer (r12)."""
+    strings, the oracle's ``string_agg ... ORDER BY seed``) needs no
+    groupBy and no per-group sort."""
     entries = F.array(
         *[
             F.struct(
@@ -247,9 +234,9 @@ def _bands_of(sig_wide: DataFrame) -> DataFrame:
     candidates only. At 100 TB the band join is the only shuffle touching
     all docs, and its key is a 16-byte hash; skewed buckets (boilerplate
     docs) are AQE-split, and a bucket-size cap (drop buckets > B members
-    as boilerplate) bounds the quadratic verify stage. r6: exact-copy
-    mass is collapsed to one representative per distinct text BEFORE the
-    LSH pipeline and results expand back through the family relation
+    as boilerplate) bounds the quadratic verify stage. Exact-copy mass
+    is collapsed to one representative per distinct text BEFORE the LSH
+    pipeline and results expand back through the family relation
     (identical text => identical signatures => identical buckets and
     Jaccard, so expansion is verbatim; within-family pairs are emitted
     directly at 1.0, shingle-less (<3-word) families excluded exactly as
@@ -262,51 +249,26 @@ def _bands_of(sig_wide: DataFrame) -> DataFrame:
 def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-banded candidate pairs verified by exact shingle Jaccard,
     exact-copy mass collapsed first (provably lossless)."""
-    d = table(spark, sf_dir, "documents")
-    fam = _content_families(d).localCheckpoint(eager=True)
-    rep_docs = d.join(
-        fam.filter(F.col("doc_id") == F.col("rep")).select("doc_id"),
-        "doc_id",
-    )
-    rp = _minhash_pairs(spark, sf_dir, cap=None, docs=rep_docs, collapsed=True)
-    cross = _expand_cross(rp, fam, ordered=False)
-    # within-family: copies share identical shingle sets -> Jaccard 1.0,
-    # always bucketed together (identical signatures); <3-word contents
-    # have no shingles/signature and never pair in the direct pipeline
-    eligible = rep_docs.filter(F.size(F.split("text", " ")) >= 3).select(
-        F.col("doc_id").alias("rep")
-    )
-    within = _within_family(
-        fam, [F.lit(1.0).alias("jaccard")], ordered=False, eligible=eligible
-    )
-    return cross.unionByName(within)
+    fam, reps = _content_families(table(spark, sf_dir, "documents"))
+    arr = _hset_arrays(reps).localCheckpoint(eager=True)
+    return _expand_families(_lsh_pairs_sets(arr), fam, eligible=_shingled(reps))
 
 
-def _band_keys(sig: DataFrame) -> DataFrame:
-    """(doc_id, band, band_key): LSH banding over the long signature
-    format — band_key is the md5 of the band's seed-ordered minhashes,
-    so the bucket join moves 16-byte keys, never 4-int tuples."""
-    return sig.groupBy(
-        "doc_id", (F.col("seed") / _ROWS_PER_BAND).cast("int").alias("band")
-    ).agg(
-        F.md5(
-            F.array_join(
-                F.sort_array(F.collect_list(F.struct("seed", "minhash")))
-                .minhash.cast("array<string>"),
-                ",",
-            )
-        ).alias("band_key")
-    )
+def _shingled(docs: DataFrame) -> DataFrame:
+    """The rows of ``docs`` whose text has at least one 3-word shingle.
 
+    Only these contents pair in the shingle pipelines: a <3-word text
+    has no shingles, hence no signature, bucket or pair, so its exact
+    copies stay isolated in the direct pipeline too."""
+    return docs.filter(F.size(F.split("text", " ")) >= 3)
 
 
 def _lsh_candidates(bands_a: DataFrame, bands_b: DataFrame | None = None):
     """Distinct (doc_a, doc_b) candidates from band-key agreement.
 
-    THE one definition of the LSH candidate join (r10 review: it was
-    pasted in the pairs, probe, and eval pipelines — a banding or
-    inequality change in one copy would silently decalibrate the
-    others). Self-join form (``bands_b`` None) emits each unordered
+    The one definition of the LSH candidate join, so a banding or
+    inequality change cannot decalibrate one pipeline against another.
+    Self-join form (``bands_b`` None) emits each unordered
     pair once via doc_a < doc_b; the two-relation form (batch vs
     corpus index) emits every cross agreement.
     """
@@ -416,16 +378,12 @@ def _hset_arrays(docs: DataFrame) -> DataFrame:
     """Per-doc distinct shingle-hash SET as one array row: (doc_id, hs).
 
     ONE partial-aggregated shuffle — ``collect_set`` dedups map-side and
-    ships each doc's set once — replaces the r12 collapsed-path pair of
-    corpus-scaled exchanges (row-level ``distinct`` + the signature
-    groupBy), and the row count drops from |doc x shingle| to |doc|, so
-    every verify-stage join over this relation moves ONE array row per
-    pair side instead of exploding a shingle row per set element
-    (guide §2.3 "shuffle keys and metadata instead of payloads" turned
-    inside out: the set IS the payload, so ship it exactly once).
-    COLLAPSED paths only: the relation is bounded by distinct-content
-    mass; over a replica-heavy raw corpus materializing it is the OOM
-    `_verify_pairs`' docstring records. Element order is whatever the
+    ships each doc's set once — and the row count drops from
+    |doc x shingle| to |doc|, so every verify-stage join over this
+    relation moves ONE array row per pair side instead of exploding a
+    shingle row per set element. COLLAPSED paths only: the relation is
+    bounded by distinct-content mass; over a replica-heavy raw corpus
+    materializing it is the OOM `_verify_pairs`' docstring records. Element order is whatever the
     aggregation produced — every consumer (array_min of a transform,
     array_intersect, size) is order-insensitive, so no sort is paid.
     """
@@ -445,8 +403,7 @@ def _sig_wide_from_sets(arr: DataFrame) -> DataFrame:
     the signatures are identical to ``_sig_wide(docs)``, but with the
     sets already one array per doc there is NO aggregation here at all:
     parse each element to its 60-bit int once (one transform), then 16
-    ``array_min`` folds — zero exchanges where the r12 shape paid the
-    signature groupBy (guide §2.4)."""
+    ``array_min`` folds — zero exchanges."""
     ns = F.transform(
         "hs",
         lambda h: F.conv(F.substring(h, 1, 15), 16, 10).cast("long") % _P,
@@ -473,16 +430,15 @@ def _verify_pairs_sets(
 ) -> DataFrame:
     """Exact-Jaccard verification over per-doc set ARRAYS (collapsed form).
 
-    The r12 row-form verify exploded each candidate pair by all of a's
-    shingles through two merge joins, a (doc_a, doc_b) hash aggregation
-    and a sizes join; with the sets held as one array per doc the same
-    exact numbers are two equi-joins and a codegen projection —
-    ``size(array_intersect(ha, hb))`` is the intersection count, array
-    sizes are the set sizes, and the union follows by
+    The row form (:func:`_verify_pairs`) explodes each candidate pair by
+    all of a's shingles through two merge joins, a (doc_a, doc_b) hash
+    aggregation and a sizes join; with the sets held as one array per
+    doc the same exact numbers are two equi-joins and a codegen
+    projection — ``size(array_intersect(ha, hb))`` is the intersection
+    count, array sizes are the set sizes, and the union follows by
     inclusion-exclusion. Identical output (same md5 element domain,
-    same unrounded threshold filter, same pround) with the per-pair
-    row fanout, the aggregation exchange and the sizes join all gone
-    (guide §2.3/§2.4). ``arr_b`` None = self-join form.
+    same unrounded threshold filter, same pround). ``arr_b`` None =
+    self-join form.
     """
     a = arr_a.select(F.col("doc_id").alias("doc_a"), F.col("hs").alias("ha"))
     b = (arr_a if arr_b is None else arr_b).select(
@@ -504,45 +460,42 @@ def _verify_pairs_sets(
     )
 
 
-def _minhash_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    cap: int | None,
-    docs: DataFrame | None = None,
-    collapsed: bool = False,
+def _lsh_pairs_sets(
+    arr_a: DataFrame,
+    arr_b: DataFrame | None = None,
+    threshold: float = 0.5,
 ) -> DataFrame:
-    """Shared LSH pipeline; ``cap`` drops buckets with more members
-    (boilerplate guard — see dedup_minhash_capped). ``docs`` overrides the
-    corpus (the collapsed-edge components path passes distinct-content
-    representatives).
+    """LSH pairs over checkpointed per-doc set arrays (collapsed form).
 
-    ``collapsed=True`` (callers passing exact-duplicate-collapsed rep
-    docs): the per-doc shingle-hash SET relation is materialized ONCE
-    as array rows (:func:`_hset_arrays`) and shared by the signature
-    pipeline and both verify sides — the r11 plan ran the shingle
-    explode + distinct subtree 4x (sig, sa, sb, sizes); the r12 shape
-    shared a row-level checkpoint but still paid the signature groupBy
-    and three verify exchanges over it; the set-array form (r13) makes
-    signatures a pure projection and the verify two equi-joins
-    (:func:`_verify_pairs_sets`). Safe to materialize HERE because
-    collapse already bounded the relation by distinct-content mass; the
-    raw-corpus path (the capped boilerplate guard) keeps the lazy form
-    — an eager ssets over a replica-heavy corpus is the measured OOM
-    the _verify_pairs docstring records.
+    Signatures and band keys are pure projections over the arrays, the
+    candidate join moves 16-byte band keys, and the verify is
+    :func:`_verify_pairs_sets`. ``arr_b`` None = self-join form; the
+    two-relation form is the batch-vs-corpus probe. Bands are
+    checkpointed so the candidate join reads a materialized relation of
+    16-byte keys instead of replaying the signature projection per side.
     """
-    d = table(spark, sf_dir, "documents") if docs is None else docs
-    arr = None
-    if collapsed:
-        arr = _hset_arrays(d).localCheckpoint(eager=True)
-        bands = _bands_of(_sig_wide_from_sets(arr)).localCheckpoint(
-            eager=True
-        )
-    else:
-        # both sides of the bucket self-join read bands: materialize the
-        # narrow (doc, band, 16-byte key) relation once instead of
-        # running the whole shingle->signature pipeline twice (2 fewer
-        # corpus scans)
-        bands = _bands_of(_sig_wide(d)).localCheckpoint(eager=True)
+    def bands(arr: DataFrame) -> DataFrame:
+        return _bands_of(_sig_wide_from_sets(arr)).localCheckpoint(eager=True)
+
+    cand = _lsh_candidates(bands(arr_a), None if arr_b is None else bands(arr_b))
+    return _verify_pairs_sets(cand, arr_a, arr_b, threshold)
+
+
+def _minhash_pairs(
+    spark: SparkSession, sf_dir: str, cap: int | None
+) -> DataFrame:
+    """The LSH pipeline over the RAW corpus; ``cap`` drops buckets with
+    more members (boilerplate guard — see dedup_minhash_capped).
+
+    The uncollapsed reference the tests pin the collapsed builders
+    against. It keeps the lazy row-form verify: materializing set
+    arrays over a replica-heavy corpus is the OOM the _verify_pairs
+    docstring records.
+    """
+    d = table(spark, sf_dir, "documents")
+    # both sides of the bucket self-join read bands: materialize the
+    # narrow (doc, band, 16-byte key) relation once
+    bands = _bands_of(_sig_wide(d)).localCheckpoint(eager=True)
     if cap is not None:
         from pyspark.sql.window import Window
 
@@ -556,10 +509,7 @@ def _minhash_pairs(
             .filter(F.col("_bc") <= cap)
             .drop("_bc")
         )
-    cand = _lsh_candidates(bands)
-    if arr is not None:
-        return _verify_pairs_sets(cand, arr)
-    return _verify_pairs(cand, d)
+    return _verify_pairs(_lsh_candidates(bands), d)
 
 
 @register(
@@ -681,8 +631,7 @@ def _simhash_fps(spark: SparkSession, d: DataFrame) -> DataFrame:
     survey="D2 (blocked n-gram Jaccard, content-derived sub-blocking "
     "with 1-bit multiprobe)",
     scale="""
-    Word-set Jaccard with BOUNDED blocking (round-5 rewrite; the r4
-    verdict flagged the old key): the block is (lang, source,
+    Word-set Jaccard with BOUNDED blocking: the block is (lang, source,
     simhash-top-8-bits). The previous (lang, source) key alone is a
     FIXED block count, so per-block membership — and the pair join —
     grew quadratically with the corpus (measured 19 s at sf1-synth);
@@ -700,16 +649,15 @@ def _simhash_fps(spark: SparkSession, d: DataFrame) -> DataFrame:
     checkpointed once and joined without a broadcast hint (AQE decides;
     it is corpus-sized at 100 TB). Distinct from the _simblocked twin,
     which drops the metadata key entirely: this query keeps the
-    (lang, source) dedup POLICY boundary and sub-splits it. r6:
-    exact-copy mass collapses BEFORE the block pair join — on the
-    (text, lang, source) family key, NOT text alone, because metadata
-    participates in the block key and two identical texts with
-    different metadata are deliberately NOT interchangeable here
-    (pinned in tests). This removes the r5-documented replica-tier
-    wall (the sf10 full-registry sweep recorded candidate-verify spill
-    filling the disk after 408 s at 100 copies; collapsed, the pair
-    join is distinct-(text,metadata)-sized and replica output is
-    expansion-bound).
+    (lang, source) dedup POLICY boundary and sub-splits it. Exact-copy
+    mass collapses BEFORE the block pair join — on the (text, lang,
+    source) family key, NOT text alone, because metadata participates
+    in the block key and two identical texts with different metadata
+    are deliberately NOT interchangeable here (pinned in tests).
+    Uncollapsed, the sf10 full-registry sweep recorded candidate-verify
+    spill filling the disk after 408 s at 100 copies; collapsed, the
+    pair join is distinct-(text,metadata)-sized and replica output is
+    expansion-bound.
     """,
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -717,20 +665,10 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     with 1-bit multiprobe — exact-copy mass collapsed first on the
     (text, lang, source) family key (metadata participates in the block
     key, so only full-key-identical docs are interchangeable)."""
-    d = table(spark, sf_dir, "documents")
-    fam = _content_families(
-        d, metadata_cols=("lang", "source")
-    ).localCheckpoint(eager=True)
-    rep_docs = d.join(
-        fam.filter(F.col("doc_id") == F.col("rep")).select("doc_id"),
-        "doc_id",
+    fam, reps = _content_families(
+        table(spark, sf_dir, "documents"), metadata_cols=("lang", "source")
     )
-    rp = _ngram_jaccard_pairs(spark, sf_dir, rep_docs)
-    cross = _expand_cross(rp, fam, ordered=False)
-    # within-family: identical text AND metadata — same block, word-set
-    # Jaccard 1.0; NULL text/metadata docs hold singleton families
-    within = _within_family(fam, [F.lit(1.0).alias("jaccard")], ordered=False)
-    return cross.unionByName(within)
+    return _expand_families(_ngram_jaccard_pairs(spark, sf_dir, reps), fam)
 
 
 def _ngram_jaccard_pairs(
@@ -740,37 +678,19 @@ def _ngram_jaccard_pairs(
     ``docs`` (default: full corpus — the uncollapsed form the tests pin
     the collapsed builder against).
 
-    r12: on the COLLAPSED path (``docs`` given — representatives only,
-    so the materialization is bounded by distinct-content mass, the
-    hsets-checkpoint safety argument) the per-doc (doc_id, lang,
-    source, blk) metadata relation is eagerly checkpointed: its two
-    consumers (probes, b side) each replayed the rep-filter join +
-    corpus scan + fp join. Checkpointing the word-set EXPLODE as well
-    was measured and rejected — wsets is |doc x distinct words|-sized
-    and its materialization cost a consistent ~20% at sf0.1 (and ~45%
-    on the simblocked twin) against a tier delta inside host noise;
-    the narrow re-explode is codegen-cheap. The raw-corpus path
-    (docs=None) keeps the fully lazy form (the r5 OOM note in
-    _verify_pairs).
+    The per-doc (doc_id, lang, source, blk) relation is checkpointed:
+    its two consumers (probes, b side) would each replay the corpus
+    scan and the fingerprint join. The word-set explode is NOT
+    checkpointed — it is |doc x distinct words|-sized, and
+    materializing it cost a consistent ~20% at sf0.1 (~45% on the
+    simblocked twin) where the narrow re-explode is codegen-cheap.
     """
     d = table(spark, sf_dir, "documents") if docs is None else docs
-    _ck = (
-        (lambda df: df.localCheckpoint(eager=True))
-        if docs is not None
-        else (lambda df: df)
-    )
-    # entity-sized fingerprint model, read by both self-join sides;
-    # simhash is a function of each doc's own text, so fingerprinting
-    # the ``docs`` relation directly (representatives, when collapsed)
-    # is exact and skips the replica-scaled tf x 16-bit vote expansion
-    fp = (
-        _simhash_fps(spark, d)
-        .select("doc_id", F.expr("simhash div 256").alias("blk"))
+    meta = (
+        d.select("doc_id", "lang", "source")
+        .join(_simhash_blocks(spark, d), "doc_id")
         .localCheckpoint(eager=True)
     )
-    # no broadcast hint: fp is per-doc (unbounded at scale) — let AQE
-    # choose broadcast vs shuffle from the measured size
-    meta = _ck(d.select("doc_id", "lang", "source").join(fp, "doc_id"))
     probe_dim = F.broadcast(
         spark.range(9).select(F.col("id").cast("int").alias("i"))
     )
@@ -780,30 +700,54 @@ def _ngram_jaccard_pairs(
         "source",
         F.when(F.col("i") == 0, F.col("blk"))
         .otherwise(F.col("blk").bitwiseXOR(F.expr("shiftleft(1L, i - 1)")))
-        .alias("probe"),
+        .alias("blk"),
     )
+    return _word_jaccard(d, probes, meta)
+
+
+def _simhash_blocks(spark: SparkSession, d: DataFrame) -> DataFrame:
+    """(doc_id, blk): the top 8 bits of each doc's 16-bit SimHash.
+
+    Checkpointed once: every block-join side reads it. SimHash is a
+    function of each doc's own text, so fingerprinting ``d`` directly
+    (representatives, when collapsed) is exact and skips the
+    replica-scaled tf x 16-bit vote expansion. Joined without a
+    broadcast hint: it is per-doc (unbounded at scale), so AQE chooses
+    from the measured size."""
+    return (
+        _simhash_fps(spark, d)
+        .select("doc_id", F.expr("simhash div 256").alias("blk"))
+        .localCheckpoint(eager=True)
+    )
+
+
+def _word_jaccard(
+    d: DataFrame, probes: DataFrame, blocks: DataFrame
+) -> DataFrame:
+    """(doc_a, doc_b, jaccard) word-set pairs with Jaccard >= 0.9.
+
+    ``blocks`` is (doc_id, *keys); ``probes`` has the same columns and
+    may hold several key rows per doc (multiprobe). A pair is scored
+    when a's probe keys equal b's block keys and doc_a < doc_b. The
+    pair join is keyed on (keys, word), so intersection counts come out
+    of one groupBy with no array materialization.
+    """
     wsets = d.select(
-        "doc_id",
-        F.explode(F.array_distinct(F.split("text", " "))).alias("w"),
+        "doc_id", F.explode(F.array_distinct(F.split("text", " "))).alias("w")
     )
-    sizes = wsets.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    wa = probes.join(wsets, "doc_id").alias("a")
-    wb = meta.join(wsets, "doc_id").alias("b")
+    keys = [c for c in blocks.columns if c != "doc_id"] + ["w"]
+    a = probes.join(wsets, "doc_id").alias("a")
+    b = blocks.join(wsets, "doc_id").alias("b")
+    on = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
     inter = (
-        wa.join(
-            wb,
-            (F.col("a.lang") == F.col("b.lang"))
-            & (F.col("a.source") == F.col("b.source"))
-            & (F.col("a.probe") == F.col("b.blk"))
-            & (F.col("a.w") == F.col("b.w"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        a.join(b, on + [F.col("a.doc_id") < F.col("b.doc_id")])
         .groupBy(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
         )
         .agg(F.count(F.lit(1)).alias("inter_n"))
     )
+    sizes = wsets.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     scored = (
         inter.join(
             sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na")),
@@ -821,6 +765,7 @@ def _ngram_jaccard_pairs(
     return scored.filter(F.col("jac") >= 0.9).select(
         "doc_a", "doc_b", pround("jac", 4).alias("jaccard")
     )
+
 
 def _collapsed_pair_edges(
     spark: SparkSession, sf_dir: str, docs: DataFrame | None = None
@@ -848,7 +793,9 @@ def _collapsed_pair_edges(
 
     Edge case: docs with < 3 words produce NO shingles, hence no
     signature, no bucket, and no pairs — they are isolated in the true
-    graph even when exact copies exist, so star edges exclude them.
+    graph even when exact copies exist, so star edges exclude them
+    (:func:`_shingled`). NULL-text docs are singleton families
+    (:func:`_content_families`) and so emit no edge at all.
 
     Cost: one corpus shuffle keyed by the 16-byte content hash (the
     dedup_exact shape) before the pair pipeline sees only distinct
@@ -867,30 +814,17 @@ def _collapsed_parts(
     REPRESENTATIVES, and the rep->copy star edges reconnecting exact
     copies. Split out so :func:`component_labels` can propagate labels
     over the rep graph ONLY and extend to copies with one join instead
-    of dragging the star edges through every propagation round.
+    of dragging the star edges through every propagation round. Both
+    come from the one collapse every dedup query shares
+    (:func:`_content_families`).
     """
     d = table(spark, sf_dir, "documents") if docs is None else docs
-    keyed = d.select("doc_id", "text", F.md5("text").alias("h"))
-    groups = keyed.groupBy("h").agg(F.min("doc_id").alias("rep"))
-    # materialize the (doc, content-rep) mapping ONCE: star edges, the
-    # representative corpus, and every pair-pipeline consumer below
-    # would otherwise each re-derive the h-join subtree — 10 full
-    # parquet scans of documents in the un-checkpointed plan vs 1 here
-    # (the bands-relation discipline in _minhash_pairs)
-    joined = keyed.join(groups, "h").localCheckpoint(eager=True)
-    star = joined.filter(
-        (F.col("doc_id") != F.col("rep"))
-        & (F.size(F.split("text", " ")) >= 3)
-    ).select(F.col("rep").alias("doc_a"), F.col("doc_id").alias("doc_b"))
-    rep_docs = joined.filter(F.col("doc_id") == F.col("rep")).select(
-        "doc_id", "text"
+    fam, reps = _content_families(d)
+    arr = _hset_arrays(reps).localCheckpoint(eager=True)
+    star = _shingled(fam.filter(F.col("doc_id") != F.col("rep"))).select(
+        F.col("rep").alias("doc_a"), F.col("doc_id").alias("doc_b")
     )
-    rep_pairs = _minhash_pairs(
-        spark, sf_dir, cap=None, docs=rep_docs, collapsed=True
-    ).select(
-        "doc_a", "doc_b"
-    )
-    return rep_pairs, star
+    return _lsh_pairs_sets(arr).select("doc_a", "doc_b"), star
 
 
 def component_labels(
@@ -923,20 +857,20 @@ def component_labels(
     - The three output slices — pair-graph reps, star copies, star reps
       outside the pair graph — are DISJOINT by construction (a copy is
       never a rep; a star rep lands in rep_lbl or in the anti-join
-      slice, never both), so they union without the node-level
-      min-groupBy shuffle the r11 path paid to collapse overlaps.
+      slice, never both), so they union without a node-level
+      min-groupBy shuffle to collapse overlaps.
 
     Recomputed per call: every query invocation computes from the
     parquet inputs (no cross-query memo — a timed bench run pays the
-    full fixpoint, r12 optimization-round rule). At 100 TB the labeling
-    is a persisted artifact consumers read, maintained incrementally
-    per ingest batch — never recomputed per downstream query.
+    full fixpoint). At 100 TB the labeling is a persisted artifact
+    consumers read, maintained incrementally per ingest batch — never
+    recomputed per downstream query.
 
-    Checkpoint dependency (ADVICE r12): ``star`` is consumed TWICE below
-    (copies and lone_reps) and is cheap only because it is a filter over
-    the ``joined`` relation that ``_collapsed_parts`` localCheckpoints —
-    a refactor that drops that checkpoint would silently replay the
-    exact-dedup subtree once per star consumer.
+    Checkpoint dependency: ``star`` is consumed TWICE below (copies and
+    lone_reps) and is cheap only because it is a filter over the family
+    relation :func:`_content_families` localCheckpoints — a refactor
+    that drops that checkpoint would silently replay the exact-dedup
+    subtree once per star consumer.
     """
     rep_pairs, star = _collapsed_parts(spark, sf_dir, docs)
     sym = (
@@ -1435,20 +1369,11 @@ def dedup_against_corpus_minhash(
     """Batch-vs-corpus near-dup pairs (LSH probe + exact Jaccard >= 0.5),
     each side's exact-copy mass collapsed first (provably lossless)."""
     d = table(spark, sf_dir, "documents")
-    batch = d.filter(F.col("doc_id") >= 250)
-    corpus = d.filter(F.col("doc_id") < 250)
-    bfam = _content_families(batch).localCheckpoint(eager=True)
-    cfam = _content_families(corpus).localCheckpoint(eager=True)
-    brep = batch.join(
-        bfam.filter(F.col("doc_id") == F.col("rep")).select("doc_id"),
-        "doc_id",
+    bfam, brep = _content_families(d.filter(F.col("doc_id") >= 250))
+    cfam, crep = _content_families(d.filter(F.col("doc_id") < 250))
+    expanded = _expand_families(
+        _minhash_probe(brep, crep), bfam, ordered=True, fam_b=cfam
     )
-    crep = corpus.join(
-        cfam.filter(F.col("doc_id") == F.col("rep")).select("doc_id"),
-        "doc_id",
-    )
-    rp = _minhash_probe(brep, crep)
-    expanded = _expand_cross(rp, bfam, ordered=True, fam_b=cfam)
     return expanded.select(
         F.col("doc_a").alias("batch_id"),
         F.col("doc_b").alias("corpus_id"),
@@ -1460,28 +1385,18 @@ def _minhash_probe(batch: DataFrame, corpus: DataFrame) -> DataFrame:
     """(doc_a=batch doc, doc_b=corpus doc, jaccard): LSH band probe of
     ``corpus`` by ``batch``, exact-verified at Jaccard >= 0.5.
 
-    The probe twin of :func:`_minhash_pairs`: same signature family,
-    banding layout and threshold, but the candidate stage is a
+    The two-relation form of :func:`_lsh_pairs_sets`: same signature
+    family, banding layout and threshold, but the candidate stage is a
     batch-bands x corpus-bands EQUI-join instead of a corpus self-join
     — in production the corpus side is the persisted index relation and
-    only the batch side is computed. Both callers pass exact-duplicate
+    only the batch side is computed. The builder passes exact-duplicate
     COLLAPSED rep sides, so the per-side set arrays are bounded by
-    distinct-content mass and the set-array verify applies (r13, same
-    move as _minhash_pairs' collapsed path): signatures become pure
-    projections over the two checkpoints and the verify two equi-joins
-    — the r12 shape re-derived each side's lazy ssets per verify
-    consumer (shingle explode + distinct, twice for the corpus side).
+    distinct-content mass.
     """
-    b_arr = _hset_arrays(batch).localCheckpoint(eager=True)
-    c_arr = _hset_arrays(corpus).localCheckpoint(eager=True)
-    b_bands = _bands_of(_sig_wide_from_sets(b_arr)).localCheckpoint(
-        eager=True
+    return _lsh_pairs_sets(
+        _hset_arrays(batch).localCheckpoint(eager=True),
+        _hset_arrays(corpus).localCheckpoint(eager=True),
     )
-    c_bands = _bands_of(_sig_wide_from_sets(c_arr)).localCheckpoint(
-        eager=True
-    )
-    cand = _lsh_candidates(b_bands, c_bands)
-    return _verify_pairs_sets(cand, b_arr, c_arr)
 
 
 def _lsh_index_table(spark: SparkSession, sf_dir: str) -> str:
@@ -1606,7 +1521,7 @@ def sink_lsh_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey="D2/§4 extension (the PERSISTED co-located shingle-set "
     "layout: per-rep (doc_id, hs) set arrays written bucketed on "
     "doc_id, so every doc-keyed verify join reads pre-partitioned "
-    "data with zero set-side exchange — r12 verdict task #1)",
+    "data with zero set-side exchange)",
     scale="""
     The component-labeling family's verify stage made storage-real
     (guide §6 bucketing + §3.1 exchange-free joins): the per-rep
@@ -1642,32 +1557,18 @@ def sink_bucketed_hsets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.partitioned import write_bucketed
 
-    d = table(spark, sf_dir, "documents")
-    fam = _content_families(d).localCheckpoint(eager=True)
-    rep_docs = d.join(
-        fam.filter(F.col("doc_id") == F.col("rep")).select("doc_id"),
-        "doc_id",
-    )
+    fam, reps = _content_families(table(spark, sf_dir, "documents"))
     base = tempfile.mkdtemp(prefix="mrs_hsets_")
     write_bucketed(
-        _hset_arrays(rep_docs),
+        _hset_arrays(reps),
         "q_bucket_hsets",
         ["doc_id"],
         8,
         ["doc_id"],
         location=f"{base}/q_bucket_hsets",
     )
-    harr = spark.table("q_bucket_hsets")
-    bands = _bands_of(_sig_wide_from_sets(harr)).localCheckpoint(eager=True)
-    rp = _verify_pairs_sets(_lsh_candidates(bands), harr)
-    cross = _expand_cross(rp, fam, ordered=False)
-    eligible = rep_docs.filter(F.size(F.split("text", " ")) >= 3).select(
-        F.col("doc_id").alias("rep")
-    )
-    within = _within_family(
-        fam, [F.lit(1.0).alias("jaccard")], ordered=False, eligible=eligible
-    )
-    return cross.unionByName(within)
+    rp = _lsh_pairs_sets(spark.table("q_bucket_hsets"))
+    return _expand_families(rp, fam, eligible=_shingled(reps))
 
 
 REGISTRY["sink_bucketed_hsets"] = REGISTRY["sink_bucketed_hsets"].__class__(
@@ -1738,8 +1639,8 @@ REGISTRY["sink_bucketed_hsets"] = REGISTRY["sink_bucketed_hsets"].__class__(
     the 16-row signatures; the exact Jaccard runs only on the
     LSH-surviving pairs (the whole point of banding), so the expensive
     truth computation is candidate-bounded, not corpus-quadratic —
-    affordable to sample continuously in production. Round 7: the
-    exact-copy collapse extended here too (candidacy, the 16-seed
+    affordable to sample continuously in production. Exact-copy mass
+    is collapsed first (candidacy, the 16-seed
     agreement count and the exact Jaccard are all content-level
     properties, so the direct pipeline runs on representatives and
     values expand verbatim; within-family pairs are (est 1.0,
@@ -1753,91 +1654,40 @@ def dedup_minhash_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-candidate-pair MinHash estimate vs true Jaccard, exact-copy
     mass collapsed first (provably lossless: candidacy, the signature
     agreement AND the exact Jaccard are all content-level properties)."""
-    d = table(spark, sf_dir, "documents")
-    fam = _content_families(d).localCheckpoint(eager=True)
-    rep_docs = d.join(
-        fam.filter(F.col("doc_id") == F.col("rep")).select("doc_id"),
-        "doc_id",
+    fam, reps = _content_families(table(spark, sf_dir, "documents"))
+    return _expand_families(
+        _minhash_eval_pairs(reps), fam, eligible=_shingled(reps)
     )
-    rp = _minhash_eval_pairs(rep_docs)
-    cross = _expand_cross(rp, fam, ordered=False)
-    # within-family: identical signatures agree on every seed (est 1.0)
-    # and identical shingle sets have Jaccard 1.0; <3-word contents have
-    # no signature and never become candidates in the direct pipeline
-    eligible = rep_docs.filter(F.size(F.split("text", " ")) >= 3).select(
-        F.col("doc_id").alias("rep")
-    )
-    within = _within_family(
-        fam,
-        [
-            F.lit(1.0).alias("est_jaccard"),
-            F.lit(1.0).alias("true_jaccard"),
-        ],
-        ordered=False,
-        eligible=eligible,
-    )
-    return cross.unionByName(within)
 
 
 def _minhash_eval_pairs(docs: DataFrame) -> DataFrame:
     """(doc_a, doc_b, est_jaccard, true_jaccard) for every LSH candidate
     pair of ``docs`` — dedup_minhash_eval's direct pipeline, run by the
-    collapsed declared form over content representatives only. The
-    signature relation is checkpointed once and read by the banding
-    stage and both agreement sides (the bands-relation discipline from
-    _minhash_pairs: 3 corpus scans -> 1)."""
-    sig = _minhash_sig(docs).localCheckpoint(eager=True)
-    bands = _band_keys(sig)
-    cand = _lsh_candidates(bands)
-    sa = sig.select(
-        F.col("doc_id").alias("doc_a"), "seed",
-        F.col("minhash").alias("mh_a"),
+    builder over content representatives only.
+
+    One set-array relation feeds all three parts: the bands and the
+    true Jaccard come from :func:`_lsh_pairs_sets` at threshold 0 (every
+    candidate is kept), and the seed agreement compares the two sides'
+    wide signatures, a projection of the same arrays."""
+    arr = _hset_arrays(docs).localCheckpoint(eager=True)
+    sig = _sig_wide_from_sets(arr).select(
+        "doc_id", F.array(*[f"h{i}" for i in range(_SEEDS)]).alias("sig")
     )
-    sb = sig.select(
-        F.col("doc_id").alias("doc_b"), "seed",
-        F.col("minhash").alias("mh_b"),
+    n_agree = F.aggregate(
+        F.zip_with("sa", "sb", lambda x, y: (x == y).cast("int")),
+        F.lit(0),
+        lambda acc, v: acc + v,
     )
-    agree = (
-        cand.join(sa, "doc_a")
-        .join(sb, ["doc_b", "seed"])
-        .groupBy("doc_a", "doc_b")
-        .agg(
-            F.sum(
-                F.when(F.col("mh_a") == F.col("mh_b"), 1).otherwise(0)
-            )
-            .cast("long")
-            .alias("n_agree")
-        )
-    )
-    ssets = shingles(docs).distinct()
-    na = ssets.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    pa = ssets.select(F.col("doc_id").alias("doc_a"), "sh")
-    pb = ssets.select(F.col("doc_id").alias("doc_b"), "sh")
-    inter = (
-        cand.join(pa, "doc_a")
-        .join(pb, ["doc_b", "sh"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("inter_n"))
-    )
-    truth = (
-        cand.join(inter, ["doc_a", "doc_b"], "left")
-        .join(na.select(F.col("doc_id").alias("doc_a"),
-                        F.col("n").alias("n_a")), "doc_a")
-        .join(na.select(F.col("doc_id").alias("doc_b"),
-                        F.col("n").alias("n_b")), "doc_b")
+    return (
+        _lsh_pairs_sets(arr, threshold=0.0)
+        .join(sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sa")), "doc_a")
+        .join(sig.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sb")), "doc_b")
         .select(
-            "doc_a", "doc_b",
-            F.coalesce("inter_n", F.lit(0)).alias("inter_n"),
-            (F.col("n_a") + F.col("n_b")
-             - F.coalesce("inter_n", F.lit(0))).alias("union_n"),
+            "doc_a",
+            "doc_b",
+            pround(n_agree / 16.0, 4).alias("est_jaccard"),
+            F.col("jaccard").alias("true_jaccard"),
         )
-    )
-    return agree.join(truth, ["doc_a", "doc_b"]).select(
-        "doc_a", "doc_b",
-        pround(F.col("n_agree") / 16.0, 4).alias("est_jaccard"),
-        pround(F.col("inter_n") * 1.0 / F.col("union_n"), 4).alias(
-            "true_jaccard"
-        ),
     )
 
 
@@ -1860,6 +1710,14 @@ def star_components(
     small-star(u): over edges (u, v) with v ≤ u: m = min(N̲(u) ∪ {u});
     emit (v, m) for v ∈ N̲(u) ∪ {u}, v ≠ m. (Kiveris et al.,
     "Connected Components in MapReduce and Beyond" — public algorithm.)
+
+    Kept next to :func:`propagate_min_labels` on purpose, not merged
+    into it: at sf0.1 on 4 cores (second of two passes) dedup_components
+    (propagation) ran 27 stages and 2.4-4.9 executor CPU-s, while
+    dedup_components_star ran 73 stages and 3.2-5.1 CPU-s. Merging onto
+    star slows the three propagation queries on dense, low-diameter
+    dedup graphs; merging onto propagation drops the O(log^2 n)-round
+    guarantee on long chains.
     """
     edges = sym.filter(F.col("doc_a") != F.col("doc_b")).select(
         F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
@@ -1965,17 +1823,15 @@ def dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ``members`` flattened to a ","-joined string for the driver's pandas
     canonicalizer — see dedup_components. Shares the FULL
-    :func:`component_labels` slice structure with dedup_components
-    (r12): the star rounds run over the REP pair graph only — exact-dup
-    copies never enter the loop; they attach via the one rep-join slice
-    afterwards. Before r12 this builder labeled the full symmetric edge
-    list (rep pairs + star edges), paying the duplicate-mass edges in
-    every star round; label equality of the two routes is the
-    disjoint-slice argument in component_labels' docstring, pinned by
+    :func:`component_labels` slice structure with dedup_components: the
+    star rounds run over the REP pair graph only — exact-dup copies
+    never enter the loop; they attach via the one rep-join slice
+    afterwards. Label equality of the two routes is the disjoint-slice
+    argument in component_labels' docstring, pinned by
     test_builders_agree_with_each_other and the shared recursive-CTE
     oracle. Only the labeling ALGORITHM differs from dedup_components
-    (alternating star vs one-hop propagation — E68's declared
-    capability, O(log^2 n) rounds on pathological diameters).
+    (alternating star vs one-hop propagation, O(log^2 n) rounds on
+    pathological diameters).
     """
     return _rollup_labels(
         component_labels(spark, sf_dir, label_fn=star_components)
@@ -2162,16 +2018,16 @@ REGISTRY["dedup_minhash_capped"] = REGISTRY["dedup_minhash_capped"].__class__(
     join beyond that (the only big shuffle either way is the (blk, w)
     pair join). Recall knob: near-dups differing in a top-8 bit are missed —
     at scale, probe the 8 one-bit-flip neighbor blocks exactly as
-    similarity_lsh_multiprobe does for SRP buckets. r6: exact-copy mass
+    similarity_lsh_multiprobe does for SRP buckets. Exact-copy mass
     collapses to one representative per distinct text before the block
     pair join and expands back through the family relation (identical
     text => identical word set, tf vector, simhash and block — so every
     copy inherits its representative's pairs verbatim and within-family
     pairs are direct Jaccard-1.0 rows; pinned against the uncollapsed
-    pipeline in tests/test_similarity_joins.py). This is what the
-    122.9 s reading at the 10-copy tier was: 102x replica pair growth
-    flowing through the (blk, w) self-join — collapsed, the pair join
-    is distinct-content-sized and replica output is expansion-bound.
+    pipeline in tests/test_similarity_joins.py). Uncollapsed, the
+    10-copy tier read 122.9 s: 102x replica pair growth flowing through
+    the (blk, w) self-join — collapsed, the pair join is
+    distinct-content-sized and replica output is expansion-bound.
     """,
 )
 def dedup_ngram_jaccard_simblocked(
@@ -2180,19 +2036,8 @@ def dedup_ngram_jaccard_simblocked(
     """Word-set Jaccard pairs within simhash-top-8-bit blocks,
     exact-copy mass collapsed first (provably lossless: identical text
     => identical word set, tf vector, simhash and block)."""
-    d = table(spark, sf_dir, "documents")
-    fam = _content_families(d).localCheckpoint(eager=True)
-    rep_docs = d.join(
-        fam.filter(F.col("doc_id") == F.col("rep")).select("doc_id"),
-        "doc_id",
-    )
-    rp = _simblocked_pairs(spark, sf_dir, rep_docs)
-    cross = _expand_cross(rp, fam, ordered=False)
-    # within-family: non-NULL texts always have a word set (split('')
-    # is ['']), so all copy pairs qualify at Jaccard 1.0; NULL-text
-    # docs hold singleton families and never expand
-    within = _within_family(fam, [F.lit(1.0).alias("jaccard")], ordered=False)
-    return cross.unionByName(within)
+    fam, reps = _content_families(table(spark, sf_dir, "documents"))
+    return _expand_families(_simblocked_pairs(spark, sf_dir, reps), fam)
 
 
 def _simblocked_pairs(
@@ -2202,75 +2047,32 @@ def _simblocked_pairs(
     (default: the full corpus — the uncollapsed form the tests pin
     the collapsed builder against)."""
     d = table(spark, sf_dir, "documents") if docs is None else docs
-    # entity-sized fingerprint model, read by both self-join sides;
-    # simhash is a function of each doc's own text, so fingerprinting
-    # the ``docs`` relation directly (representatives, when collapsed)
-    # is exact and skips the replica-scaled tf x 16-bit vote expansion
-    fp = (
-        _simhash_fps(spark, d)
-        .select("doc_id", F.expr("simhash div 256").alias("blk"))
-        .localCheckpoint(eager=True)
-    )
-    wsets = d.select(
-        "doc_id", F.explode(F.array_distinct(F.split("text", " "))).alias("w")
-    )
-    # no broadcast hint: fp is per-doc (unbounded at scale) — let AQE
-    # choose broadcast vs shuffle from the measured size (ADVICE r3)
-    wb = wsets.join(fp, "doc_id")
-    sizes = wsets.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = wb.alias("a")
-    b = wb.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.w") == F.col("b.w"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("inter_n"))
-    )
-    scored = (
-        inter.join(
-            sizes.select(
-                F.col("doc_id").alias("doc_a"), F.col("n").alias("na")
-            ),
-            "doc_a",
-        )
-        .join(
-            sizes.select(
-                F.col("doc_id").alias("doc_b"), F.col("n").alias("nb")
-            ),
-            "doc_b",
-        )
-        .withColumn(
-            "jac",
-            F.col("inter_n")
-            * 1.0
-            / (F.col("na") + F.col("nb") - F.col("inter_n")),
-        )
-    )
-    return scored.filter(F.col("jac") >= 0.9).select(
-        "doc_a", "doc_b", pround("jac", 4).alias("jaccard")
-    )
+    fp = _simhash_blocks(spark, d)
+    return _word_jaccard(d, fp, fp)
 
 
 def _content_families(
     docs: DataFrame, metadata_cols: tuple[str, ...] = ()
-) -> DataFrame:
-    """(doc_id, rep, csize): exact-copy families on RAW text.
+) -> tuple[DataFrame, DataFrame]:
+    """Exact-copy families on RAW text: ``(fam, reps)``.
 
-    rep = min doc_id per identical text (the same no-normalization
-    contract as the shingle pipeline's input), csize = family size.
-    The prefix-filter joins run their pair pipeline on representatives
-    only and re-expand through this relation — the r5b collapse
-    discipline (_collapsed_pair_edges, semdedup victims) applied to
-    the exact-recall similarity joins, where it is provably lossless:
-    identical text => identical shingle set => identical sizes,
-    intersections and scores for every member of the family.
+    ``fam`` is (doc_id, text, *metadata_cols, rep, csize): rep = min
+    doc_id per identical text (the same no-normalization contract as
+    the shingle pipeline's input), csize = family size. ``reps`` is
+    (doc_id, text, *metadata_cols) restricted to the representatives.
+    Every collapsed pipeline runs on ``reps`` only and re-expands
+    through ``fam`` (:func:`_expand_families`); that is provably
+    lossless because identical text => identical shingle set =>
+    identical sizes, intersections and scores for every member of the
+    family.
+
+    ``fam`` is checkpointed WITH the text, so ``reps`` and every later
+    consumer read the one materialized scan instead of re-reading the
+    corpus and re-joining it to the families (a join whose
+    product-of-inputs size estimate also turns each downstream join
+    into a sort-merge join until AQE sees the shuffle output). The
+    checkpoint is a copy of the text columns: at corpus scale that is
+    a cached corpus, the cost of scanning it once.
 
     metadata_cols extends the family key: a METADATA-BLOCKED pipeline
     (dedup_ngram_jaccard's (lang, source, ...) key) may only treat two
@@ -2293,11 +2095,13 @@ def _content_families(
         F.md5(F.concat(*parts)) if len(parts) > 1 else parts[0],
         F.concat(F.lit("null:"), F.col("doc_id").cast("string")),
     )
-    fam = docs.select("doc_id", key.alias("content"))
-    reps = fam.groupBy("content").agg(
+    cols = ["doc_id", "text", *metadata_cols]
+    keyed = docs.select(*cols, key.alias("content"))
+    sizes = keyed.groupBy("content").agg(
         F.min("doc_id").alias("rep"), F.count(F.lit(1)).alias("csize")
     )
-    return fam.join(reps, "content").select("doc_id", "rep", "csize")
+    fam = keyed.join(sizes, "content").drop("content").localCheckpoint(eager=True)
+    return fam, fam.filter(F.col("doc_id") == F.col("rep")).select(*cols)
 
 
 def _expansion_partitions(fam: DataFrame) -> int:
@@ -2308,8 +2112,8 @@ def _expansion_partitions(fam: DataFrame) -> int:
     AQE's partition coalescing decides from shuffle BYTES of the tiny
     (often 1000:1-compressed) input and is blind to generated output,
     so at the 1000-replica tier it collapsed the 90-billion-row
-    expansion to 7 tasks (measured r6 — the stats-lie lesson of
-    SCALE.md applied to output instead of broadcast). A USER-SPECIFIED
+    expansion to 7 tasks (the stats-lie lesson of SCALE.md applied to
+    output instead of broadcast). A USER-SPECIFIED
     repartition count is exempt from AQE coalescing, pinning the
     expansion's parallelism to the session's shuffle width; the extra
     exchange moves only the compact family relation.
@@ -2323,33 +2127,49 @@ def _expansion_partitions(fam: DataFrame) -> int:
         return fam.sparkSession.sparkContext.defaultParallelism
 
 
-def _expand_cross(
+def _expand_families(
     rp: DataFrame,
     fam: DataFrame,
-    ordered: bool,
+    ordered: bool = False,
+    eligible: DataFrame | None = None,
     fam_b: DataFrame | None = None,
 ) -> DataFrame:
-    """Expand representative-level pairs to all family-member pairs.
+    """Representative-level pairs -> every family-member pair.
 
-    ``rp``'s doc_a/doc_b are representative ids; every other column is
-    carried verbatim (copies inherit their representative's scores
-    exactly — identical text => identical sets/signatures). ordered
-    keeps (a-member, b-member) orientation (containment); unordered
-    re-orients each cross-family pair as (min, max) — families are
-    disjoint, so each unordered pair is produced exactly once.
+    Cross-family: ``rp``'s doc_a/doc_b are representative ids; every
+    other column is carried verbatim (copies inherit their
+    representative's scores exactly — identical text => identical
+    sets/signatures). ``ordered`` keeps (a-member, b-member) orientation
+    (containment); unordered re-orients each pair as (min, max) —
+    families are disjoint, so each unordered pair is produced once.
+
+    Within-family: the copies' pairs the rep pipeline cannot see, both
+    directions when ``ordered``, else doc_a < doc_b. ``eligible``
+    (keyed by the rep's doc_id) restricts which families pair within
+    themselves:
+    shingle pipelines pass the reps that HAVE a set, because a
+    set-less content is pairless in the direct pipeline; word-set
+    pipelines pass None (their only pairless case, NULL text, already
+    has a singleton family). Each carried column takes ``eligible``'s
+    column of the same name when it has one (the rep's set size as
+    inter_n), else 1.0 — identical inputs score 1.0.
 
     ``fam_b``: a SECOND family relation for the doc_b side (the
-    batch-vs-corpus probe, where the two sides collapse independently);
-    default None reuses ``fam`` for both sides (self-join pipelines).
+    batch-vs-corpus probe, where the two sides collapse independently
+    and no pair lies within a family); None reuses ``fam``.
     """
     carried = [c for c in rp.columns if c not in ("doc_a", "doc_b")]
     npart = _expansion_partitions(fam)
+
+    def members(f: DataFrame) -> DataFrame:
+        return f.groupBy("rep").agg(F.collect_list("doc_id").alias("mm"))
+
     # Array-explode expansion, NOT a member×member join: a join must
     # co-partition the generate-heavy stage on doc_a/doc_b, so one
     # representative appearing in many rep pairs concentrates its
     # (pairs x csize^2) output in one hash partition — AQE's skew
     # splitter is byte-blind to generated rows and never splits it
-    # (measured r6: 6 straggler tasks carrying most of a 90B-row
+    # (measured: 6 straggler tasks carrying most of a 90B-row
     # expansion). Instead the compact rp relation joins two
     # family-ARRAY relations (one row per family), explodes side A,
     # repartitions on the uniform (pair, member-a) combination, and
@@ -2358,12 +2178,8 @@ def _expand_cross(
     # counts; a corpus holding ~10^7 copies of ONE text should run
     # dedup_exact upstream first (the same contract as the components
     # star edges).
-    arrs = fam.groupBy("rep").agg(F.collect_list("doc_id").alias("mm"))
-    arrs_b = (
-        arrs
-        if fam_b is None
-        else fam_b.groupBy("rep").agg(F.collect_list("doc_id").alias("mm"))
-    )
+    arrs = members(fam)
+    arrs_b = arrs if fam_b is None else members(fam_b)
     j = (
         rp.join(
             arrs.select(F.col("rep").alias("doc_a"), F.col("mm").alias("as_")),
@@ -2386,40 +2202,27 @@ def _expand_cross(
             F.least("xa", "xb").alias("doc_a"),
             F.greatest("xa", "xb").alias("doc_b"),
         ]
-    return j.select(*sel, *carried)
-
-
-def _within_family(
-    fam: DataFrame,
-    values: list,
-    ordered: bool,
-    eligible: DataFrame | None = None,
-) -> DataFrame:
-    """Same-family member pairs — the copies' pairs the collapsed rep
-    pipeline cannot see (score 1.0 by construction: identical inputs).
-
-    ``values``: aliased Columns appended after (doc_a, doc_b); they may
-    reference ``eligible``'s columns through the 'a' alias (e.g. the
-    rep's shingle count as the pair's inter_n). ``ordered`` False emits
-    each unordered pair once (doc_a < doc_b), True emits both
-    directions. ``eligible`` ((rep, ...)-keyed) restricts which
-    families expand — shingle-based pipelines pass the reps that HAVE
-    shingles, because shingle-less contents are pairless in the direct
-    pipeline; word-set pipelines pass None (their only pairless case,
-    NULL text, already has a singleton family — _content_families'
-    NULL discipline).
-    """
-    wf = fam.filter(F.col("csize") >= 2).repartition(
-        _expansion_partitions(fam), "rep"
+    cross = j.select(*sel, *carried)
+    if fam_b is not None:
+        return cross
+    wf = (
+        fam.filter(F.col("csize") >= 2)
+        .select("doc_id", "rep")
+        .repartition(npart, "rep")
     )
+    own = set()
     if eligible is not None:
-        wf = wf.join(eligible, "rep")
+        wf = wf.join(eligible.withColumnRenamed("doc_id", "rep"), "rep")
+        own = set(eligible.columns)
+    values = [
+        (F.col(f"a.{c}") if c in own else F.lit(1.0)).alias(c) for c in carried
+    ]
     cmp = (
         (F.col("a.doc_id") != F.col("b.doc_id"))
         if ordered
         else (F.col("a.doc_id") < F.col("b.doc_id"))
     )
-    return (
+    within = (
         wf.alias("a")
         .join(wf.alias("b"), (F.col("a.rep") == F.col("b.rep")) & cmp)
         .select(
@@ -2428,24 +2231,35 @@ def _within_family(
             *values,
         )
     )
+    return cross.unionByName(within)
 
 
-def _prefix_filter_scored(
+def _prefix_filter_pairs(
     spark: SparkSession,
-    sh: DataFrame,
+    sf_dir: str,
     num: int,
     den: int,
     symmetric: bool,
 ) -> DataFrame:
-    """Exact-recall scored pairs over a distinct (doc_id, h) relation.
+    """Exact-recall 4-shingle-set pairs over exact-copy representatives.
 
     symmetric=True: Jaccard >= num/den, doc_a < doc_b, both sides
     prefix-filtered (AllPairs). symmetric=False: containment
     |A&B|/|A| >= num/den, ordered pairs, one-sided prefix vs the full
-    container posting list. Returns (doc_a, doc_b, na, nb, inter_n).
+    container posting list. Returns (doc_a, doc_b, inter_n, jaccard or
+    containment) expanded to every family member; thresholds are integer
+    (den * inter_n >= num * denominator), so both engines agree at
+    exact multiples.
     """
     from pyspark.sql.window import Window
 
+    fam, reps = _content_families(table(spark, sf_dir, "documents"))
+    sh = (
+        shingles(reps, k=4)
+        .select("doc_id", F.md5("sh").alias("h"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
     dfreq = sh.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
     # no broadcast hint: both sides are corpus-scaled — AQE decides
     tok = sh.join(dfreq, "h")
@@ -2502,7 +2316,7 @@ def _prefix_filter_scored(
     arrs = sh.groupBy("doc_id").agg(
         F.sort_array(F.collect_list("h")).alias("hs")
     )
-    return (
+    rp = (
         cand.join(
             arrs.select(
                 F.col("doc_id").alias("doc_a"), F.col("hs").alias("ha")
@@ -2518,8 +2332,19 @@ def _prefix_filter_scored(
         .withColumn(
             "inter_n", F.size(F.array_intersect("ha", "hb")).cast("long")
         )
-        .drop("ha", "hb")
     )
+    inter = F.col("inter_n")
+    if symmetric:
+        score, denom = "jaccard", F.col("na") + F.col("nb") - inter
+    else:
+        score, denom = "containment", F.col("na")
+    rp = rp.filter(den * inter >= num * denom).select(
+        "doc_a", "doc_b", "inter_n", pround(inter * 1.0 / denom, 4).alias(score)
+    )
+    # within-family: every exact copy with >= 1 shingle scores 1.0
+    # against its twins, with inter_n = the rep's set size
+    eligible = sizes.select("doc_id", F.col("n").cast("long").alias("inter_n"))
+    return _expand_families(rp, fam, ordered=not symmetric, eligible=eligible)
 
 
 @register(
@@ -2561,7 +2386,7 @@ def _prefix_filter_scored(
     join, within-family pairs are emitted directly as (n, 1.0). On a
     100-replica tier this is the difference between a fixture-sized
     candidate stage + output-bound expansion and a candidate exchange
-    quadratic in replica mass (measured r6: 279 s uncollapsed at 100
+    quadratic in replica mass (measured: 279 s uncollapsed at 100
     copies, where containment's uncollapsed twin filled 22 GB of
     spill and died). The AllPairs prefix (|A| - ceil(0.8|A|) + 1
     rarest shingles, df-ascending) needs NO global rank: the global
@@ -2579,48 +2404,7 @@ def _prefix_filter_scored(
 def dedup_jaccard_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Every 4-shingle-set pair with Jaccard >= 0.8 -- exact recall via
     AllPairs prefix filtering over exact-copy representatives."""
-    d = table(spark, sf_dir, "documents")
-    fam = _content_families(d).localCheckpoint(eager=True)
-    rep_docs = d.join(
-        fam.filter(F.col("doc_id") == F.col("rep")).select("doc_id"),
-        "doc_id",
-    )
-    sh = (
-        shingles(rep_docs, k=4)
-        .select("doc_id", F.md5("sh").alias("h"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    rp = _prefix_filter_scored(spark, sh, num=4, den=5, symmetric=True)
-    rp = rp.filter(
-        5 * F.col("inter_n")
-        >= 4 * (F.col("na") + F.col("nb") - F.col("inter_n"))
-    ).withColumn(
-        "jaccard",
-        pround(
-            F.col("inter_n")
-            * 1.0
-            / (F.col("na") + F.col("nb") - F.col("inter_n")),
-            4,
-        ),
-    )
-    cross = _expand_cross(
-        rp.select("doc_a", "doc_b", "inter_n", "jaccard"), fam, ordered=False
-    )
-    # within-family: exact copies with >= 1 shingle are Jaccard-1.0
-    # pairs by construction (identical sets); shingle-less (< 4 words)
-    # families drop out because their rep has no sizes row
-    sizes_rep = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    within = _within_family(
-        fam,
-        [
-            F.col("a.n").cast("long").alias("inter_n"),
-            F.lit(1.0).alias("jaccard"),
-        ],
-        ordered=False,
-        eligible=sizes_rep.select(F.col("doc_id").alias("rep"), "n"),
-    )
-    return cross.unionByName(within)
+    return _prefix_filter_pairs(spark, sf_dir, num=4, den=5, symmetric=True)
 
 
 @register(
@@ -2657,7 +2441,7 @@ def dedup_jaccard_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     optimization: the container side joins its FULL posting list (only
     the contained side can be prefix-pruned, since the overlap bound
     ceil(0.9|A|) depends on |A| alone), so uncollapsed replica mass
-    multiplies BOTH posting sides — measured r6 at the 100-replica
+    multiplies BOTH posting sides — measured at the 100-replica
     tier, the uncollapsed candidate exchange spilled 22 GB and died
     with disk exhaustion; collapsed, the candidate stage is
     distinct-content-sized and the true ~replica^2 output (every copy
@@ -2673,40 +2457,7 @@ def dedup_jaccard_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered near-subset pairs: |A&B|/|A| >= 0.9 on 4-shingle sets
     (A = doc_a contained in doc_b), exact recall, copy-collapsed."""
-    d = table(spark, sf_dir, "documents")
-    fam = _content_families(d).localCheckpoint(eager=True)
-    rep_docs = d.join(
-        fam.filter(F.col("doc_id") == F.col("rep")).select("doc_id"),
-        "doc_id",
-    )
-    sh = (
-        shingles(rep_docs, k=4)
-        .select("doc_id", F.md5("sh").alias("h"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    rp = _prefix_filter_scored(spark, sh, num=9, den=10, symmetric=False)
-    rp = rp.filter(10 * F.col("inter_n") >= 9 * F.col("na")).withColumn(
-        "containment", pround(F.col("inter_n") * 1.0 / F.col("na"), 4)
-    )
-    cross = _expand_cross(
-        rp.select("doc_a", "doc_b", "inter_n", "containment"),
-        fam,
-        ordered=True,
-    )
-    # within-family: every exact copy is fully contained in every other
-    # member (both directions), provided the content has >= 1 shingle
-    sizes_rep = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    within = _within_family(
-        fam,
-        [
-            F.col("a.n").cast("long").alias("inter_n"),
-            F.lit(1.0).alias("containment"),
-        ],
-        ordered=True,
-        eligible=sizes_rep.select(F.col("doc_id").alias("rep"), "n"),
-    )
-    return cross.unionByName(within)
+    return _prefix_filter_pairs(spark, sf_dir, num=9, den=10, symmetric=False)
 
 
 def _neardup_curate_oracle() -> str:

@@ -339,7 +339,9 @@ class Job:
         reference's async dataset scheduling) and with a ``timeout`` the
         call returns whichever subset finished in time; the rest keep
         computing and can be waited on again. ``timeout=None`` blocks for
-        all, preserving the simple iterative-driver contract.
+        all, preserving the simple iterative-driver contract. A dataset
+        whose materialization failed re-raises its error here and stays
+        unmaterialized, so a later wait resubmits it.
         """
         pending = [ds for ds in datasets if not ds._materialized]
         for ds in pending:
@@ -355,8 +357,9 @@ class Job:
             )
             for ds in pending:
                 if ds._future in done:
+                    future, ds._future = ds._future, None
+                    future.result()
                     ds._materialized = True
-                    ds._future = None
         return [ds for ds in datasets if ds._materialized]
 
     def _count_in_group(self, rdd: RDD, group: str) -> None:

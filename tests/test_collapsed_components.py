@@ -24,6 +24,7 @@ from pyspark.sql import types as T
 
 from mrs_mapreduce_spark.llm.dedup import (
     _collapsed_pair_edges,
+    _collapsed_parts,
     _minhash_pairs,
     component_labels,
     dedup_components,
@@ -42,9 +43,9 @@ _SCHEMA = T.StructType(
 )
 
 
-def _write_docs(spark, path: str, texts: list[str]) -> str:
+def _write_docs(spark, path: str, texts: list[str | None]) -> str:
     rows = [
-        (i, t, "en", "synthetic", len(t)) for i, t in enumerate(texts)
+        (i, t, "en", "synthetic", len(t or "")) for i, t in enumerate(texts)
     ]
     spark.createDataFrame(rows, _SCHEMA).coalesce(1).write.mode(
         "overwrite"
@@ -52,10 +53,10 @@ def _write_docs(spark, path: str, texts: list[str]) -> str:
     return path
 
 
-def _corpus_with_replicas() -> list[str]:
+def _corpus_with_replicas() -> list[str | None]:
     """3 near-dup content families x 4 exact copies each, 2 singletons,
-    plus 3 exact copies of a 2-word doc (shingle-less: must stay
-    isolated)."""
+    3 exact copies of a 2-word doc (shingle-less: must stay isolated),
+    and two NULL-text docs (no text at all: must stay isolated)."""
     base = (
         "the quick brown fox jumps over the lazy dog near the river bank "
         "while morning sun rises slowly above distant quiet hills today"
@@ -78,6 +79,7 @@ def _corpus_with_replicas() -> list[str]:
         texts.extend([fam] * 4)
     texts.extend(singles)
     texts.extend([short] * 3)
+    texts.extend([None] * 2)
     return texts
 
 
@@ -109,16 +111,26 @@ def test_collapsed_edges_match_uncapped_components(spark, tmp_path):
     assert fast == truth
     # the corpus really exercises replicas: families span exact copies
     assert len(truth) >= 12  # 3 families x 4 copies (+ any extra pairs)
+    # the NULL-text docs are singleton families: in no star edge, no label
+    nulls = {17, 18}
+    _, star = _collapsed_parts(spark, sf)
+    assert star.count() > 0
+    assert not any({r.doc_a, r.doc_b} & nulls for r in star.collect())
+    assert not nulls & set(fast)
 
 
 def test_short_doc_copies_stay_isolated(spark, tmp_path):
     sf = _write_docs(
         spark,
         str(tmp_path / "sf"),
-        ["hi there", "hi there", "hi there", "one", "one"],
+        ["hi there", "hi there", "hi there", "one", "one", None, None],
     )
     edges = _collapsed_pair_edges(spark, sf)
     assert edges.count() == 0  # no shingles anywhere => empty graph
+    # NULL text (ids 5, 6) forms singleton families: no star edge, no label
+    _, star = _collapsed_parts(spark, sf)
+    assert star.count() == 0
+    assert component_labels(spark, sf).count() == 0
 
 
 def test_builders_agree_with_each_other(spark, tmp_path):

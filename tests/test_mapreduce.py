@@ -164,6 +164,22 @@ def test_wait_and_progress(spark):
     assert job.progress(ds) == 1.0
 
 
+def test_wait_reraises_failed_materialization(spark):
+    """A dataset whose mapper raises is not reported ready: wait re-raises
+    the worker error and progress stays below 1.0."""
+    job = Job(spark, default_splits=2)
+
+    def bad_map(key, value):
+        raise ValueError("bad record")
+        yield key, value
+
+    ds = job.map_data(job.local_data([(1, 1), (2, 2)], splits=2), bad_map)
+    with pytest.raises(Exception, match="bad record"):
+        job.wait(ds)
+    assert not ds._materialized and ds._future is None
+    assert job.progress(ds) < 1.0
+
+
 class ConvergingProgram:
     """Doubles a value until it exceeds 100 (IterativeMR contract test)."""
 
