@@ -36,6 +36,12 @@ def cosine(a: str | Column, b: str | Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+def sq_dist(a: str | Column, b: str | Column) -> Column:
+    """Squared Euclidean distance, summed left to right like :func:`dot`."""
+    diffs = F.zip_with(a, b, lambda x, c: (x - c) * (x - c))
+    return F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x)
+
+
 def with_norm(df: DataFrame, vec_col: str = "embedding",
               out: str = "nrm") -> DataFrame:
     """Attach the vector's norm as a column.
@@ -46,6 +52,130 @@ def with_norm(df: DataFrame, vec_col: str = "embedding",
     bit-identical, so oracles that spell the norm per pair still match.
     """
     return df.withColumn(out, norm(vec_col))
+
+
+def points(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, a): every embedding with its elements cast to double."""
+    return fan_out(table(spark, sf_dir, "embeddings")).select(
+        "vec_id",
+        F.transform("embedding", lambda x: x.cast("double")).alias("a"),
+    )
+
+
+def _queries(df: DataFrame, vec: str, *extra) -> DataFrame:
+    """(q_id, qv, q_nrm, *extra): the first 10 vectors as query block."""
+    return df.filter(F.col("vec_id") < 10).select(
+        F.col("vec_id").alias("q_id"),
+        F.col(vec).alias("qv"),
+        F.col("nrm").alias("q_nrm"),
+        *extra,
+    )
+
+
+def _cos_scored(
+    cands: DataFrame, q: DataFrame, on=None, vec: str = "embedding"
+) -> DataFrame:
+    """(q_id, cand_id, cos): candidates scored against a broadcast query
+    block, self-pairs excluded.
+
+    ``on`` is the join key (None pairs every candidate with every
+    query). Both norms are precomputed columns, once per vector, not per
+    pair; sqrt of the same double is bit-identical to the oracles'
+    per-pair spelling.
+    """
+    q = F.broadcast(q)
+    pairs = cands.crossJoin(q) if on is None else cands.join(q, on)
+    return pairs.filter(F.col("vec_id") != F.col("q_id")).select(
+        "q_id",
+        F.col("vec_id").alias("cand_id"),
+        (dot("qv", vec) / (F.col("q_nrm") * F.col("nrm"))).alias("cos"),
+    )
+
+
+def _top_k(scored: DataFrame, k: int, *order) -> DataFrame:
+    """Rows ranked 1..k (``rk``) within each q_id by ``order``."""
+    w = Window.partitionBy("q_id").orderBy(*order)
+    return scored.withColumn("rk", F.row_number().over(w)).filter(
+        F.col("rk") <= k
+    )
+
+
+def _cos_top_k(scored: DataFrame, k: int) -> DataFrame:
+    """(q_id, cand_id, cos_sim, rk): the k best cosines per query."""
+    return _top_k(scored, k, F.desc("cos"), "cand_id").select(
+        "q_id", "cand_id", pround("cos", 6).alias("cos_sim"), "rk"
+    )
+
+
+def _mean_vectors(
+    df: DataFrame, key: str, digits: int | None = None
+) -> DataFrame:
+    """(key, cv): the per-key mean of the ``a`` vectors.
+
+    One posexplode, a partial-aggregated (key, dim) average, then the
+    dims collected back in order: only keys x dims rows shuffle.
+    ``digits`` rounds each mean on both engines (the Lloyd update).
+    """
+    c = F.avg("val")
+    per_dim = (
+        df.select(key, F.posexplode("a").alias("dim", "val"))
+        .groupBy(key, "dim")
+        .agg((c if digits is None else pround(c, digits)).alias("c"))
+    )
+    return per_dim.groupBy(key).agg(
+        F.sort_array(F.collect_list(F.struct("dim", "c")))
+        .getField("c")
+        .alias("cv")
+    )
+
+
+def _nearest(pairs: DataFrame) -> DataFrame:
+    """(vec_id, cid, a): each point's nearest centroid.
+
+    ``pairs`` holds one (vec_id, a, cid, cv) row per candidate centroid.
+    The argmin is a lexicographic struct-min: (dist, cid) is unique per
+    point, so min(struct) is the (dist asc, cid asc) winner, and it runs
+    as a partial->final hash aggregation — when the centroids arrive by
+    broadcast the fan-out collapses map-side and the only shuffle
+    carries one row per point, never a sort.
+    """
+    dist = sq_dist("a", "cv").alias("dist")
+    return (
+        pairs.groupBy("vec_id")
+        .agg(
+            F.min(F.struct(dist, "cid")).alias("m"),
+            # every row in the group carries the same point vector, so
+            # first() is deterministic — keeping the array OUT of the
+            # min struct keeps the comparator a codegen'd (double, int)
+            # compare instead of an interpreted array-bearing one
+            F.first("a").alias("a"),
+        )
+        .select("vec_id", F.col("m.cid").alias("cid"), "a")
+    )
+
+
+def lloyd(
+    pts: DataFrame, k: int, updates: int
+) -> tuple[DataFrame, DataFrame]:
+    """Lloyd's k-means over (vec_id, a): (assigned, centroids).
+
+    Seeds are the first ``k`` vectors; each of the ``updates`` rounds
+    assigns every point to its nearest centroid against a broadcast
+    codebook and moves each centroid to its members' mean, rounded to 6
+    digits on both engines so the next assignment compares bit-identical
+    doubles. The k-row codebook is localCheckpointed every round, so the
+    next round starts from k materialized rows instead of re-deriving
+    the earlier ones. ``assigned`` is (vec_id, cid, a) against the final
+    ``centroids`` (cid, cv). Callers materialize ``pts`` themselves: it
+    is read once per round.
+    """
+    cents = pts.filter(F.col("vec_id") < k).select(
+        F.col("vec_id").alias("cid"), F.col("a").alias("cv")
+    )
+    for _ in range(updates):
+        members = _nearest(pts.crossJoin(F.broadcast(cents)))
+        cents = _mean_vectors(members, "cid", 6).localCheckpoint(eager=True)
+    return _nearest(pts.crossJoin(F.broadcast(cents))), cents
 
 
 #: DuckDB spelling of the same accumulation order (list_transform over a
@@ -91,28 +221,7 @@ def _duck_cos(a: str, b: str) -> str:
 def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-5 neighbors for the first 10 query vectors."""
     e = with_norm(fan_out(table(spark, sf_dir, "embeddings")))
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("qv"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    scored = (
-        e.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            F.col("vec_id").alias("cand_id"),
-            (dot("qv", "embedding") / (F.col("q_nrm") * F.col("nrm"))).alias(
-                "cos"
-            ),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), "cand_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 5)
-        .select("q_id", "cand_id", pround("cos", 6).alias("cos_sim"), "rk")
-    )
+    return _cos_top_k(_cos_scored(e, _queries(e, "embedding")), 5)
 
 
 @register(
@@ -179,39 +288,16 @@ def similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "embedding", "nrm", "code_id")
     )
     # assigned is consumed twice (q block + candidate side) and stays
-    # UNcheckpointed — re-decided on fresh tier measurements (r13,
-    # verdict task #7): sf1-synth favored the checkpoint 3/4 (medians
+    # UNcheckpointed: sf1-synth favored the checkpoint 3/4 (medians
     # 2.37 -> 1.56 s) but the 100-copy tier ran WORSE in 3/3 interleaved
     # rounds (9.6 -> 29.7 s medians) and sf0.1 is a wash-to-worse —
     # materializing the corpus-wide embedding-array relation grows with
     # the corpus while the 16-centroid argmin it saves stays cheap, so
     # the checkpoint loses exactly where scale matters (the TRAINED
     # variant keeps its checkpoint: its assignment embeds a Lloyd round).
-    q = assigned.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("code_id").alias("q_code"),
-        F.col("embedding").alias("qv"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    scored = (
-        assigned.join(
-            F.broadcast(q), F.col("code_id") == F.col("q_code")
-        )
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            F.col("vec_id").alias("cand_id"),
-            (dot("qv", "embedding") / (F.col("q_nrm") * F.col("nrm"))).alias(
-                "cos"
-            ),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), "cand_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select("q_id", "cand_id", pround("cos", 6).alias("cos_sim"), "rk")
-    )
+    q = _queries(assigned, "embedding", F.col("code_id").alias("q_code"))
+    scored = _cos_scored(assigned, q, F.col("code_id") == F.col("q_code"))
+    return _cos_top_k(scored, 3)
 
 
 def cosine_topk_numpy(
@@ -231,29 +317,29 @@ def cosine_topk_numpy(
     """
     import numpy as np
 
-    def _safe_norm(m):
+    def safe_norm(m):
         # zero-norm guard: a 0/0 division yields NaN, and NaN sorts
         # GREATEST under F.desc — one all-zeros vector would become the
-        # rank-1 neighbor of every query (r11 similarity review finding
-        # #2). Dividing by 1 instead leaves the zero vector's cos at 0,
-        # ranking it last, which is the right answer for "no direction".
+        # rank-1 neighbor of every query. Dividing by 1 instead leaves
+        # the zero vector's cos at 0, ranking it last, which is the
+        # right answer for "no direction".
         n = np.linalg.norm(m, axis=1, keepdims=True)
         return np.where(n == 0.0, 1.0, n)
 
     spark = candidates.sparkSession
+    schema = "q_id long, cand_id long, cos_sim double"
     q_rows = queries.collect()
+    if not q_rows:
+        # np.array([]) is 1-D, so the norm over axis 1 would raise
+        return spark.createDataFrame([], schema + ", rk int")
     q_ids = [r.q_id for r in q_rows]
     q_mat = np.array([r.qv for r in q_rows], dtype=np.float64)
-    q_mat /= _safe_norm(q_mat)
+    q_mat /= safe_norm(q_mat)
     bc = spark.sparkContext.broadcast((q_ids, q_mat))
 
     def score(batches):
         import numpy as np
         import pandas as pd
-
-        def safe_norm(m):
-            n = np.linalg.norm(m, axis=1, keepdims=True)
-            return np.where(n == 0.0, 1.0, n)
 
         ids, qm = bc.value
         for pdf in batches:
@@ -269,14 +355,10 @@ def cosine_topk_numpy(
             }
             yield pd.DataFrame(out)
 
-    scored = candidates.mapInPandas(
-        score, schema="q_id long, cand_id long, cos_sim double"
-    ).filter(F.col("q_id") != F.col("cand_id"))
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), "cand_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
+    scored = candidates.mapInPandas(score, schema=schema).filter(
+        F.col("q_id") != F.col("cand_id")
     )
+    return _top_k(scored, k, F.desc("cos_sim"), "cand_id")
 
 
 @register(
@@ -360,9 +442,8 @@ def _srp_planes(n_planes: int = 8, dim: int = 64) -> list[list[float]]:
 #: signature every LSH query keys on; rows 8..11 are E111's refinement
 #: bits. _srp_planes(12)[:8] == _srp_planes(8) by construction (the LCG
 #: runs row-by-row), asserted in tests — so there is exactly ONE source
-#: of truth for the signature (r11 review finding #6: the old fixed
-#: 8-plane _spark/_duck_srp_bucket pair duplicated _srp_bits(0, 8) and
-#: had to be kept sign-threshold-identical by hand).
+#: of truth for the signature, never a second 8-plane copy that would
+#: have to be kept sign-threshold-identical by hand.
 _PLANES12 = _srp_planes(12)
 
 
@@ -389,6 +470,56 @@ def _duck_srp_bits(lo: int, hi: int) -> str:
         )
         terms.append(f"(CASE WHEN {d} >= 0 THEN {2 ** (p - lo)} ELSE 0 END)")
     return "(" + " + ".join(terms) + ")"
+
+
+def _lsh_queries(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """(corpus, queries): vectors with norms and 8-bit SRP ``bucket``,
+    and their query block carrying ``q_bucket``."""
+    e = with_norm(fan_out(table(spark, sf_dir, "embeddings"))).withColumn(
+        "bucket", _spark_srp_bits(0, 8)
+    )
+    return e, _queries(e, "embedding", F.col("bucket").alias("q_bucket"))
+
+
+def _lsh_probes(q: DataFrame) -> DataFrame:
+    """(q_id, qv, q_nrm, probe): each query's bucket + its 8 one-bit flips."""
+    flips = F.array(*[F.lit(0)] + [F.lit(1 << i) for i in range(8)])
+    return q.select(
+        "q_id", "qv", "q_nrm",
+        F.explode(
+            F.transform(flips, lambda m: F.col("q_bucket").bitwiseXOR(m))
+        ).alias("probe"),
+    )
+
+
+def _recall(exact: DataFrame, approx: DataFrame) -> DataFrame:
+    """(q_id, n_exact, n_hit, recall) of approx top-k vs exact top-k.
+
+    exact is (q_id, cand_id), approx (q_id, a_cand). Both are k-bounded
+    (<= |queries| x k rows), so approx broadcasts: the LEFT witness join
+    (misses stay as 0-hit rows) is a BroadcastHashJoin instead of a
+    sort-merge with two Exchanges + Sorts for 50-row inputs.
+    """
+    hit = F.when(F.col("a_cand").isNotNull(), F.lit(1)).otherwise(F.lit(0))
+    return (
+        exact.join(
+            F.broadcast(approx),
+            (exact["q_id"] == approx["q_id"])
+            & (exact["cand_id"] == approx["a_cand"]),
+            "left",
+        )
+        .select(exact["q_id"].alias("q_id"), "cand_id", "a_cand")
+        .groupBy("q_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_exact"),
+            F.sum(hit).cast("long").alias("n_hit"),
+            pround(
+                F.sum(hit) / F.count(F.lit(1)).cast("double"), 6
+            ).alias("recall"),
+        )
+    )
 
 
 @register(
@@ -425,32 +556,9 @@ def _duck_srp_bits(lo: int, hi: int) -> str:
 )
 def similarity_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-3 neighbors within the query's SRP-LSH bucket."""
-    e = with_norm(fan_out(table(spark, sf_dir, "embeddings"))).withColumn(
-        "bucket", _spark_srp_bits(0, 8)
-    )
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("qv"),
-        F.col("nrm").alias("q_nrm"),
-        F.col("bucket").alias("q_bucket"),
-    )
-    scored = (
-        e.join(F.broadcast(q), F.col("bucket") == F.col("q_bucket"))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            F.col("vec_id").alias("cand_id"),
-            (dot("qv", "embedding") / (F.col("q_nrm") * F.col("nrm"))).alias(
-                "cos"
-            ),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), "cand_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select("q_id", "cand_id", pround("cos", 6).alias("cos_sim"), "rk")
-    )
+    e, q = _lsh_queries(spark, sf_dir)
+    scored = _cos_scored(e, q, F.col("bucket") == F.col("q_bucket"))
+    return _cos_top_k(scored, 3)
 
 
 @register(
@@ -501,24 +609,14 @@ def embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
         F.transform("embedding", lambda x: x.cast("double")).alias("a"),
     )
-    per_dim = (
-        pts.select("label", F.posexplode("a").alias("dim", "val"))
-        .groupBy("label", "dim")
-        .agg(F.avg("val").alias("c"))
-    )
-    cv = per_dim.groupBy("label").agg(
-        F.sort_array(F.collect_list(F.struct("dim", "c")))
-        .getField("c")
-        .alias("cv")
-    )
-    diffs = F.zip_with("a", "cv", lambda x, c: (x - c) * (x - c))
-    dist = F.sqrt(F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x))
-    # r12: d is read twice (per-label moments, final z filter) and each
-    # read used to replay the centroid subtree (64x posexplode + two
-    # shuffles) AND the 64-term distance lambda per point — 8 scan
-    # nodes / 8 Exchanges at sf0.01. Checkpointing the ~20-byte/row
-    # (vec_id, label, dist) relation computes both exactly once: 2
-    # scans (points pass + centroid pass) ahead of the checkpoint.
+    cv = _mean_vectors(pts, "label")
+    dist = F.sqrt(sq_dist("a", "cv"))
+    # d is read twice (per-label moments, final z filter); without the
+    # checkpoint each read replays the centroid subtree (64x posexplode
+    # + two shuffles) AND the 64-term distance lambda per point — 8
+    # scan nodes / 8 Exchanges at sf0.01. Checkpointing the
+    # ~20-byte/row (vec_id, label, dist) relation computes both exactly
+    # once: 2 scans (points pass + centroid pass) ahead of it.
     d = (
         pts.join(F.broadcast(cv), "label")
         .select("vec_id", "label", pround(dist, 4).alias("dist"))
@@ -530,7 +628,7 @@ def embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # try_divide: a degenerate label (all members identical -> sd = 0,
     # numerator exactly 0 since dist is pre-rounded) must yield NULL z
     # and drop out of the > 2.0 filter, matching DuckDB's NULL for 0/0;
-    # a plain division THROWS under ANSI mode (r11 review finding #3)
+    # a plain division THROWS under ANSI mode
     z = F.try_divide(F.col("dist") - F.col("mu"), F.col("sd"))
     return (
         d.join(F.broadcast(stats), "label")
@@ -565,131 +663,51 @@ def _ivf_trained(
 
     ``assigned`` is (vec_id, cid, a) — every embedding in its trained
     cell; ``trained`` is the k-row (cid, cv) codebook after one Lloyd
-    round. similarity_ivf_trained's pipeline — seed = first _IVF_K
-    vectors, ONE Lloyd update round (fixed for determinism), assignment
-    as the broadcast struct-min argmin — shared with the composed
-    IVF+ADC retrieval query (probes cells, re-ranks by asymmetric
-    distance) and the nprobe=2 search (ranks the codebook per query to
-    pick TWO cells, which needs ``trained`` itself).
+    round. similarity_ivf_trained's pipeline — :func:`lloyd` with seed
+    = first _IVF_K vectors and ONE update round (fixed for determinism)
+    — shared with the composed IVF+ADC retrieval query (probes cells,
+    re-ranks by asymmetric distance) and the nprobe=2 search (ranks the
+    codebook per query to pick TWO cells, which needs ``trained``
+    itself).
     """
-    pts = (
-        fan_out(table(spark, sf_dir, "embeddings"))
-        .select(
-            "vec_id",
-            F.transform("embedding", lambda x: x.cast("double")).alias("a"),
-        )
-        # localCheckpoint, not cache: the Lloyd round + final assignment
-        # reuse pts, and checkpoint storage is released on DataFrame GC
-        # instead of lingering in the executor cache (ADVICE r3)
-        .localCheckpoint(eager=True)
-    )
-    cents = pts.filter(F.col("vec_id") < _IVF_K).select(
-        F.col("vec_id").alias("cid"), F.col("a").alias("cv")
-    )
-
-    def sq_dist():
-        diffs = F.zip_with("a", "cv", lambda x, c: (x - c) * (x - c))
-        return F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x)
-
-    def assign(cent_df):
-        # argmin as a struct-min partial aggregation (iterative.py:150's
-        # pattern): the broadcast crossJoin is narrow, the only shuffle
-        # carries one row per point.
-        return (
-            pts.crossJoin(F.broadcast(cent_df))
-            .groupBy("vec_id")
-            .agg(
-                F.min(F.struct(sq_dist().alias("dist"), "cid")).alias("m"),
-                F.first("a").alias("a"),
-            )
-            .select("vec_id", F.col("m.cid").alias("cid"), "a")
-        )
-
-    # one Lloyd update round, rounded to 6 decimals on both engines
-    a1 = assign(cents)
-    per_dim = (
-        a1.select("cid", F.posexplode("a").alias("dim", "val"))
-        .groupBy("cid", "dim")
-        .agg(pround(F.avg("val"), 6).alias("c"))
-    )
-    trained = (
-        per_dim.groupBy("cid")
-        .agg(
-            F.sort_array(F.collect_list(F.struct("dim", "c")))
-            .getField("c")
-            .alias("cv")
-        )
-        .localCheckpoint(eager=True)  # k-row codebook, lineage cut
-    )
+    # localCheckpoint, not cache: the Lloyd round + final assignment
+    # reuse pts, and checkpoint storage is released on DataFrame GC
+    # instead of lingering in the executor cache
+    pts = points(spark, sf_dir).localCheckpoint(eager=True)
+    assigned, trained = lloyd(pts, _IVF_K, 1)
     # materialize the assignment WITH per-vector norms: every consumer
     # reads assigned 2-4 times (query block, candidate side, exact
     # witness side) and Spark has no common-subplan dedup, so an
     # uncheckpointed assigned re-runs the broadcast argmin per consumer;
-    # nrm once per vector restores the with_norm discipline (measured 3x
-    # on dedup_embedding) to the whole trained-IVF family (r11 review
-    # finding #4). sqrt here is bit-identical to the oracles' per-pair
-    # spelling, so declared results are unchanged.
-    assigned = (
-        assign(trained)
-        .withColumn("nrm", norm("a"))
-        .localCheckpoint(eager=True)
+    # nrm once per vector is the with_norm discipline (measured 3x on
+    # dedup_embedding). sqrt here is bit-identical to the oracles'
+    # per-pair spelling, so declared results are unchanged.
+    assigned = assigned.withColumn("nrm", norm("a")).localCheckpoint(
+        eager=True
     )
     return assigned, trained
 
 
-def _nprobe_candidates(
-    assigned: DataFrame,
-    trained: DataFrame,
-    n_queries: int = 10,
-    nprobe: int = 2,
-) -> DataFrame:
-    """(q_id, qv, q_nrm, cid): each query x its nprobe nearest cells.
+def _nprobe_candidates(assigned: DataFrame, trained: DataFrame) -> DataFrame:
+    """(q_id, qv, q_nrm, cid): each query x its nprobe = 2 nearest cells.
 
     THE one definition of the probe pipeline — similarity_ivf_nprobe
     runs it and similarity_recall_ivf witnesses its recall; sharing the
     helper is what guarantees the witness measures the exact pipeline
-    it certifies (r11 review finding #5: the block was copy-pasted
-    between the two, so an edit to one could silently diverge the
-    other). The codebook ranking is a per-query window over a
+    it certifies. The codebook ranking is a per-query window over a
     |queries| x k broadcast crossJoin — k rows per query, never
     corpus-sized.
     """
-    q = assigned.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("a").alias("qv"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    qd = F.aggregate(
-        F.zip_with("qv", "cv", lambda x, c: (x - c) * (x - c)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    q = _queries(assigned, "a")
     wp = Window.partitionBy("q_id").orderBy("qdist", "cid")
     return (
         q.crossJoin(F.broadcast(trained))
-        .select("q_id", "qv", "q_nrm", "cid", qd.alias("qdist"))
-        .withColumn("prk", F.row_number().over(wp))
-        .filter(F.col("prk") <= nprobe)
-        .select("q_id", "qv", "q_nrm", "cid")
-    )
-
-
-def _ivf_cell_scored(assigned: DataFrame, qprobe: DataFrame) -> DataFrame:
-    """(q_id, cand_id, cos): probed-cell candidates scored by cosine.
-
-    ``qprobe`` is (q_id, qv, q_nrm, cid) — one row per (query, probed
-    cell). Norms come precomputed from ``_ivf_trained``'s checkpoint
-    (once per vector, not per pair); the equijoin on cid is the only
-    corpus-sized stage.
-    """
-    return (
-        assigned.join(F.broadcast(qprobe), "cid")
-        .filter(F.col("vec_id") != F.col("q_id"))
         .select(
-            "q_id",
-            F.col("vec_id").alias("cand_id"),
-            (dot("qv", "a") / (F.col("q_nrm") * F.col("nrm"))).alias("cos"),
+            "q_id", "qv", "q_nrm", "cid", sq_dist("qv", "cv").alias("qdist")
         )
+        .withColumn("prk", F.row_number().over(wp))
+        .filter(F.col("prk") <= 2)
+        .select("q_id", "qv", "q_nrm", "cid")
     )
 
 
@@ -742,19 +760,8 @@ def similarity_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned, _ = _ivf_trained(spark, sf_dir)
     # nprobe=1: each query probes exactly its OWN trained cell, which
     # is its assigned cid — the probe relation needs no codebook rank
-    q = assigned.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("a").alias("qv"),
-        F.col("nrm").alias("q_nrm"),
-        "cid",
-    )
-    scored = _ivf_cell_scored(assigned, q)
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), "cand_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select("q_id", "cand_id", pround("cos", 6).alias("cos_sim"), "rk")
-    )
+    q = _queries(assigned, "a", "cid")
+    return _cos_top_k(_cos_scored(assigned, q, "cid", "a"), 3)
 
 
 @register(
@@ -816,15 +823,8 @@ def similarity_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 def similarity_ivf_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 per query probing the 2 nearest trained IVF cells."""
     assigned, trained = _ivf_trained(spark, sf_dir)
-    scored = _ivf_cell_scored(
-        assigned, _nprobe_candidates(assigned, trained)
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), "cand_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select("q_id", "cand_id", pround("cos", 6).alias("cos_sim"), "rk")
-    )
+    qprobe = _nprobe_candidates(assigned, trained)
+    return _cos_top_k(_cos_scored(assigned, qprobe, "cid", "a"), 3)
 
 
 @register(
@@ -898,57 +898,20 @@ def similarity_ivf_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 def similarity_recall_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-query recall@5 of trained-IVF nprobe=2 vs the exact top-5.
 
-    The approx side is the SHARED _nprobe_candidates/_ivf_cell_scored
+    The approx side is the SHARED _nprobe_candidates/_cos_scored
     pipeline — the witness certifies the exact code path
     similarity_ivf_nprobe runs, by construction.
     """
     assigned, trained = _ivf_trained(spark, sf_dir)
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), "cand_id")
-    approx = (
-        _ivf_cell_scored(assigned, _nprobe_candidates(assigned, trained))
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 5)
-        .select("q_id", F.col("cand_id").alias("a_cand"))
-    )
-    q = assigned.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("a").alias("qv"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    exact = (
-        assigned.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            F.col("vec_id").alias("cand_id"),
-            (dot("qv", "a") / (F.col("q_nrm") * F.col("nrm"))).alias("cos"),
-        )
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 5)
-        .select("q_id", "cand_id")
-    )
-    hit = F.when(F.col("a_cand").isNotNull(), F.lit(1)).otherwise(F.lit(0))
-    # k-bounded witness relations: broadcast the approx side so the
-    # LEFT witness join is a BroadcastHashJoin instead of a sort-merge
-    # of two <= 50-row inputs (r13, guide §3.1 — same fix as the LSH
-    # witness below).
-    return (
-        exact.join(
-            F.broadcast(approx),
-            (exact["q_id"] == approx["q_id"])
-            & (exact["cand_id"] == approx["a_cand"]),
-            "left",
-        )
-        .select(exact["q_id"].alias("q_id"), "cand_id", "a_cand")
-        .groupBy("q_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_exact"),
-            F.sum(hit).cast("long").alias("n_hit"),
-            pround(
-                F.sum(hit) / F.count(F.lit(1)).cast("double"), 6
-            ).alias("recall"),
-        )
-    )
+    qprobe = _nprobe_candidates(assigned, trained)
+    approx = _top_k(
+        _cos_scored(assigned, qprobe, "cid", "a"), 5, F.desc("cos"), "cand_id"
+    ).select("q_id", F.col("cand_id").alias("a_cand"))
+    exact = _top_k(
+        _cos_scored(assigned, _queries(assigned, "a"), vec="a"),
+        5, F.desc("cos"), "cand_id",
+    ).select("q_id", "cand_id")
+    return _recall(exact, approx)
 
 
 @register(
@@ -993,39 +956,9 @@ def similarity_recall_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def similarity_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 neighbors probing the query's bucket + 8 one-bit flips."""
-    e = with_norm(fan_out(table(spark, sf_dir, "embeddings"))).withColumn(
-        "bucket", _spark_srp_bits(0, 8)
-    )
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("qv"),
-        F.col("nrm").alias("q_nrm"),
-        F.col("bucket").alias("q_bucket"),
-    )
-    flips = F.array(*[F.lit(0)] + [F.lit(1 << i) for i in range(8)])
-    probes = q.select(
-        "q_id", "qv", "q_nrm",
-        F.explode(
-            F.transform(flips, lambda m: F.col("q_bucket").bitwiseXOR(m))
-        ).alias("probe"),
-    )
-    scored = (
-        e.join(F.broadcast(probes), F.col("bucket") == F.col("probe"))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            F.col("vec_id").alias("cand_id"),
-            (dot("qv", "embedding") / (F.col("q_nrm") * F.col("nrm"))).alias(
-                "cos"
-            ),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), "cand_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select("q_id", "cand_id", pround("cos", 6).alias("cos_sim"), "rk")
-    )
+    e, q = _lsh_queries(spark, sf_dir)
+    scored = _cos_scored(e, _lsh_probes(q), F.col("bucket") == F.col("probe"))
+    return _cos_top_k(scored, 3)
 
 
 @register(
@@ -1069,7 +1002,7 @@ def similarity_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     survey="D3/E81 (recall@k witness: the approximate path's quality "
     "asserted IN-PLAN against the exact top-k — the missing production "
-    "retrieval contract the r7 verdict named; the oracle checks the "
+    "retrieval contract; the oracle checks the "
     "recall VALUES, not just that a knob exists)",
     scale="""
     The offline recall eval every production ANN deployment runs,
@@ -1092,73 +1025,15 @@ def similarity_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def similarity_recall_witness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-query recall@5 of multi-probe SRP-LSH vs the exact top-5."""
-    e = with_norm(fan_out(table(spark, sf_dir, "embeddings"))).withColumn(
-        "bucket", _spark_srp_bits(0, 8)
-    )
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("qv"),
-        F.col("nrm").alias("q_nrm"),
-        F.col("bucket").alias("q_bucket"),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), "cand_id")
-    exact = (
-        e.crossJoin(F.broadcast(q.drop("q_bucket")))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            F.col("vec_id").alias("cand_id"),
-            (dot("qv", "embedding") / (F.col("q_nrm") * F.col("nrm"))).alias(
-                "cos"
-            ),
-        )
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 5)
-        .select("q_id", "cand_id")
-    )
-    flips = F.array(*[F.lit(0)] + [F.lit(1 << i) for i in range(8)])
-    probes = q.select(
-        "q_id", "qv", "q_nrm",
-        F.explode(
-            F.transform(flips, lambda m: F.col("q_bucket").bitwiseXOR(m))
-        ).alias("probe"),
-    )
-    approx = (
-        e.join(F.broadcast(probes), F.col("bucket") == F.col("probe"))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            F.col("vec_id").alias("cand_id"),
-            (dot("qv", "embedding") / (F.col("q_nrm") * F.col("nrm"))).alias(
-                "cos"
-            ),
-        )
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 5)
-        .select("q_id", F.col("cand_id").alias("a_cand"))
-    )
-    hit = F.when(F.col("a_cand").isNotNull(), F.lit(1)).otherwise(F.lit(0))
-    # both witness relations are k-bounded (<= |queries| x 5 rows): the
-    # unhinted plan sort-merge-joined them — two Exchanges + Sorts for
-    # 50-row inputs (r13, guide §3.1); broadcasting the approx side pins
-    # BroadcastHashJoin LeftOuter and removes both witness exchanges.
-    return (
-        exact.join(
-            F.broadcast(approx),
-            (exact["q_id"] == approx["q_id"])
-            & (exact["cand_id"] == approx["a_cand"]),
-            "left",
-        )
-        .select(exact["q_id"].alias("q_id"), "cand_id", "a_cand")
-        .groupBy("q_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_exact"),
-            F.sum(hit).cast("long").alias("n_hit"),
-            pround(
-                F.sum(hit) / F.count(F.lit(1)).cast("double"), 6
-            ).alias("recall"),
-        )
-    )
+    e, q = _lsh_queries(spark, sf_dir)
+    exact = _top_k(
+        _cos_scored(e, q.drop("q_bucket")), 5, F.desc("cos"), "cand_id"
+    ).select("q_id", "cand_id")
+    approx = _top_k(
+        _cos_scored(e, _lsh_probes(q), F.col("bucket") == F.col("probe")),
+        5, F.desc("cos"), "cand_id",
+    ).select("q_id", F.col("cand_id").alias("a_cand"))
+    return _recall(exact, approx)
 
 
 _PQ_M = 8   # subvectors
@@ -1168,11 +1043,7 @@ _PQ_K = 4   # codes per subvector
 
 def _pq_subvectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, m, sv): each embedding exploded into its M subvectors."""
-    pts = fan_out(table(spark, sf_dir, "embeddings")).select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("a"),
-    )
-    return pts.select(
+    return points(spark, sf_dir).select(
         "vec_id",
         F.explode(
             F.transform(
@@ -1202,11 +1073,7 @@ def _pq_codes(sub: DataFrame, cb: DataFrame) -> DataFrame:
     the broadcast join is narrow, the one shuffle carries a single row
     per (vector, subvector).
     """
-    sq = F.aggregate(
-        F.zip_with("sv", "cv", lambda x, c: (x - c) * (x - c)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    sq = sq_dist("sv", "cv")
     return (
         sub.join(F.broadcast(cb), F.col("m") == F.col("cb_m"))
         .groupBy("vec_id", "m")
@@ -1238,16 +1105,12 @@ def _pq_lut(
     THE one definition of the query-side distance table — shared by
     similarity_pq_adc (flat ADC scan) and similarity_ivf_adc (cell-probe
     + ADC re-rank), which previously carried verbatim copies of this
-    block (r11 review finding #5). |queries| x M x K rows, always
-    broadcast-sized; lmicro is the micro-unit int64 the scoring join
-    sums so the aggregation is order-independent and oracle-exact.
+    block. |queries| x M x K rows, always broadcast-sized; lmicro is
+    the micro-unit int64 the scoring join sums so the aggregation is
+    order-independent and oracle-exact.
     """
     nq = _PQ_NQ if n_queries is None else n_queries
-    lsq = F.aggregate(
-        F.zip_with("sv", "cv", lambda x, c: (x - c) * (x - c)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    lsq = sq_dist("sv", "cv")
     return (
         sub.filter(F.col("vec_id") < nq)
         .join(F.broadcast(cb), F.col("m") == F.col("cb_m"))
@@ -1312,7 +1175,7 @@ def embedding_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ``codes`` is the m-ordered code sequence as a ","-joined string —
     array outputs are incompatible with the driver's pandas
-    canonicalizer (r3 lesson).
+    canonicalizer.
     """
     sub = _pq_subvectors(spark, sf_dir)
     assigned = _pq_codes(sub, _pq_codebook(sub))
@@ -1329,6 +1192,16 @@ def embedding_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _PQ_NQ = 5  # ADC query vectors
+
+
+def _adc_top_k(scored: DataFrame, k: int) -> DataFrame:
+    """(q_id, cand_id, adist, rk): the k nearest ADC distances per query."""
+    return _top_k(scored, k, "admicro", "cand_id").select(
+        "q_id",
+        "cand_id",
+        pround(F.col("admicro") / 1_000_000.0, 4).alias("adist"),
+        "rk",
+    )
 
 
 @register(
@@ -1409,17 +1282,7 @@ def similarity_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.sum("lmicro").alias("admicro"))
     )
-    w = Window.partitionBy("q_id").orderBy("admicro", "cand_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select(
-            "q_id",
-            "cand_id",
-            pround(F.col("admicro") / 1_000_000.0, 4).alias("adist"),
-            "rk",
-        )
-    )
+    return _adc_top_k(scored, 3)
 
 
 @register(
@@ -1527,40 +1390,29 @@ def similarity_ivf_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("q_id", "cand_id")
         .agg(F.sum("lmicro").alias("admicro"))
     )
-    w = Window.partitionBy("q_id").orderBy("admicro", "cand_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select(
-            "q_id",
-            "cand_id",
-            pround(F.col("admicro") / 1_000_000.0, 4).alias("adist"),
-            "rk",
-        )
-    )
+    return _adc_top_k(scored, 3)
 
 
 #: SemDeDup sizes its codebook from the corpus: k = ceil(n / CELL_TARGET)
 #: so cells stay bounded (~CELL_TARGET vectors) as the corpus grows —
-#: the fix for the fixed-k quadratic-cell artifact the r3 scale sweep
-#: measured (4.5x time for 100x rows). 32 reproduces k=16 at the 500-vec
-#: small fixtures, keeping their hashes identical to rounds 2-3.
+#: a fixed k made per-cell pairs grow quadratically (measured 4.5x
+#: time for 100x rows). 32 reproduces k=16 at the 500-vec small
+#: fixtures.
 _SEMDEDUP_CELL_TARGET = 32
 
 #: Past this many fine centroids the O(k)-value broadcast model row
 #: stops being broadcast-comfortable (~10^8-vector corpora at
 #: CELL_TARGET=32) and semdedup_cells routes the fine argmin through a
-#: distributed cell equi-join instead (round-5, r4 verdict Missing #2 —
-#: previously the fallback was narrated in the scale note but no code
-#: path took it). 10^6 struct entries ~ a few hundred MB broadcast.
+#: distributed cell equi-join instead. 10^6 struct entries ~ a few
+#: hundred MB broadcast.
 _SEMDEDUP_BROADCAST_MAX_K = 1_000_000
 
 #: At or below this many fine centroids the coarse routing level costs
 #: more than it saves: flat argmin over all k centroids is O(n*k) =
 #: n^2/32 work but at k<=256 (corpora <= ~8k vectors) that is < ~2M
 #: distance evaluations — cheaper than the extra model-build stages and
-#: barriers the two-level path adds (round-5, r4 verdict task 10: the
-#: two-level overhead only pays off past sf0.1). The gate is SEMANTIC
+#: barriers the two-level path adds (the two-level overhead only pays
+#: off past sf0.1). The gate is SEMANTIC
 #: (kc = 1 means assignment IS the exact flat argmin), so the oracle
 #: mirrors it in the scal CTE and both engines agree at every tier;
 #: 256 is safely under the measured crossover (flat was 78 s at the
@@ -1610,14 +1462,13 @@ _SEMDEDUP_ASG_CTES = f"""pts AS (SELECT vec_id,
 def _assign_cells_numpy(pts: DataFrame, k: int, kc: int) -> DataFrame:
     """Arrow-batched BLAS kernel for the two-level (coarse→fine) argmin.
 
-    The round-5 sf100 sweep showed the two-level plan's WALL is not its
-    shape (O(n·√k), zero corpus-sized shuffles) but the CONSTANT: the
-    codegen zip_with/aggregate lambda costs a scalar loop per (point,
-    centroid) pair — >25 min for ~2M vectors × ~500 centroid evals on
-    this host. This kernel is the physical-only replacement for the
-    broadcast regime's two projections: ONE mapInPandas stage whose
-    batches hit BLAS (``P @ C.T``), scoring ``|c|² − 2·p·c`` (the ‖p‖²
-    term is constant per row and cannot change an argmin).
+    At sf100 the two-level plan's WALL is not its shape (O(n·√k), zero
+    corpus-sized shuffles) but the CONSTANT: a codegen
+    zip_with/aggregate lambda costs a scalar loop per (point, centroid)
+    pair — >25 min for ~2M vectors × ~500 centroid evals. This kernel
+    runs both argmins in ONE mapInPandas stage whose batches hit BLAS
+    (``P @ C.T``), scoring ``|c|² − 2·p·c`` (the ‖p‖² term is constant
+    per row and cannot change an argmin).
 
     Tie-break parity: np.argmin returns the LOWEST index on ties, and
     both matrices are cid-row-ordered (coarse cids are 0..kc-1; each
@@ -1627,14 +1478,14 @@ def _assign_cells_numpy(pts: DataFrame, k: int, kc: int) -> DataFrame:
     (matmul decomposition vs sequential (x−c)² sum), so near-ties
     inside ~1e-12 relative error could route differently — the same
     accepted-approximation class as the IVF routing itself; the
-    forced-branch equality tests pin kernel-vs-codegen equality on the
-    decisive-margin fixture corpora (exact duplicates tie EXACTLY in
-    both kernels and resolve by cid either way).
+    forced-branch equality test pins kernel-vs-equi-join equality on
+    the decisive-margin fixture corpora (exact duplicates tie EXACTLY
+    in both and resolve by cid either way).
 
     Driver/broadcast cost: the k×d float64 centroid matrix (~32 MB at
     the sf100 tier's k≈62k, d=64) — strictly smaller than the k-entry
-    JVM struct row the codegen regime already broadcasts, and the fine
-    routing (k×kc matmul) is driver-trivial at any broadcastable k.
+    JVM struct row the flat regime broadcasts, and the fine routing
+    (k×kc matmul) is driver-trivial at any broadcastable k.
     """
     import numpy as np
 
@@ -1644,9 +1495,9 @@ def _assign_cells_numpy(pts: DataFrame, k: int, kc: int) -> DataFrame:
     C = np.stack(cents["a"].to_numpy())  # k x d, ascending-cid rows
     cids = cents["vec_id"].to_numpy()
     # coarse codebook = centroids whose ACTUAL cid < kc, matching the
-    # codegen twin's filter(vec_id < kc) and the oracle's cc CTE — NOT
-    # the first kc rows, which silently diverge when vec_ids below k
-    # are non-contiguous (r11 similarity review finding #1)
+    # equi-join regime's filter(vec_id < kc) and the oracle's cc CTE —
+    # NOT the first kc rows, which silently diverge when vec_ids below
+    # k are non-contiguous
     coarse = C[cids < kc]
     coarse_n = (coarse * coarse).sum(axis=1)
     ccid_of_fine = np.argmin(
@@ -1697,7 +1548,6 @@ def semdedup_cells(
     sf_dir: str,
     broadcast_max_k: int | None = None,
     flat_max_k: int | None = None,
-    kernel: str | None = None,
 ) -> DataFrame:
     """Corpus-scaled two-level semantic cell assignment: (vec_id, cid, a).
 
@@ -1706,29 +1556,20 @@ def semdedup_cells(
     cells — O(n*sqrt(k)) work. Three physical regimes, all with the
     identical (dist asc, cid asc) tie-break:
 
-    - k <= _SEMDEDUP_FLAT_MAX_K: kc = 1 and assignment is a FLAT
-      argmin over one broadcast model row of all k centroids — at
-      small k the coarse level's extra model-build stages cost more
-      than the O(n*k) work they avoid (r4 verdict task 10). This gate
-      is SEMANTIC (kc changes the partition), mirrored in the
-      oracle's scal CTE so both engines agree at every tier.
-    - k <= ``broadcast_max_k``: both argmins run as codegen
-      projections over ONE broadcast model row (zero corpus-sized
-      shuffles).
-    - above it: the fine argmin switches to a distributed cell
+    - k <= _SEMDEDUP_FLAT_MAX_K (flat codegen): kc = 1 and assignment
+      is a FLAT argmin projection over one broadcast model row of all
+      k centroids — at small k the coarse level's extra model-build
+      stages cost more than the O(n*k) work they avoid. This gate is
+      SEMANTIC (kc changes the partition), mirrored in the oracle's
+      scal CTE so both engines agree at every tier.
+    - k <= ``broadcast_max_k`` (two-level BLAS): both argmins run in one
+      Arrow-batched mapInPandas stage (:func:`_assign_cells_numpy`) —
+      zero corpus-sized shuffles.
+    - above it (overflow equi-join): the coarse argmin stays a codegen
+      projection and the fine argmin becomes a distributed cell
       EQUI-JOIN (fine-centroid relation joined on the point's coarse
       cell id, struct-min groupBy) — same kc, output-identical to the
-      broadcast regime, no O(k) broadcast (a PHYSICAL-only switch).
-
-    The two-level broadcast regime has TWO physical kernels (round-6):
-    the default routes both argmins through one Arrow-batched BLAS
-    mapInPandas stage (:func:`_assign_cells_numpy` — the r5 sf100 sweep
-    showed the codegen lambda's per-(point, centroid) constant, not the
-    plan shape, was the wall); ``kernel="codegen"`` forces the pure-JVM
-    broadcast-projection twin. Both are pinned output-equal in
-    tests/test_semdedup_scaling.py. The flat and overflow regimes are
-    codegen-only (flat is fixture-tier and already cheap; overflow
-    cannot hold the centroid matrix in one broadcast either way).
+      BLAS regime, no O(k) broadcast (a PHYSICAL-only switch).
 
     ``broadcast_max_k`` / ``flat_max_k`` override the gates for tests
     (forcing a regime on a small corpus); production callers leave
@@ -1742,17 +1583,10 @@ def semdedup_cells(
         _SEMDEDUP_BROADCAST_MAX_K if broadcast_max_k is None else broadcast_max_k
     )
     flat_limit = _SEMDEDUP_FLAT_MAX_K if flat_max_k is None else flat_max_k
-    pts = (
-        fan_out(table(spark, sf_dir, "embeddings"))
-        .select(
-            "vec_id",
-            F.transform("embedding", lambda x: x.cast("double")).alias("a"),
-        )
-        # localCheckpoint (not cache): materializes once for the count
-        # AND the downstream consumers without retaining executor
-        # memory past DataFrame GC (ADVICE r3)
-        .localCheckpoint(eager=True)
-    )
+    # localCheckpoint (not cache): materializes once for the count AND
+    # the downstream consumers without retaining executor memory past
+    # DataFrame GC
+    pts = points(spark, sf_dir).localCheckpoint(eager=True)
     # k scales with the corpus so cells stay ~CELL_TARGET vectors; the
     # count is the only driver-side pull (O(1) result). Below the flat
     # gate kc = 1: the coarse level is pure overhead at small k, and a
@@ -1761,145 +1595,51 @@ def semdedup_cells(
     k = max(1, math.ceil(pts.count() / _SEMDEDUP_CELL_TARGET))
     kc = 1 if k <= flat_limit else max(1, math.ceil(math.sqrt(k)))
 
-    def sqd(pvec, cvec):
-        diffs = F.zip_with(pvec, cvec, lambda x, c: (x - c) * (x - c))
-        return F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x)
+    def model_row(n: int, name: str) -> DataFrame:
+        # the first n vectors as ONE cid-sorted array<struct(cid, cv)> row
+        entry = F.struct(F.col("vec_id").alias("cid"), F.col("a").alias("cv"))
+        return pts.filter(F.col("vec_id") < n).agg(
+            F.sort_array(F.collect_list(entry)).alias(name)
+        )
 
-    def arr_argmin(arr, pvec):
+    def arr_argmin(arr: Column) -> Column:
         # arr: array<struct(cid, cv)> -> winning cid by (dist, cid):
         # score each entry, then array_min's struct ordering is exactly
         # the (dist asc, cid asc) tie-break — single codegen pass
         scored = F.transform(
             arr,
             lambda c: F.struct(
-                sqd(pvec, c["cv"]).alias("d"), c["cid"].alias("cid")
+                sq_dist(F.col("a"), c["cv"]).alias("d"), c["cid"].alias("cid")
             ),
         )
         return F.array_min(scored)["cid"]
 
-    coarse_row = (
-        pts.filter(F.col("vec_id") < kc)
-        .agg(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(F.col("vec_id").alias("cid"), F.col("a").alias("cv"))
-                )
-            ).alias("carr")
-        )
-    )
     if kc == 1 and k <= limit:
-        # flat fast path (k <= _SEMDEDUP_FLAT_MAX_K): ONE broadcast
-        # model row of all k centroids, assignment is a single codegen
-        # projection — identical output to the kc=1 two-level chain
-        # (one coarse cell holds every fine centroid) without its two
-        # extra model-build stages
-        model_row = (
-            pts.filter(F.col("vec_id") < k)
-            .agg(
-                F.sort_array(
-                    F.collect_list(
-                        F.struct(
-                            F.col("vec_id").alias("cid"),
-                            F.col("a").alias("cv"),
-                        )
-                    )
-                ).alias("farr")
-            )
+        assigned = pts.crossJoin(F.broadcast(model_row(k, "farr"))).select(
+            "vec_id", arr_argmin(F.col("farr")).alias("cid"), "a"
         )
-        assigned = (
-            pts.crossJoin(F.broadcast(model_row))
-            .select(
-                "vec_id",
-                arr_argmin(F.col("farr"), F.col("a")).alias("cid"),
-                "a",
-            )
-        )
-    elif k <= limit and kernel != "codegen":
-        # two-level broadcast regime, BLAS kernel (round-6, r5 verdict
-        # Missing #3): one Arrow-batched mapInPandas stage computes both
-        # argmins via matmul — same (dist asc, cid asc) tie-break, same
-        # zero-corpus-shuffle shape, ~10-100x smaller constant than the
-        # per-(point, centroid) codegen lambda (the sf100 wall). Forced
-        # kernel="codegen" keeps the pure-JVM twin below for the
-        # equality tests and for clusters where Arrow transfer of the
-        # vector column is the scarcer resource.
-        assigned = _assign_cells_numpy(pts, k, kc)
     elif k <= limit:
-        # fine centroids -> coarse cells (k model rows, projection
-        # argmin), grouped into a ccid-keyed map of fcid-sorted
-        # centroid lists — ONE broadcast model row, assignment is pure
-        # projection (zero corpus-sized shuffles)
-        fine_map_row = (
-            pts.filter(F.col("vec_id") < k)
-            .crossJoin(F.broadcast(coarse_row))
-            .select(
-                arr_argmin(F.col("carr"), F.col("a")).alias("ccid"),
-                F.struct(
-                    F.col("vec_id").alias("cid"), F.col("a").alias("cv")
-                ).alias("fc"),
-            )
-            .groupBy("ccid")
-            .agg(F.sort_array(F.collect_list("fc")).alias("fl"))
-            .agg(
-                F.map_from_entries(
-                    F.sort_array(
-                        F.collect_list(F.struct(F.col("ccid"), F.col("fl")))
-                    )
-                ).alias("fmap")
-            )
-        )
-        assigned = (
-            pts.crossJoin(F.broadcast(coarse_row.crossJoin(fine_map_row)))
-            .withColumn("ccid", arr_argmin(F.col("carr"), F.col("a")))
-            .select(
-                "vec_id",
-                arr_argmin(
-                    F.element_at("fmap", F.col("ccid")), F.col("a")
-                ).alias("cid"),
-                "a",
-            )
-        )
+        assigned = _assign_cells_numpy(pts, k, kc)
     else:
-        # broadcast-overflow branch: the k-entry model row no longer
-        # fits a broadcast. Coarse argmin stays a projection (kc =
-        # sqrt(k) entries — broadcastable far past 10^8 vectors); the
-        # fine argmin becomes a distributed equi-join on the coarse
-        # cell id against the k-row fine-centroid relation, with the
-        # same (dist, cid) struct-min tie-break — identical output,
-        # two corpus-sized shuffles (join + groupBy) instead of zero.
-        fine = (
-            pts.filter(F.col("vec_id") < k)
-            .crossJoin(F.broadcast(coarse_row))
-            .select(
-                arr_argmin(F.col("carr"), F.col("a")).alias("ccid"),
-                F.col("vec_id").alias("fcid"),
-                F.col("a").alias("fcv"),
-            )
+        # the k-entry model row no longer fits a broadcast; the kc =
+        # sqrt(k) coarse row does, far past 10^8 vectors. Two
+        # corpus-sized shuffles (join + groupBy) instead of zero.
+        coarse = F.broadcast(model_row(kc, "carr"))
+        fine = pts.filter(F.col("vec_id") < k).crossJoin(coarse).select(
+            arr_argmin(F.col("carr")).alias("ccid"),
+            F.col("vec_id").alias("cid"),
+            F.col("a").alias("cv"),
         )
-        assigned = (
-            pts.crossJoin(F.broadcast(coarse_row))
-            .select(
-                "vec_id", "a", arr_argmin(F.col("carr"), F.col("a")).alias("ccid")
-            )
-            .join(fine, "ccid")
-            .groupBy("vec_id")
-            .agg(
-                F.min(
-                    F.struct(
-                        sqd(F.col("a"), F.col("fcv")).alias("d"),
-                        F.col("fcid").alias("cid"),
-                    )
-                ).alias("m"),
-                F.first("a").alias("a"),
-            )
-            .select("vec_id", F.col("m.cid").alias("cid"), "a")
+        routed = pts.crossJoin(coarse).select(
+            "vec_id", "a", arr_argmin(F.col("carr")).alias("ccid")
         )
+        assigned = _nearest(routed.join(fine, "ccid"))
     # both sides of any pair self-join read the assignment; without
     # this each side recomputes the n*sqrt(k) argmin work (the
     # materialized partition map is what a production IVF stores).
     # nrm rides along so pair stages divide by precomputed norms (once
-    # per vector, not per pair — the with_norm discipline, r11 review
-    # finding #4); sqrt is bit-identical to the oracles' per-pair form.
+    # per vector, not per pair — the with_norm discipline); sqrt is
+    # bit-identical to the oracles' per-pair form.
     return assigned.withColumn("nrm", norm("a")).localCheckpoint(eager=True)
 
 
@@ -1929,45 +1669,36 @@ def semdedup_cells(
     the cells come from a trained codebook (similarity_ivf_trained's
     Lloyd rounds) sized so cells fit an executor; the threshold filter
     runs on the unrounded cosine so both engines keep identical pairs.
-    k GROWS with the corpus (round-4 fix for the fixed-k artifact the
-    r3 sweep measured, 4.5x time for 100x rows): k = ceil(n / 32), the
-    one O(1)-result count pulled driver-side, with the oracle computing
-    the identical k via a scalar subquery — cells stay ~32 vectors so
-    the per-cell pair join is bounded-quadratic at ANY corpus size.
-    Assignment is TWO-LEVEL (round-4b, after the 10x synthetic sweep
-    caught flat argmin going O(n*k) = O(n^2/32) once k tracks n — 78 s
-    at the synthetic sf1, 41x the sf0.1 time): coarse codebook of
-    ceil(sqrt(k)) cells, then argmin over only the fine centroids of
-    the point's coarse cell — O(n*sqrt(k)) work, the standard IVF
-    coarse-quantizer shape, mirrored exactly in the oracle. In the
-    broadcast regime both argmins run by default through ONE
-    Arrow-batched BLAS mapInPandas stage (round-6, r5 verdict Missing
-    #3: the codegen zip_with lambda's per-(point, centroid) constant —
-    not the plan shape — was the sf100 wall at >25 min for 2M
-    vectors; the matmul kernel reruns it in 17 s, full query 68 s,
-    and sf10 45 -> 4.4 s). kernel="codegen" forces the pure-JVM
-    projection twin (coarse array + ccid->fine-list map over one
-    broadcast model row) — both kernels share the (dist asc, cid asc)
-    tie-break and are pinned output-equal in
-    tests/test_semdedup_scaling.py; either way assignment adds zero
-    corpus-sized shuffles and the materialized assignment
-    (localCheckpoint) is the partition map a production IVF
-    stores. Measured: sf1-synthetic 78 s flat -> 5.9 s two-level ->
-    2.5 s BLAS kernel. The model row is
-    O(k) values — past _SEMDEDUP_BROADCAST_MAX_K fine centroids
-    (~10^8 vectors) semdedup_cells AUTO-SWITCHES the fine argmin to a
-    distributed cell equi-join (round-5; the r4 verdict flagged that
-    this fallback was narrated but not implemented) — identical
-    output, tested equal in tests/test_semdedup_scaling.py. At the
-    SMALL end (k <= 256, corpora under ~8k vectors) the gate flips
-    the other way: kc = 1 and assignment is one flat broadcast argmin
-    — the coarse level's model-build barriers only pay off past
-    sf0.1 (r4 verdict task 10); the oracle mirrors the gate in its
-    scal CTE so both engines partition identically at every tier.
+    k GROWS with the corpus (a fixed k measured 4.5x time for 100x
+    rows): k = ceil(n / 32), the one O(1)-result count pulled
+    driver-side, with the oracle computing the identical k via a
+    scalar subquery — cells stay ~32 vectors so the per-cell pair join
+    is bounded-quadratic at ANY corpus size. Assignment has three
+    regimes, all with the (dist asc, cid asc) tie-break and mirrored
+    exactly in the oracle. Flat codegen (k <= 256, corpora under ~8k
+    vectors): kc = 1 and assignment is one broadcast argmin projection
+    — the coarse level's model-build barriers only pay off past sf0.1.
+    Two-level BLAS: flat argmin goes O(n*k) = O(n^2/32) once k tracks
+    n (78 s at the synthetic sf1, 41x the sf0.1 time), so a coarse
+    codebook of ceil(sqrt(k)) cells routes each point to argmin over
+    only its coarse cell's fine centroids — O(n*sqrt(k)) work, the
+    standard IVF coarse-quantizer shape — and both argmins run in ONE
+    Arrow-batched BLAS mapInPandas stage: a codegen zip_with lambda's
+    per-(point, centroid) constant, not the plan shape, was the sf100
+    wall at >25 min for 2M vectors; the matmul kernel runs it in 17 s,
+    full query 68 s, and sf10 45 -> 4.4 s (sf1-synthetic: 78 s flat
+    -> 5.9 s two-level codegen -> 2.5 s BLAS). Either way assignment
+    adds zero corpus-sized shuffles and the materialized assignment
+    (localCheckpoint) is the partition map a production IVF stores.
+    Overflow equi-join: the BLAS regime broadcasts O(k) values, so
+    past _SEMDEDUP_BROADCAST_MAX_K fine centroids (~10^8 vectors)
+    semdedup_cells AUTO-SWITCHES the fine argmin to a distributed cell
+    equi-join — identical output, tested equal to the BLAS kernel in
+    tests/test_semdedup_scaling.py.
     Threshold 0.4 is fixture-calibrated (max within-cell cosine 0.49;
     11 victims at sf0.01) and guarded non-degenerate in test_smoke.
     The victim stage COLLAPSES exact-duplicate vectors before the pair
-    work (round-5c, the dedup_components discipline): cosines are
+    work (the dedup_components discipline): cosines are
     computed once per distinct-vector group pair and per-victim
     (n_dups, max_cos) come back from running-count windows, so pair
     cost is O(members x qualifying neighbor groups), linear in
@@ -2019,7 +1750,7 @@ def _semdedup_victims(assigned: DataFrame) -> DataFrame:
     """Per-victim (n_dups, max_cos) with exact-duplicate collapse.
 
     The SCALE.md production rule — ALWAYS collapse exact-duplicate mass
-    before any pairwise stage (the dedup_components round-5b fix) —
+    before any pairwise stage (the dedup_components fix) —
     applied to semdedup: identical vectors in a cell form a GROUP
     (gid = min vec_id); cosine is computed once per ordered group pair
     (bit-identical arrays mean every copy pair's cos equals its rep
@@ -2047,17 +1778,14 @@ def _semdedup_victims(assigned: DataFrame) -> DataFrame:
     tests/test_semdedup_collapse.py.
     """
     wg = Window.partitionBy("cid", "a")
-    if "nrm" not in assigned.columns:  # test fixtures pass bare (id, cid, a)
-        assigned = assigned.withColumn("nrm", norm("a"))
-    # The checkpoint stays WIDE deliberately (r13 negative result,
-    # verdict task #3): a "narrow" variant keeping (a, nrm) on rep rows
-    # only (when(vec_id == gid, a)) was built, oracle-green, and
-    # measured — sf0.1 a wash, 100-copy tier consistently WORSE (old
-    # {13.6, 12.0, 13.2, 14.0} vs narrow {14.5, 14.4, 14.5, 16.0} s,
-    # four interleaved rounds): the conditional array projection costs
-    # more than the checkpoint bytes it saves, and the member-side
-    # consumers never decode the array columns they skip anyway
-    # (columnar pruning handles that for free).
+    # The checkpoint stays WIDE deliberately: a "narrow" variant keeping
+    # (a, nrm) on rep rows only (when(vec_id == gid, a)) was built,
+    # oracle-green, and measured — sf0.1 a wash, 100-copy tier
+    # consistently WORSE (wide {13.6, 12.0, 13.2, 14.0} vs narrow
+    # {14.5, 14.4, 14.5, 16.0} s, four interleaved rounds): the
+    # conditional array projection costs more than the checkpoint bytes
+    # it saves, and the member-side consumers never decode the array
+    # columns they skip anyway (columnar pruning handles that for free).
     m = assigned.select(
         "vec_id", "cid", "a", "nrm", F.min("vec_id").over(wg).alias("gid")
     ).localCheckpoint(eager=True)  # probed 3x below (members x2, reps)
@@ -2075,8 +1803,7 @@ def _semdedup_victims(assigned: DataFrame) -> DataFrame:
     # self pair carries the same-group cos (dot(a, a)/nrm², the same
     # expression a copy pair evaluates) for victims with earlier copies.
     # Norms come precomputed from the checkpoint (once per group rep,
-    # not per pair — r11 review finding #4), bit-identical to the
-    # oracle's per-pair sqrt.
+    # not per pair), bit-identical to the oracle's per-pair sqrt.
     qp = (
         xr.join(yr, F.col("xcid") == F.col("ycid"))
         .withColumn("cos", dot("aa", "ab") / (F.col("na") * F.col("nb")))
@@ -2130,9 +1857,8 @@ def _semdedup_victims(assigned: DataFrame) -> DataFrame:
     survey="D2/D3 (embedding-cosine near-duplicate pairs, "
     "semantic-cell blocked)",
     scale="""
-    Semantic near-dup pairs blocked on the CORPUS-SCALED semantic cell
-    (round-5 re-block; the r4 verdict flagged the old key): the
-    previous block was the 10-value label column — a FIXED block
+    Semantic near-dup pairs blocked on the CORPUS-SCALED semantic
+    cell: the previous block was the 10-value label column — a FIXED block
     count, so per-block pairs grew quadratically with the corpus
     (measured 19 s at sf1-synth). The block is now semdedup_cells'
     two-level k-means cell with k = ceil(n/32), so cells hold ~32
@@ -2167,8 +1893,8 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("ca") == F.col("cb")) & (F.col("vec_a") < F.col("vec_b")),
         )
         # precomputed norms from the cells checkpoint — once per vector,
-        # not per pair (r11 review finding #4); sqrt is bit-identical
-        # to the oracle's per-pair spelling
+        # not per pair; sqrt is bit-identical to the oracle's per-pair
+        # spelling
         .withColumn("cos", dot("aa", "ab") / (F.col("na") * F.col("nb")))
         .filter(F.col("cos") >= 0.2)
         .select("vec_a", "vec_b", pround("cos", 4).alias("cos_sim"))
@@ -2223,18 +1949,8 @@ _DIVERSITY_QUOTA = 4  # kept members per semantic cell
 def corpus_diversity_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-QUOTA most-central vectors per semantic cell (coverage sample)."""
     assigned = semdedup_cells(spark, sf_dir)
-    per_dim = (
-        assigned.select("cid", F.posexplode("a").alias("dim", "val"))
-        .groupBy("cid", "dim")
-        .agg(F.avg("val").alias("c"))
-    )
-    cv = per_dim.groupBy("cid").agg(
-        F.sort_array(F.collect_list(F.struct("dim", "c")))
-        .getField("c")
-        .alias("cv")
-    )
-    diffs = F.zip_with("a", "cv", lambda x, c: (x - c) * (x - c))
-    dist = F.sqrt(F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x))
+    cv = _mean_vectors(assigned, "cid")
+    dist = F.sqrt(sq_dist("a", "cv"))
     d = assigned.join(cv, "cid").select(
         "vec_id", "cid", pround(dist, 4).alias("dist")
     )
@@ -2274,13 +1990,8 @@ def corpus_diversity_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 def similarity_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All candidate vectors with cosine >= 0.33 of the 10 query vectors."""
     e = with_norm(fan_out(table(spark, sf_dir, "embeddings")))
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("qv"),
-        F.col("nrm").alias("q_nrm"),
-    )
     return (
-        e.crossJoin(F.broadcast(q))
+        e.crossJoin(F.broadcast(_queries(e, "embedding")))
         .filter(F.col("vec_id") != F.col("q_id"))
         .withColumn(
             "cos", dot("qv", "embedding") / (F.col("q_nrm") * F.col("nrm"))
@@ -2373,7 +2084,7 @@ def _duck_rp(j: int) -> str:
     in-plan bound [0.05, 4.0] (±6 sd) holds for every fixture vector
     while still falsifying a broken matrix, fold order, or scaling
     (measured at sf0.01: ratios span 0.092–3.715 over 500 vectors, all inside). Near-zero projections
-    round via `+ 0.0` on both sides — the r9 sign-safe discipline for
+    round via `+ 0.0` on both sides — the sign-safe discipline for
     informative floats (exprs.pround0).
     """,
 )
@@ -2545,18 +2256,18 @@ def _knn_graph_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def similarity_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mutual top-3 cosine graph over adaptively-refined LSH buckets.
 
-    r12: the plan used to instantiate the scan+SRP subtree 16 times
-    (pair self-join x union-with-swap x mutuality self-join, each
-    doubling — Spark has no cross-branch common-subplan dedup). Now the
-    (vec_id, embedding, nrm, b8, x4) signature relation is checkpointed
+    Without materialization the plan instantiates the scan+SRP subtree
+    16 times (pair self-join x union-with-swap x mutuality self-join,
+    each doubling — Spark has no cross-branch common-subplan dedup). So
+    the (vec_id, embedding, nrm, b8, x4) signature relation is checkpointed
     once (one corpus pass computes the 12 SRP projections; the pair
     join reads the checkpoint from both sides), edges are symmetrized
     by a 2-way explode instead of union-with-swap (each pair's cosine
     is evaluated once, not twice), and the k*n-row directed top-k
     (:func:`_knn_graph_topk`) is checkpointed before the mutuality
-    self-join. 32 scan nodes -> 1, 40 Exchanges -> 7 (plans/r12);
-    values byte-identical (same bucketing, same accumulation order —
-    only subtree sharing changed).
+    self-join. 32 scan nodes -> 1, 40 Exchanges -> 7; values
+    byte-identical (same bucketing, same accumulation order — only
+    subtree sharing changed).
     """
     topk = _knn_graph_topk(spark, sf_dir).localCheckpoint(eager=True)
     t2 = topk.select(

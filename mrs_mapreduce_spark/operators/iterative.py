@@ -18,8 +18,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import fan_out, table
+from ..catalog import table
 from ..exprs import pround, pround0
+from ..llm.similarity import lloyd, points
 from ..registry import register
 
 _K = 4
@@ -142,78 +143,23 @@ def iterative_converge(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment distances run as order-stable array lambdas; the update
     step re-aggregates per (cluster, dim) and rebuilds centroid arrays —
     every iteration is two shuffles of k*64 rows regardless of corpus
-    size. Long loops add localCheckpoint every ~10 rounds to cut lineage
-    (SURVEY.md §3.3). Centroids round to 6 decimals per round on both
-    engines so assignment compares bit-identical doubles.
+    size. The loop is llm/similarity.py's lloyd, shared with
+    similarity_ivf_trained: the k-row codebook localCheckpoints every
+    round to cut lineage (SURVEY.md §3.3), and centroids round to 6
+    decimals per round on both engines so assignment compares
+    bit-identical doubles.
     """,
 )
 def iterative_kmeans_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     """64-dim k-means (k=8, 3 assignment rounds) on the embeddings table."""
-    k, rounds = 8, 3
-    pts = (
-        fan_out(table(spark, sf_dir, "embeddings"))
-        .select(
-            "vec_id",
-            F.transform("embedding", lambda x: x.cast("double")).alias("a"),
-        )
-        .cache()
-    )
-    cents = pts.filter(F.col("vec_id") < k).select(
-        F.col("vec_id").alias("cid"), F.col("a").alias("cv")
-    )
-
-    def sq_dist():
-        diffs = F.zip_with("a", "cv", lambda x, c: (x - c) * (x - c))
-        return F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x)
-
-    dims = 64
-    assigned = None
-    for round_no in range(1, rounds + 1):
-        # argmin over centroids as a lexicographic struct-min: (dist, cid)
-        # is unique per point (cid distinct within the group), so
-        # min(struct(dist, cid, a)) == the window row_number()=1 row but
-        # runs as a partial->final hash aggregation — the broadcast
-        # crossJoin is narrow, so the k-fanout collapses map-side and the
-        # only shuffle carries one row per point, never a sort.
-        assigned = (
-            pts.crossJoin(F.broadcast(cents))
-            .groupBy("vec_id")
-            .agg(
-                F.min(F.struct(sq_dist().alias("dist"), "cid")).alias("m"),
-                # every row in the group carries the same point vector, so
-                # first() is deterministic — keeping the array OUT of the
-                # min struct keeps the comparator a codegen'd (double,
-                # int) compare instead of an interpreted array-bearing one
-                F.first("a").alias("a"),
-            )
-            .select("vec_id", F.col("m.cid").alias("cid"), "a")
-        )
-        if round_no < rounds:
-            per_dim = (
-                assigned.select(
-                    "cid", F.posexplode("a").alias("dim", "val")
-                )
-                .groupBy("cid", "dim")
-                .agg(pround(F.avg("val"), 6).alias("c"))
-            )
-            # eager localCheckpoint truncates lineage at the k-row
-            # centroid relation: round r+1's job starts from these 8
-            # materialized rows instead of re-deriving rounds 1..r
-            # (SURVEY.md §3.3 — the A12 loop discipline)
-            cents = (
-                per_dim.groupBy("cid")
-                .agg(
-                    F.sort_array(F.collect_list(F.struct("dim", "c")))
-                    .getField("c")
-                    .alias("cv")
-                )
-                .localCheckpoint(eager=True)
-            )
-
+    # k=8 seeds, 2 centroid updates, 3 assignment rounds; pts is read
+    # once per round, so it stays cached
+    pts = points(spark, sf_dir).cache()
+    assigned, _ = lloyd(pts, 8, 2)
     return assigned.groupBy(F.col("cid").alias("cluster")).agg(
         F.count(F.lit(1)).alias("n"),
         # pround0: the dim-0 cluster mean is ~N(0, 0.004) -- max
-        # density exactly at 0, the negzero-gate class (r11 review)
+        # density exactly at 0, the negzero-gate class
         pround0(F.avg(F.element_at("a", 1)), 6).alias("cent_d0"),
     )
 

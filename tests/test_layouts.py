@@ -85,6 +85,19 @@ def test_numpy_cosine_matches_hof(spark, sf_dir):
         assert abs(f_cos - cos) < 1e-6
 
 
+def test_numpy_cosine_empty_queries(spark, sf_dir):
+    """No query rows: an empty (q_id, cand_id, cos_sim, rk) result."""
+    from mrs_mapreduce_spark.llm.similarity import cosine_topk_numpy
+
+    e = table(spark, sf_dir, "embeddings")
+    queries = e.filter(F.col("vec_id") < 0).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv")
+    )
+    out = cosine_topk_numpy(e, queries, k=5)
+    assert out.columns == ["q_id", "cand_id", "cos_sim", "rk"]
+    assert out.collect() == []
+
+
 def test_salted_join_equals_plain_join(spark, sf_dir):
     """Salting must be result-transparent (row-identical to plain join)."""
     from collections import Counter

@@ -32,6 +32,7 @@ from pyspark.sql import types as T
 from mrs_mapreduce_spark.llm.similarity import (
     _semdedup_victims,
     _semdedup_victims_pairwise,
+    with_norm,
 )
 
 _SCHEMA = T.StructType(
@@ -69,6 +70,11 @@ def _rows():
     ]
 
 
+def _assigned(spark, rows):
+    # semdedup_cells output shape: (vec_id, cid, a, nrm)
+    return with_norm(spark.createDataFrame(rows, _SCHEMA), "a", "nrm")
+
+
 def _collect(df):
     return sorted(
         (r.vec_id, r.cid, r.n_dups, r.max_cos) for r in df.collect()
@@ -76,7 +82,7 @@ def _collect(df):
 
 
 def test_collapsed_equals_pairwise_on_duplicate_stressed_cells(spark):
-    assigned = spark.createDataFrame(_rows(), _SCHEMA)
+    assigned = _assigned(spark, _rows())
     got = _collect(_semdedup_victims(assigned))
     want = _collect(_semdedup_victims_pairwise(assigned))
     assert got == want
@@ -102,7 +108,7 @@ def test_collapsed_equals_pairwise_on_singleton_groups(spark):
         (i, i % 3, [math.cos(0.1 * i), math.sin(0.1 * i), 0.0, 0.0])
         for i in range(24)
     ]
-    assigned = spark.createDataFrame(rows, _SCHEMA)
+    assigned = _assigned(spark, rows)
     got = _collect(_semdedup_victims(assigned))
     want = _collect(_semdedup_victims_pairwise(assigned))
     assert got == want
@@ -115,7 +121,7 @@ def test_zero_vector_raises_in_both_plans(spark):
     # collapsed plan must too (it evaluates the same cosine expression
     # per group pair) — collapsing must not swallow the error
     rows = [(0, 0, _ZERO), (1, 0, _ZERO), (2, 0, _X)]
-    assigned = spark.createDataFrame(rows, _SCHEMA)
+    assigned = _assigned(spark, rows)
     with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
         _semdedup_victims_pairwise(assigned).collect()
     with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):

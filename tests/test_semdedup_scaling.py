@@ -149,14 +149,21 @@ def test_flat_gate_is_exact_argmin(spark, tmp_path):
 
 
 def test_two_level_broadcast_matches_equijoin(spark, tmp_path):
-    """The broadcast and equi-join TWO-LEVEL paths are output-identical
-    at the same kc (a physical-only switch). The production flat gate
-    (k <= 256) means small corpora never reach these regimes, so
-    forcing flat_max_k=0 keeps them under unit-test coverage; every
-    assignment must still land in the k=10 cell domain. (Whether the
-    ROUTED partition differs from flat is geometry-dependent — on this
-    axis-aligned corpus same-axis points track their centroid through
-    the coarse level — so no inequality is asserted.)"""
+    """The two-level BLAS kernel and the overflow equi-join are
+    output-identical at the same kc (a physical-only switch). The
+    production flat gate (k <= 256) means small corpora never reach
+    these regimes, so forcing flat_max_k=0 keeps them under unit-test
+    coverage; every assignment must still land in the k=10 cell domain.
+    (Whether the ROUTED partition differs from flat is
+    geometry-dependent — on this axis-aligned corpus same-axis points
+    track their centroid through the coarse level — so no inequality is
+    asserted.) The synthetic corpus's margins are decisive (same-axis
+    ~2.0, wobble-norm gaps ~6e-5) and its exact ties (repeated wobble
+    values) resolve by the shared cid-ascending rule, so float-rounding
+    differences between the matmul decomposition and the codegen fold
+    cannot flip any assignment."""
+    from mrs_mapreduce_spark.llm.similarity import _semdedup_victims
+
     d = str(tmp_path / "corpus_twolevel")
     n = 320
     _write_embeddings(spark, d, n)
@@ -175,44 +182,15 @@ def test_two_level_broadcast_matches_equijoin(spark, tmp_path):
     assert len(routed_bcast) == n
     assert {c for _, c in routed_bcast} <= set(range(10))
 
+    # and the full declared query is regime-independent end-to-end:
+    # victims over the BLAS kernel's cells equal the equi-join's
+    def victims(**kw):
+        return sorted(
+            map(tuple, _semdedup_victims(
+                semdedup_cells(spark, d, flat_max_k=0, **kw)
+            ).collect())
+        )
 
-def test_numpy_kernel_matches_codegen(spark, tmp_path):
-    """Round-6 (r5 verdict Missing #3): the two-level broadcast regime's
-    default BLAS mapInPandas kernel must produce the exact same
-    (vec_id, cid) partition as the forced pure-JVM codegen twin — a
-    physical-only kernel switch. The synthetic corpus's margins are
-    decisive (same-axis ~2.0, wobble-norm gaps ~6e-5) and its exact
-    ties (repeated wobble values) resolve by the shared cid-ascending
-    rule, so float-rounding differences between the matmul
-    decomposition and the codegen fold cannot flip any assignment."""
-    d = str(tmp_path / "corpus_kernels")
-    n = 320
-    _write_embeddings(spark, d, n)
-
-    def cells(**kw):
-        return {
-            (r.vec_id, r.cid)
-            for r in semdedup_cells(spark, d, flat_max_k=0, **kw)
-            .select("vec_id", "cid")
-            .collect()
-        }
-
-    via_numpy = cells()  # default kernel in the two-level regime
-    via_codegen = cells(kernel="codegen")
-    assert via_numpy == via_codegen
-    assert len(via_numpy) == n
-    # and the full declared query is kernel-independent end-to-end:
-    # victims computed over numpy-kernel cells equal codegen's
-    from mrs_mapreduce_spark.llm.similarity import _semdedup_victims
-
-    v_np = sorted(
-        map(tuple, _semdedup_victims(
-            semdedup_cells(spark, d, flat_max_k=0)
-        ).collect())
-    )
-    v_cg = sorted(
-        map(tuple, _semdedup_victims(
-            semdedup_cells(spark, d, flat_max_k=0, kernel="codegen")
-        ).collect())
-    )
-    assert v_np == v_cg and v_np
+    v_blas = victims()
+    v_join = victims(broadcast_max_k=1)
+    assert v_blas == v_join and v_blas
