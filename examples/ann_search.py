@@ -15,7 +15,7 @@ reports per-method recall vs the exact brute-force top-3:
 
 Usage::
 
-    python examples/ann_search.py SF_DIR [--master local[8]]
+    python examples/ann_search.py SF_DIR [--master URL]
 """
 
 from __future__ import annotations
@@ -46,7 +46,7 @@ def top3_pairs(registry, name, spark, sf_dir):
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("sf_dir")
-    ap.add_argument("--master", default="local[8]")
+    ap.add_argument("--master", default=None)
     args = ap.parse_args(argv)
 
     spark = get_session("ann-search", master=args.master)

@@ -2,26 +2,32 @@
 """End-to-end training-corpus curation pipeline on this engine.
 
 The composed workflow a user of the reference would hand-roll as chained
-MapReduce jobs, expressed as ONE lazy DataFrame plan (Catalyst sees the
-whole pipeline and prunes/pushes across stage boundaries):
+MapReduce jobs, built from the registered stage functions:
 
-  1. quality gate  — length + uniqueness heuristics (llm.text shapes)
+  1. quality gate  — length + uniqueness heuristics
+                     (``text.quality_gate``)
   2. exact dedup   — keep the lowest doc_id per normalized-text hash
-  3. near dedup    — drop MinHash-LSH candidates verified Jaccard >= 0.9
+                     (``dedup.exact_survivors``, dedup_exact's key)
+  3. near dedup    — drop the higher doc_id of every exact-recall
+                     3-shingle Jaccard >= 0.9 pair
+                     (``dedup.prefix_filter_pairs``, AllPairs)
   4. stratified sample — deterministic md5-threshold split per language
   5. write         — parquet partitioned by lang (partition pruning for
                      downstream readers)
 
 Usage::
 
-    python examples/curate_corpus.py SF_DIR OUTDIR [--master local[8]] \
+    python examples/curate_corpus.py SF_DIR OUTDIR [--master URL] \
         [--sample-rate 0.5]
 
-Prints per-stage row counts so the funnel is auditable.
+Each stage is materialized once and counts its rows with an
+``Observation`` in that same pass (``curation.observed``); the funnel
+prints after the sink write.
 
-Declared, oracle-checked twins of this narrative: stages 1-2 + packing
-= ``corpus_curate_pipeline``; stages 1-3 with full connected-component
-near-dup = ``corpus_curate_neardup`` (llm/curation.py, llm/dedup.py).
+Declared, oracle-checked relatives of this chain: the length-band ->
+exact dedup -> packing chain is ``corpus_curate_pipeline``, and the
+length band -> connected-component near dedup -> packing chain is
+``corpus_curate_neardup`` (llm/curation.py, llm/dedup.py).
 """
 
 from __future__ import annotations
@@ -35,7 +41,12 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from pyspark.sql import functions as F  # noqa: E402
 
 from mrs_mapreduce_spark.catalog import table  # noqa: E402
-from mrs_mapreduce_spark.llm.dedup import shingles  # noqa: E402
+from mrs_mapreduce_spark.llm.curation import observed  # noqa: E402
+from mrs_mapreduce_spark.llm.dedup import (  # noqa: E402
+    exact_survivors,
+    prefix_filter_pairs,
+)
+from mrs_mapreduce_spark.llm.text import quality_gate  # noqa: E402
 from mrs_mapreduce_spark.session import get_session  # noqa: E402
 
 
@@ -43,77 +54,36 @@ def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("sf_dir")
     ap.add_argument("outdir")
-    ap.add_argument("--master", default="local[8]")
+    ap.add_argument("--master", default=None)
     ap.add_argument("--sample-rate", type=float, default=0.5)
     args = ap.parse_args(argv)
 
     spark = get_session("curate-corpus", master=args.master)
+    funnel = {}
     docs = table(spark, args.sf_dir, "documents")
-    n0 = docs.count()
+    docs = observed(docs, funnel, "input", materialize=False)
+    gated = observed(quality_gate(docs), funnel, "quality")
+    exact = observed(exact_survivors(gated), funnel, "exact_dedup")
 
-    # 1. quality gate: drop very short docs and low-vocabulary spam
-    words = F.split("text", " ")
-    gated = (
-        docs.withColumn("n_words", F.size(words))
-        .withColumn("n_uniq", F.size(F.array_distinct(words)))
-        .filter(
-            (F.col("n_words") >= 20)
-            & (F.col("n_uniq") / F.col("n_words") >= 0.3)
-        )
-    )
-    n1 = gated.count()
+    pairs = prefix_filter_pairs(exact, num=9, den=10, symmetric=True, k=3)
+    dups = pairs.select(F.col("doc_b").alias("doc_id"))
+    near = observed(exact.join(dups, "doc_id", "anti"), funnel, "near_dedup")
 
-    # 2. exact dedup: lowest doc_id survives per normalized hash
-    h = F.md5(F.lower(F.trim(F.col("text"))))
-    keep_exact = gated.groupBy(h.alias("h")).agg(
-        F.min("doc_id").alias("doc_id")
-    )
-    exact = gated.join(keep_exact, "doc_id", "semi")
-    n2 = exact.count()
-
-    # 3. near dedup: MinHash-LSH candidates verified by true Jaccard,
-    #    higher doc_id of each >=0.9 pair dropped (greedy, deterministic)
-    sh = shingles(exact).distinct()
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    pairs = (
-        sh.alias("a")
-        .join(sh.alias("b"), "sh")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(
-            F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db")
-        )
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    jac = (
-        pairs.join(sizes.select(F.col("doc_id").alias("da"), F.col("n").alias("na")), "da")
-        .join(sizes.select(F.col("doc_id").alias("db"), F.col("n").alias("nb")), "db")
-        .filter(
-            F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
-            >= 0.9
-        )
-    )
-    near = exact.join(
-        jac.select(F.col("db").alias("doc_id")).distinct(), "doc_id", "anti"
-    )
-    n3 = near.count()
-
-    # 4. deterministic stratified sample per language
+    # deterministic stratified sample per language
     thr = int(args.sample_rate * 2**32)
-    bucket = F.conv(F.substring(F.md5(F.concat_ws("|", "lang", "doc_id")), 1, 8), 16, 10).cast("long")
-    sampled = near.filter(bucket < thr)
-    n4 = sampled.count()
-
-    # 5. partitioned sink
+    key = F.md5(F.concat_ws("|", "lang", "doc_id"))
+    bucket = F.conv(F.substring(key, 1, 8), 16, 10).cast("long")
+    sampled = observed(
+        near.filter(bucket < thr), funnel, "sampled", materialize=False
+    )
     (
         sampled.select("doc_id", "lang", "source", "text")
         .write.mode("overwrite")
         .partitionBy("lang")
         .parquet(args.outdir)
     )
-    print(
-        f"input={n0} quality={n1} exact_dedup={n2} near_dedup={n3} "
-        f"sampled={n4} -> {args.outdir}"
-    )
+    counts = " ".join(f"{k}={o.get['n']}" for k, o in funnel.items())
+    print(f"{counts} -> {args.outdir}")
     return 0
 
 

@@ -18,7 +18,7 @@ engine's declared governance operators:
 
 Usage::
 
-    python examples/govern_release.py SF_DIR [--master local[8]] [--k 5]
+    python examples/govern_release.py SF_DIR [--master URL] [--k 5]
 
 Exit code 1 if the k-anonymity audit finds violating groups AND --strict
 is set (the "block the release" mode); 0 otherwise. Prints each stage's
@@ -56,7 +56,7 @@ def run(spark, sf_dir: str) -> dict:
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("sf_dir")
-    ap.add_argument("--master", default="local[8]")
+    ap.add_argument("--master", default=None)
     ap.add_argument("--strict", action="store_true",
                     help="exit 1 if the k-anonymity audit finds violations")
     args = ap.parse_args(argv)

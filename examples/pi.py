@@ -7,7 +7,7 @@ the task id.
 
 Usage::
 
-    python examples/pi.py [--tasks 32] [--samples 100000] [--master local[8]]
+    python examples/pi.py [--tasks 32] [--samples 100000] [--master URL]
 """
 
 from __future__ import annotations
@@ -27,7 +27,7 @@ def main(argv: list[str] | None = None) -> int:
     parser = argparse.ArgumentParser(description=__doc__)
     parser.add_argument("--tasks", type=int, default=32)
     parser.add_argument("--samples", type=int, default=100_000)
-    parser.add_argument("--master", default="local[8]")
+    parser.add_argument("--master", default=None)
     args = parser.parse_args(argv)
 
     spark = get_session("pi-example", master=args.master)

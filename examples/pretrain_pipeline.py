@@ -1,27 +1,40 @@
 #!/usr/bin/env python
 """The full modern pretraining-data pipeline, end to end on this engine.
 
-Composes the round-3 LLM-curation operators into the chain a production
-corpus actually runs, as ONE auditable job:
+Composes the registered LLM-curation operators into the chain a
+production corpus actually runs, as ONE auditable job:
 
-  1. quality gate       — length / uniqueness heuristics (llm.text)
-  2. LM perplexity gate — drop the worst-scoring tail under the corpus
-                          bigram LM (text_perplexity's shape)
-  3. exact dedup        — earliest doc per normalized content hash
-  4. near dedup         — MinHash-LSH clusters via alternating-star
-                          components; keep each cluster's min doc
-  5. decontamination    — drop docs sharing shingles with a benchmark
-                          set (broadcast semi-join)
-  6. temperature mix    — per-language sampling rates p ∝ share^0.7,
+  1. quality gate       — length / uniqueness heuristics
+                          (``text.quality_gate``)
+  2. entropy gate       — drop low-diversity docs, unigram entropy < 2
+                          (``text.doc_entropy``, text_entropy's)
+  3. LM perplexity gate — drop the worst-scoring tail under the corpus
+                          bigram LM (``text.bigram_nll``, text_perplexity's)
+  4. exact dedup        — earliest doc per normalized content hash
+                          (``dedup.exact_survivors``, dedup_exact's key)
+  5. substring dedup    — drop docs whose 8-grams are mostly shared with
+                          other docs (``dedup.substring_dups``,
+                          dedup_substring's)
+  6. near dedup         — exact-recall 3-shingle Jaccard >= 0.9 pairs
+                          (``dedup.prefix_filter_pairs``, AllPairs) ->
+                          alternating-star components
+                          (``dedup.star_components``); keep each
+                          cluster's min doc
+  7. decontamination    — drop docs sharing a 3-shingle with a benchmark
+                          set (``curation.contaminated``,
+                          corpus_decontaminate's broadcast semi-probe)
+  8. temperature mix    — per-language sampling rates p ∝ share^tau,
                           applied as deterministic md5-threshold
                           sampling per language
-  7. sink               — parquet partitioned by lang
+  9. sink               — parquet partitioned by lang
 
-Prints one funnel line per stage so the whole reduction is auditable.
+Each stage is materialized once and counts its rows with an
+``Observation`` in that same pass (``curation.observed``); one funnel
+line per stage prints after the sink write.
 
 Usage::
 
-    python examples/pretrain_pipeline.py SF_DIR OUTDIR [--master local[8]]
+    python examples/pretrain_pipeline.py SF_DIR OUTDIR [--master URL]
         [--ppl-cut 0.9] [--tau 0.7]
 """
 
@@ -36,9 +49,21 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from pyspark.sql import functions as F  # noqa: E402
 
 from mrs_mapreduce_spark.catalog import table  # noqa: E402
+from mrs_mapreduce_spark.llm.curation import (  # noqa: E402
+    contaminated,
+    observed,
+)
 from mrs_mapreduce_spark.llm.dedup import (  # noqa: E402
+    exact_survivors,
+    prefix_filter_pairs,
     shingles,
     star_components,
+    substring_dups,
+)
+from mrs_mapreduce_spark.llm.text import (  # noqa: E402
+    bigram_nll,
+    doc_entropy,
+    quality_gate,
 )
 from mrs_mapreduce_spark.session import get_session  # noqa: E402
 
@@ -47,7 +72,7 @@ def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("sf_dir")
     ap.add_argument("outdir")
-    ap.add_argument("--master", default="local[8]")
+    ap.add_argument("--master", default=None)
     ap.add_argument(
         "--ppl-cut", type=float, default=0.9,
         help="keep docs below this avg-nll quantile (higher = laxer)",
@@ -56,153 +81,41 @@ def main(argv: list[str] | None = None) -> int:
     args = ap.parse_args(argv)
 
     spark = get_session("pretrain-pipeline", master=args.master)
+    funnel = {}
     docs = table(spark, args.sf_dir, "documents")
-    funnel = [("raw", docs.count())]
+    docs = observed(docs, funnel, "raw", materialize=False)
+    gated = observed(quality_gate(docs), funnel, "quality_gate")
 
-    # 1. quality gate
-    words = F.split("text", " ")
-    gated = (
-        docs.withColumn("n_words", F.size(words))
-        .withColumn("n_uniq", F.size(F.array_distinct(words)))
-        .filter(
-            (F.col("n_words") >= 20)
-            & (F.col("n_uniq") / F.col("n_words") >= 0.3)
-        )
-        .drop("n_words", "n_uniq")
-    )
-    funnel.append(("quality_gate", gated.count()))
+    ent = doc_entropy(gated).filter(F.col("entropy") >= 2.0)
+    gated = observed(gated.join(ent, "doc_id", "semi"), funnel, "entropy_gate")
 
-    # 1b. entropy gate: drop low-diversity / boilerplate docs (unigram
-    #     Shannon entropy via the algebraic decomposition — text_entropy)
-    tf = (
-        gated.select("doc_id", F.explode(words).alias("w"))
-        .groupBy("doc_id", "w")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    ent = tf.groupBy("doc_id").agg(
-        (
-            F.log2(F.sum("c").cast("double"))
-            - F.sum(F.col("c") * F.log2("c")) / F.sum("c").cast("double")
-        ).alias("h")
-    )
-    gated = gated.join(
-        ent.filter(F.col("h") >= 2.0).select("doc_id"), "doc_id", "semi"
-    )
-    funnel.append(("entropy_gate", gated.count()))
+    # keep the docs whose avg bigram nll is below the --ppl-cut quantile
+    nll = bigram_nll(gated).groupBy("doc_id").agg(F.avg("nll").alias("v"))
+    cut = nll.agg(F.percentile_approx("v", args.ppl_cut, 10000).alias("cut"))
+    keep = nll.crossJoin(F.broadcast(cut)).filter(F.col("v") <= F.col("cut"))
+    fluent = gated.join(keep, "doc_id", "semi")
+    fluent = observed(fluent, funnel, "perplexity_gate")
 
-    # 2. perplexity gate: avg bigram nll under the corpus LM; keep the
-    #    docs below the --ppl-cut quantile (worst tail dropped)
-    bg = shingles(gated, k=2).select("doc_id", F.col("sh").alias("pair"))
-    pairs = bg.groupBy("pair").agg(F.count(F.lit(1)).alias("c12"))
-    uni = pairs.groupBy(F.split("pair", " ").getItem(0).alias("w1")).agg(
-        F.sum("c12").alias("c1")
-    )
-    vocab = (
-        gated.select(F.explode(words).alias("w"))
-        .distinct()
-        .agg(F.count(F.lit(1)).alias("v"))
-    )
-    nll = -F.log((F.col("c12") + 1.0) / (F.col("c1") + F.col("v")))
-    scored = (
-        bg.join(pairs, "pair")
-        .withColumn("w1", F.split("pair", " ").getItem(0))
-        .join(F.broadcast(uni), "w1")
-        .crossJoin(F.broadcast(vocab))
-        .groupBy("doc_id")
-        .agg(F.avg(nll).alias("avg_nll"))
-    )
-    cut = scored.agg(
-        F.expr(f"percentile_approx(avg_nll, {args.ppl_cut}, 10000)").alias(
-            "cut"
-        )
-    )
-    fluent = gated.join(
-        scored.crossJoin(F.broadcast(cut)).filter(
-            F.col("avg_nll") <= F.col("cut")
-        ).select("doc_id"),
-        "doc_id",
-        "semi",
-    )
-    funnel.append(("perplexity_gate", fluent.count()))
+    exact = observed(exact_survivors(fluent), funnel, "exact_dedup")
 
-    # 3. exact dedup
-    h = F.md5(F.lower(F.trim(F.col("text"))))
-    keep = fluent.groupBy(h.alias("h")).agg(F.min("doc_id").alias("doc_id"))
-    exact = fluent.join(keep.select("doc_id"), "doc_id", "semi")
-    funnel.append(("exact_dedup", exact.count()))
+    copied = substring_dups(exact).filter(F.col("dup_ratio") >= 0.8)
+    exact = exact.join(copied, "doc_id", "anti")
+    exact = observed(exact, funnel, "substring_dedup")
 
-    # 3b. exact-substring gate (dedup_substring): drop docs whose 8-gram
-    #     stream is mostly duplicated across OTHER surviving docs —
-    #     catches long copied spans exact/near dedup both miss
-    from pyspark.sql.window import Window as _W
+    pairs = prefix_filter_pairs(exact, num=9, den=10, symmetric=True, k=3)
+    sym = pairs.select("doc_a", "doc_b").union(pairs.select("doc_b", "doc_a"))
+    labels = star_components(sym)
+    drop = labels.filter(F.col("doc_id") != F.col("lbl"))
+    near = observed(exact.join(drop, "doc_id", "anti"), funnel, "near_dedup")
 
-    g8 = shingles(exact, k=8).select("doc_id", F.md5("sh").alias("h8"))
-    per = g8.groupBy("doc_id", "h8").agg(F.count(F.lit(1)).alias("c"))
-    per = per.withColumn(
-        "nd", F.count(F.lit(1)).over(_W.partitionBy("h8"))
-    )
-    ratio = per.groupBy("doc_id").agg(
-        (
-            F.sum(F.when(F.col("nd") >= 2, F.col("c")).otherwise(0))
-            / F.sum("c")
-        ).alias("r")
-    )
-    exact = exact.join(
-        ratio.filter(F.col("r") >= 0.8).select("doc_id"), "doc_id", "anti"
-    )
-    funnel.append(("substring_dedup", exact.count()))
+    # benchmark = the first 5 docs (stand-in for an eval set)
+    bench = table(spark, args.sf_dir, "documents").filter(F.col("doc_id") < 5)
+    hits = contaminated(shingles(near), shingles(bench))
+    clean = near.join(hits, "doc_id", "anti")
+    clean = observed(clean, funnel, "decontaminated")
 
-    # 4. near dedup: shingle-overlap candidate pairs -> alternating-star
-    #    components -> keep each cluster's min doc_id
-    sh = shingles(exact).distinct()
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    cand = (
-        sh.alias("a")
-        .join(sh.alias("b"), "sh")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(F.col("a.doc_id").alias("doc_a"),
-                 F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    near_pairs = (
-        cand.join(sizes.select(F.col("doc_id").alias("doc_a"),
-                               F.col("n").alias("na")), "doc_a")
-        .join(sizes.select(F.col("doc_id").alias("doc_b"),
-                           F.col("n").alias("nb")), "doc_b")
-        .filter(
-            F.col("inter")
-            / (F.col("na") + F.col("nb") - F.col("inter")) >= 0.9
-        )
-        .select("doc_a", "doc_b")
-    )
-    sym = near_pairs.union(
-        near_pairs.select(F.col("doc_b").alias("doc_a"),
-                          F.col("doc_a").alias("doc_b"))
-    )
-    if sym.take(1):
-        labels = star_components(sym)
-        drop = labels.filter(F.col("doc_id") != F.col("lbl")).select(
-            "doc_id"
-        )
-        near = exact.join(drop, "doc_id", "anti")
-    else:
-        near = exact
-    funnel.append(("near_dedup", near.count()))
-
-    # 5. decontamination: benchmark = first 5 docs' shingles (stand-in
-    #    for an eval set), broadcast semi-probe
-    bench = shingles(
-        table(spark, args.sf_dir, "documents").filter(F.col("doc_id") < 5)
-    ).select("sh").distinct()
-    contaminated = (
-        shingles(near).join(F.broadcast(bench), "sh").select("doc_id")
-        .distinct()
-    )
-    clean = near.join(contaminated, "doc_id", "anti")
-    funnel.append(("decontaminated", clean.count()))
-
-    # 6. temperature-scaled per-language sampling (p ∝ share^tau),
-    #    deterministic md5-threshold acceptance
+    # temperature-scaled per-language sampling (p ∝ share^tau),
+    # deterministic md5-threshold acceptance
     lt = clean.groupBy("lang").agg(F.count(F.lit(1)).alias("n"))
     tot = lt.agg(F.sum("n").alias("total"))
     rates = (
@@ -226,12 +139,12 @@ def main(argv: list[str] | None = None) -> int:
         .filter(u < F.col("rate"))
         .drop("rate")
     )
-    funnel.append(("temperature_sampled", sampled.count()))
-
-    # 7. partitioned sink
+    sampled = observed(
+        sampled, funnel, "temperature_sampled", materialize=False
+    )
     sampled.write.mode("overwrite").partitionBy("lang").parquet(args.outdir)
-    for stage, n in funnel:
-        print(f"{stage:>20}: {n}")
+    for name, obs in funnel.items():
+        print(f"{name:>20}: {obs.get['n']}")
     return 0
 
 

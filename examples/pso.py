@@ -23,7 +23,7 @@ Objective: sphere function sum(x_i^2) over 5 dims, minimum 0 at origin.
 Usage::
 
     python examples/pso.py [--particles 32] [--generations 10]
-        [--master local[8]]
+        [--master URL]
 """
 
 from __future__ import annotations

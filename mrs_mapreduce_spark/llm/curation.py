@@ -12,7 +12,7 @@ DuckDB oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -261,17 +261,10 @@ def corpus_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     sh = shingles(docs, k=3)
     is_bench = F.col("doc_id") % 97 == 0
-    bench_sh = sh.filter(is_bench).select("sh").distinct()
-    flagged = (
-        sh.filter(~is_bench)
-        .join(F.broadcast(bench_sh), "sh", "left_semi")
-        .select("doc_id")
-        .distinct()
-        .withColumn("hit", F.lit(1))
-    )
+    flagged = contaminated(sh.filter(~is_bench), sh.filter(is_bench))
     return (
         docs.filter(~is_bench)
-        .join(flagged, "doc_id", "left")
+        .join(flagged.withColumn("hit", F.lit(1)), "doc_id", "left")
         .groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -280,6 +273,28 @@ def corpus_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_contaminated"),
         )
     )
+
+
+def contaminated(sh: DataFrame, bench_sh: DataFrame) -> DataFrame:
+    """Distinct doc_ids of the (doc_id, sh) shingle relation ``sh`` that
+    share a shingle with ``bench_sh``: a broadcast semi-probe against
+    the benchmark's distinct shingle set."""
+    bench = F.broadcast(bench_sh.select("sh").distinct())
+    return sh.join(bench, "sh", "left_semi").select("doc_id").distinct()
+
+
+def observed(
+    df: DataFrame, funnel: dict[str, Observation], name: str, materialize=True
+) -> DataFrame:
+    """``df`` with its row count observed as ``funnel[name].get["n"]`` in
+    the pass that computes it: a pipeline stage counted where its work
+    runs, with no count action of its own. ``materialize`` runs that
+    pass now (a local checkpoint, so later stages read the stage once);
+    pass False when the caller's next action, a sink write or the next
+    stage's checkpoint, is that single pass."""
+    obs = funnel[name] = Observation(name)
+    df = df.observe(obs, F.count(F.lit(1)).alias("n"))
+    return df.localCheckpoint(eager=True) if materialize else df
 
 
 @register(
@@ -519,8 +534,8 @@ def corpus_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     no materialization barriers between them, so column pruning pushes
     the text column only where the hash needs it. The pack gate sees a
     GAPPY doc_id domain here by construction (filter + dedup punch
-    holes) — exactly the case the round-6 bucket-domain-aware
-    _pack_regime handles: the pre-filter table count is still a sound
+    holes) — exactly the case the bucket-domain-aware _pack_regime
+    handles: the pre-filter table count is still a sound
     upper bound, and the exact subtotal count decides inside the
     ambiguous band. At 100 TB each stage keeps its parent query's scale
     story ({_CTX}-token windows, {_BUCKET}-doc buckets); the chain adds
@@ -530,35 +545,21 @@ def corpus_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 def corpus_curate_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-filter, exact-dedup, then pack — the E14 chain, declared.
 
-    r12: the dedup stage keeps min(doc_id) per content hash with ONE
+    The dedup stage keeps min(doc_id) per content hash with ONE
     row_number window over the hash (the survivors are exactly the
-    rank-1 rows) instead of a groupBy + survivors join — one corpus
-    shuffle instead of two and the quality-band subtree instantiated
-    once, not twice. The text never enters that shuffle: the projection
-    to (doc_id, h, n_tok) runs BEFORE the window exchange, so the wire
-    carries ~48 bytes/row where the old survivors join shuffled every
-    surviving document body. The (doc_id, n_tok) survivor relation —
-    two ints per survivor at any corpus size — is then checkpointed so
-    the pack stage's two consumers (bucket subtotal aggregate,
-    in-bucket prefix window) read 16 bytes/row instead of each
-    replaying the filter+dedup subtree: the plan held 16 scan nodes /
-    17 Exchanges, now 2 scans (percentile pass + band pass — the
-    irreducible two-pass shape) ahead of the checkpoint and 3
-    Exchanges after it.
+    rank-1 rows), so the quality-band subtree is instantiated once and
+    the text never enters that shuffle: the projection to (doc_id, h,
+    n_tok) runs before the window exchange. The (doc_id, n_tok) survivor
+    relation is checkpointed so the pack stage's two consumers (bucket
+    subtotal aggregate, in-bucket prefix window) read 16 bytes/row
+    instead of each replaying the filter+dedup subtree: the plan held 16
+    scan nodes / 17 Exchanges, now 2 scans (percentile pass + band pass)
+    ahead of the checkpoint and 3 Exchanges after it.
     """
+    from .text import _length_band
+
     d = table(spark, sf_dir, "documents")
-    bounds = d.groupBy(F.col("lang").alias("b_lang")).agg(
-        F.expr("percentile(n_chars, 0.10)").alias("lo"),
-        F.expr("percentile(n_chars, 0.90)").alias("hi"),
-    )
-    q = (
-        d.join(F.broadcast(bounds), d.lang == bounds.b_lang)
-        .filter(
-            (F.col("n_chars") >= F.col("lo"))
-            & (F.col("n_chars") <= F.col("hi"))
-        )
-        .select("doc_id", "text")
-    )
+    q = _length_band(d).select("doc_id", "text")
     w_h = Window.partitionBy("h").orderBy("doc_id")
     surv = (
         q.select(

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import fan_out, table
@@ -86,12 +86,24 @@ def shingles(docs: DataFrame, k: int = 3) -> DataFrame:
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact duplicate clustering on normalized text hash."""
     d = table(spark, sf_dir, "documents")
-    return d.groupBy(
-        F.md5(fold_lower(F.trim(F.col("text")))).alias("h")
-    ).agg(
+    return d.groupBy(_exact_key().alias("h")).agg(
         F.min("doc_id").alias("keep_id"),
         F.count(F.lit(1)).alias("n_copies"),
     )
+
+
+def _exact_key() -> Column:
+    """The exact-dedup content key: md5 of the trimmed, ASCII-folded text."""
+    return F.md5(fold_lower(F.trim(F.col("text"))))
+
+
+def exact_survivors(docs: DataFrame) -> DataFrame:
+    """The rows of ``docs`` that survive exact dedup: the lowest doc_id
+    per :func:`_exact_key` (dedup_exact's ``keep_id``)."""
+    keep = docs.groupBy(_exact_key().alias("h")).agg(
+        F.min("doc_id").alias("doc_id")
+    )
+    return docs.join(keep.select("doc_id"), "doc_id", "semi")
 
 
 @register(
@@ -1885,20 +1897,27 @@ REGISTRY["dedup_components_star"] = REGISTRY["dedup_components_star"].__class__(
 )
 def dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc duplicated-8-gram fraction (exact-substring dedup signal)."""
+    return substring_dups(table(spark, sf_dir, "documents"), digits=6)
+
+
+def substring_dups(docs: DataFrame, digits: int | None = None) -> DataFrame:
+    """(doc_id, n_grams, n_dup_grams, dup_ratio): each doc's 8-word gram
+    count, how many of those grams another doc of ``docs`` also holds,
+    and their ratio; ``digits`` rounds the ratio inside the aggregate
+    (None leaves it unrounded)."""
     from pyspark.sql.window import Window
 
-    g = shingles(table(spark, sf_dir, "documents"), k=8).select(
-        "doc_id", F.md5("sh").alias("h")
-    )
+    g = shingles(docs, k=8).select("doc_id", F.md5("sh").alias("h"))
     per = g.groupBy("doc_id", "h").agg(F.count(F.lit(1)).alias("c"))
     per = per.withColumn(
         "nd", F.count(F.lit(1)).over(Window.partitionBy("h"))
     )
     dup = F.when(F.col("nd") >= 2, F.col("c")).otherwise(F.lit(0))
+    r = F.sum(dup) / F.sum("c").cast("double")
     return per.groupBy("doc_id").agg(
         F.sum("c").cast("long").alias("n_grams"),
         F.sum(dup).cast("long").alias("n_dup_grams"),
-        pround(F.sum(dup) / F.sum("c").cast("double"), 6).alias("dup_ratio"),
+        (r if digits is None else pround(r, digits)).alias("dup_ratio"),
     )
 
 
@@ -2234,14 +2253,11 @@ def _expand_families(
     return cross.unionByName(within)
 
 
-def _prefix_filter_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    num: int,
-    den: int,
-    symmetric: bool,
+def prefix_filter_pairs(
+    docs: DataFrame, num: int, den: int, symmetric: bool, k: int
 ) -> DataFrame:
-    """Exact-recall 4-shingle-set pairs over exact-copy representatives.
+    """Exact-recall k-shingle-set pairs of ``docs`` over exact-copy
+    representatives.
 
     symmetric=True: Jaccard >= num/den, doc_a < doc_b, both sides
     prefix-filtered (AllPairs). symmetric=False: containment
@@ -2253,9 +2269,9 @@ def _prefix_filter_pairs(
     """
     from pyspark.sql.window import Window
 
-    fam, reps = _content_families(table(spark, sf_dir, "documents"))
+    fam, reps = _content_families(docs)
     sh = (
-        shingles(reps, k=4)
+        shingles(reps, k=k)
         .select("doc_id", F.md5("sh").alias("h"))
         .distinct()
         .localCheckpoint(eager=True)
@@ -2404,7 +2420,9 @@ def _prefix_filter_pairs(
 def dedup_jaccard_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Every 4-shingle-set pair with Jaccard >= 0.8 -- exact recall via
     AllPairs prefix filtering over exact-copy representatives."""
-    return _prefix_filter_pairs(spark, sf_dir, num=4, den=5, symmetric=True)
+    return prefix_filter_pairs(
+        table(spark, sf_dir, "documents"), num=4, den=5, symmetric=True, k=4
+    )
 
 
 @register(
@@ -2457,7 +2475,9 @@ def dedup_jaccard_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered near-subset pairs: |A&B|/|A| >= 0.9 on 4-shingle sets
     (A = doc_a contained in doc_b), exact recall, copy-collapsed."""
-    return _prefix_filter_pairs(spark, sf_dir, num=9, den=10, symmetric=False)
+    return prefix_filter_pairs(
+        table(spark, sf_dir, "documents"), num=9, den=10, symmetric=False, k=4
+    )
 
 
 def _neardup_curate_oracle() -> str:
@@ -2560,26 +2580,16 @@ def corpus_curate_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-filter, NEAR-dup dedup (LSH components), then pack."""
     from ..catalog import cached_count
     from .curation import _pack_windows
+    from .text import _length_band
 
     d = table(spark, sf_dir, "documents")
-    bounds = d.groupBy(F.col("lang").alias("b_lang")).agg(
-        F.expr("percentile(n_chars, 0.10)").alias("lo"),
-        F.expr("percentile(n_chars, 0.90)").alias("hi"),
-    )
-    q = (
-        d.join(F.broadcast(bounds), d.lang == bounds.b_lang)
-        .filter(
-            (F.col("n_chars") >= F.col("lo"))
-            & (F.col("n_chars") <= F.col("hi"))
-        )
-        .select("doc_id", "text")
-    )
+    q = _length_band(d).select("doc_id", "text")
     labels = component_labels(spark, sf_dir, docs=q)
     drop = labels.filter(F.col("lbl") != F.col("doc_id")).select("doc_id")
-    # r12: _pack_windows reads its input twice (bucket subtotals,
-    # in-bucket prefix window); checkpointing the 16-byte/row survivor
-    # relation keeps the quality-band scan + anti-join from replaying
-    # per consumer — the same barrier corpus_curate_pipeline's survivor
+    # _pack_windows reads its input twice (bucket subtotals, in-bucket
+    # prefix window); checkpointing the 16-byte/row survivor relation
+    # keeps the quality-band scan + anti-join from replaying per
+    # consumer — the same barrier corpus_curate_pipeline's survivor
     # stage carries.
     surv = (
         q.join(drop, "doc_id", "left_anti")

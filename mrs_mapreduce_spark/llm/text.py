@@ -488,6 +488,28 @@ def text_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _length_band(docs: DataFrame) -> DataFrame:
+    """The rows of ``docs`` inside their language's p10..p90 ``n_chars``
+    band: a per-lang percentile aggregate broadcast back onto the docs."""
+    bounds = docs.groupBy(F.col("lang").alias("b_lang")).agg(
+        F.expr("percentile(n_chars, 0.10)").alias("lo"),
+        F.expr("percentile(n_chars, 0.90)").alias("hi"),
+    )
+    return docs.join(F.broadcast(bounds), docs.lang == bounds.b_lang).filter(
+        (F.col("n_chars") >= F.col("lo")) & (F.col("n_chars") <= F.col("hi"))
+    )
+
+
+def quality_gate(docs: DataFrame) -> DataFrame:
+    """The rows of ``docs`` with at least 20 words of which at least 30%
+    are distinct: drops very short docs and low-vocabulary spam."""
+    words = F.split("text", " ")
+    n_words = F.size(words)
+    return docs.filter(
+        (n_words >= 20) & (F.size(F.array_distinct(words)) / n_words >= 0.3)
+    )
+
+
 @register(
     "corpus_length_filter",
     oracle="""
@@ -514,17 +536,8 @@ def text_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def corpus_length_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keep per-language p10..p90 length band; report survivors."""
-    d = table(spark, sf_dir, "documents")
-    bounds = d.groupBy(F.col("lang").alias("b_lang")).agg(
-        F.expr("percentile(n_chars, 0.10)").alias("lo"),
-        F.expr("percentile(n_chars, 0.90)").alias("hi"),
-    )
     return (
-        d.join(F.broadcast(bounds), d.lang == bounds.b_lang)
-        .filter(
-            (F.col("n_chars") >= F.col("lo"))
-            & (F.col("n_chars") <= F.col("hi"))
-        )
+        _length_band(table(spark, sf_dir, "documents"))
         .groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n_kept"),
@@ -1395,13 +1408,12 @@ def text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     onto the per-doc bigram stream keyed on the bigram; per-bigram nll
     is quantized to integer micro-nats before the per-doc sum so the
     aggregate is order-independent and bit-identical across engines.
-    Exchange discipline (round-6 rewrite): the model build aggregates
-    instances straight to pair totals — map-side combine makes that
-    shuffle VOCAB-scaled — and scoring joins the instance stream
-    against the (AQE-broadcast) model, so the only corpus-wide shuffle
-    is the per-doc rollup. The old per-(doc, pair) pre-aggregate was a
-    corpus-keyed shuffle computed twice; at sf100-synth it was 136 of
-    167 s and read as 11.9x/decade — the rewrite measures 35.6 s
+    The model build aggregates instances straight to pair totals —
+    map-side combine makes that shuffle VOCAB-scaled — and scoring joins
+    the instance stream against the (AQE-broadcast) model, so the only
+    corpus-wide shuffle is the per-doc rollup. A per-(doc, pair)
+    pre-aggregate, a corpus-keyed shuffle computed twice, took 136 of
+    167 s at sf100-synth and read 11.9x/decade; this plan measures 35.6 s
     (4.1x/decade). At 100 TB with a web-scale vocab the scoring join
     degrades to shuffle-on-pair (or broadcast after frequency
     pruning); the doc stream never materializes its explode.
@@ -1409,9 +1421,26 @@ def text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc avg bigram negative log-likelihood (Laplace-smoothed LM)."""
+    contrib = bigram_nll(table(spark, sf_dir, "documents")).select(
+        "doc_id",
+        # per-instance quantization is exact and order-independent:
+        # every instance of a pair contributes the identical integer
+        # micro-nats
+        F.floor(F.col("nll") * 1_000_000 + 0.5).cast("long").alias("nll"),
+    )
+    return contrib.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n_bigrams"),
+        pround(
+            F.sum("nll") / F.count(F.lit(1)) / 1_000_000.0, 4
+        ).alias("avg_nll"),
+    )
+
+
+def bigram_nll(docs: DataFrame) -> DataFrame:
+    """(doc_id, nll): every bigram instance of ``docs`` scored under the
+    Laplace-smoothed bigram LM built from ``docs`` themselves."""
     from .dedup import shingles
 
-    docs = table(spark, sf_dir, "documents")
     bg = shingles(docs, k=2).select("doc_id", F.col("sh").alias("pair"))
     # The MODEL is vocab-bounded, the corpus is not: aggregate the
     # instance stream STRAIGHT to pair totals — map-side combine
@@ -1420,29 +1449,17 @@ def text_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize once (lineage cut, the similarity_ivf_trained
     # codebook discipline) so the marginal rollup and the scoring join
     # read the counts instead of re-running the aggregation.
-    # (Round-6, r5 verdict task 6: the previous plan pre-aggregated to
-    # per-(doc, pair) counts, a CORPUS-keyed shuffle — 256M rows at
-    # sf100-synth, 136 of the query's 167 s, spilling at exactly the
-    # tier whose ratio read 11.9x/decade — and then recomputed that
-    # aggregate for the scoring join. Both corpus-keyed exchanges are
-    # gone; the only corpus-wide shuffle left is the per-doc rollup.)
     pairs = bg.groupBy("pair").agg(
         F.count(F.lit(1)).alias("c12")
     ).localCheckpoint(eager=True)
-    uni = pairs.groupBy(
-        F.split("pair", " ").getItem(0).alias("w1")
-    ).agg(F.sum("c12").alias("c1"))
-    vocab = (
-        tokens(docs).select("word").distinct().agg(
-            F.count(F.lit(1)).alias("v")
-        )
-    )
-    nll = -F.log(
-        (F.col("c12") + 1.0) / (F.col("c1") + F.col("v"))
-    )
-    contrib = (
+    w1 = F.split("pair", " ").getItem(0)
+    uni = pairs.groupBy(w1.alias("w1")).agg(F.sum("c12").alias("c1"))
+    vocab = tokens(docs).select("word").distinct()
+    vocab = vocab.agg(F.count(F.lit(1)).alias("v"))
+    nll = -F.log((F.col("c12") + 1.0) / (F.col("c1") + F.col("v")))
+    return (
         bg.join(pairs, "pair")
-        .withColumn("w1", F.split("pair", " ").getItem(0))
+        .withColumn("w1", w1)
         # no hard hints: the model relations are vocab-sized (unbounded
         # on a web corpus) — AQE broadcasts them while they fit, so the
         # instance stream never shuffles here; past broadcast size the
@@ -1450,19 +1467,7 @@ def text_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
         # fallback
         .join(uni, "w1")
         .crossJoin(F.broadcast(vocab))
-        .select(
-            "doc_id",
-            # per-instance quantization is exact and order-independent:
-            # every instance of a pair contributes the identical
-            # integer micro-nats
-            F.floor(nll * 1_000_000 + 0.5).cast("long").alias("nll"),
-        )
-    )
-    return contrib.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_bigrams"),
-        pround(
-            F.sum("nll") / F.count(F.lit(1)) / 1_000_000.0, 4
-        ).alias("avg_nll"),
+        .select("doc_id", nll.alias("nll"))
     )
 
 
@@ -1609,18 +1614,21 @@ def text_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document unigram entropy via the algebraic decomposition."""
-    tf = (
-        tokens(table(spark, sf_dir, "documents"))
-        .groupBy("doc_id", "word")
-        .agg(F.count(F.lit(1)).alias("c"))
+    return doc_entropy(table(spark, sf_dir, "documents"), digits=6)
+
+
+def doc_entropy(docs: DataFrame, digits: int | None = None) -> DataFrame:
+    """(doc_id, n_words, entropy): unigram Shannon entropy per doc,
+    H = log2(n) - sum(c*log2(c))/n; ``digits`` rounds inside the
+    aggregate (None leaves it unrounded)."""
+    tf = tokens(docs).groupBy("doc_id", "word").agg(
+        F.count(F.lit(1)).alias("c")
     )
+    n = F.sum("c").cast("double")
+    h = F.log2(n) - F.sum(F.col("c") * F.log2("c")) / n
     return tf.groupBy("doc_id").agg(
         F.sum("c").cast("long").alias("n_words"),
-        pround(
-            F.log2(F.sum("c").cast("double"))
-            - F.sum(F.col("c") * F.log2("c")) / F.sum("c").cast("double"),
-            6,
-        ).alias("entropy"),
+        (h if digits is None else pround(h, digits)).alias("entropy"),
     )
 
 

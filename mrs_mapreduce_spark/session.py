@@ -35,22 +35,26 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
 }
 
+
+def _session_cpus() -> str:
+    """``$SPARK_GRAFT_CPUS``, else the cores this process may run on."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(
+        len(os.sched_getaffinity(0))
+    )
+
+
 def _default_shuffle_partitions(cpus: str) -> str:
     """Initial shuffle-partition count derived from session parallelism.
 
-    Scale-adaptive, not a constant (r12, guide §2.2): the driver re-runs
-    the bench at a lower core count (master ``local[$SPARK_GRAFT_CPUS]``),
-    where a hard-coded 32 would mean 4 task waves of scheduling overhead
-    per tiny shuffle. Start at the core count — identical to the old
-    constant at the default 32 — and let AQE re-plan from actual map
-    output sizes (coalescing up-front partitions is its job; the count
-    here is only the pre-AQE ceiling). On a real cluster this becomes
-    executors x cores (x 2-3 for skew headroom), passed the same way.
+    Scale-adaptive, not a constant: at a low core count a hard-coded 32
+    would mean several task waves of scheduling overhead per tiny
+    shuffle. Start at the core count and let AQE re-plan from actual map
+    output sizes (the count here is only the pre-AQE ceiling). On a real
+    cluster this becomes executors x cores (x 2-3 for skew headroom),
+    passed the same way.
 
-    ``cpus`` is the raw ``$SPARK_GRAFT_CPUS`` string the caller already
-    read for the master URL — ONE env read per session build (ADVICE
-    r12: resolving this at import time could pair a stale partition
-    count with a fresh master if the env changed in between).
+    ``cpus`` is the string the caller already resolved for the master
+    URL, so the partition count and the master always agree.
     """
     try:
         return str(max(1, int(cpus)))
@@ -60,7 +64,7 @@ def _default_shuffle_partitions(cpus: str) -> str:
 
 #: Configs that only make sense at session-build time.
 #: ``spark.sql.shuffle.partitions`` is NOT here: it derives from the same
-#: ``$SPARK_GRAFT_CPUS`` read as the master string, inside get_session.
+#: :func:`_session_cpus` value as the master string, inside get_session.
 BUILD_CONFS: dict[str, str] = {
     # local mode runs every executor thread inside the driver JVM, whose
     # Spark default heap is 1g — badly undersized for local[32] on a
@@ -76,10 +80,9 @@ BUILD_CONFS: dict[str, str] = {
     # stages drain; FAIR round-robins task slots across concurrent jobs,
     # so independent datasets genuinely overlap — the reference's async
     # dataset scheduling semantics. Context-static, so set at build.
-    # The env override exists for drift attribution (BASELINE.md
-    # round-10 A/B: FAIR vs FIFO measured indistinguishable on the four
-    # gated shapes, so FAIR stays the default).
-    "spark.scheduler.mode": os.environ.get("SPARK_GRAFT_SCHEDULER", "FAIR"),
+    # FAIR and FIFO measured indistinguishable on the four gated bench
+    # shapes (BASELINE.md), so FAIR costs nothing where Job is unused.
+    "spark.scheduler.mode": "FAIR",
     "spark.ui.enabled": "false",
     # Shuffle/spill block codec (guide §2.3): default stays Spark's lz4.
     # zstd was A/B'd at the sf1-synth tier (r13, verdict task #9 — see
@@ -112,11 +115,12 @@ def get_session(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's configuration.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32) so
-    the same entry point serves tests and the bench harness; on a real
-    cluster pass the cluster master URL or rely on spark-submit.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]``, or to the cores
+    this process may run on when the env var is unset, so the same entry
+    point serves tests, examples and the bench harness on any host; on a
+    real cluster pass the cluster master URL or rely on spark-submit.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = _session_cpus()
     builder = SparkSession.builder.appName(app_name).master(
         master or f"local[{cpus}]"
     )

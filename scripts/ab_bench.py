@@ -8,7 +8,6 @@ arm-to-arm delta. The r10 lesson baked in: never compare arms run
 sequentially — JIT warm-up makes whichever ran second look faster.
 
 Usage:
-    python scripts/ab_bench.py --env SPARK_GRAFT_SCHEDULER A=FAIR B=FIFO
     python scripts/ab_bench.py --env SPARK_GRAFT_DRIVER_MEM A=16g B=4g \
         --iterations 3
 

@@ -335,11 +335,6 @@ def test_fair_scheduler_concurrent_wait_and_progress(spark):
     progress monotonicity."""
     import time
 
-    # Under the SPARK_GRAFT_SCHEDULER=FIFO A/B override (session.py,
-    # the round-10 drift-attribution knob) the test's premise doesn't
-    # hold — skip rather than fail the intentional configuration.
-    if spark.sparkContext.getConf().get("spark.scheduler.mode") != "FAIR":
-        pytest.skip("scheduler overridden to non-FAIR (A/B attribution run)")
     # The 'fast strictly first' / 'slow >= 3/16 at fast-done' thresholds
     # assume ~8 concurrent local task slots; on a low-core or loaded CI
     # host the slot math (two 16-task waves vs shared slots) no longer
