@@ -479,29 +479,12 @@ def events_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Range partitions per ntile dimension — parameterized, not hard-coded
-#: (r13, verdict task #5). The global rank is n-invariant (range order +
-#: per-partition offsets give the same closed-form ntile for ANY count —
-#: oracle-checked at 8 and 32), so this is purely a throughput knob. The
-#: core-count derivation (max(8, defaultParallelism), §2.2) was A/B'd at
-#: sf0.1 and REJECTED: new slower in 6/7 interleaved paired rounds
-#: (medians 2.46 -> 3.46 s) — the per-user relation is entity-sized, and
-#: 3 x 32 range partitions pay range-sampling plus task waves for rows
-#: that fit in 8. At 100 TB set SPARK_GRAFT_NTILE_PARTS so each range
-#: partition holds ~100 MB-1 GB of the per-entity relation (§2.2), e.g.
-#: ~1k for a billion-user profile table.
+#: Range partitions per ntile dimension. The global rank is n-invariant
+#: (range order + per-partition offsets give the same ntile for any
+#: count), so this only sets throughput; deriving it from the core count
+#: was A/B'd at sf0.1 and rejected (slower in 6/7 interleaved rounds,
+#: medians 2.46 -> 3.46 s): the per-user relation fits in 8 partitions.
 _NTILE_PARTS = 8
-
-
-def _ntile_parts() -> int:
-    """Range-partition count per ntile dimension (env-tunable, default 8)."""
-    import os
-
-    try:
-        return max(1, int(os.environ.get("SPARK_GRAFT_NTILE_PARTS",
-                                         _NTILE_PARTS)))
-    except ValueError:
-        return _NTILE_PARTS
 
 
 def _global_ntile(df: DataFrame, order: list, out: str) -> DataFrame:
@@ -543,7 +526,7 @@ def _ranked_chain(df: DataFrame, order: list) -> DataFrame:
     AQE must not insert a second around the repartitionByRange (r13,
     verdict task #5 plan pin)."""
     return (
-        df.repartitionByRange(_ntile_parts(), *order)
+        df.repartitionByRange(_NTILE_PARTS, *order)
         .sortWithinPartitions(*order)
         .withColumn("_mid", F.monotonically_increasing_id())
     )

@@ -14,9 +14,11 @@ import math
 from dataclasses import dataclass, field
 
 import duckdb
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql.types import StructType
 
 from .catalog import TABLES
+from .plans import executed_plan
 
 
 def duck_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
@@ -336,7 +338,7 @@ def _duck_type_to_spark(t) -> str:
     return _DUCK_TO_SPARK.get(s, s.lower())
 
 
-def _type_issues(spark_df: DataFrame, rel) -> list[str]:
+def _type_issues(schema: StructType, rel) -> list[str]:
     """Flag DuckDB↔Spark result-type pairs the driver's hash would split.
 
     The driver's value hash is type-sensitive (ADVICE round 1): HUGEINT vs
@@ -345,7 +347,7 @@ def _type_issues(spark_df: DataFrame, rel) -> list[str]:
     query predicts a driver-green query.
     """
     issues = []
-    s_types = {f.name: f.dataType.simpleString() for f in spark_df.schema.fields}
+    s_types = {f.name: f.dataType.simpleString() for f in schema.fields}
     for col, dtyp in zip(rel.columns, rel.types):
         d = _duck_type_to_spark(dtyp)
         s = s_types.get(col)
@@ -373,6 +375,14 @@ class CompareResult:
     spark_rows: int
     duck_rows: int
     issues: list[str] = field(default_factory=list)
+    #: The Spark side as built, in plain data only: a held DataFrame would
+    #: pin its cached and checkpointed blocks. ``plan`` is the executed
+    #: plan taken before the collect; ``error`` is what the builder (or
+    #: the collect) raised, for readers of the build to re-raise.
+    schema: StructType | None = None
+    plan: str = ""
+    rows: list[Row] = field(default_factory=list)
+    error: Exception | None = None
 
     def __str__(self) -> str:
         status = "OK " if self.ok else "FAIL"
@@ -396,12 +406,27 @@ def compare(
     0.0 mirrors the driver (exact hash); use a tolerance only for local
     debugging of summation-order effects, never to declare a query.
     """
+    rows = spark_df.collect()
+    return _compare_rows(name, spark_df.schema, rows, con, sql, float_tol)
+
+
+def _compare_rows(
+    name: str,
+    schema: StructType,
+    rows: list[Row],
+    con: duckdb.DuckDBPyConnection,
+    sql: str | None,
+    float_tol: float = 0.0,
+) -> CompareResult:
+    """:func:`compare` on Spark rows already collected."""
+    if sql is None:
+        raise ValueError("no oracle SQL: there is no rows-only check")
     issues: list[str] = []
-    s_cols = list(spark_df.columns)
-    s_rows = [tuple(r) for r in spark_df.collect()]
+    s_cols = schema.names
+    s_rows = [tuple(r) for r in rows]
     rel = con.sql(sql)
     d_cols = list(rel.columns)
-    issues.extend(_type_issues(spark_df, rel))
+    issues.extend(_type_issues(schema, rel))
     d_rows = rel.fetchall()
 
     if sorted(s_cols) != sorted(d_cols):
@@ -432,7 +457,8 @@ def check_queries(
     sf_dir: str,
     names: list[str] | None = None,
 ) -> list[CompareResult]:
-    """Run the full declared inventory against the oracle at ``sf_dir``."""
+    """Build, plan and collect each declared query once at ``sf_dir`` and
+    check it against its oracle; every result carries its build."""
     from .registry import load_all
 
     registry = load_all()
@@ -447,13 +473,20 @@ def check_queries(
             continue
         try:
             df = q.builder(spark, sf_dir)
-            if q.oracle is None:
-                n = df.count()
-                results.append(CompareResult(name, n >= 0, n, -1, ["rows-only"]))
-            else:
-                results.append(compare(name, df, con, q.oracle))
+            schema, plan = df.schema, executed_plan(df)
+            rows = df.collect()
         except Exception as exc:  # surface, don't abort the sweep
-            results.append(
-                CompareResult(name, False, -1, -1, [f"{type(exc).__name__}: {exc}"])
+            results.append(CompareResult(
+                name, False, -1, -1, [f"{type(exc).__name__}: {exc}"],
+                error=exc,
+            ))
+            continue
+        try:
+            res = _compare_rows(name, schema, rows, con, q.oracle)
+        except Exception as exc:  # a missing or broken oracle fails this query
+            res = CompareResult(
+                name, False, len(rows), -1, [f"{type(exc).__name__}: {exc}"]
             )
+        res.schema, res.plan, res.rows = schema, plan, rows
+        results.append(res)
     return results

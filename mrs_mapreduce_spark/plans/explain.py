@@ -20,9 +20,10 @@ def formatted_plan(df: DataFrame) -> str:
     )
 
 
-def plan_flags(df: DataFrame) -> dict[str, bool]:
-    """Quick predicates about a plan, used by tests and PLANS.md."""
-    plan = executed_plan(df)
+def plan_flags(df: DataFrame | str) -> dict[str, bool]:
+    """Quick predicates about a plan (or its executed-plan string), used
+    by tests and PLANS.md."""
+    plan = df if isinstance(df, str) else executed_plan(df)
     return {
         "pushed_filters": "PushedFilters: [" in plan and "PushedFilters: []" not in plan,
         "partial_agg": "partial_" in plan,

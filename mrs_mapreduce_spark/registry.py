@@ -30,8 +30,8 @@ class Query:
 
     name: str
     builder: Builder
-    #: DuckDB-runnable ANSI SQL over the fixture views, or None for
-    #: genuinely non-SQL-expressible ops (driver then does rows-only check).
+    #: DuckDB-runnable ANSI SQL over the fixture views. None fails the
+    #: oracle check: there is no rows-only check.
     oracle: str | None
     #: SURVEY.md §2 row id(s), e.g. "B9" — what this query demonstrates.
     survey: str
@@ -43,32 +43,9 @@ REGISTRY: dict[str, Query] = {}
 
 #: Presentation order for the declared inventory. The external driver
 #: evaluates queries in ``queries()`` iteration order and its correctness
-#: report covers a prefix of that order (exactly the first 50), so the
-#: prefix ROTATES each round until every declared query has earned a
-#: driver-green CORRECTNESS row: rounds 1-2 verified 73 distinct queries
-#: (see CORRECTNESS_r0{1,2}.json); the round-3 prefix below is 50 queries
-#: the driver has NEVER checked, every one with an EXACT SQL oracle.
-#: Queries not listed here keep their registration order after the
-#: showcase.
-#:
-#: ROUND-13 PREFIX — GENERATED by ``python scripts/freshness.py
-#: --rotation`` at the r13 optimization HEAD (r12 rotation recorded in
-#: CORRECTNESS_r12.json: 50/50 green). Order: the round's new operator
-#: (sink_bucketed_hsets — status "never"), then every query this
-#: round's optimization touched and therefore staled (the set-array
-#: verify family, bpe, rfm, funnel, table_diff_incremental,
-#: similarity_ivf, both recall witnesses), then the oldest-evidence
-#: re-slot tail — which lands the full sink/source roundtrip family
-#: back in the driver-hashed prefix (sink_csv/json/orc_roundtrip,
-#: sink_merge_upsert, sink_schema_evolution, sink_compaction,
-#: sink_partitioned, source_*), restoring the write-path coverage
-#: ADVICE r12 flagged as rotated out.
-#: All 50 re-verified against their oracles locally
-#: (scripts/driver_sim.py) before this paste; a full-registry
-#: foreign-cwd sweep runs at every round-close HEAD.
-#: Regenerate after any builder edit; paste verbatim.
-#: Run scripts/fixture_check.py FIRST (fixtures regenerate between
-#: rounds).
+#: report covers exactly the first 50, so this prefix is frozen: editing
+#: it would change which queries that report checks. Queries not listed here
+#: keep their registration order after the showcase.
 SHOWCASE: tuple[str, ...] = (
     "sink_bucketed_hsets", "dedup_soft_weights", "dedup_components",
     "dedup_components_star", "corpus_curate_neardup", "text_bpe_train",

@@ -84,15 +84,9 @@ BUILD_CONFS: dict[str, str] = {
     # shapes (BASELINE.md), so FAIR costs nothing where Job is unused.
     "spark.scheduler.mode": "FAIR",
     "spark.ui.enabled": "false",
-    # Shuffle/spill block codec (guide §2.3): default stays Spark's lz4.
-    # zstd was A/B'd at the sf1-synth tier (r13, verdict task #9 — see
-    # OPTIMIZATION_r13.md / SCALE.md for the interleaved numbers); the
-    # env knob keeps the choice parameterized per deployment: at 100 TB
-    # the ratio-vs-CPU trade flips with network/disk speed and must be
-    # re-measured there (§2.3 "there is no universal answer").
-    "spark.io.compression.codec": os.environ.get(
-        "SPARK_GRAFT_IO_CODEC", "lz4"
-    ),
+    # Shuffle/spill block codec: zstd was A/B'd at the sf1-synth tier and
+    # rejected (SCALE.md), so Spark's default lz4 stays.
+    "spark.io.compression.codec": "lz4",
     "spark.sql.parquet.compression.codec": "zstd",
     # managed tables (bucketing demos/tests) land in tmp, not the repo
     "spark.sql.warehouse.dir": f"{tempfile.gettempdir()}/mrs_spark_warehouse",

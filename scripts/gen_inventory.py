@@ -5,87 +5,43 @@ Usage: python scripts/gen_inventory.py
 
 from __future__ import annotations
 
+import re
 import sys
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from mrs_mapreduce_spark.registry import load_all  # noqa: E402
-from freshness import audit  # noqa: E402
 
 HEADER = """# INVENTORY — declared, oracle-checked operator coverage
 
 Generated from the query registry (`python scripts/gen_inventory.py`).
 Every row is one `queries()` entry in `__spark_entry__.py`; "oracle"
-means an exact DuckDB SQL twin is declared and value-hash-verified
-(rows-only = genuinely estimator-/streaming-specific, checked for row
-count only). The *survey* column maps each query to its SURVEY.md §2
-inventory row. The *evidence* column is the automated freshness audit
-(`scripts/freshness.py`): **fresh rN** = the builder's closure hash at
-HEAD matches the hash at the commit the driver last tested green in
-round N; **STALE rN** = code changed since that evidence (rotate it);
-**NEVER** = no driver row yet.
+means an exact DuckDB SQL twin is declared and value-hash-verified; a
+query without one ("**none**") fails the oracle check, which has no
+rows-only mode. The *survey* column maps each query to its SURVEY.md §2
+inventory row.
 
-| query | SURVEY §2 | oracle | evidence | builder |
-|---|---|---|---|---|
+| query | SURVEY §2 | oracle | builder |
+|---|---|---|---|
 """
 
 
 def main() -> None:
     registry = load_all()
-    fresh = audit()
     lines = [HEADER]
     for name in sorted(registry):
         q = registry[name]
         mod = q.builder.__module__.replace("mrs_mapreduce_spark.", "")
-        oracle = "exact SQL" if q.oracle else "rows-only"
-        row = fresh[name]
-        ev = {
-            "fresh": f"fresh r{row['round']}",
-            "stale": f"**STALE** r{row['round']}",
-            "never": "**NEVER**",
-        }[row["status"]]
-        lines.append(
-            f"| `{name}` | {q.survey} | {oracle} | {ev} | `{mod}` |\n"
-        )
+        oracle = "exact SQL" if q.oracle else "**none**"
+        lines.append(f"| `{name}` | {q.survey} | {oracle} | `{mod}` |\n")
     n_oracle = sum(1 for q in registry.values() if q.oracle)
-    n_fresh = sum(1 for r in fresh.values() if r["status"] == "fresh")
-    n_stale = sum(1 for r in fresh.values() if r["status"] == "stale")
-    n_deep = sum(
-        1
-        for r in fresh.values()
-        if r["status"] == "fresh" and not r["deep"]
-    )
-    # deep-stale burn-down trend: carry the history forward from the
-    # previous INVENTORY.md so each regen appends one point (r6 verdict
-    # task 3 — the rotation's deep-stale tiebreak should drive this to 0
-    # over a few rounds, and the trend line makes the burn-down visible)
-    import re
-
-    out_path = Path(__file__).resolve().parent.parent / "INVENTORY.md"
-    history = "r6 close: 169"
-    if out_path.is_file():
-        m = re.search(r"Trend: (.+?)\.\n", out_path.read_text())
-        if m:
-            # fold the previous "now" into the history as a plain point
-            # (ADVICE r7: rsplit dropped it, so the line only ever held
-            # the seed plus the current value — no actual burn-down)
-            history = m.group(1).replace(" → now: ", " → ")
     lines.append(
         f"\n**{len(registry)} declared queries — {n_oracle} with exact SQL"
-        f" oracles, {len(registry) - n_oracle} rows-only; evidence:"
-        f" {n_fresh} fresh-green, {n_stale} stale,"
-        f" {len(registry) - n_fresh - n_stale} never driver-tested.**\n"
-        f"\nDeep-stale (module-fresh but a shared cross-module helper"
-        f" changed since the evidence; burned down by the rotation's"
-        f" deep-stale tiebreak): **{n_deep}**."
-        f" Trend: {history} → now: {n_deep}.\n"
+        " oracles.**\n"
     )
 
     # reverse index: SURVEY §2 row -> queries covering it
-    import re
-
     by_row: dict[str, list[str]] = {}
     for name in sorted(registry):
         for row in re.findall(r"[ABCD]\d+", registry[name].survey):

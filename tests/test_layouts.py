@@ -272,44 +272,42 @@ def test_compaction_collapses_file_count(spark, sf_dir):
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
-def _top3_pairs(spark, sf_dir, name):
-    from mrs_mapreduce_spark.registry import load_all
-
-    df = load_all()[name].builder(spark, sf_dir)
-    return {(r.q_id, r.cand_id) for r in df.collect() if r.rk <= 3}
+def _top3_pairs(registry_pass, name):
+    rows = registry_pass.built(name).rows
+    return {(r.q_id, r.cand_id) for r in rows if r.rk <= 3}
 
 
-def test_multiprobe_lsh_recall_dominates_single_probe(spark, sf_dir):
+def test_multiprobe_lsh_recall_dominates_single_probe(registry_pass):
     """Probing the 8 one-bit-flip buckets must never lose recall vs the
     single bucket (its candidate set is a strict superset, and any
     candidate displacing a true top-3 pair would itself be a true top-3
     pair), and at sf0.001 it measurably gains (0 -> 2/30 pairs)."""
-    truth = _top3_pairs(spark, sf_dir, "similarity_topk")
-    single = len(_top3_pairs(spark, sf_dir, "similarity_lsh") & truth)
-    multi = len(_top3_pairs(spark, sf_dir, "similarity_lsh_multiprobe") & truth)
+    truth = _top3_pairs(registry_pass, "similarity_topk")
+    single = len(_top3_pairs(registry_pass, "similarity_lsh") & truth)
+    multi = len(_top3_pairs(registry_pass, "similarity_lsh_multiprobe") & truth)
     assert multi >= single
     assert multi >= 2  # measured: 0.0667 recall vs 0.0 single-probe
 
 
-def test_trained_ivf_recall_and_cell_balance(spark, sf_dir):
+def test_trained_ivf_recall_and_cell_balance(registry_pass):
     """The trained codebook must keep high recall vs brute force (0.9
     measured at both sf0.001 and sf0.01) and must not be MORE skewed than
     the arbitrary first-16 codebook — balance is the production win
     (sf0.01 measured: max cell 42 -> 37, stdev 5.2 -> 4.8)."""
-    truth = _top3_pairs(spark, sf_dir, "similarity_topk")
-    trained = _top3_pairs(spark, sf_dir, "similarity_ivf_trained")
+    truth = _top3_pairs(registry_pass, "similarity_topk")
+    trained = _top3_pairs(registry_pass, "similarity_ivf_trained")
     assert len(trained & truth) / len(truth) >= 0.8
 
 
-def test_nprobe_ivf_recall_dominates_single_cell(spark, sf_dir):
+def test_nprobe_ivf_recall_dominates_single_cell(registry_pass):
     """nprobe=2's candidate set is a strict superset of nprobe=1's (same
     trained codebook, the rank-1 cell is always probed), so recall vs
     brute force can only rise; at sf0.001 it measurably does
     (27 -> 28 of 30 true pairs; at sf0.01 both read 27 — the three
     misses there are same-cell rank casualties no second cell fixes)."""
-    truth = _top3_pairs(spark, sf_dir, "similarity_topk")
-    single = len(_top3_pairs(spark, sf_dir, "similarity_ivf_trained") & truth)
-    multi = len(_top3_pairs(spark, sf_dir, "similarity_ivf_nprobe") & truth)
+    truth = _top3_pairs(registry_pass, "similarity_topk")
+    single = len(_top3_pairs(registry_pass, "similarity_ivf_trained") & truth)
+    multi = len(_top3_pairs(registry_pass, "similarity_ivf_nprobe") & truth)
     assert multi >= single
     assert multi >= 27
 

@@ -205,17 +205,15 @@ class TestPurePythonCodecs:
         with _pytest.raises(ValueError, match="RIFF"):
             decode_wav_pcm16(b"OggS junk")
 
-    def test_roundtrip_queries_match_story(self, spark, sf_dir):
+    def test_roundtrip_queries_match_story(self, spark, sf_dir, registry_pass):
         from mrs_mapreduce_spark.registry import load_all
 
-        reg = load_all()
-        bmp = reg["multimodal_bmp_roundtrip"].builder(spark, sf_dir)
-        rows = bmp.collect()
+        rows = registry_pass.built("multimodal_bmp_roundtrip").rows
         assert len(rows) == 500
         for r in rows[:20]:
             assert 4 <= r.width <= 15 and 4 <= r.height <= 15
             assert r.n_pixels == r.width * r.height
             # gray 24-bit: channel sum is divisible by 3 by construction
             assert r.channel_sum % 3 == 0
-        wav = reg["multimodal_wav_roundtrip"].builder(spark, sf_dir)
+        wav = load_all()["multimodal_wav_roundtrip"].builder(spark, sf_dir)
         assert wav.filter("rate <> 8000").count() == 0

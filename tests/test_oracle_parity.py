@@ -16,16 +16,23 @@ from mrs_mapreduce_spark.registry import load_all
 _NAMES = sorted(load_all())
 
 
-@pytest.fixture(scope="module")
-def all_results(spark, sf_dir):
-    results = check_queries(spark, sf_dir)
-    return {r.name: r for r in results}
-
-
 @pytest.mark.parametrize("name", _NAMES)
-def test_query_matches_oracle(all_results, name):
-    result = all_results[name]
+def test_query_matches_oracle(registry_pass, name):
+    result = registry_pass.built(name)
     assert result.ok, str(result)
+
+
+def test_query_without_oracle_fails(spark, sf_dir, monkeypatch):
+    """There is no rows-only check: a declared query without oracle SQL
+    fails the sweep, whatever rows it returns."""
+    from mrs_mapreduce_spark.registry import REGISTRY, Query
+
+    name = "_oracle_less_probe"
+    monkeypatch.setitem(REGISTRY, name, Query(
+        name, lambda spark, sf_dir: spark.range(1), None, "", ""
+    ))
+    (result,) = check_queries(spark, sf_dir, [name])
+    assert result.ok is False, str(result)
 
 
 def test_compare_flags_hugeint_type_mismatch(spark, sf_dir):

@@ -110,12 +110,10 @@ def test_approx_distinct_error_bound(spark, sf_dir):
     assert abs(approx - exact) / exact <= 0.05
 
 
-def test_window_rank_bijection(spark, sf_dir):
+def test_window_rank_bijection(registry_pass):
     """row_number over a total order is a bijection per partition."""
-    from mrs_mapreduce_spark.registry import load_all
 
-    df = load_all()["window_rank"].builder(spark, sf_dir)
-    rows = df.collect()
+    rows = registry_pass.built("window_rank").rows
     per_user = Counter(r.user_id for r in rows)
     for r in rows:
         assert 1 <= r.rn <= 5
@@ -250,20 +248,16 @@ def test_bloom_pruned_join_is_exact_on_any_keys(spark, member, probe):
     assert got == want
 
 
-def test_pack_contexts_conserves_docs_and_tokens(spark, sf_dir):
+def test_pack_contexts_conserves_docs_and_tokens(spark, sf_dir, registry_pass):
     """Packing is a partition of the corpus: every doc lands in exactly
     one context, token totals conserved, ctx ids are the dense prefix."""
-    from mrs_mapreduce_spark.registry import load_all
-
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
     n_docs = d.count()
     n_toks = d.select(
         F.sum(F.size(F.split("text", " "))).alias("s")
     ).collect()[0].s
 
-    rows = load_all()["corpus_pack_contexts"].builder(
-        spark, sf_dir
-    ).collect()
+    rows = registry_pass.built("corpus_pack_contexts").rows
     assert sum(r.n_docs for r in rows) == n_docs
     assert sum(r.n_tokens for r in rows) == n_toks
     # a doc's context is where it STARTS, so first/last ranges of
@@ -273,31 +267,25 @@ def test_pack_contexts_conserves_docs_and_tokens(spark, sf_dir):
         assert a.last_doc < b.first_doc
 
 
-def test_repetition_ratio_bounds(spark, sf_dir):
-    from mrs_mapreduce_spark.registry import load_all
-
-    rows = load_all()["text_repetition"].builder(spark, sf_dir).collect()
+def test_repetition_ratio_bounds(registry_pass):
+    rows = registry_pass.built("text_repetition").rows
     assert rows
     for r in rows:
         assert 0.0 <= r.dup_ratio < 1.0
         assert r.flagged == int(r.dup_ratio > 0.1)
 
 
-def test_mix_weights_form_a_distribution(spark, sf_dir):
-    from mrs_mapreduce_spark.registry import load_all
-
-    rows = load_all()["corpus_mix_weights"].builder(spark, sf_dir).collect()
+def test_mix_weights_form_a_distribution(registry_pass):
+    rows = registry_pass.built("corpus_mix_weights").rows
     assert abs(sum(r.share for r in rows) - 1.0) < 1e-2
     # weight * share == uniform target share for every domain
     for r in rows:
         assert abs(r.weight * r.share - 1.0 / len(rows)) < 1e-2
 
 
-def test_decontaminate_excludes_benchmark(spark, sf_dir):
+def test_decontaminate_excludes_benchmark(spark, sf_dir, registry_pass):
     """The output partitions the NON-benchmark corpus: row counts match
     the doc_id % 97 != 0 slice and contamination never exceeds it."""
-    from mrs_mapreduce_spark.registry import load_all
-
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
     expect = {
         r.lang: r.n
@@ -306,9 +294,7 @@ def test_decontaminate_excludes_benchmark(spark, sf_dir):
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
     }
-    rows = load_all()["corpus_decontaminate"].builder(
-        spark, sf_dir
-    ).collect()
+    rows = registry_pass.built("corpus_decontaminate").rows
     assert {r.lang: r.n_docs for r in rows} == expect
     for r in rows:
         assert 0 <= r.n_contaminated <= r.n_docs
@@ -380,12 +366,10 @@ def test_label_propagation_long_chain_exact_components(spark):
         propagate_min_labels(sym, max_rounds=3, checkpoint_every=2)
 
 
-def test_scd2_intervals_partition_the_timeline(spark, sf_dir):
+def test_scd2_intervals_partition_the_timeline(registry_pass):
     """Per user: versions are 1..n, intervals are adjacent half-open
     [from, to) with to = next version's from, and exactly one open tail."""
-    from mrs_mapreduce_spark.registry import load_all
-
-    rows = load_all()["scd2_build"].builder(spark, sf_dir).collect()
+    rows = registry_pass.built("scd2_build").rows
     by_user = {}
     for r in rows:
         by_user.setdefault(r.user_id, []).append(r)
@@ -401,14 +385,13 @@ def test_scd2_intervals_partition_the_timeline(spark, sf_dir):
         assert all(r.valid_to_us == open_tail for r in vs[-1:])
 
 
-def test_attribution_conserves_revenue(spark, sf_dir):
+def test_attribution_conserves_revenue(spark, sf_dir, registry_pass):
     """Across channels (incl. '(none)'), attributed purchase counts and
     revenue must equal the raw purchase totals — attribution may move
     credit, never create or destroy it."""
     from mrs_mapreduce_spark.catalog import table
-    from mrs_mapreduce_spark.registry import load_all
 
-    rows = load_all()["events_attribution"].builder(spark, sf_dir).collect()
+    rows = registry_pass.built("events_attribution").rows
     total_n = sum(r.n_purchases for r in rows)
     total_rev = sum(r.revenue for r in rows)
     raw = (
@@ -516,13 +499,11 @@ def test_intersect_all_is_min_multiplicity(spark, left, right):
     assert got == Counter(want)
 
 
-def test_entropy_bounds_and_uniform_extremes(spark, sf_dir):
+def test_entropy_bounds_and_uniform_extremes(spark, registry_pass):
     """0 <= H <= log2(n_distinct_words); H == 0 iff one distinct word."""
     import math
 
-    from mrs_mapreduce_spark.registry import load_all
-
-    rows = load_all()["text_entropy"].builder(spark, sf_dir).collect()
+    rows = registry_pass.built("text_entropy").rows
     assert rows
     for r in rows:
         # entropy is pround()ed to 6 decimals, so allow the 5e-7 quantum
@@ -990,16 +971,15 @@ def test_bootstrap_ci_brackets_point_mean_and_is_deterministic(
         assert n > 0
 
 
-def test_url_keepbest_survivor_really_is_best(spark, sf_dir):
+def test_url_keepbest_survivor_really_is_best(spark, sf_dir, registry_pass):
     """E110 invariant: per canonical URL, the kept doc's score equals
     the group max and survivors partition the corpus (sum of n_dups =
     total docs; one survivor per distinct canonical URL)."""
     from mrs_mapreduce_spark.registry import load_all
 
     reg = load_all()
-    best = reg["corpus_dedup_url_keepbest"].builder(spark, sf_dir)
     urls = reg["url_canonicalize"].builder(spark, sf_dir)
-    rows = best.collect()
+    rows = registry_pass.built("corpus_dedup_url_keepbest").rows
     n_urls = urls.select("url").distinct().count()
     n_docs = urls.count()
     assert len(rows) == n_urls
@@ -1138,16 +1118,13 @@ def test_text_scrub_null_text_matches_oracle(spark, tmp_path_factory):
     assert got[1] == (1, None, None, None)  # NULL propagates in BOTH
 
 
-def test_soft_weights_partition_and_mass(spark, sf_dir):
+def test_soft_weights_partition_and_mass(spark, sf_dir, registry_pass):
     """E112 invariants: every document appears exactly once; weights
     within a cluster are identical and sum to 1.0 per cluster (the
     expected sampled mass equals the hard-deduped corpus); cluster
     sizes agree with dedup_components' n_docs for every multi-doc
     component."""
-    from mrs_mapreduce_spark.registry import load_all
-
-    reg = load_all()
-    rows = reg["dedup_soft_weights"].builder(spark, sf_dir).collect()
+    rows = registry_pass.built("dedup_soft_weights").rows
     from mrs_mapreduce_spark.catalog import table
 
     total = table(spark, sf_dir, "documents").count()
@@ -1161,12 +1138,12 @@ def test_soft_weights_partition_and_mass(spark, sf_dir):
         assert len(members) == size
         assert all(m["cluster_size"] == size for m in members)
         assert abs(sum(m["weight"] for m in members) - 1.0) < 1e-4
-    comp_rows = reg["dedup_components"].builder(spark, sf_dir).collect()
+    comp_rows = registry_pass.built("dedup_components").rows
     for c in comp_rows:
         assert len(by_comp[c["component"]]) == c["n_docs"]
 
 
-def test_diversity_sample_quota_and_centrality(spark, sf_dir):
+def test_diversity_sample_quota_and_centrality(spark, sf_dir, registry_pass):
     """E113 invariants: per cell at most QUOTA survivors with ranks
     1..min(|cell|, QUOTA); every kept member's distance <= every
     dropped member's distance in its cell (centrality); every cell is
@@ -1175,10 +1152,8 @@ def test_diversity_sample_quota_and_centrality(spark, sf_dir):
         _DIVERSITY_QUOTA,
         semdedup_cells,
     )
-    from mrs_mapreduce_spark.registry import load_all
 
-    reg = load_all()
-    kept = reg["corpus_diversity_sample"].builder(spark, sf_dir).collect()
+    kept = registry_pass.built("corpus_diversity_sample").rows
     cells = {}
     for r in kept:
         cells.setdefault(r["cid"], []).append(r)
@@ -1260,7 +1235,7 @@ def test_salted_join_rejects_small_side_preserving_modes(spark):
     assert got == want
 
 
-def test_boilerplate_strip_invariants(spark, sf_dir):
+def test_boilerplate_strip_invariants(spark, sf_dir, registry_pass):
     """E114 invariants: every document appears exactly once; spliced
     header/footer lines are ALWAYS stripped (their DF is ~n/3, ~n/4 >>
     the threshold) while every organic body line survives (unique
@@ -1268,10 +1243,8 @@ def test_boilerplate_strip_invariants(spark, sf_dir):
     doc stripped to nothing yields kept_text = '' not a dropped row."""
     from mrs_mapreduce_spark.catalog import table
     from mrs_mapreduce_spark.llm.curation import _FTR, _HDR
-    from mrs_mapreduce_spark.registry import load_all
 
-    reg = load_all()
-    rows = reg["corpus_boilerplate_strip"].builder(spark, sf_dir).collect()
+    rows = registry_pass.built("corpus_boilerplate_strip").rows
     docs = {
         r["doc_id"]: r["text"]
         for r in table(spark, sf_dir, "documents").collect()

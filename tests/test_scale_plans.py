@@ -9,51 +9,46 @@ import re
 from mrs_mapreduce_spark.registry import load_all
 
 
-def _plan(spark, sf_dir, name: str) -> str:
-    df = load_all()[name].builder(spark, sf_dir)
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_scan_pushdown(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "scan_parquet")
+def test_scan_pushdown(registry_pass):
+    plan = registry_pass.built("scan_parquet").plan
     assert "PushedFilters: [" in plan
     assert "IsNotNull(l_quantity)" in plan or "GreaterThanOrEqual" in plan
     # column pruning: payload columns not read
     assert "l_extendedprice" not in plan
 
 
-def test_groupby_partial_aggregation(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "groupby_agg")
+def test_groupby_partial_aggregation(registry_pass):
+    plan = registry_pass.built("groupby_agg").plan
     # partial (map-side combine) + final aggregate around one exchange
     assert plan.count("HashAggregate") >= 2
     assert "partial_sum" in plan or "partial" in plan
 
 
-def test_broadcast_join_is_broadcast(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "join_broadcast")
+def test_broadcast_join_is_broadcast(registry_pass):
+    plan = registry_pass.built("join_broadcast").plan
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
 
-def test_topk_uses_take_ordered(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "topk")
+def test_topk_uses_take_ordered(registry_pass):
+    plan = registry_pass.built("topk").plan
     assert "TakeOrderedAndProject" in plan
 
 
-def test_semi_anti_join_operators(spark, sf_dir):
-    assert "LeftSemi" in _plan(spark, sf_dir, "join_semi")
-    assert "LeftAnti" in _plan(spark, sf_dir, "join_anti")
+def test_semi_anti_join_operators(registry_pass):
+    assert "LeftSemi" in registry_pass.built("join_semi").plan
+    assert "LeftAnti" in registry_pass.built("join_anti").plan
 
 
-def test_theta_join_not_cartesian(spark, sf_dir):
+def test_theta_join_not_cartesian(registry_pass):
     """Equi component must be the join key; inequality stays a residual."""
-    plan = _plan(spark, sf_dir, "join_theta")
+    plan = registry_pass.built("join_theta").plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_map_project_no_shuffle(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "map_project")
+def test_map_project_no_shuffle(registry_pass):
+    plan = registry_pass.built("map_project").plan
     assert "Exchange" not in plan
 
 
@@ -65,47 +60,47 @@ def test_codegen_covers_flagship(spark, sf_dir):
     assert "*(1)" in plan and "*(2)" in plan, plan
 
 
-def test_pergroup_topk_rank_limit_pushdown(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "topk_pergroup")
+def test_pergroup_topk_rank_limit_pushdown(registry_pass):
+    plan = registry_pass.built("topk_pergroup").plan
     assert "WindowGroupLimit" in plan
 
 
-def test_lateral_decorrelates_to_rank_pushdown(spark, sf_dir):
+def test_lateral_decorrelates_to_rank_pushdown(registry_pass):
     """LATERAL must become a window rank-limit plan, never a per-row loop."""
-    plan = _plan(spark, sf_dir, "join_lateral")
+    plan = registry_pass.built("join_lateral").plan
     assert "WindowGroupLimit" in plan, plan
     assert "CartesianProduct" not in plan, plan
 
 
-def test_bloom_pruned_join_probe_shape(spark, sf_dir):
+def test_bloom_pruned_join_probe_shape(registry_pass):
     """r12 bitmap bloom: the probe is ONE broadcast of a single bitmap
     row (nested-loop crossJoin) + codegen shift/mask filter — zero probe
     joins — and the exact join stays the only BroadcastHashJoin. The
     fact table never shuffles before the filter."""
-    plan = _plan(spark, sf_dir, "join_bloom_pruned")
+    plan = registry_pass.built("join_bloom_pruned").plan
     assert plan.count("BroadcastHashJoin") == 1, plan
     assert "BroadcastNestedLoopJoin" in plan, plan  # 1-row bitmap ship
     assert "shiftright" in plan, plan  # membership is filter arithmetic
     assert "SortMergeJoin" not in plan, plan
 
 
-def test_histogram_single_partial_aggregation(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "agg_histogram")
+def test_histogram_single_partial_aggregation(registry_pass):
+    plan = registry_pass.built("agg_histogram").plan
     assert plan.count("HashAggregate") >= 2
     assert plan.count("Exchange") == 1, plan  # only the bucket rollup
 
 
-def test_anomaly_stats_broadcast_back(spark, sf_dir):
+def test_anomaly_stats_broadcast_back(registry_pass):
     """The per-type moments join onto events map-side (broadcast)."""
-    plan = _plan(spark, sf_dir, "events_anomaly")
+    plan = registry_pass.built("events_anomaly").plan
     assert "BroadcastHashJoin" in plan, plan
     assert "SortMergeJoin" not in plan, plan
 
 
-def test_pack_contexts_distributed_prefix_sum(spark, sf_dir):
+def test_pack_contexts_distributed_prefix_sum(registry_pass):
     """The doc-level running sum must be partitioned by bucket; the only
     SinglePartition exchange feeds the tiny per-bucket offset window."""
-    plan = _plan(spark, sf_dir, "corpus_pack_contexts")
+    plan = registry_pass.built("corpus_pack_contexts").plan
     assert "windowspecdefinition(bucket#" in plan.replace("\n", " "), plan
     # at fixture scale the planner broadcasts the offsets relation from
     # its measured stats (unhinted — at 100 TB it grows and flips to the
@@ -117,35 +112,35 @@ def test_pack_contexts_distributed_prefix_sum(spark, sf_dir):
     assert plan.count("Exchange SinglePartition") == 1, plan
 
 
-def test_decontaminate_broadcast_semi_probe(spark, sf_dir):
+def test_decontaminate_broadcast_semi_probe(registry_pass):
     """Benchmark shingles probe the corpus map-side: LeftSemi broadcast;
     the flagged-id relation also broadcasts onto the final agg."""
-    plan = _plan(spark, sf_dir, "corpus_decontaminate")
+    plan = registry_pass.built("corpus_decontaminate").plan
     assert "LeftSemi, BuildRight" in plan, plan
     assert plan.count("BroadcastHashJoin") >= 2, plan
     assert "SortMergeJoin" not in plan, plan
 
 
-def test_repetition_is_scan_fused(spark, sf_dir):
+def test_repetition_is_scan_fused(registry_pass):
     """Gopher gate = pure projection: one scan, zero shuffles, no Python."""
-    plan = _plan(spark, sf_dir, "text_repetition")
+    plan = registry_pass.built("text_repetition").plan
     assert "Exchange" not in plan, plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert plan.count("FileScan") == 1, plan
 
 
-def test_mix_weights_single_scan(spark, sf_dir):
+def test_mix_weights_single_scan(registry_pass):
     """Corpus totals come from a window over the aggregated domain
     relation — the corpus must be scanned exactly once."""
-    plan = _plan(spark, sf_dir, "corpus_mix_weights")
+    plan = registry_pass.built("corpus_mix_weights").plan
     assert plan.count("FileScan") == 1, plan
     assert plan.count("Exchange SinglePartition") == 1, plan
 
 
-def test_triangles_all_joins_broadcast(spark, sf_dir):
+def test_triangles_all_joins_broadcast(registry_pass):
     """Wedge-close joins on the tiny edge relation must broadcast, and the
     orientation must keep the plan free of cartesian products."""
-    plan = _plan(spark, sf_dir, "graph_triangles")
+    plan = registry_pass.built("graph_triangles").plan
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -197,46 +192,39 @@ def test_zorder_write_is_single_range_shuffle(spark, sf_dir):
     assert plan.lower().count("exchange rangepartitioning") == 1
 
 
-def test_scan_profile_single_scan_expand(spark, sf_dir):
+def test_scan_profile_single_scan_expand(registry_pass):
     """Exact multi-distinct must plan as ONE scan + Expand, not one scan
     per distinct column."""
-    plan = _plan(spark, sf_dir, "scan_profile")
+    plan = registry_pass.built("scan_profile").plan
     assert plan.count("FileScan parquet") == 1
     assert "Expand" in plan
 
 
-def test_postings_partial_aggregation(spark, sf_dir):
+def test_postings_partial_aggregation(registry_pass):
     """Posting-list build must partial-aggregate before the term shuffle."""
-    plan = _plan(spark, sf_dir, "text_postings")
+    plan = registry_pass.built("text_postings").plan
     assert "partial_count" in plan or "partial" in plan.lower()
 
 
-def test_no_cartesian_products_anywhere(spark):
+def test_no_cartesian_products_anywhere(registry_pass):
     """No declared query may plan a CartesianProduct — the one join shape
     that cannot survive scale. (BroadcastNestedLoopJoin is allowed: it is
     the correct plan for broadcast scalar-subquery rows and non-equi
     broadcast range probes, both bounded by the broadcast side.)"""
-    sf_dir = "/root/testdata/sf0.001"
-    skip_prefixes = (
-        "stream_", "sink_", "source_", "mr_", "reduce_", "reducemap",
-        "iterative", "multimodal",
-    )  # side-effecting / RDD / driver-loop builders planned elsewhere
-    offenders = []
-    for name, q in load_all().items():
-        if name.startswith(skip_prefixes):
-            continue
-        plan = q.builder(spark, sf_dir)._jdf.queryExecution().executedPlan()
-        if "CartesianProduct" in plan.toString():
-            offenders.append(name)
+    offenders = [
+        name
+        for name in registry_pass
+        if "CartesianProduct" in registry_pass.built(name).plan
+    ]
     assert not offenders, offenders
 
 
-def test_rfm_no_global_window(spark, sf_dir):
+def test_rfm_no_global_window(registry_pass):
     """events_rfm quartiles must use the distributed global-rank pattern:
     zero WindowExec anywhere (the old shape was three single-partition
     ntile windows), exact range partitioning per dimension, offsets joined
     back as broadcasts."""
-    plan = _plan(spark, sf_dir, "events_rfm")
+    plan = registry_pass.built("events_rfm").plan
     assert "Window" not in plan, plan
     assert "BroadcastHashJoin" in plan, plan
 
@@ -265,64 +253,64 @@ def test_rfm_rank_chain_single_range_exchange(spark, sf_dir):
     assert plan.count("rangepartitioning") == 1, plan
 
 
-def test_bm25_topk_and_broadcast_scoring(spark, sf_dir):
+def test_bm25_topk_and_broadcast_scoring(registry_pass):
     """BM25: the scoring join must broadcast the query-term/df side and
     the global top-10 must be TakeOrderedAndProject, not a
     single-partition sort of the scored relation."""
-    plan = _plan(spark, sf_dir, "text_bm25")
+    plan = registry_pass.built("text_bm25").plan
     assert "TakeOrderedAndProject" in plan, plan
     assert "BroadcastHashJoin" in plan, plan
 
 
-def test_perplexity_integer_quantized_sum(spark, sf_dir):
+def test_perplexity_integer_quantized_sum(registry_pass):
     """The per-doc nll sum must aggregate int64 micro-nats (order-free),
     partial->final, with no Python in the plan."""
-    plan = _plan(spark, sf_dir, "text_perplexity")
+    plan = registry_pass.built("text_perplexity").plan
     assert plan.count("HashAggregate") >= 2, plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_scd2_build_single_window_pass(spark, sf_dir):
+def test_scd2_build_single_window_pass(registry_pass):
     """Interval + version must come from ONE user-partitioned window
     (one exchange), no self-join."""
-    plan = _plan(spark, sf_dir, "scd2_build")
+    plan = registry_pass.built("scd2_build").plan
     assert plan.count("Window") == 1, plan
     assert "Join" not in plan, plan
 
 
-def test_attribution_single_window_exchange(spark, sf_dir):
+def test_attribution_single_window_exchange(registry_pass):
     """Attribution = one user_id window + channel rollup: exactly one
     full-relation exchange before the tiny aggregate."""
-    plan = _plan(spark, sf_dir, "events_attribution")
+    plan = registry_pass.built("events_attribution").plan
     assert plan.count("Window") == 1, plan
     assert "Join" not in plan, plan
 
 
-def test_asof_nearest_single_window_pass(spark, sf_dir):
+def test_asof_nearest_single_window_pass(registry_pass):
     """Both direction candidates (backward last + forward first) must
     share ONE exchange and ONE sort — Spark splits the two frames into
     two Window operators, but the second reuses the first's ordering,
     so the relation shuffles and sorts exactly once and there is no
     self-join."""
-    plan = _plan(spark, sf_dir, "join_asof_nearest")
+    plan = registry_pass.built("join_asof_nearest").plan
     assert plan.count("Exchange hashpartitioning") == 1, plan
     assert plan.count("Sort ") == 1, plan
     assert "Join" not in plan, plan
 
 
-def test_null_safe_join_stays_hash_join(spark, sf_dir):
+def test_null_safe_join_stays_hash_join(registry_pass):
     """eqNullSafe must not fall back to nested-loop: Catalyst normalizes
     <=> into hash-joinable keys and the 5-row dim broadcasts."""
-    plan = _plan(spark, sf_dir, "join_null_safe")
+    plan = registry_pass.built("join_null_safe").plan
     assert "BroadcastHashJoin" in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
 
 
-def test_bitmap_distinct_partial_bitmaps(spark, sf_dir):
+def test_bitmap_distinct_partial_bitmaps(registry_pass):
     """Both aggregation levels partial-aggregate: the shuffle carries
     bitmaps / per-bucket counts, never raw keys."""
-    plan = _plan(spark, sf_dir, "agg_bitmap_distinct")
+    plan = registry_pass.built("agg_bitmap_distinct").plan
     # bitmap level is a SortAggregate (binary buffer), count level a
     # HashAggregate — BOTH must partial-aggregate map-side
     assert "partial_bitmap_construct_agg" in plan
@@ -331,33 +319,33 @@ def test_bitmap_distinct_partial_bitmaps(spark, sf_dir):
     assert "Expand" not in plan
 
 
-def test_window_count_distinct_single_window(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "window_count_distinct")
+def test_window_count_distinct_single_window(registry_pass):
+    plan = registry_pass.built("window_count_distinct").plan
     assert plan.count("Window") - plan.count("WindowGroupLimit") == 1
 
 
-def test_zipf_ranks_only_topk(spark, sf_dir):
+def test_zipf_ranks_only_topk(registry_pass):
     """The global ranking window must sit on TOP of the top-256 cut
     (TakeOrderedAndProject), never over the full vocabulary."""
-    plan = _plan(spark, sf_dir, "text_zipf")
+    plan = registry_pass.built("text_zipf").plan
     assert "TakeOrderedAndProject" in plan
 
 
-def test_substring_dedup_shuffles_hashes_only(spark, sf_dir):
+def test_substring_dedup_shuffles_hashes_only(registry_pass):
     """Gram text must be hashed at the scan: no shuffle carries 'sh'."""
-    plan = _plan(spark, sf_dir, "dedup_substring")
+    plan = registry_pass.built("dedup_substring").plan
     assert "md5" in plan
     import re
     for exch in re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan):
         assert "sh#" not in exch, exch
 
 
-def test_semdedup_pairs_join_on_cell(spark, sf_dir):
+def test_semdedup_pairs_join_on_cell(registry_pass):
     """The collapsed victim stage must stay cell-keyed equi-joins: group
     reps pair on the cell id and victim probes join on (cell, group) —
     never a cartesian, never a copy-level pair join (round-5c collapse:
     the pairwise self-join was quadratic in exact-duplicate mass)."""
-    plan = _plan(spark, sf_dir, "dedup_semdedup")
+    plan = registry_pass.built("dedup_semdedup").plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     # the rep-pair join is an equi-join KEYED ON THE CELL (xcid)
@@ -368,38 +356,38 @@ def test_semdedup_pairs_join_on_cell(spark, sf_dir):
         or "ShuffledHashJoin [cid" in plan
 
 
-def test_dpp_prunes_fact_partitions(spark, sf_dir):
+def test_dpp_prunes_fact_partitions(registry_pass):
     """The dim-side filter must reach the fact scan as a runtime
     dynamicpruningexpression PartitionFilter."""
-    plan = _plan(spark, sf_dir, "join_dpp")
+    plan = registry_pass.built("join_dpp").plan
     assert "dynamicpruning" in plan
     assert "PartitionFilters: [" in plan
 
 
-def test_similarity_range_no_candidate_shuffle(spark, sf_dir):
+def test_similarity_range_no_candidate_shuffle(registry_pass):
     """Range search must be scan -> broadcast join -> filter: no hash
     exchange of the candidate side, no window."""
-    plan = _plan(spark, sf_dir, "similarity_range")
+    plan = registry_pass.built("similarity_range").plan
     assert "Window" not in plan
     assert "Exchange hashpartitioning" not in plan
 
 
-def test_sample_weighted_is_topk_not_sort(spark, sf_dir):
+def test_sample_weighted_is_topk_not_sort(registry_pass):
     """A-ES sampling must plan as TakeOrderedAndProject — never a global
     sort of the keyed corpus."""
-    plan = _plan(spark, sf_dir, "sample_weighted")
+    plan = registry_pass.built("sample_weighted").plan
     assert "TakeOrderedAndProject" in plan
     assert "Exchange rangepartitioning" not in plan
 
 
-def test_range_binned_is_equi_join(spark, sf_dir):
+def test_range_binned_is_equi_join(registry_pass):
     """Grid binning must turn the interval join into a hash-family
     equi-join on bucket — never the nested-loop theta form. Round-5
     sweep pin: the point side must be pre-reduced per (bucket, day)
     BELOW the join — the matched-row set of the raw join grows
     quadratically with scale inside a fixed date domain (411 s at the
     sf10 synthetic tier; 9.2 s with the day partials)."""
-    plan = _plan(spark, sf_dir, "join_range_binned")
+    plan = registry_pass.built("join_range_binned").plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "Join [bucket" in plan.replace("BroadcastHashJoin [bucket",
@@ -411,11 +399,11 @@ def test_range_binned_is_equi_join(spark, sf_dir):
     assert re.search(r"HashAggregate.*keys=\[bucket#\d+L?, d#\d+", plan), plan
 
 
-def test_interarrival_percentile_only_per_user(spark, sf_dir):
+def test_interarrival_percentile_only_per_user(registry_pass):
     """Exact quartiles must come from distributed-rank selection: the
     only percentile aggregates in the plan are keyed by user_id (one
     user's history), never a global value buffer."""
-    plan = _plan(spark, sf_dir, "events_interarrival")
+    plan = registry_pass.built("events_interarrival").plan
     for line in plan.splitlines():
         if "percentile(" in line:
             assert "user_id" in line, line
@@ -425,7 +413,7 @@ def test_interarrival_percentile_only_per_user(spark, sf_dir):
     assert "existingrdd" in plan.lower()
 
 
-def test_sketch_quantile_no_unbounded_percentile_buffer(spark, sf_dir):
+def test_sketch_quantile_no_unbounded_percentile_buffer(registry_pass):
     """Round-5 rewrite: the witness side must be the rank-of-value plan
     (broadcast the 3-row sketch output back onto the scan, conditional
     counts) — never the percentile() aggregate whose per-group value
@@ -434,7 +422,7 @@ def test_sketch_quantile_no_unbounded_percentile_buffer(spark, sf_dir):
     rank (round-4's shape — 49.5 s at the sf10 synthetic tier). The GK
     sketch (percentile_approx, bounded mergeable state) is the only
     percentile-family aggregate allowed in this plan."""
-    plan = _plan(spark, sf_dir, "sketch_quantile")
+    plan = registry_pass.built("sketch_quantile").plan
     assert "percentile_approx" in plan
     # bare exact percentile( would appear as "percentile(" without the
     # _approx suffix — strip the approx occurrences and look again
@@ -448,25 +436,25 @@ def test_sketch_quantile_no_unbounded_percentile_buffer(spark, sf_dir):
     assert "ExistingRDD" not in plan
 
 
-def test_approx_distinct_no_expand(spark, sf_dir):
+def test_approx_distinct_no_expand(registry_pass):
     """agg_approx_distinct repeats countDistinct(o_custkey) three times
     (value + both sides of the witness) over ONE distinct column —
     Catalyst must collapse them into a single distinct rewrite with no
     Expand node (multi-distinct Expand would triple the scan rows)."""
-    plan = _plan(spark, sf_dir, "agg_approx_distinct")
+    plan = registry_pass.built("agg_approx_distinct").plan
     assert "Expand" not in plan
     # partial + final of ONE collapsed distinct aggregate, nothing more
     assert plan.count("count(distinct o_custkey") <= 2
 
 
-def test_semdedup_assignment_checkpointed_once(spark, sf_dir):
+def test_semdedup_assignment_checkpointed_once(registry_pass):
     """The round-4b two-level assignment is materialized once (the plan
     the pair self-join reads is a checkpoint scan, not two copies of the
     argmin subtree), and the downstream pair join stays an equi-join on
     the cell with no nested-loop remnants. k-tracks-corpus behavior
     itself is pinned by tests/test_semdedup_scaling.py on synthetic
     corpora of two sizes."""
-    plan = _plan(spark, sf_dir, "dedup_semdedup")
+    plan = registry_pass.built("dedup_semdedup").plan
     assert "CartesianProduct" not in plan
     # checkpoint truncated: the assignment subtree (its broadcast
     # nested-loop coarse joins) must NOT appear in the final plan at all
@@ -474,73 +462,73 @@ def test_semdedup_assignment_checkpointed_once(spark, sf_dir):
     assert "ExistingRDD" in plan
 
 
-def test_corpus_shuffle_topk_not_global_window(spark, sf_dir):
+def test_corpus_shuffle_topk_not_global_window(registry_pass):
     """The deterministic-shuffle top-100 must be TakeOrderedAndProject
     (per-partition heaps) with the rank window running over the 100
     survivors only — never a corpus-wide single-task window + filter
     (SCALE.md rule 7)."""
-    plan = _plan(spark, sf_dir, "corpus_shuffle")
+    plan = registry_pass.built("corpus_shuffle").plan
     assert "TakeOrderedAndProject" in plan, plan
 
 
-def test_quality_classifier_zero_shuffle_codegen(spark, sf_dir):
+def test_quality_classifier_zero_shuffle_codegen(registry_pass):
     """E106: the hashed-ngram classifier is ONE codegen projection —
     tokens never explode, features never shuffle, no Python stage."""
-    plan = _plan(spark, sf_dir, "text_quality_classifier")
+    plan = registry_pass.built("text_quality_classifier").plan
     assert "Exchange" not in plan, plan
     assert "Generate" not in plan  # no explode
     assert "BatchEvalPython" not in plan and "ArrowEval" not in plan
 
 
-def test_url_canonicalize_zero_shuffle(spark, sf_dir):
+def test_url_canonicalize_zero_shuffle(registry_pass):
     """E107: canonicalization is a pure per-row regexp projection, and
     the ``text`` column _raw_urls carries for E110's score is pruned
     out of this query's scan by Catalyst (it never selects it)."""
-    plan = _plan(spark, sf_dir, "url_canonicalize")
+    plan = registry_pass.built("url_canonicalize").plan
     assert "Exchange" not in plan, plan
     assert not re.search(r"ReadSchema: [^\n]*text", plan), plan
 
 
-def test_url_host_stats_partial_distinct(spark, sf_dir):
+def test_url_host_stats_partial_distinct(registry_pass):
     """E107: the host rollup uses the two-level partial-distinct plan —
     (host, url)-distinct rows are reduced map-side before any exchange,
     so a head host's duplicates never converge raw onto one task."""
-    plan = _plan(spark, sf_dir, "url_host_stats")
+    plan = registry_pass.built("url_host_stats").plan
     # count(distinct) expands to >= 2 aggregation levels around exchanges
     assert plan.count("HashAggregate") >= 3, plan
     assert "partial" in plan
 
 
-def test_bootstrap_ci_single_pass_no_explode(spark, sf_dir):
+def test_bootstrap_ci_single_pass_no_explode(registry_pass):
     """E109: all 32 Poisson replicates ride ONE partial-aggregated
     groupBy — no Generate (explode), no Python, one exchange."""
-    plan = _plan(spark, sf_dir, "agg_bootstrap_ci")
+    plan = registry_pass.built("agg_bootstrap_ci").plan
     assert "Generate" not in plan, plan
     assert "BatchEvalPython" not in plan and "ArrowEval" not in plan
     assert plan.count("HashAggregate") >= 2  # partial + final
     assert plan.count("Exchange") == 1, plan
 
 
-def test_retention_cohorts_dedup_first(spark, sf_dir):
+def test_retention_cohorts_dedup_first(registry_pass):
     """E108: the corpus-sized stage is the (week, user) dedup; the
     cohort-size join broadcasts."""
-    plan = _plan(spark, sf_dir, "events_retention_cohorts")
+    plan = registry_pass.built("events_retention_cohorts").plan
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
 
 
-def test_url_keepbest_single_aggregation(spark, sf_dir):
+def test_url_keepbest_single_aggregation(registry_pass):
     """E110: keep-best is the max_by monoid — one aggregation with
     map-side partials (SortAggregate: max_by over a struct ordering is
     not hash-aggregable, but partial_max_by still combines before the
     exchange); no window, no pair stage, no Python."""
-    plan = _plan(spark, sf_dir, "corpus_dedup_url_keepbest")
+    plan = registry_pass.built("corpus_dedup_url_keepbest").plan
     assert "Window" not in plan, plan
     assert "BatchEvalPython" not in plan and "ArrowEval" not in plan
     assert "partial_max_by" in plan, plan  # map-side combine
     assert plan.count("Exchange hashpartitioning") == 1, plan
 
 
-def test_knn_graph_bucketed_never_allpairs(spark, sf_dir):
+def test_knn_graph_bucketed_never_allpairs(spark, sf_dir, registry_pass):
     """E111: candidates come from the bucket equi-join (never a cross
     join), the directed top-k is WindowGroupLimit-pushed, and the
     mutuality join runs on the k*n edge relation.
@@ -561,14 +549,14 @@ def test_knn_graph_bucketed_never_allpairs(spark, sf_dir):
     assert "CartesianProduct" not in prefix, prefix
     assert "BroadcastNestedLoopJoin" not in prefix, prefix
     assert "WindowGroupLimit" in prefix, prefix
-    plan = _plan(spark, sf_dir, "similarity_knn_graph")
+    plan = registry_pass.built("similarity_knn_graph").plan
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "ExistingRDD" in plan, plan
     assert "FileScan" not in plan, plan
 
 
-def test_sketch_merge_queries_scan_once(spark, sf_dir):
+def test_sketch_merge_queries_scan_once(registry_pass):
     """r10 sketches review: the merge/intersection proofs used to plan
     3-4 independent corpus scans (Spark has no common-subplan dedup);
     each now builds ONE checkpointed base relation at build time, so
@@ -580,21 +568,21 @@ def test_sketch_merge_queries_scan_once(spark, sf_dir):
         ("sketch_hll_merge", 0),
         ("sketch_bloom", 1),
     ]:
-        plan = _plan(spark, sf_dir, name)
+        plan = registry_pass.built(name).plan
         assert plan.count("FileScan") <= max_scans, (name, plan)
 
 
-def test_gapfill_queries_scan_events_once(spark, sf_dir):
+def test_gapfill_queries_scan_events_once(registry_pass):
     """r10 events review: the hourly rollup feeds 2-3 subtrees (bounds,
     type list, join) and Spark plans no common-subplan dedup — the
     checkpointed rollup keeps raw events to ONE scan, making the
     registered 'touched exactly once' claim true."""
     for name in ("events_gapfill", "events_fill_forward"):
-        plan = _plan(spark, sf_dir, name)
+        plan = registry_pass.built(name).plan
         assert plan.count("FileScan") == 0, (name, plan)
 
 
-def test_arrow_stage_flag_matches_known_queries(spark, sf_dir):
+def test_arrow_stage_flag_matches_known_queries(registry_pass):
     """The PLANS matrix `arrow` column (r11 verdict task): Arrow-batched
     Python stages are DECLARED per query, so a Python stage sneaking
     into a pure-JVM hot path turns up as a flag diff here before it
@@ -603,10 +591,8 @@ def test_arrow_stage_flag_matches_known_queries(spark, sf_dir):
     flagship JVM-only paths."""
     from mrs_mapreduce_spark.plans import plan_flags
 
-    reg = load_all()
-
     def flags(name):
-        return plan_flags(reg[name].builder(spark, sf_dir))
+        return plan_flags(registry_pass.built(name).plan)
 
     for name in (
         "multimodal_decode",

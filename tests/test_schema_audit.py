@@ -11,8 +11,8 @@ Two hard lessons from driver rounds 1 and 3, turned into permanent gates:
   ArrayType/MapType output column — flatten with the array_join /
   string_agg discipline (operators/aggregates.py ``agg_collect``).
 
-Schema resolution is analysis-only (no job runs), so this audit covers the
-whole declared registry in seconds.
+The schemas come from the session's one build of every declared query
+(``registry_pass`` in conftest.py), so this audit builds nothing itself.
 """
 
 from __future__ import annotations
@@ -35,19 +35,11 @@ def test_every_query_has_an_oracle(name):
     )
 
 
-@pytest.fixture(scope="module")
-def schemas(spark, sf_dir):
-    out = {}
-    for name in _NAMES:
-        out[name] = _REGISTRY[name].builder(spark, sf_dir).schema
-    return out
-
-
 @pytest.mark.parametrize("name", _NAMES)
-def test_no_array_or_map_output_columns(schemas, name):
+def test_no_array_or_map_output_columns(registry_pass, name):
     bad = [
         f.name
-        for f in schemas[name].fields
+        for f in registry_pass.built(name).schema.fields
         if isinstance(f.dataType, (ArrayType, MapType))
     ]
     assert not bad, (

@@ -45,19 +45,16 @@ def test_hll_estimate_within_theoretical_error(spark, sf_dir):
     assert r.harmonic_denom > 0
 
 
-def test_sketch_quantile_rank_error_bound(spark, sf_dir):
+def test_sketch_quantile_rank_error_bound(spark, sf_dir, registry_pass):
     """GK sketch values must sit within rank n/accuracy of the exact rank.
 
     This is the estimator's actual contract (rank error, not value
     error) — checked per group against the exact sorted values.
     """
-    from mrs_mapreduce_spark.registry import load_all
 
     # the declared query emits bounded-error witnesses (driver contract);
     # every witness must hold
-    rows = (
-        load_all()["sketch_quantile"].builder(spark, sf_dir).collect()
-    )
+    rows = registry_pass.built("sketch_quantile").rows
     for r in rows:
         assert r.p50_ok and r.p95_ok and r.p99_ok, r
 

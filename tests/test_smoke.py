@@ -50,10 +50,12 @@ def test_registry_metadata_complete():
         assert (q.builder.__doc__ or "").strip(), f"{name} missing docstring"
 
 
-def test_flagship_matches_known_counts(spark, sf_dir):
+def test_flagship_matches_known_counts(registry_pass):
     """Q1 at sf0.001: 6 groups covering 4,964 filtered lineitems."""
-    df = load_all()["groupby_agg"].builder(spark, sf_dir)
-    rows = {(r.l_returnflag, r.l_linestatus): r for r in df.collect()}
+    rows = {
+        (r.l_returnflag, r.l_linestatus): r
+        for r in registry_pass.built("groupby_agg").rows
+    }
     assert len(rows) == 6
     assert sum(r.cnt for r in rows.values()) == 4964
 
@@ -189,21 +191,19 @@ def test_showcase_prefix_protects_the_driver_gate():
     assert not missing, missing
 
 
-def test_threshold_queries_nondegenerate(spark, sf_dir):
+def test_threshold_queries_nondegenerate(registry_pass):
     """Queries with data-dependent constants must exercise their logic:
     a fixture regeneration that silently empties them (the round-2
     join_pit_scd2 lesson — 0 rows passed the oracle trivially) should
     fail HERE first."""
-    from mrs_mapreduce_spark.registry import load_all
 
-    reg = load_all()
     nonempty = [
         "join_pit_scd2", "dedup_minhash_eval", "text_pmi", "text_bm25",
         "events_funnel_bounded", "dedup_against_corpus",
     ]
     for name in nonempty:
-        assert reg[name].builder(spark, sf_dir).count() > 0, name
-    ab = reg["events_abtest"].builder(spark, sf_dir).collect()[0]
+        assert len(registry_pass.built(name).rows) > 0, name
+    ab = registry_pass.built("events_abtest").rows[0]
     # both arms must be PARTIAL conversions (0 < c < n) or the pooled
     # z denominator degenerates to zero
     assert 0 < ab.c0 < ab.n0 and 0 < ab.c1 < ab.n1, ab
@@ -243,7 +243,7 @@ def test_pretrain_pipeline_example(spark, sf_dir, tmp_path, capsys):
     assert "lang" in written.columns  # partition column survives
 
 
-def test_round3_threshold_queries_nondegenerate(spark, sf_dir):
+def test_round3_threshold_queries_nondegenerate(spark, sf_dir, registry_pass):
     """Round-3 data-dependent constants must stay observable after any
     fixture regeneration (the join_pit_scd2 lesson)."""
     from pyspark.sql import functions as F
@@ -252,7 +252,7 @@ def test_round3_threshold_queries_nondegenerate(spark, sf_dir):
 
     reg = load_all()
     # SemDeDup's 0.4 cosine threshold must actually drop vectors
-    assert reg["dedup_semdedup"].builder(spark, sf_dir).count() > 0
+    assert len(registry_pass.built("dedup_semdedup").rows) > 0
     # substring dedup must see SOME cross-doc shared 8-grams
     dup = (
         reg["dedup_substring"].builder(spark, sf_dir)
@@ -261,14 +261,12 @@ def test_round3_threshold_queries_nondegenerate(spark, sf_dir):
     assert dup and dup > 0
     # the null-safe join's NULL bucket must be populated (region 0 row)
     ns = {r.r_name: r.n_orders
-          for r in reg["join_null_safe"].builder(spark, sf_dir).collect()}
+          for r in registry_pass.built("join_null_safe").rows}
     assert len(ns) == 5 and all(v > 0 for v in ns.values())
 
 
-def test_similarity_range_nondegenerate(spark, sf_dir):
-    from mrs_mapreduce_spark.registry import load_all
-
-    assert load_all()["similarity_range"].builder(spark, sf_dir).count() > 0
+def test_similarity_range_nondegenerate(registry_pass):
+    assert len(registry_pass.built("similarity_range").rows) > 0
 
 
 def test_observation_metrics_piggyback_on_flagship(spark, sf_dir):
@@ -335,45 +333,34 @@ def test_csv_permissive_quarantines_exactly_the_bad_rows(spark, sf_dir):
     back.unpersist()
 
 
-def test_minhash_cap_is_observable_and_subset(spark, sf_dir):
+def test_minhash_cap_is_observable_and_subset(registry_pass):
     """The B=2 bucket cap must actually drop pairs (fixture has size-3
     buckets) and never invent ones the uncapped pipeline lacks."""
-    from mrs_mapreduce_spark.registry import load_all
 
-    reg = load_all()
     full = {
         (r.doc_a, r.doc_b)
-        for r in reg["dedup_minhash_pairs"].builder(spark, sf_dir).collect()
+        for r in registry_pass.built("dedup_minhash_pairs").rows
     }
     capped = {
         (r.doc_a, r.doc_b)
-        for r in reg["dedup_minhash_capped"].builder(spark, sf_dir).collect()
+        for r in registry_pass.built("dedup_minhash_capped").rows
     }
     assert capped < full  # strict subset: cap observable, nothing invented
 
 
-def test_simblocked_jaccard_nondegenerate(spark, sf_dir):
-    from mrs_mapreduce_spark.registry import load_all
-
-    n = (
-        load_all()["dedup_ngram_jaccard_simblocked"]
-        .builder(spark, sf_dir)
-        .count()
-    )
+def test_simblocked_jaccard_nondegenerate(registry_pass):
+    n = len(registry_pass.built("dedup_ngram_jaccard_simblocked").rows)
     assert n > 0
 
 
-def test_ngram_jaccard_multiprobe_observable(spark, sf_dir):
+def test_ngram_jaccard_multiprobe_observable(spark, sf_dir, registry_pass):
     """Round-5 re-block: the base query's 1-bit multiprobe must be
     doing real work — it finds pairs whose top-8 simhash prefixes
     differ (by exactly one bit), which exact-prefix blocking would
     miss. At sf0.01: 44 pairs total, 33 of them cross-prefix."""
     from mrs_mapreduce_spark.llm.dedup import dedup_simhash
-    from mrs_mapreduce_spark.registry import load_all
 
-    pairs = (
-        load_all()["dedup_ngram_jaccard"].builder(spark, sf_dir).collect()
-    )
+    pairs = registry_pass.built("dedup_ngram_jaccard").rows
     assert len(pairs) > 0
     blk = {
         r.doc_id: r.simhash // 256
@@ -434,18 +421,16 @@ def test_no_query_returns_zero_rows(spark):
     assert not empty, f"zero-row / broken declared queries: {empty}"
 
 
-def test_recall_witness_bounds_and_exact_side(spark, sf_dir):
+def test_recall_witness_bounds_and_exact_side(registry_pass):
     """The witness is only a witness if its numbers are structurally
     honest: every query row reports n_exact == 5 (ground truth is the
     full top-5, never truncated by the approx side's misses), n_hit in
     [0, 5], and recall == n_hit / 5 exactly. A LEFT-join orientation
     bug (approx LEFT exact) would silently cap n_exact at the approx
     candidate count and inflate recall — this pins the denominator."""
-    from mrs_mapreduce_spark.registry import load_all
 
-    reg = load_all()
     for name in ("similarity_recall_witness", "similarity_recall_ivf"):
-        rows = reg[name].builder(spark, sf_dir).collect()
+        rows = registry_pass.built(name).rows
         assert len(rows) == 10, name  # one row per query, misses included
         for r in rows:
             assert r.n_exact == 5, (name, r)
@@ -483,15 +468,14 @@ def test_cli_surface(spark, sf_dir, capsys):
         assert main(["--query", rows_only, "--oracle"]) == 1
 
 
-def test_table_diff_counts_are_exactly_the_synthetic_deltas(spark, sf_dir):
+def test_table_diff_counts_are_exactly_the_synthetic_deltas(spark, sf_dir, registry_pass):
     """B's construction pins every class count: k%7 deleted+reinserted,
     k%5 (and not %7) repriced, the rest byte-identical."""
     from mrs_mapreduce_spark.catalog import table
-    from mrs_mapreduce_spark.registry import load_all
 
     rows = {
         r.change_type: r
-        for r in load_all()["table_diff"].builder(spark, sf_dir).collect()
+        for r in registry_pass.built("table_diff").rows
     }
     n = table(spark, sf_dir, "orders").count()
     dele, ins = rows["deleted"].n, rows["inserted"].n
@@ -501,11 +485,10 @@ def test_table_diff_counts_are_exactly_the_synthetic_deltas(spark, sf_dir):
     assert rows["inserted"].min_key >= 10000000  # shifted key space
 
 
-def test_kanonymity_audit_accounts_for_every_row(spark, sf_dir):
+def test_kanonymity_audit_accounts_for_every_row(spark, sf_dir, registry_pass):
     from mrs_mapreduce_spark.catalog import table
-    from mrs_mapreduce_spark.registry import load_all
 
-    r = load_all()["scan_kanonymity"].builder(spark, sf_dir).collect()[0]
+    r = registry_pass.built("scan_kanonymity").rows[0]
     assert r.n_rows == table(spark, sf_dir, "customer").count()
     assert 0 <= r.n_violating <= r.n_groups
     assert r.n_rows_at_risk <= r.n_rows

@@ -60,11 +60,9 @@ def test_stream_batch_twin_equivalence(spark, sf_dir):
     assert streamed == batch
 
 
-def test_stream_stream_interval_join_matches_batch(spark, sf_dir):
+def test_stream_stream_interval_join_matches_batch(spark, sf_dir, registry_pass):
     """A real two-stream watermarked interval join == the batch twin."""
     import tempfile as _tmp
-
-    from mrs_mapreduce_spark.registry import load_all
 
     from mrs_mapreduce_spark.streaming.source import events_stream
 
@@ -114,9 +112,7 @@ def test_stream_stream_interval_join_matches_batch(spark, sf_dir):
     }
     batch = {
         (r.purchase_id, r.signup_id)
-        for r in load_all()["join_interval_events"]
-        .builder(spark, sf_dir)
-        .collect()
+        for r in registry_pass.built("join_interval_events").rows
     }
     assert streamed == batch
 
