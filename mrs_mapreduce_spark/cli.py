@@ -90,7 +90,8 @@ def main(argv: list[str] | None = None) -> int:
         oracle = registry[args.query].oracle
         if oracle is None:
             print(
-                f"{args.query} has no SQL oracle (rows-only check)",
+                f"{args.query} has no SQL oracle; the oracle check fails "
+                "a query without one",
                 file=sys.stderr,
             )
             return 1

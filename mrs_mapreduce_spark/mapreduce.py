@@ -26,6 +26,10 @@ Scale note: this layer exists for API parity and for workloads that are
 genuinely pair-at-a-time; everything relational in this engine uses
 DataFrames so Catalyst can optimize. RDD code paths serialize through
 pickle and should be reserved for logic DataFrames cannot express.
+
+Workers import this package to unpickle the layer's functions, which
+installs the worker hook in ``mrs_mapreduce_spark/__init__.py`` that
+keeps each task's setup from re-reading unchanged zip archives.
 """
 
 from __future__ import annotations

@@ -144,6 +144,80 @@ def test_parity_query_splits_follow_session(spark, sf_dir, monkeypatch):
     assert reduce_sum(spark, sf_dir).rdd.getNumPartitions() == 3
 
 
+def test_worker_skips_unchanged_zip_directories(spark):
+    """On a worker that has imported the package,
+    ``importlib.invalidate_caches()`` (which every task's setup calls)
+    re-reads no zip directory; the driver's ``zipimporter`` stays
+    unpatched."""
+    import zipimport
+
+    from mrs_mapreduce_spark.mapreduce import _ensure_code_shipped
+
+    def probe(_):
+        import importlib
+        import sys
+        import zipimport
+
+        import mrs_mapreduce_spark  # noqa: F401
+
+        reads, real = [], zipimport._read_directory
+        zipimport._read_directory = lambda a: reads.append(a) or real(a)
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = real
+        zips = sum(isinstance(f, zipimport.zipimporter)
+                   for f in sys.path_importer_cache.values())
+        yield len(reads), zips
+
+    sc = spark.sparkContext
+    _ensure_code_shipped(sc)
+    for _ in range(2):  # twice, so a reused worker is covered
+        out = sc.parallelize(range(2), 2).mapPartitions(probe).collect()
+        assert [reads for reads, _ in out] == [0, 0], out
+        assert all(zips >= 1 for _, zips in out), out
+    assert not hasattr(zipimport.zipimporter.invalidate_caches, "stat_checked")
+
+
+def test_stat_checked_zip_rereads_only_changed_archive(tmp_path, monkeypatch):
+    """The worker hook skips the directory read of an unchanged archive
+    and re-reads one rewritten in place, so a module added to it is
+    found."""
+    import importlib.util
+    import zipfile
+    import zipimport
+
+    from mrs_mapreduce_spark import _stat_checked
+
+    monkeypatch.setattr(
+        zipimport.zipimporter, "invalidate_caches",
+        _stat_checked(zipimport.zipimporter.invalidate_caches),
+    )
+    archive = tmp_path / "mods.zip"
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("a.py", "A = 1\n")
+    importer = zipimport.zipimporter(str(archive))
+    spec = importer.find_spec("a")
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    assert module.A == 1
+    importer.invalidate_caches()  # never stamped: reads and stamps
+
+    reads, real = [], zipimport._read_directory
+    monkeypatch.setattr(
+        zipimport, "_read_directory", lambda a: reads.append(a) or real(a)
+    )
+    importer.invalidate_caches()
+    assert reads == []
+    assert importer.find_spec("b") is None
+
+    with zipfile.ZipFile(archive, "a") as z:
+        z.writestr("b.py", "B = 2\n")
+    importer.invalidate_caches()
+    assert reads == [str(archive)]
+    assert importer.find_spec("b") is not None
+
+
 def test_monte_carlo_pi(spark):
     """The paper's benchmark family: deterministic seeded pi estimate."""
     job = Job(spark, default_splits=2)

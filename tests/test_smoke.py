@@ -438,7 +438,7 @@ def test_recall_witness_bounds_and_exact_side(registry_pass):
             assert abs(r.recall - r.n_hit / 5) < 1e-9, (name, r)
 
 
-def test_cli_surface(spark, sf_dir, capsys):
+def test_cli_surface(spark, sf_dir, capsys, monkeypatch):
     """A17: --list/--query/--oracle/--explain/--splits through the one
     CLI (python -m mrs_mapreduce_spark delegates to cli.main)."""
     from mrs_mapreduce_spark.cli import main
@@ -458,14 +458,16 @@ def test_cli_surface(spark, sf_dir, capsys):
     assert "Physical Plan" in capsys.readouterr().out
 
     assert main(["--query", "not_a_query"]) == 2
-    # rows-only queries have no oracle: exit 1, loud
-    from mrs_mapreduce_spark.registry import load_all
+    # a query without oracle SQL: exit 1, saying the oracle check fails it
+    from mrs_mapreduce_spark.registry import REGISTRY, Query
 
-    rows_only = next(
-        (n for n, q in sorted(load_all().items()) if q.oracle is None), None
-    )
-    if rows_only is not None:
-        assert main(["--query", rows_only, "--oracle"]) == 1
+    name = "_oracle_less_probe"
+    monkeypatch.setitem(REGISTRY, name, Query(
+        name, lambda spark, sf_dir: spark.range(1), None, "", ""
+    ))
+    assert main(["--query", name, "--oracle"]) == 1
+    err = capsys.readouterr().err
+    assert "has no SQL oracle; the oracle check fails" in err
 
 
 def test_table_diff_counts_are_exactly_the_synthetic_deltas(spark, sf_dir, registry_pass):
