@@ -15,10 +15,12 @@ Usage (``python -m mrs_mapreduce_spark`` is the same entry point)::
     python -m mrs_mapreduce_spark --query tpch_q6 --oracle   # DuckDB SQL
     python -m mrs_mapreduce_spark --query reduce_sum --splits 8
 
-``--splits`` maps to ``spark.sql.shuffle.partitions`` — the analogue of
-the reference's ``--mrs-reduce-tasks`` (reduce-task count == shuffle
-width). ``--oracle`` prints the query's DuckDB oracle SQL so a user can
-replay the correctness check themselves. The MockParallel DEBUG run
+``--splits`` sets both ``spark.sql.shuffle.partitions`` (DataFrame
+shuffles) and ``spark.default.parallelism`` (the parity layer's splits,
+which follow ``sc.defaultParallelism``) — the analogue of the
+reference's ``--mrs-reduce-tasks`` (reduce-task count == shuffle width).
+``--oracle`` prints the query's DuckDB oracle SQL so a user can replay
+the correctness check themselves. The MockParallel DEBUG run
 modes (A16) are programmatic switches, not master URLs:
 ``mockparallel.make_job("mock_parallel")`` (full task machinery,
 deterministic) and ``make_job("bypass")`` (generators inline, no
@@ -65,7 +67,8 @@ def build_parser() -> argparse.ArgumentParser:
         "--splits",
         type=int,
         default=None,
-        help="shuffle partition count (the reference's --mrs-reduce-tasks)",
+        help="shuffle and parity-layer split count "
+        "(the reference's --mrs-reduce-tasks)",
     )
     return parser
 
@@ -101,7 +104,10 @@ def main(argv: list[str] | None = None) -> int:
     from .session import get_session
 
     extra = (
-        {"spark.sql.shuffle.partitions": str(args.splits)}
+        {
+            "spark.sql.shuffle.partitions": str(args.splits),
+            "spark.default.parallelism": str(args.splits),
+        }
         if args.splits
         else None
     )

@@ -134,10 +134,13 @@ def _nearest(pairs: DataFrame) -> DataFrame:
 
     ``pairs`` holds one (vec_id, a, cid, cv) row per candidate centroid.
     The argmin is a lexicographic struct-min: (dist, cid) is unique per
-    point, so min(struct) is the (dist asc, cid asc) winner, and it runs
-    as a partial->final hash aggregation — when the centroids arrive by
-    broadcast the fan-out collapses map-side and the only shuffle
-    carries one row per point, never a sort.
+    point, so min(struct) is the (dist asc, cid asc) winner. With the
+    centroids broadcast, the fan-out collapses map-side and the only
+    shuffle carries one row per point. It is a sort aggregation, not a
+    hash one: ``min(struct)`` and ``first(array)`` have no fixed-width
+    buffer, so at ``local[2]`` the plan is SortAggregate <- Sort <-
+    Exchange hashpartitioning(vec_id) <- SortAggregate <- Sort <-
+    BroadcastNestedLoopJoin.
     """
     dist = sq_dist("a", "cv").alias("dist")
     return (

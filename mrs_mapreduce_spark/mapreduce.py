@@ -14,8 +14,9 @@ reference mount was empty, SURVEY.md §0):
 
 Deliberate departures, documented:
 
-* Keys are sorted/grouped by their Python value (must be orderable), not by
-  serialized bytes as in ``mrs/tasks.py::ReduceTask``.
+* Keys are grouped by Python equality/hash and ordered by their Python
+  value (so they must be hashable and orderable), not by serialized bytes
+  as in ``mrs/tasks.py::ReduceTask``.
 * ``wait`` is genuinely asynchronous (A13): datasets materialize
   concurrently on a daemon thread pool and ``wait(timeout=...)`` returns
   the ready subset, like the reference's; Spark's scheduler interleaves
@@ -34,6 +35,7 @@ keeps each task's setup from re-reading unchanged zip archives.
 
 from __future__ import annotations
 
+import collections
 import hashlib
 import itertools
 import random
@@ -153,11 +155,20 @@ class Dataset:
 
 
 def _sorted_groups(items: Iterable[tuple]) -> Iterator[tuple]:
-    """Sort a partition by key and group equal-key runs (ReduceTask prep)."""
-    for key, pairs in itertools.groupby(
-        sorted(items, key=lambda kv: kv[0]), key=lambda kv: kv[0]
-    ):
-        yield key, (v for _, v in pairs)
+    """Group a partition by key, keys ascending (ReduceTask prep).
+
+    One dict pass collects each key's values in arrival order, then only
+    the distinct keys are sorted: O(n) hashing plus O(d log d)
+    comparisons instead of sorting all n pairs. Equal keys (``1``,
+    ``1.0``, ``True``) merge under the first-seen key object, as a stable
+    sort plus ``itertools.groupby`` would give. Keys must be hashable and
+    orderable.
+    """
+    groups = collections.defaultdict(list)
+    for key, value in items:
+        groups[key].append(value)
+    for key in sorted(groups):
+        yield key, iter(groups[key])
 
 
 def _ensure_code_shipped(sc) -> None:
@@ -248,7 +259,7 @@ class Job:
         parter: Callable = hash_partition,
         outdir: str | None = None,
     ) -> Dataset:
-        """Shuffle → sort by key → group → user reduce (A8/A9/A10).
+        """Shuffle → group by key, keys ascending → user reduce (A8/A9/A10).
 
         ``outdir`` mirrors the reference's TextWriter sink: one
         ``key<TAB>value`` text part-file per split (A4).
@@ -281,7 +292,7 @@ class Job:
     ) -> Dataset:
         """Secondary sort: reduce over VALUE-ORDERED groups (A9, scale-fixed).
 
-        ``reduce_data`` (like ``mrs/tasks.py::ReduceTask``) sorts each
+        ``reduce_data`` (like ``mrs/tasks.py::ReduceTask``) groups each
         partition in task memory — the scale ceiling the PyHPC'12 paper
         acknowledges: one partition's pairs must fit RAM. This variant is
         the classic MapReduce secondary-sort pattern done the Spark way:
@@ -459,7 +470,8 @@ class IterativeMR:
     scale="""
     Runs the reference's actual pipeline: generator map, map-side combine
     (shrinks the shuffle from one pair per word occurrence to one per
-    distinct word per partition), hash shuffle, sort-group reduce. Splits
+    distinct word per partition), hash shuffle, hash-group reduce (each
+    combine and reduce task sorts only its distinct keys). Splits
     follow the session (``sc.defaultParallelism``), so the task count
     tracks its slots. The DataFrame twin of this plan (explode+groupBy)
     is what production code should use — see bench.py for the measured

@@ -117,8 +117,8 @@ def _read_lines(path: str) -> list[str]:
 
 
 def _combine_pass(pairs: list[tuple], fn: Callable) -> list[tuple]:
-    """One sorted-group combine/reduce pass (shared by both debug modes;
-    was pasted 4x across map_data/reduce_data in the two classes)."""
+    """One grouped combine/reduce pass, keys ascending (shared by both
+    debug modes and by map_data/reduce_data in each)."""
     return [(k, v) for k, vals in _sorted_groups(pairs) for v in fn(k, vals)]
 
 

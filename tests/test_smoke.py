@@ -457,6 +457,23 @@ def test_cli_surface(spark, sf_dir, capsys, monkeypatch):
                  "--explain"]) == 0
     assert "Physical Plan" in capsys.readouterr().out
 
+    # --splits sets the SQL shuffle width and the parity layer's splits
+    # (Job follows sc.defaultParallelism) alike
+    import mrs_mapreduce_spark.session as session
+
+    confs = {}
+
+    def capture(app_name, master=None, extra=None):
+        confs.update(extra or {})
+        return spark
+
+    monkeypatch.setattr(session, "get_session", capture)
+    assert main(["--query", "reduce_sum", "--sf-dir", sf_dir,
+                 "--splits", "3", "--show", "1"]) == 0
+    assert "cnt" in capsys.readouterr().out
+    assert confs["spark.sql.shuffle.partitions"] == "3"
+    assert confs["spark.default.parallelism"] == "3"
+
     assert main(["--query", "not_a_query"]) == 2
     # a query without oracle SQL: exit 1, saying the oracle check fails it
     from mrs_mapreduce_spark.registry import REGISTRY, Query
