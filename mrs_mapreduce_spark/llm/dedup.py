@@ -1067,7 +1067,15 @@ def _rollup_labels(labels: DataFrame) -> DataFrame:
 
 @register(
     "dedup_components",
-    oracle=None,  # set below: needs the pairs CTE assembled at import time
+    oracle=f"""
+    {_reach_ctes()}
+    SELECT lbl AS component,
+           count(*) AS n_docs,
+           string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id)
+               AS members
+    FROM comp
+    GROUP BY lbl
+    """,
     survey="D2/A12 (duplicate clusters: connected components over pair graph)",
     scale="""
     Turns pairwise near-dups into canonical clusters: iterative min-label
@@ -1108,26 +1116,20 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _rollup_labels(component_labels(spark, sf_dir))
 
 
-REGISTRY["dedup_components"] = REGISTRY["dedup_components"].__class__(
-    name="dedup_components",
-    builder=REGISTRY["dedup_components"].builder,
-    oracle=f"""
-    {_reach_ctes()}
-    SELECT lbl AS component,
-           count(*) AS n_docs,
-           string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id)
-               AS members
-    FROM comp
-    GROUP BY lbl
-    """,
-    survey=REGISTRY["dedup_components"].survey,
-    scale=REGISTRY["dedup_components"].scale,
-)
-
-
 @register(
     "dedup_soft_weights",
-    oracle=None,  # set below: needs the pairs CTE assembled at import time
+    oracle=f"""
+    {_reach_ctes()},
+    weighted AS (
+        SELECT d.doc_id, COALESCE(c.lbl, d.doc_id) AS component
+        FROM documents d LEFT JOIN comp c USING (doc_id)),
+    sizes AS (
+        SELECT component, CAST(count(*) AS BIGINT) AS cluster_size
+        FROM weighted GROUP BY component)
+    SELECT w.doc_id, w.component, s.cluster_size,
+           round(1.0 / s.cluster_size, 6) AS weight
+    FROM weighted w JOIN sizes s USING (component)
+    """,
     survey="D2 extension (soft dedup: RefinedWeb/FineWeb-style duplicate "
     "down-weighting — every copy kept at sampling weight 1/cluster-size "
     "instead of hard-dropped)",
@@ -1187,26 +1189,6 @@ def dedup_soft_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-
-
-REGISTRY["dedup_soft_weights"] = REGISTRY["dedup_soft_weights"].__class__(
-    name="dedup_soft_weights",
-    builder=REGISTRY["dedup_soft_weights"].builder,
-    oracle=f"""
-    {_reach_ctes()},
-    weighted AS (
-        SELECT d.doc_id, COALESCE(c.lbl, d.doc_id) AS component
-        FROM documents d LEFT JOIN comp c USING (doc_id)),
-    sizes AS (
-        SELECT component, CAST(count(*) AS BIGINT) AS cluster_size
-        FROM weighted GROUP BY component)
-    SELECT w.doc_id, w.component, s.cluster_size,
-           round(1.0 / s.cluster_size, 6) AS weight
-    FROM weighted w JOIN sizes s USING (component)
-    """,
-    survey=REGISTRY["dedup_soft_weights"].survey,
-    scale=REGISTRY["dedup_soft_weights"].scale,
-)
 
 
 @register(
@@ -1529,7 +1511,7 @@ def sink_lsh_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sink_bucketed_hsets",
-    oracle=None,  # set below: reuses dedup_minhash_pairs' exact oracle
+    oracle=REGISTRY["dedup_minhash_pairs"].oracle,
     survey="D2/§4 extension (the PERSISTED co-located shingle-set "
     "layout: per-rep (doc_id, hs) set arrays written bucketed on "
     "doc_id, so every doc-keyed verify join reads pre-partitioned "
@@ -1581,15 +1563,6 @@ def sink_bucketed_hsets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rp = _lsh_pairs_sets(spark.table("q_bucket_hsets"))
     return _expand_families(rp, fam, eligible=_shingled(reps))
-
-
-REGISTRY["sink_bucketed_hsets"] = REGISTRY["sink_bucketed_hsets"].__class__(
-    name="sink_bucketed_hsets",
-    builder=REGISTRY["sink_bucketed_hsets"].builder,
-    oracle=REGISTRY["dedup_minhash_pairs"].oracle,
-    survey=REGISTRY["sink_bucketed_hsets"].survey,
-    scale=REGISTRY["sink_bucketed_hsets"].scale,
-)
 
 
 @register(
@@ -1769,28 +1742,19 @@ def star_components(
             .distinct()
             .localCheckpoint(eager=True)  # bounded lineage per round
         )
-        # converged when the edge set is star-shaped and stable
-        changed = (
-            small.alias("n")
-            .join(
-                edges.alias("o"),
-                (F.col("n.u") == F.col("o.u"))
-                & (F.col("n.v") == F.col("o.v")),
-                "left_anti",
-            )
+        # converged when the edge set is star-shaped and stable. Both
+        # relations are distinct edge sets, so an edge that occurs once
+        # in their union is in exactly one of them: one action per round
+        stable = (
+            small.unionByName(edges)
+            .groupBy("u", "v")
             .count()
-            + edges.alias("o")
-            .join(
-                small.alias("n"),
-                (F.col("n.u") == F.col("o.u"))
-                & (F.col("n.v") == F.col("o.v")),
-                "left_anti",
-            )
-            .count()
+            .filter(F.col("count") == 1)
+            .isEmpty()
         )
         edges.unpersist()
         edges = small
-        if changed == 0:
+        if stable:
             labels = (
                 edges.select(F.col("u").alias("doc_id"),
                              F.col("v").alias("lbl"))
@@ -1811,7 +1775,7 @@ def star_components(
 
 @register(
     "dedup_components_star",
-    oracle=None,  # set below: reuses dedup_components' recursive-CTE oracle
+    oracle=REGISTRY["dedup_components"].oracle,
     survey="D2/A12 extension (connected components via alternating "
     "large-star/small-star — O(log^2 n) rounds)",
     scale="""
@@ -1848,15 +1812,6 @@ def dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _rollup_labels(
         component_labels(spark, sf_dir, label_fn=star_components)
     )
-
-
-REGISTRY["dedup_components_star"] = REGISTRY["dedup_components_star"].__class__(
-    name="dedup_components_star",
-    builder=REGISTRY["dedup_components_star"].builder,
-    oracle=REGISTRY["dedup_components"].oracle,
-    survey=REGISTRY["dedup_components_star"].survey,
-    scale=REGISTRY["dedup_components_star"].scale,
-)
 
 
 @register(
@@ -1921,40 +1876,14 @@ def substring_dups(docs: DataFrame, digits: int | None = None) -> DataFrame:
     )
 
 
-@register(
-    "dedup_minhash_capped",
-    oracle=None,  # set below: derived from dedup_minhash_pairs' oracle
-    survey="D2 (LSH bucket-size cap — the boilerplate guard "
-    "dedup_minhash_pairs' scale note prescribes, implemented)",
-    scale="""
-    Identical LSH pipeline with the quadratic-stage bound made real:
-    buckets holding more than B=2 members are dropped BEFORE the
-    candidate self-join (one window count over the checkpointed bands
-    relation — no extra shuffle beyond the bucket key it already
-    needs). At 100 TB a boilerplate template (site chrome, license
-    headers) lands thousands of docs in one bucket; capping turns that
-    bucket's quadratic pair explosion into zero work, at the cost of
-    missing pairs whose ONLY collision is a mega-bucket — acceptable
-    because such docs are boilerplate by construction, and true
-    near-dups still meet in their other 3 bands. B=2 is fixture-
-    calibrated to be observable (3 buckets of size 3 exist at sf0.01;
-    smoke asserts capped ⊂ uncapped strictly).
-    """,
-)
-def dedup_minhash_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH near-dup pairs with over-full buckets dropped (cap=2)."""
-    return _minhash_pairs(spark, sf_dir, cap=2)
-
-
 def _capped_oracle() -> str:
     """Derive the capped oracle from dedup_minhash_pairs' SQL, loudly.
 
     A silent .replace no-op (if the base oracle is ever reworded) would
     leave a wrong — uncapped — oracle that only surfaces later as a
-    confusing hash mismatch (ADVICE r3); RAISE if a patch fails to land
-    (explicit raise, not assert: the guard must survive ``python -O``,
-    ADVICE r4 — a stripped assert would resurrect exactly the silent
-    wrong-oracle failure this function exists to prevent).
+    confusing hash mismatch; RAISE if a patch fails to land (explicit
+    raise, not assert: the guard must survive ``python -O``, where a
+    stripped assert would bring back exactly that silent wrong oracle).
     """
     base = REGISTRY["dedup_minhash_pairs"].oracle
     step1 = base.replace(
@@ -1978,13 +1907,29 @@ def _capped_oracle() -> str:
     return step2
 
 
-REGISTRY["dedup_minhash_capped"] = REGISTRY["dedup_minhash_capped"].__class__(
-    name="dedup_minhash_capped",
-    builder=REGISTRY["dedup_minhash_capped"].builder,
+@register(
+    "dedup_minhash_capped",
     oracle=_capped_oracle(),
-    survey=REGISTRY["dedup_minhash_capped"].survey,
-    scale=REGISTRY["dedup_minhash_capped"].scale,
+    survey="D2 (LSH bucket-size cap — the boilerplate guard "
+    "dedup_minhash_pairs' scale note prescribes, implemented)",
+    scale="""
+    Identical LSH pipeline with the quadratic-stage bound made real:
+    buckets holding more than B=2 members are dropped BEFORE the
+    candidate self-join (one window count over the checkpointed bands
+    relation — no extra shuffle beyond the bucket key it already
+    needs). At 100 TB a boilerplate template (site chrome, license
+    headers) lands thousands of docs in one bucket; capping turns that
+    bucket's quadratic pair explosion into zero work, at the cost of
+    missing pairs whose ONLY collision is a mega-bucket — acceptable
+    because such docs are boilerplate by construction, and true
+    near-dups still meet in their other 3 bands. B=2 is fixture-
+    calibrated to be observable (3 buckets of size 3 exist at sf0.01;
+    smoke asserts capped ⊂ uncapped strictly).
+    """,
 )
+def dedup_minhash_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LSH near-dup pairs with over-full buckets dropped (cap=2)."""
+    return _minhash_pairs(spark, sf_dir, cap=2)
 
 
 @register(

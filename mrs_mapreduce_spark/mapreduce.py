@@ -16,7 +16,15 @@ Deliberate departures, documented:
 
 * Keys are grouped by Python equality/hash and ordered by their Python
   value (so they must be hashable and orderable), not by serialized bytes
-  as in ``mrs/tasks.py::ReduceTask``.
+  as in ``mrs/tasks.py::ReduceTask``. Equal keys of different types
+  (``1`` and ``1.0``) merge only when the parter puts them in one
+  bucket: ``hash_partition`` hashes ``repr``, so at ``splits=3`` it
+  sends ``1`` to bucket 1 and ``1.0`` to bucket 2, and they stay two
+  keys.
+* The consuming ``reduce_data`` / ``reducemap_data`` /
+  ``reduce_data_sorted`` declares the shuffle through its ``splits`` and
+  ``parter``. ``map_data`` accepts both only for Mrs signature
+  compatibility and ignores them.
 * ``wait`` is genuinely asynchronous (A13): datasets materialize
   concurrently on a daemon thread pool and ``wait(timeout=...)`` returns
   the ready subset, like the reference's; Spark's scheduler interleaves
@@ -36,8 +44,10 @@ keeps each task's setup from re-reading unchanged zip archives.
 from __future__ import annotations
 
 import collections
+import functools
 import hashlib
 import itertools
+import operator
 import random
 import re
 import shutil
@@ -56,7 +66,7 @@ from .registry import register
 #: The one tokenizer definition the wordcount-family oracles pin.
 #: Python ``str.split()`` splits on ALL Unicode whitespace (NBSP, U+2028,
 #: U+0085, ...) while the oracles' DuckDB regex splits only the ASCII
-#: class — a document containing NBSP would diverge (r12 advice, probed:
+#: class — a document containing NBSP would diverge (probed:
 #: ``'a\\xa0b'.split()`` → 2 tokens, the regex → 1). Module-level so
 #: pickling ships a by-name reference to workers.
 _ASCII_WS = re.compile(r"[ \t\n\r\f\v]+")
@@ -171,6 +181,59 @@ def _sorted_groups(items: Iterable[tuple]) -> Iterator[tuple]:
         yield key, iter(groups[key])
 
 
+# ---------------------------------------------------------------------------
+# Task bodies: the one local build every run mode runs (Spark ``Job``
+# per RDD partition, ``MockParallelJob`` per split or bucket,
+# ``BypassJob`` once over its single list). Only how pairs are split
+# and shuffled differs between the modes. Module-level, so workers
+# resolve them by reference from the shipped package zip.
+# ---------------------------------------------------------------------------
+
+
+def _map_task(
+    mapper: Callable, combiner: Callable | None, items: Iterable[tuple]
+) -> Iterator[tuple]:
+    """Map task: the user's map over each pair, then the optional
+    map-side combine over this task's own output (A5/A6)."""
+    out = (pair for key, value in items for pair in mapper(key, value))
+    return out if combiner is None else _reduce_task(combiner, out)
+
+
+def _reduce_task(reducer: Callable, items: Iterable[tuple]) -> Iterator[tuple]:
+    """Reduce task: group by key, keys ascending, and re-attach the key
+    to each value the reducer yields (A9/A10)."""
+    return (
+        (key, value)
+        for key, values in _sorted_groups(items)
+        for value in reducer(key, values)
+    )
+
+
+def _reducemap_task(
+    reducer: Callable, mapper: Callable, items: Iterable[tuple]
+) -> Iterator[tuple]:
+    """Reducemap task: the reduce output feeds the mapper in the same
+    task, with no dataset in between (A11)."""
+    return _map_task(mapper, None, _reduce_task(reducer, items))
+
+
+def _value_sorted_task(
+    reducer: Callable, ordered: Iterable[tuple]
+) -> Iterator[tuple]:
+    """Secondary-sort reduce task over pairs already sorted by
+    ``(key, value)``: equal keys are contiguous, so each group streams
+    to the reducer with its values ascending, never buffered (A9)."""
+    for key, group in itertools.groupby(ordered, key=operator.itemgetter(0)):
+        for value in reducer(key, (v for _, v in group)):
+            yield key, value
+
+
+def _text_line(pair: tuple) -> str:
+    """The text sink's ``key<TAB>value`` line (A4)."""
+    key, value = pair
+    return f"{key}\t{value}"
+
+
 def _ensure_code_shipped(sc) -> None:
     """Ship this package to executors (mrs same-script-everywhere parity).
 
@@ -233,22 +296,19 @@ class Job:
         parter: Callable = hash_partition,
         combiner: Callable | None = None,
     ) -> Dataset:
-        """Apply a generator map; optionally combine map output per task (A5/A6)."""
-        out = dataset.rdd.flatMap(lambda kv: mapper(kv[0], kv[1]))
-        if combiner is not None:
-            out = out.mapPartitions(
-                lambda items: (
-                    (k, v)
-                    for k, vals in _sorted_groups(items)
-                    for v in combiner(k, vals)
-                )
-            )
-        ds = Dataset(out, splits or self.default_splits)
-        ds.parter = parter
-        return ds
+        """Apply a generator map; optionally combine map output per task (A5/A6).
+
+        ``splits`` only sets the dataset's ``splits`` attribute and
+        ``parter`` is ignored: the consuming reduce shuffles.
+        """
+        out = dataset.rdd.mapPartitions(
+            functools.partial(_map_task, mapper, combiner)
+        )
+        return Dataset(out, splits or self.default_splits)
 
     def _shuffle(self, dataset: Dataset, splits: int, parter: Callable) -> RDD:
-        """Partition by the dataset's parter — the reference's bucket shuffle."""
+        """Partition by the consuming operation's parter — the reference's
+        bucket shuffle."""
         return dataset.rdd.partitionBy(splits, lambda key: parter(key, splits))
 
     def reduce_data(
@@ -267,19 +327,14 @@ class Job:
         n = splits or self.default_splits
         shuffled = self._shuffle(dataset, n, parter)
         reduced = shuffled.mapPartitions(
-            lambda items: (
-                (k, v)
-                for k, vals in _sorted_groups(items)
-                for v in reducer(k, vals)
-            ),
-            preservesPartitioning=True,
+            functools.partial(_reduce_task, reducer), preservesPartitioning=True
         )
         ds = Dataset(reduced, n)
         if outdir is not None:
             # the save fills the cache, so a later wait or collect reads
             # it instead of running the reducer again
             reduced.cache()
-            reduced.map(lambda kv: f"{kv[0]}\t{kv[1]}").saveAsTextFile(outdir)
+            reduced.map(_text_line).saveAsTextFile(outdir)
             ds._materialized = True
         return ds
 
@@ -308,16 +363,8 @@ class Job:
             numPartitions=n,
             partitionFunc=lambda ck: parter(ck[0], n),
         )
-
-        def run(items):
-            for key, group in itertools.groupby(
-                items, key=lambda cv: cv[0][0]
-            ):
-                vals = (ck[1] for ck, _ in group)
-                for out in reducer(key, vals):
-                    yield key, out
-
-        return Dataset(ordered.mapPartitions(run), n)
+        task = functools.partial(_value_sorted_task, reducer)
+        return Dataset(ordered.keys().mapPartitions(task), n)
 
     def reducemap_data(
         self,
@@ -329,19 +376,14 @@ class Job:
     ) -> Dataset:
         """Fused reduce→map in one task, no intermediate dataset (A11).
 
-        In Spark the fusion is structural: the mapper chains onto the
-        reducer inside the same ``mapPartitions`` closure, so both run in
-        one stage exactly like ``mrs/tasks.py::ReduceMapTask``.
+        The fusion is structural: the mapper chains onto the reducer
+        inside one task body (``_reducemap_task``), so both run in one
+        stage exactly like ``mrs/tasks.py::ReduceMapTask``.
         """
         n = splits or self.default_splits
         shuffled = self._shuffle(dataset, n, parter)
-
-        def run(items):
-            for k, vals in _sorted_groups(items):
-                for v in reducer(k, vals):
-                    yield from mapper(k, v)
-
-        return Dataset(shuffled.mapPartitions(run), n)
+        task = functools.partial(_reducemap_task, reducer, mapper)
+        return Dataset(shuffled.mapPartitions(task), n)
 
     # -- control ------------------------------------------------------------
 
@@ -551,7 +593,7 @@ def mr_map_only(spark: SparkSession, sf_dir: str) -> DataFrame:
         ds0,
         # ascii_words: NULL document yields no words, and the split is
         # the oracle's exact ASCII regex class (not str.split(), which
-        # would also break on NBSP/U+2028 — r12 advice)
+        # would also break on NBSP/U+2028)
         lambda doc_id, text: (
             (doc_id, w)
             for w in ascii_words(text)

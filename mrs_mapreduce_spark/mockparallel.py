@@ -9,19 +9,23 @@ reduce groups — in one process, one task at a time, in a deterministic
 order, which is what makes it the debug mode: a failing job replays
 identically under a debugger with no scheduler nondeterminism.
 
-The r7 verdict named this the one genuinely absent reference behavior
-(Spark ``local[1]`` approximates the parallelism but still schedules
-through the DAG scheduler with its own thread, serialization and retry
-machinery). :class:`MockParallelJob` is the faithful counterpart: the
+Spark ``local[1]`` only approximates this: it still schedules through
+the DAG scheduler with its own thread, serialization and retry
+machinery. :class:`MockParallelJob` is the faithful counterpart: the
 SAME user program (a :class:`~.mapreduce.MapReduce` subclass, or an
 :class:`~.mapreduce.IterativeMR` producer/consumer program) runs through
 the same ``Job`` API surface against plain Python lists — no JVM, no
-pickling, no threads — with every framework step (generator map,
-map-side combine over sorted per-split groups, parter-bucketed shuffle,
-key-sorted groups, secondary value sort, reducemap fusion, text sink)
-executed for real. Task order is pinned: upstream datasets materialize
-before their consumers, and within a dataset tasks run in split/bucket
-index order.
+pickling, no threads. Task order is pinned: upstream datasets
+materialize before their consumers, and within a dataset tasks run in
+split/bucket index order.
+
+All three run modes share the task bodies in :mod:`.mapreduce`
+(``_map_task``, ``_reduce_task``, ``_reducemap_task``,
+``_value_sorted_task``, ``_text_line``), so the debug modes replay the
+code a Spark task runs. They differ only in how pairs are split and
+shuffled: RDD partitions and Spark's shuffle (``Job``), contiguous
+splits and parter buckets (``MockParallelJob``), or one list
+(``BypassJob``).
 
 Equality with the Spark-backed :class:`~.mapreduce.Job` is pinned by
 tests (``tests/test_mapreduce.py::TestMockParallelParity``) for
@@ -37,18 +41,25 @@ in one Python heap; production runs use :class:`~.mapreduce.Job`
 
 from __future__ import annotations
 
-import itertools
+import functools
 from collections.abc import Callable, Iterable
 from pathlib import Path
 
-from .mapreduce import _sorted_groups, hash_partition
+from .mapreduce import (
+    _map_task,
+    _reduce_task,
+    _reducemap_task,
+    _text_line,
+    _value_sorted_task,
+    hash_partition,
+)
 
 
 class MockDataset:
     """Materialized-on-wait pair collection — MockParallel's dataset.
 
     API parity with :class:`~.mapreduce.Dataset`: ``collect``, ``close``,
-    ``splits``, ``parter``. ``_tasks`` is the real task list — one
+    ``splits``. ``_tasks`` is the real task list — one
     zero-arg callable per output split/bucket, run in index order.
     """
 
@@ -58,12 +69,6 @@ class MockDataset:
         self._partitions: list[list] | None = None
         self._tasks_done = 0
         self._completed = False  # once-materialized: progress stays 1.0
-        # parity of SURFACE with mapreduce.Dataset: the parter declared
-        # at map_data is recorded but — exactly like the Spark twin
-        # (mapreduce.py:213) — never consulted downstream; partitioning
-        # is declared at the CONSUMING reduce via its parter parameter
-        # (r10 review: documented so nobody relies on it taking effect)
-        self.parter = hash_partition
 
     def _materialize(self) -> list[list]:
         if self._partitions is None:
@@ -88,8 +93,8 @@ def _chunk(pairs: list, splits: int) -> list[list]:
     """Contiguous split like ``SparkContext.parallelize``'s slicing.
 
     splits <= 0 raises exactly like Spark's parallelize ("Positive
-    number of slices required") — the old silent range(0) produced an
-    EMPTY dataset from non-empty input in the parity mode (r10 review).
+    number of slices required") rather than returning an EMPTY dataset
+    from non-empty input.
     """
     if splits <= 0:
         raise ValueError(f"Positive number of splits required, got {splits}")
@@ -100,7 +105,7 @@ def _chunk(pairs: list, splits: int) -> list[list]:
 
 
 def _read_lines(path: str) -> list[str]:
-    """File lines with Spark-textFile parity (r10 review).
+    """File lines with Spark-textFile parity.
 
     Hadoop's LineRecordReader splits ONLY on \n / \r\n and decodes
     UTF-8 regardless of locale; Python's splitlines() additionally
@@ -116,21 +121,16 @@ def _read_lines(path: str) -> list[str]:
     return lines
 
 
-def _combine_pass(pairs: list[tuple], fn: Callable) -> list[tuple]:
-    """One grouped combine/reduce pass, keys ascending (shared by both
-    debug modes and by map_data/reduce_data in each)."""
-    return [(k, v) for k, vals in _sorted_groups(pairs) for v in fn(k, vals)]
-
-
-def _value_sorted_reduce(pairs: list[tuple], reducer: Callable) -> list[tuple]:
-    """Secondary-sort reduce: keys grouped contiguously, values ascending
-    (shared by MockParallelJob.reduce_data_sorted and BypassJob's twin)."""
-    ordered = sorted(pairs)
-    out = []
-    for key, group in itertools.groupby(ordered, key=lambda kv: kv[0]):
-        for v in reducer(key, (v for _, v in group)):
-            out.append((key, v))
-    return out
+def _write_parts(outdir: str, parts: Iterable[list[tuple]]) -> None:
+    """The in-process text sink: one ``part-NNNNN`` file of
+    ``key<TAB>value`` lines per partition, into a directory that must
+    not exist yet (as Spark's ``saveAsTextFile`` requires)."""
+    out = Path(outdir)
+    out.mkdir(parents=True, exist_ok=False)
+    for i, part in enumerate(parts):
+        (out / f"part-{i:05d}").write_text(
+            "".join(_text_line(pair) + "\n" for pair in part)
+        )
 
 
 class MockParallelJob:
@@ -171,43 +171,34 @@ class MockParallelJob:
         parter: Callable = hash_partition,
         combiner: Callable | None = None,
     ) -> MockDataset:
-        def map_task(i: int) -> list[tuple]:
-            out = [
-                pair
-                for k, v in dataset._materialize()[i]
-                for pair in mapper(k, v)
-            ]
-            if combiner is not None:
-                out = _combine_pass(out, combiner)
-            return out
-
-        ds = MockDataset(
+        return MockDataset(
             splits or self.default_splits,
-            [lambda i=i: map_task(i) for i in range(len(dataset._tasks))],
+            [
+                lambda i=i: _map_task(mapper, combiner, dataset._materialize()[i])
+                for i in range(len(dataset._tasks))
+            ],
         )
-        ds.parter = parter
-        return ds
 
     def _bucketizer(
-        self, dataset: MockDataset, n: int, parter: Callable
-    ) -> Callable[[int], list[tuple]]:
-        """Lazy ONE-PASS shuffle: first bucket request materializes the
+        self, dataset: MockDataset, n: int, parter: Callable, task: Callable
+    ) -> MockDataset:
+        """Parter-bucketed shuffle into ``n`` buckets, then ``task`` once
+        per bucket, in bucket order. The first task materializes the
         upstream once and routes every pair to its bucket (upstream
-        split order preserved within each bucket). The old per-bucket
-        rescan evaluated parter n_buckets times per pair — O(n x pairs)
-        with an md5 per evaluation (r10 review)."""
-        state: dict[str, list[list[tuple]]] = {}
+        split order preserved within each bucket), so the parter runs
+        once per pair, not once per pair per bucket."""
+        shuffled: list[list[list[tuple]]] = []
 
-        def get(b: int) -> list[tuple]:
-            if not state:
+        def run(b: int) -> Iterable[tuple]:
+            if not shuffled:
                 buckets: list[list[tuple]] = [[] for _ in range(n)]
                 for part in dataset._materialize():
                     for k, v in part:
                         buckets[parter(k, n)].append((k, v))
-                state["buckets"] = buckets
-            return state["buckets"][b]
+                shuffled.append(buckets)
+            return task(shuffled[0][b])
 
-        return get
+        return MockDataset(n, [functools.partial(run, b) for b in range(n)])
 
     def reduce_data(
         self,
@@ -217,21 +208,11 @@ class MockParallelJob:
         parter: Callable = hash_partition,
         outdir: str | None = None,
     ) -> MockDataset:
-        n = splits or self.default_splits
-        bucket = self._bucketizer(dataset, n, parter)
-
-        def reduce_task(b: int) -> list[tuple]:
-            return _combine_pass(bucket(b), reducer)
-
-        ds = MockDataset(n, [lambda b=b: reduce_task(b) for b in range(n)])
+        task = functools.partial(_reduce_task, reducer)
+        ds = self._bucketizer(dataset, splits or self.default_splits, parter, task)
         if outdir is not None:
             # the Spark twin's saveAsTextFile is an eager action; match it
-            out = Path(outdir)
-            out.mkdir(parents=True, exist_ok=False)
-            for b, part in enumerate(ds._materialize()):
-                (out / f"part-{b:05d}").write_text(
-                    "".join(f"{k}\t{v}\n" for k, v in part)
-                )
+            _write_parts(outdir, ds._materialize())
         return ds
 
     def reduce_data_sorted(
@@ -241,14 +222,11 @@ class MockParallelJob:
         splits: int | None = None,
         parter: Callable = hash_partition,
     ) -> MockDataset:
-        n = splits or self.default_splits
-        bucket = self._bucketizer(dataset, n, parter)
-        return MockDataset(
-            n,
-            [
-                lambda b=b: _value_sorted_reduce(bucket(b), reducer)
-                for b in range(n)
-            ],
+        return self._bucketizer(
+            dataset,
+            splits or self.default_splits,
+            parter,
+            lambda items: _value_sorted_task(reducer, sorted(items)),
         )
 
     def reducemap_data(
@@ -259,18 +237,10 @@ class MockParallelJob:
         splits: int | None = None,
         parter: Callable = hash_partition,
     ) -> MockDataset:
-        n = splits or self.default_splits
-        bucket = self._bucketizer(dataset, n, parter)
-
-        def task(b: int) -> list[tuple]:
-            return [
-                pair
-                for k, vals in _sorted_groups(bucket(b))
-                for v in reducer(k, vals)
-                for pair in mapper(k, v)
-            ]
-
-        return MockDataset(n, [lambda b=b: task(b) for b in range(n)])
+        task = functools.partial(_reducemap_task, reducer, mapper)
+        return self._bucketizer(
+            dataset, splits or self.default_splits, parter, task
+        )
 
     # -- control ------------------------------------------------------------
 
@@ -282,7 +252,7 @@ class MockParallelJob:
     def progress(self, dataset: MockDataset) -> float:
         # _completed, not _partitions: a closed-then-polled dataset
         # reports 1.0 exactly like the Spark twin (whose _materialized
-        # flag survives close) instead of sticking at 0.99 (r10 review)
+        # flag survives close) instead of sticking at 0.99
         if dataset._completed or dataset._partitions is not None:
             return 1.0
         if not dataset._tasks:
@@ -302,7 +272,6 @@ class BypassDataset:
     def __init__(self, pairs: list[tuple]):
         self.pairs = list(pairs)
         self.splits = 1
-        self.parter = hash_partition
 
     def collect(self) -> list[tuple]:
         return list(self.pairs)
@@ -373,14 +342,11 @@ class BypassJob:
         parter: Callable = hash_partition,
         combiner: Callable | None = None,
     ) -> BypassDataset:
-        out = [pair for k, v in dataset.pairs for pair in mapper(k, v)]
-        if combiner is not None:
-            # one inline combine pass over the whole (sorted) output —
-            # the degenerate single-split case of the framework's
-            # map-side combine, output-equal because combiners are
-            # reduce-compatible by contract
-            out = _combine_pass(out, combiner)
-        return BypassDataset(out)
+        # one map task over the whole list, so the combiner runs once
+        # over all map output — the degenerate single-split case of the
+        # framework's map-side combine, output-equal because combiners
+        # are reduce-compatible by contract
+        return BypassDataset(_map_task(mapper, combiner, dataset.pairs))
 
     def reduce_data(
         self,
@@ -390,13 +356,9 @@ class BypassJob:
         parter: Callable = hash_partition,
         outdir: str | None = None,
     ) -> BypassDataset:
-        ds = BypassDataset(_combine_pass(dataset.pairs, reducer))
+        ds = BypassDataset(_reduce_task(reducer, dataset.pairs))
         if outdir is not None:
-            out = Path(outdir)
-            out.mkdir(parents=True, exist_ok=False)
-            (out / "part-00000").write_text(
-                "".join(f"{k}\t{v}\n" for k, v in ds.pairs)
-            )
+            _write_parts(outdir, [ds.pairs])
         return ds
 
     def reduce_data_sorted(
@@ -406,7 +368,7 @@ class BypassJob:
         splits: int | None = None,
         parter: Callable = hash_partition,
     ) -> BypassDataset:
-        return BypassDataset(_value_sorted_reduce(dataset.pairs, reducer))
+        return BypassDataset(_value_sorted_task(reducer, sorted(dataset.pairs)))
 
     def reducemap_data(
         self,
@@ -416,12 +378,7 @@ class BypassJob:
         splits: int | None = None,
         parter: Callable = hash_partition,
     ) -> BypassDataset:
-        return BypassDataset(
-            pair
-            for k, vals in _sorted_groups(dataset.pairs)
-            for v in reducer(k, vals)
-            for pair in mapper(k, v)
-        )
+        return BypassDataset(_reducemap_task(reducer, mapper, dataset.pairs))
 
     # -- control (trivial: everything already ran) ------------------------
 

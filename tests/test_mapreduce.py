@@ -572,17 +572,28 @@ class TestMockParallelParity:
         ]
 
     def test_reducemap_and_mod_parter_match_spark(self, spark):
+        # reducemap re-keys word counts by word length; the final reduce
+        # shuffles those integer keys with mod_partition, so key k lands
+        # in bucket k % 3 and the unsorted collect reads bucket by bucket
+        # (hash_partition would give 2, 1, 4, 5, 3, 6)
         program = WordCount()
         outs = []
         for job in self._modes(spark):
-            ds0 = job.local_data([(0, "aa ab ba aa bb ab")], splits=2)
-            ds1 = job.map_data(ds0, program.map, parter=mod_partition)
-            ds2 = job.reducemap_data(
-                ds1, program.reduce, lambda w, c: iter([(w[:1], c)])
+            ds0 = job.local_data(
+                [(0, "a bb a ccc dddd"), (1, "bb eeeee ffffff a")], splits=2
             )
-            ds3 = job.reduce_data(ds2, program.reduce)
-            outs.append(sorted(ds3.collect()))
-        assert outs[0] == outs[1] == outs[2] == [("a", 4), ("b", 2)]
+            ds1 = job.map_data(ds0, program.map)
+            ds2 = job.reducemap_data(
+                ds1, program.reduce, lambda w, c: iter([(len(w), c)])
+            )
+            ds3 = job.reduce_data(
+                ds2, program.reduce, splits=3, parter=mod_partition
+            )
+            outs.append(ds3.collect())
+        by_bucket = [(3, 1), (6, 1), (1, 3), (4, 1), (2, 2), (5, 1)]
+        assert outs[0] == outs[1] == by_bucket
+        # bypass runs one partition, so it agrees as a multiset
+        assert sorted(outs[2]) == sorted(by_bucket)
 
     def test_text_sink_matches_spark(self, spark, tmp_path):
         program = WordCount()
