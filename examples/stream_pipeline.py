@@ -14,8 +14,9 @@ this engine's building blocks:
   4. sink        — foreachBatch parquet snapshot per batch (complete
                    mode + overwrite: idempotent by construction)
 
-Drained with Trigger.AvailableNow so the bounded fixture gives a
-deterministic result; unbounded sources run the identical plan in
+Drained with Trigger.AvailableNow through the engine's one streaming
+drain (`streaming.sinks._drain`: loud timeout, checkpoint removed), so
+the bounded fixture gives a deterministic result; unbounded sources run the identical plan in
 APPEND mode instead — there the watermark finalizes sessions as it
 advances, and sessions still open when a bounded drain ends are
 withheld (append emits only watermark-closed windows). Complete mode
@@ -32,7 +33,6 @@ from __future__ import annotations
 
 import argparse
 import sys
-import tempfile
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -41,7 +41,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 
 def run(spark, sf_dir: str, outdir: str) -> list:
-    from mrs_mapreduce_spark.streaming.sinks import _EVENT_DIM
+    from mrs_mapreduce_spark.streaming.sinks import _EVENT_DIM, _drain
     from mrs_mapreduce_spark.streaming.source import events_stream
 
     dim = spark.createDataFrame(
@@ -77,18 +77,10 @@ def run(spark, sf_dir: str, outdir: str) -> list:
             "overwrite"
         ).parquet(outdir)
 
-    query = (
-        sessions.writeStream.outputMode("complete")
-        .foreachBatch(write_batch)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="mrs_pipe_ckpt_")
-        )
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        sessions.writeStream.outputMode("complete").foreachBatch(write_batch),
+        "mrs_pipe_ckpt_",
     )
-    if not query.awaitTermination(300):
-        query.stop()
-        raise TimeoutError("stream_pipeline: drain did not finish in 300s")
 
     return (
         spark.read.parquet(outdir)

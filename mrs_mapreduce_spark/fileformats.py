@@ -12,8 +12,8 @@ Scale note: these are interchange formats for the RDD parity layer only
 scans are columnar and pushdown works.
 
 .. warning:: **Trusted data only.** Hex and binary pair files embed
-   pickled Python objects; ``hex_decode_line`` / ``bin_decode_blob`` /
-   ``read_hex`` / ``read_bin`` call :func:`pickle.loads` on file
+   pickled Python objects; ``hex_decode_line`` / ``read_hex`` /
+   ``read_bin`` call :func:`pickle.loads` on file
    contents, so reading a pair dataset from an untrusted directory can
    execute arbitrary code (the stdlib pickle caveat, inherited from the
    reference format — ``mrs/fileformats.py`` HexReader/BinReader have
@@ -32,9 +32,6 @@ scans are columnar and pushdown works.
 from __future__ import annotations
 
 import pickle
-import struct
-from collections.abc import Iterable, Iterator
-
 
 from pyspark.rdd import RDD
 from pyspark.sql import SparkSession
@@ -84,36 +81,6 @@ def read_hex(spark: SparkSession, outdir: str) -> RDD:
 # BytesWritable blobs. The SequenceFile container supplies the length
 # framing the reference's BinWriter hand-rolled ([4-byte len][payload]),
 # plus sync markers, splittability and cluster-safe committers for free.
-
-
-def bin_encode_partition(pairs: Iterable[tuple]) -> Iterator[bytes]:
-    """Length-prefixed blob of a partition's pairs (BinWriter wire parity).
-
-    Kept as the reference-format encoder (``[4-byte klen][key pickle]
-    [4-byte vlen][value pickle]*``) for interchange with external tools;
-    :func:`write_bin` itself now delegates framing to SequenceFile.
-    """
-    chunks = []
-    for key, value in pairs:
-        kb = pickle.dumps(key, protocol=4)
-        vb = pickle.dumps(value, protocol=4)
-        chunks.append(struct.pack(">I", len(kb)) + kb
-                      + struct.pack(">I", len(vb)) + vb)
-    yield b"".join(chunks)
-
-
-def bin_decode_blob(blob: bytes) -> Iterator[tuple]:
-    off = 0
-    while off < len(blob):
-        (klen,) = struct.unpack_from(">I", blob, off)
-        off += 4
-        key = pickle.loads(blob[off : off + klen])
-        off += klen
-        (vlen,) = struct.unpack_from(">I", blob, off)
-        off += 4
-        value = pickle.loads(blob[off : off + vlen])
-        off += vlen
-        yield key, value
 
 
 def write_bin(rdd: RDD, outdir: str) -> None:

@@ -1,9 +1,8 @@
 """Pure-Python BMP / WAV codecs: the REAL branch of the multimodal seam.
 
-SURVEY.md §2.D D5, r7 verdict Missing #2: the container has no PIL or
-ffmpeg, so the multimodal stages' ``real_codec`` seam historically raised
-``NotImplementedError``. These two container formats need nothing beyond
-``struct``, so the real branch can be exercised honestly: the declared
+SURVEY.md §2.D D5: the package depends on no image or audio library
+(PIL, ffmpeg), yet these two container formats need nothing beyond
+``struct``, so a real decode can be exercised honestly: the declared
 queries ENCODE genuine, spec-conformant files (24-bit uncompressed BMP
 with 4-byte row padding; RIFF/WAVE PCM16 with a chunk walk) and then
 DECODE them by actually parsing headers, strides and chunks — not by
@@ -85,12 +84,6 @@ def decode_bmp(data: bytes) -> tuple[int, int, int]:
         base = offset + r * stride
         total += sum(data[base : base + 3 * width])
     return width, n_rows, total
-
-
-def decode_bmp_dims(data: bytes) -> tuple[int, int]:
-    """(width, height) only — the ``decode_frames(codec=...)`` signature."""
-    w, h, _ = decode_bmp(data)
-    return w, h
 
 
 # ---------------------------------------------------------------- WAV ----

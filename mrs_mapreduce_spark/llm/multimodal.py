@@ -2,12 +2,11 @@
 
 SURVEY.md §2.D D5. Design: media lives in opaque ``binary`` columns with a
 typed metadata struct alongside; decode / feature-extract / resize /
-frame-sample run as Arrow-batched ``mapInPandas`` stages. PIL/ffmpeg are
-not in this container, so the LIBRARY-backed codec call stays stubbed
-(``decode_frames(..., real_codec=True)`` raises ``NotImplementedError``;
-``codec=`` is the injection seam examples/multimodal_codec.py uses with
-PIL when importable) — but the real-codec BRANCH is exercised honestly by
-the pure-Python BMP and RIFF/WAVE codecs in ``llm/codecs.py``:
+frame-sample run as Arrow-batched ``mapInPandas`` stages. A real decoder
+plugs in through ``decode_frames(mm, codec=...)``, the seam
+examples/multimodal_codec.py uses with PIL when importable; the package
+itself needs no image library, and its real-codec path is the
+pure-Python BMP and RIFF/WAVE codecs in ``llm/codecs.py``:
 ``multimodal_bmp_roundtrip`` / ``multimodal_wav_roundtrip`` encode genuine
 spec-conformant files and decode them by PARSING (magic, strides, padding,
 chunk walk), end-to-end inside one Arrow stage with exact SQL oracles.
@@ -50,30 +49,18 @@ def attach_payload(docs: DataFrame) -> DataFrame:
     )
 
 
-def decode_frames(
-    mm: DataFrame,
-    real_codec: bool = False,
-    codec=None,
-) -> DataFrame:
+def decode_frames(mm: DataFrame, codec=None) -> DataFrame:
     """Arrow-batched decode stage over binary payloads (mapInPandas).
 
-    ``codec`` (round-5, r4 verdict Missing #3) is the REAL seam: a
+    ``codec`` is the REAL seam: a
     ``Callable[[bytes], tuple[int, int]]`` returning (width, height) of
     an actually-encoded payload — examples/multimodal_codec.py passes a
     PIL decoder when importable and a stdlib PNG-header parser
     otherwise, running genuine image bytes through this exact stage.
-    ``real_codec=True`` without a codec raises (the historical stub
-    guard); passing BOTH raises too — ``codec`` is the one authoritative
-    switch, and silently ignoring ``real_codec`` next to it would hide a
-    caller's wiring mistake. The default fake decode is deterministic
+    Without a codec the stage runs a fake decode: deterministic
     arithmetic on the payload's first bytes — enough to exercise schema,
     batch shape and partitioning with a bit-exact SQL oracle.
     """
-    if real_codec and codec is not None:
-        raise ValueError(
-            "pass either codec=<callable> or real_codec=True, not both: "
-            "codec IS the real decode path"
-        )
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -106,10 +93,6 @@ def decode_frames(
                     }
                 )
                 continue
-            if real_codec:
-                raise NotImplementedError(
-                    "real image decode requires PIL/ffmpeg; not in container"
-                )
             payloads = pdf["payload"]
             # None payload -> NULL dims (oracle md5(NULL) propagation)
             width = payloads.map(
@@ -352,24 +335,18 @@ def multimodal_framesample(spark: SparkSession, sf_dir: str) -> DataFrame:
 AUDIO_SCHEMA = "doc_id bigint, win int, energy bigint"
 
 
-def window_energy(
-    mm: DataFrame, real_codec: bool = False
-) -> DataFrame:
+def window_energy(mm: DataFrame) -> DataFrame:
     """Audio-style windowed energy over binary payloads (mapInPandas 1:n).
 
     Treats the 16-byte payload as 8 unsigned 16-bit PCM samples and emits
     one row per 2-sample window with its integer energy (sum of squares)
-    — the frame-windowing shape of a real audio feature extractor, with
-    the codec seam stubbed exactly like :func:`decode_frames`.
+    — the frame-windowing shape of a real audio feature extractor; a
+    real audio decoder is out of scope (``multimodal_wav_roundtrip``
+    parses genuine WAV bytes instead).
     """
 
     def extract(batches):
         for pdf in batches:
-            if real_codec:
-                raise NotImplementedError(
-                    "real audio decode requires soundfile/ffmpeg; "
-                    "not in container"
-                )
             out = {"doc_id": [], "win": [], "energy": []}
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 if payload is None:  # no payload -> no windows
@@ -503,7 +480,7 @@ def bmp_roundtrip(mm: DataFrame) -> DataFrame:
     """,
     survey="D5/E82 (REAL image codec branch: spec-conformant BMP "
     "encode → header/stride parse decode, end-to-end in one Arrow "
-    "stage — the real_codec seam exercised without PIL)",
+    "stage — the codec seam exercised without PIL)",
     scale="""
     The real-codec twin of multimodal_decode: genuine file bytes flow
     through the stage, and the decode is a parse (magic, pixel-array

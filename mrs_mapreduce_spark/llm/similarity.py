@@ -303,67 +303,6 @@ def similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _cos_top_k(scored, 3)
 
 
-def cosine_topk_numpy(
-    candidates: DataFrame, queries: DataFrame, k: int = 5
-) -> DataFrame:
-    """Vectorized (numpy) brute-force cosine top-k — the raw-throughput path.
-
-    NOT used by declared queries: numpy's pairwise summation changes float
-    accumulation order, so results can differ from the SQL oracle in the
-    last ulp. For production scans where a 1-ulp tie flip is acceptable
-    this path is ~an order of magnitude faster than per-element lambdas:
-    each Arrow batch of candidates does ONE (batch x dim) @ (dim x nq)
-    matmul against the broadcast query block.
-
-    candidates: (vec_id, embedding), queries: (q_id, qv). Returns
-    (q_id, cand_id, cos_sim, rk) like similarity_topk.
-    """
-    import numpy as np
-
-    def safe_norm(m):
-        # zero-norm guard: a 0/0 division yields NaN, and NaN sorts
-        # GREATEST under F.desc — one all-zeros vector would become the
-        # rank-1 neighbor of every query. Dividing by 1 instead leaves
-        # the zero vector's cos at 0, ranking it last, which is the
-        # right answer for "no direction".
-        n = np.linalg.norm(m, axis=1, keepdims=True)
-        return np.where(n == 0.0, 1.0, n)
-
-    spark = candidates.sparkSession
-    schema = "q_id long, cand_id long, cos_sim double"
-    q_rows = queries.collect()
-    if not q_rows:
-        # np.array([]) is 1-D, so the norm over axis 1 would raise
-        return spark.createDataFrame([], schema + ", rk int")
-    q_ids = [r.q_id for r in q_rows]
-    q_mat = np.array([r.qv for r in q_rows], dtype=np.float64)
-    q_mat /= safe_norm(q_mat)
-    bc = spark.sparkContext.broadcast((q_ids, q_mat))
-
-    def score(batches):
-        import numpy as np
-        import pandas as pd
-
-        ids, qm = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            cand = np.stack(pdf["embedding"].map(np.asarray)).astype(np.float64)
-            cand /= safe_norm(cand)
-            sims = cand @ qm.T  # (batch, nq)
-            out = {
-                "q_id": np.repeat(ids, len(pdf)),
-                "cand_id": np.tile(pdf["vec_id"].to_numpy(), len(ids)),
-                "cos_sim": sims.T.reshape(-1),
-            }
-            yield pd.DataFrame(out)
-
-    scored = candidates.mapInPandas(score, schema=schema).filter(
-        F.col("q_id") != F.col("cand_id")
-    )
-    return _top_k(scored, k, F.desc("cos_sim"), "cand_id")
-
-
 @register(
     "embedding_quantize",
     oracle="""

@@ -902,9 +902,10 @@ def events_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles (α=0.5 is dyadic: every step is exact halving, no rounding
     drift). The group history must fit a task — per-user purchase
     streams do by orders of magnitude; for unbounded keys the same
-    recurrence runs as transformWithState with one double of state per
-    key (streaming/stateful.py), or segmented-scan style over fixed
-    windows. One shuffle on user_id, partial-aggregated collect.
+    recurrence runs as per-key streaming state, two scalars per key
+    (stream_ewma_state in streaming/stateful.py), or segmented-scan
+    style over fixed windows. One shuffle on user_id, partial-aggregated
+    collect.
     """,
 )
 def events_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -7,60 +7,73 @@ each reduce task. Unlike the memory-sink demo (``stream_watermark``) this
 runs the full write-then-audit loop: stream -> transform -> append parquet
 per batch -> batch read-back, and because Trigger.AvailableNow drains the
 bounded fixture exactly once, the round-trip has an EXACT SQL oracle.
+
+Every streaming query in the package, and ``examples/stream_pipeline.py``,
+runs through :func:`_drain` — one AvailableNow start, loud timeout and
+checkpoint clean-up; memory-sink queries through its thin
+:func:`_drain_memory_sink` wrapper.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..exprs import pround
 from ..registry import register
 
 
-def _drain_memory_sink(
-    spark: SparkSession,
-    df: DataFrame,
-    sink_name: str,
-    ckpt_prefix: str,
-    output_mode: str = "append",
-    timeout: float = 180.0,
-) -> DataFrame:
-    """AvailableNow-drain ``df`` into a named memory sink, LOUDLY.
+#: seconds an AvailableNow drain may run before it counts as stuck
+DRAIN_TIMEOUT_S = 300
 
-    One shared drain for every streaming declared query: the timeout
-    check is mandatory (a timed-out ``awaitTermination`` returning
-    False while execution falls through reads a partial, still-mutating
-    sink — the silent-wrong-rows failure a review pass found in the one
-    builder whose copy of this block had dropped the check), and the
-    checkpoint directory is removed afterwards — the memory sink lives
-    in driver memory, so after a bounded drain the checkpoint is dead
-    state that would otherwise accumulate per invocation.
+
+def _drain(writer: DataStreamWriter, ckpt_prefix: str) -> StreamingQuery:
+    """Run ``writer`` to completion under Trigger.AvailableNow, LOUDLY.
+
+    The one start -> wait -> stop -> clean-up path for every streaming
+    query. ``writer`` arrives with its sink, query name and output mode
+    set; the drain adds a fresh checkpoint and the trigger. A run that
+    does not finish within ``DRAIN_TIMEOUT_S`` is stopped and raises
+    ``TimeoutError``: falling through would read a partial, still-mutating
+    sink, which can never pass a value oracle. The checkpoint directory
+    is removed either way — after a bounded drain it is dead state that
+    would otherwise accumulate per invocation. Returns the finished
+    query (its ``recentProgress`` stays readable).
     """
-    import shutil
-
     checkpoint = tempfile.mkdtemp(prefix=ckpt_prefix)
-    q = (
-        df.writeStream.format("memory")
-        .queryName(sink_name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
     try:
-        if not q.awaitTermination(timeout):
-            q.stop()
+        query = (
+            writer.option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
+        )
+        if not query.awaitTermination(DRAIN_TIMEOUT_S):
+            query.stop()
             raise TimeoutError(
-                f"{sink_name}: availableNow drain did not finish in "
-                f"{timeout:.0f}s; memory sink would be partial — "
-                "failing loudly instead"
+                f"{query.name or ckpt_prefix}: availableNow drain did not "
+                f"finish in {DRAIN_TIMEOUT_S}s; its sink would be partial "
+                "— failing loudly instead"
             )
     finally:
         shutil.rmtree(checkpoint, ignore_errors=True)
-    return spark.table(sink_name)
+    return query
+
+
+def _drain_memory_sink(
+    df: DataFrame, sink_name: str, ckpt_prefix: str, output_mode="append"
+) -> DataFrame:
+    """Drain ``df`` into the memory sink ``sink_name`` and return its table."""
+    _drain(
+        df.writeStream.format("memory").queryName(sink_name)
+        .outputMode(output_mode),
+        ckpt_prefix,
+    )
+    return df.sparkSession.table(sink_name)
 
 
 def _dual_stream_join(
@@ -126,7 +139,7 @@ def _dual_stream_join(
         ).alias("user_id"),
         (F.col("p_us") - F.col("s_us")).alias("gap_us"),
     )
-    return _drain_memory_sink(spark, joined, sink_name, ckpt_prefix)
+    return _drain_memory_sink(joined, sink_name, ckpt_prefix)
 
 
 @register(
@@ -168,7 +181,6 @@ def stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     target = tempfile.mkdtemp(prefix="mrs_febatch_") + "/out"
-    checkpoint = tempfile.mkdtemp(prefix="mrs_febatch_ckpt_")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         # idempotent enough for AvailableNow-once semantics; real sinks
@@ -177,25 +189,10 @@ def stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             "append"
         ).parquet(target)
 
-    query = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    # fail LOUDLY on timeout or an empty source — the round-4 synthetic
-    # sweep caught the silent version of this (source glob matched zero
-    # files -> foreachBatch never ran -> read of a nonexistent sink)
-    if not query.awaitTermination(300):
-        query.stop()
-        raise RuntimeError("stream_foreach_batch: stream did not finish in 300 s")
-    import os
-    import shutil
-
-    # the drained checkpoint is dead state (the TARGET parquet must stay:
-    # the returned DataFrame reads it lazily)
-    shutil.rmtree(checkpoint, ignore_errors=True)
-
+    # the TARGET parquet stays: the returned DataFrame reads it lazily
+    _drain(stream.writeStream.foreachBatch(write_batch), "mrs_febatch_ckpt_")
+    # an empty source never calls write_batch: fail loudly rather than
+    # read a sink that does not exist
     if not os.path.exists(target):
         raise RuntimeError(
             "stream_foreach_batch: no batch was ever written — "
@@ -308,8 +305,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return _drain_memory_sink(
-        spark, enriched, "mrs_stream_static_join_sink",
-        "mrs_ssj_static_ckpt_",
+        enriched, "mrs_stream_static_join_sink", "mrs_ssj_static_ckpt_"
     )
 
 

@@ -3,15 +3,16 @@
 ``stream_dedup`` declares the deterministic batch twin of
 ``dropDuplicatesWithinWatermark`` (keep the earliest event per key — the
 plain ``dropDuplicates`` keeps an arbitrary one, which can never pass a
-value oracle). ``stream_stateful`` runs a REAL
-``applyInPandasWithState`` streaming query — the reference's closest
+value oracle). ``stream_stateful`` and ``stream_ewma_state`` run REAL
+``applyInPandasWithState`` streaming queries — the reference's closest
 analogue is the user-managed accumulator inside a reduce, but with
-framework-managed fault-tolerant state.
+framework-managed fault-tolerant state. Both drain through
+``sinks._drain`` in update mode and keep each user's last update row,
+which is the final state.
 """
 
 from __future__ import annotations
 
-import tempfile
 from collections.abc import Iterator
 
 import pandas as pd
@@ -58,62 +59,33 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def transform_with_state_available() -> bool:
-    """True when transformWithStateInPandas can actually run here.
-
-    The Spark 4 API talks to a JVM state server over a protobuf
-    protocol from a driver-side Python worker; without google.protobuf
-    the worker crashes at query start (STREAMING_PYTHON_RUNNER_
-    INITIALIZATION_FAILURE), so the capability gate is the import.
-    """
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-_TOTALS_OUT = "user_id bigint, n_events bigint, sum_val double"
-
-
-def _totals_transform_with_state(stream: DataFrame) -> DataFrame:
-    """Spark 4 transformWithStateInPandas formulation (primary path)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", "n BIGINT, s DOUBLE")
-
-        def handleInputRows(
-            self, key: tuple, rows: Iterator[pd.DataFrame], timerValues
-        ) -> Iterator[pd.DataFrame]:
-            n, s = self._totals.get() if self._totals.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                s += float(pdf["value"].sum())
-            self._totals.update((n, s))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "sum_val": [s]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningTotals(),
-        outputStructType=_TOTALS_OUT,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def _totals_apply_in_pandas(stream: DataFrame) -> DataFrame:
-    """applyInPandasWithState fallback — identical per-key semantics."""
+@register(
+    "stream_stateful",
+    oracle="""
+    SELECT user_id,
+           count(*) AS n_events,
+           round(sum(value), 2) AS sum_val
+    FROM events GROUP BY user_id
+    """,
+    survey="C6 (arbitrary stateful streaming: applyInPandasWithState)",
+    scale="""
+    Arbitrary per-key state with framework-managed fault tolerance:
+    applyInPandasWithState keeps one (n, sum) tuple per user in the
+    state store, updated per micro-batch. With Trigger.AvailableNow and
+    in-order data the final state equals the batch aggregate — which
+    is exactly what the oracle checks. The custom-state path is for
+    logic groupBy can't express (sessionization with side conditions,
+    CEP, model state); everything algebraic should stay in built-in
+    aggregates.
+    """,
+)
+def stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-user running totals via a real stateful streaming query."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+    from ..exprs import pround
+    from .sinks import _drain_memory_sink
+    from .source import events_stream
 
     def totals(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -127,241 +99,26 @@ def _totals_apply_in_pandas(stream: DataFrame) -> DataFrame:
             {"user_id": [key[0]], "n_events": [n], "sum_val": [s]}
         )
 
-    return stream.groupBy("user_id").applyInPandasWithState(
-        totals,
-        outputStructType=_TOTALS_OUT,
-        stateStructType="n bigint, s double",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-@register(
-    "stream_stateful",
-    oracle="""
-    SELECT user_id,
-           count(*) AS n_events,
-           round(sum(value), 2) AS sum_val
-    FROM events GROUP BY user_id
-    """,
-    survey="C6 (arbitrary stateful streaming: Spark 4 "
-    "transformWithStateInPandas, applyInPandasWithState fallback)",
-    scale="""
-    Arbitrary per-key state with framework-managed fault tolerance.
-    Primary path is the Spark 4 transformWithState API (SURVEY.md §2.C
-    C6's named target; supersedes applyInPandasWithState): typed
-    ValueState in the RocksDB state store, keyed by user, updated per
-    micro-batch — the API adds composable typed state variables,
-    timers, and state schema evolution over the old single-tuple
-    state. Its state-server protocol needs google.protobuf, which this
-    container lacks, so the builder gates on that import and falls
-    back to applyInPandasWithState with IDENTICAL semantics (the
-    batch-twin oracle pins both). With Trigger.AvailableNow and
-    in-order data the final state equals the batch aggregate — which
-    is exactly what the oracle checks. The custom-state path is for
-    logic groupBy can't express (sessionization with side conditions,
-    CEP, model state); everything algebraic should stay in built-in
-    aggregates.
-    """,
-)
-def stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user running totals via a real stateful streaming query."""
-    from ..session import apply_runtime_confs
-
-    apply_runtime_confs(spark)
-    # events_stream handles BOTH physical layouts (fixture single-file
-    # via parent-glob, Spark-written directory via direct path) — an
-    # inline glob here silently read zero rows on directory-shaped
-    # tables (round-4 synthetic-sweep find)
-    from .source import events_stream
-
-    stream = events_stream(spark, sf_dir)
-    use_tws = transform_with_state_available()
     result = (
-        _totals_transform_with_state(stream)
-        if use_tws
-        else _totals_apply_in_pandas(stream)
+        events_stream(spark, sf_dir)
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            totals,
+            outputStructType="user_id bigint, n_events bigint, sum_val double",
+            stateStructType="n bigint, s double",
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
     )
-    snap = _run_update_stream(
-        spark, result, "mrs_stream_stateful_sink", use_tws
+    snap = _drain_memory_sink(
+        result, "mrs_stream_stateful_sink", "mrs_state_ckpt_", "update"
     )
     # one update row per user per micro-batch: keep the final state
-    from ..exprs import pround
-
     w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
     return (
         snap.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") == 1)
         .select("user_id", "n_events", pround("sum_val", 2).alias("sum_val"))
-    )
-
-
-def _run_update_stream(
-    spark: SparkSession,
-    result: DataFrame,
-    sink_name: str,
-    use_tws: bool,
-    require_single_batch: bool = False,
-) -> DataFrame:
-    """Run an update-mode stateful stream to completion; return the sink.
-
-    Shared by every declared stateful streaming query: memory sink,
-    fresh checkpoint, Trigger.AvailableNow, loud timeout (a partial
-    memory sink can never pass a value oracle). transformWithState
-    requires the RocksDB state store (the provider it was designed
-    around); the conf is scoped to this query's start and restored so
-    co-resident HDFS-state queries keep their checkpoints.
-
-    ``require_single_batch``: an ORDER-SENSITIVE fold (stream_ewma_state)
-    sorts by event time only WITHIN a micro-batch; cross-batch order is
-    arrival order, so a fixture split across multiple AvailableNow
-    batches could silently diverge from the value oracle. Such queries
-    pass True and this fails loudly if more than one micro-batch carried
-    input rows, rather than returning a nondeterministically-ordered
-    answer. Order-insensitive folds (the totals query: sum/count) leave
-    it False — any batch split commutes.
-    """
-    checkpoint = tempfile.mkdtemp(prefix="mrs_state_ckpt_")
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_provider = spark.conf.get(provider_key, None)
-    if use_tws:
-        spark.conf.set(
-            provider_key,
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-    try:
-        query = (
-            result.writeStream.format("memory")
-            .queryName(sink_name)
-            .outputMode("update")
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        finished = query.awaitTermination(180)
-        if not finished:
-            query.stop()
-            raise TimeoutError(
-                f"{sink_name}: availableNow batch did not finish in "
-                "180s; memory sink would be partial — failing loudly instead"
-            )
-        if require_single_batch:
-            data_batches = sum(
-                1
-                for p in query.recentProgress
-                if p and p["numInputRows"] > 0
-            )
-            if data_batches > 1:
-                raise RuntimeError(
-                    f"{sink_name}: fixture arrived in {data_batches} "
-                    "micro-batches; the order-sensitive fold's "
-                    "cross-batch order would be arrival order, not "
-                    "event time — refusing to return a "
-                    "nondeterministic answer"
-                )
-    finally:
-        if use_tws:
-            if prev_provider is None:
-                spark.conf.unset(provider_key)
-            else:
-                spark.conf.set(provider_key, prev_provider)
-    return spark.table(sink_name)
-
-
-_EWMA_OUT = "user_id bigint, n_purchases bigint, ewma double"
-
-
-def _make_ewma_fold():
-    """Build the per-key EWMA recurrence both stateful APIs share.
-
-    Returned as a NESTED function so the stateful processors capture it
-    by VALUE (cloudpickle closure) — a module-level helper would pickle
-    by reference and die on executors that can't import this package
-    (the driver imports ``__spark_entry__`` by file path from an
-    arbitrary cwd; the round-6 foreign-cwd sim caught exactly that).
-
-    The fold: concatenate the micro-batch's rows, sort by EVENT TIME
-    (ts_ns, event_id) — micro-batch delivery order is partition order,
-    not time order — and fold acc = acc·0.5 + x·0.5 left-to-right in
-    Python doubles. α = 0.5 is dyadic so every step is exact halving:
-    bit-identical to events_ewma's JVM aggregate and the oracle's
-    list_reduce, which is what lets a streaming query pass a VALUE
-    oracle.
-    """
-
-    def fold(pdfs, prior):
-        import pandas as pd
-
-        n, ewma = prior if prior is not None else (0, 0.0)
-        frames = [p for p in pdfs if len(p)]  # empties poison concat dtypes
-        batch = pd.concat(frames) if frames else None
-        if batch is not None and len(batch):
-            batch = batch.sort_values(["ts_ns", "event_id"])
-            for v in batch["value"].astype(float):
-                ewma = v if n == 0 else ewma * 0.5 + v * 0.5
-                n += 1
-        return n, ewma
-
-    return fold
-
-
-def _ewma_transform_with_state(stream: DataFrame) -> DataFrame:
-    """Spark 4 transformWithStateInPandas formulation (primary path)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    fold = _make_ewma_fold()
-
-    class Ewma(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._s = handle.getValueState("ewma", "n BIGINT, e DOUBLE")
-
-        def handleInputRows(
-            self, key: tuple, rows: Iterator[pd.DataFrame], timerValues
-        ) -> Iterator[pd.DataFrame]:
-            prior = self._s.get() if self._s.exists() else None
-            n, ewma = fold(list(rows), prior)
-            self._s.update((n, ewma))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_purchases": [n], "ewma": [ewma]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=Ewma(),
-        outputStructType=_EWMA_OUT,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def _ewma_apply_in_pandas(stream: DataFrame) -> DataFrame:
-    """applyInPandasWithState fallback — identical per-key semantics."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    fold = _make_ewma_fold()
-
-    def step(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        prior = state.get if state.exists else None
-        n, ewma = fold(list(pdfs), prior)
-        state.update((n, ewma))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_purchases": [n], "ewma": [ewma]}
-        )
-
-    return stream.groupBy("user_id").applyInPandasWithState(
-        step,
-        outputStructType=_EWMA_OUT,
-        stateStructType="n bigint, e double",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
@@ -385,59 +142,94 @@ def _ewma_apply_in_pandas(stream: DataFrame) -> DataFrame:
     scale="""
     events_ewma's scale note names this query: the batch fold collects
     a user's full history into one task — fine for per-user purchase
-    streams, wrong for unbounded keys — and promises "the same
-    recurrence runs as transformWithState with one double of state per
-    key". This declares that twin (round-6, r5 verdict task 7): per-key
-    state is (n, ewma) — two scalars, NOT the history — so state size
-    is O(live keys) regardless of stream length, retired by watermark
-    or TTL in production. Per micro-batch the key's rows are sorted by
+    streams, wrong for unbounded keys. Here the per-key state is
+    (n, ewma) — two scalars, NOT the history — so state size is
+    O(live keys) regardless of stream length, retired by watermark or
+    TTL in production. Per micro-batch the key's rows are sorted by
     event time and folded left-to-right in Python doubles (alpha = 0.5
     is dyadic: exact halving, bit-identical to the batch fold and the
     oracle's list_reduce). Ordering contract: exact WITHIN a
     micro-batch (the sort) and across batches by arrival order — with
     Trigger.AvailableNow over an in-order source (the fixture, a
     compacted Kafka topic) the result equals the batch recurrence
-    EXACTLY, which is what the value oracle checks; the runner FAILS
-    LOUDLY if the fixture splits across >1 data-carrying micro-batch
-    (require_single_batch), so a multi-file events dir can never
-    nondeterministically diverge from the oracle. For out-of-order
-    production streams the watermark-buffered variant (timer-based
-    reordering) is the documented extension, not silently different
-    output. Primary path is Spark 4 transformWithStateInPandas
-    (RocksDB state store), gated on google.protobuf with an
-    applyInPandasWithState fallback of identical semantics — the
-    stream_stateful discipline.
+    EXACTLY, which is what the value oracle checks; the query FAILS
+    LOUDLY if the fixture splits across >1 data-carrying micro-batch,
+    so a multi-file events dir can never nondeterministically diverge
+    from the oracle. For out-of-order production streams the
+    watermark-buffered variant (timer-based reordering) is the
+    documented extension, not silently different output.
     """,
 )
 def stream_ewma_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user EWMA (alpha=0.5) as a real stateful streaming query."""
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
     from ..exprs import pround
-    from ..session import apply_runtime_confs
+    from .sinks import _drain
     from .source import events_stream
 
-    apply_runtime_confs(spark)
-    stream = (
+    def step(
+        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        # Nested, so cloudpickle ships it by VALUE: a module-level
+        # function pickles by reference and dies on executors that
+        # cannot import this package (``__spark_entry__`` may be loaded
+        # by file path from an arbitrary cwd).
+        # Sort the micro-batch by EVENT TIME (delivery order is
+        # partition order) and fold acc·0.5 + x·0.5 in Python doubles:
+        # α = 0.5 is dyadic, so every step is exact halving and the
+        # result is bit-identical to events_ewma and the oracle.
+        n, ewma = state.get if state.exists else (0, 0.0)
+        frames = [p for p in pdfs if len(p)]  # empties poison concat dtypes
+        if frames:
+            batch = pd.concat(frames).sort_values(["ts_ns", "event_id"])
+            for v in batch["value"].astype(float):
+                ewma = v if n == 0 else ewma * 0.5 + v * 0.5
+                n += 1
+        state.update((n, ewma))
+        yield pd.DataFrame(
+            {"user_id": [key[0]], "n_purchases": [n], "ewma": [ewma]}
+        )
+
+    result = (
         events_stream(spark, sf_dir)
         .filter(F.col("event_type") == "purchase")
         .select("user_id", "ts_ns", "event_id", "value")
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            step,
+            outputStructType=(
+                "user_id bigint, n_purchases bigint, ewma double"
+            ),
+            stateStructType="n bigint, e double",
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
     )
-    use_tws = transform_with_state_available()
-    result = (
-        _ewma_transform_with_state(stream)
-        if use_tws
-        else _ewma_apply_in_pandas(stream)
+    sink = "mrs_stream_ewma_sink"
+    query = _drain(
+        result.writeStream.format("memory").queryName(sink)
+        .outputMode("update"),
+        "mrs_state_ckpt_",
     )
-    snap = _run_update_stream(
-        spark,
-        result,
-        "mrs_stream_ewma_sink",
-        use_tws,
-        require_single_batch=True,
+    # The fold sorts by event time only WITHIN a micro-batch; across
+    # batches the order is arrival order, so more than one data-carrying
+    # batch could silently diverge from the oracle. Refuse instead.
+    data_batches = sum(
+        1 for p in query.recentProgress if p and p["numInputRows"] > 0
     )
+    if data_batches > 1:
+        raise RuntimeError(
+            f"{sink}: fixture arrived in {data_batches} micro-batches; "
+            "the order-sensitive fold's cross-batch order would be "
+            "arrival order, not event time — refusing to return a "
+            "nondeterministic answer"
+        )
     # one update row per key per micro-batch: keep the final state
     w = Window.partitionBy("user_id").orderBy(F.desc("n_purchases"))
     return (
-        snap.withColumn("rk", F.row_number().over(w))
+        spark.table(sink)
+        .withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") == 1)
         .select("user_id", "n_purchases", pround("ewma", 6).alias("ewma"))
     )

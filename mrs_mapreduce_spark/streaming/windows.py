@@ -197,8 +197,7 @@ def stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sinks import _drain_memory_sink
 
     return _drain_memory_sink(
-        spark, agg, "mrs_stream_watermark_sink", "mrs_stream_ckpt_",
-        output_mode="complete",
+        agg, "mrs_stream_watermark_sink", "mrs_stream_ckpt_", "complete"
     )
 
 

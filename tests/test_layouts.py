@@ -59,45 +59,6 @@ def test_bucketed_join_no_shuffle(spark, sf_dir):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-def test_numpy_cosine_matches_hof(spark, sf_dir):
-    """The vectorized scale path agrees with the oracle-checked HOF path."""
-    from mrs_mapreduce_spark.llm.similarity import (
-        cosine_topk_numpy,
-        similarity_topk,
-    )
-
-    e = table(spark, sf_dir, "embeddings")
-    queries = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv")
-    )
-    fast = {
-        (r.q_id, r.rk): (r.cand_id, r.cos_sim)
-        for r in cosine_topk_numpy(e, queries, k=5).collect()
-    }
-    exact = {
-        (r.q_id, r.rk): (r.cand_id, r.cos_sim)
-        for r in similarity_topk(spark, sf_dir).collect()
-    }
-    assert set(fast) == set(exact)
-    for key, (cand, cos) in exact.items():
-        f_cand, f_cos = fast[key]
-        assert f_cand == cand, f"rank flip at {key}: {f_cand} vs {cand}"
-        assert abs(f_cos - cos) < 1e-6
-
-
-def test_numpy_cosine_empty_queries(spark, sf_dir):
-    """No query rows: an empty (q_id, cand_id, cos_sim, rk) result."""
-    from mrs_mapreduce_spark.llm.similarity import cosine_topk_numpy
-
-    e = table(spark, sf_dir, "embeddings")
-    queries = e.filter(F.col("vec_id") < 0).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv")
-    )
-    out = cosine_topk_numpy(e, queries, k=5)
-    assert out.columns == ["q_id", "cand_id", "cos_sim", "rk"]
-    assert out.collect() == []
-
-
 def test_salted_join_equals_plain_join(spark, sf_dir):
     """Salting must be result-transparent (row-identical to plain join)."""
     from collections import Counter

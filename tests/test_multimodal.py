@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from mrs_mapreduce_spark.catalog import table
@@ -32,15 +31,6 @@ def test_decode_stub_deterministic(spark, sf_dir):
         assert r.height == b[1] % 64 + 16
         assert r.n_pixels == r.width * r.height
         assert r.kind == "image/fake"
-
-
-def test_real_codec_is_stubbed(spark, sf_dir):
-    mm = attach_payload(table(spark, sf_dir, "documents")).limit(2)
-    with pytest.raises(Exception) as excinfo:
-        decode_frames(mm, real_codec=True).collect()
-    assert "NotImplementedError" in str(excinfo.value) or isinstance(
-        excinfo.value, NotImplementedError
-    )
 
 
 def test_metadata_filter_avoids_payload_shuffle(spark, sf_dir):

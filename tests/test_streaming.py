@@ -1,4 +1,5 @@
-"""Streaming-specific behavior: checkpointed restart, watermark sink."""
+"""Streaming-specific behavior: checkpointed restart, watermark sink, the
+loud drain and the single-batch guard of the order-sensitive fold."""
 
 from __future__ import annotations
 
@@ -24,14 +25,14 @@ def _run_stream(spark, sf_dir, checkpoint, sink):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120), f"{sink}: stream did not finish"
     return spark.table(sink)
 
 
-def test_checkpointed_restart_processes_nothing_new(spark, sf_dir):
+def test_checkpointed_restart_processes_nothing_new(spark, sf_dir, tmp_path):
     """Second availableNow run over the same checkpoint sees no new data
     (exactly-once source bookkeeping)."""
-    checkpoint = tempfile.mkdtemp(prefix="mrs_restart_ckpt_")
+    checkpoint = str(tmp_path / "ckpt")
     first = _run_stream(spark, sf_dir, checkpoint, "restart_sink_a").collect()
     assert len(first) > 0
     second = _run_stream(spark, sf_dir, checkpoint, "restart_sink_b").collect()
@@ -39,11 +40,11 @@ def test_checkpointed_restart_processes_nothing_new(spark, sf_dir):
     assert len(second) == 0
 
 
-def test_stream_batch_twin_equivalence(spark, sf_dir):
+def test_stream_batch_twin_equivalence(spark, sf_dir, tmp_path):
     """The streamed tumbling counts equal the batch window() counts."""
     from mrs_mapreduce_spark.catalog import table
 
-    checkpoint = tempfile.mkdtemp(prefix="mrs_twin_ckpt_")
+    checkpoint = str(tmp_path / "ckpt")
     streamed = {
         (r.w.start, r.cnt)
         for r in _run_stream(
@@ -60,10 +61,10 @@ def test_stream_batch_twin_equivalence(spark, sf_dir):
     assert streamed == batch
 
 
-def test_stream_stream_interval_join_matches_batch(spark, sf_dir, registry_pass):
+def test_stream_stream_interval_join_matches_batch(
+    spark, sf_dir, registry_pass, tmp_path
+):
     """A real two-stream watermarked interval join == the batch twin."""
-    import tempfile as _tmp
-
     from mrs_mapreduce_spark.streaming.source import events_stream
 
     def ev_stream():
@@ -101,11 +102,11 @@ def test_stream_stream_interval_join_matches_batch(spark, sf_dir, registry_pass)
         joined.writeStream.format("memory")
         .queryName(sink)
         .outputMode("append")
-        .option("checkpointLocation", _tmp.mkdtemp(prefix="ssj_"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120), "interval join did not finish"
     streamed = {
         (r.purchase_id, r.signup_id)
         for r in spark.table(sink).collect()
@@ -117,76 +118,8 @@ def test_stream_stream_interval_join_matches_batch(spark, sf_dir, registry_pass)
     assert streamed == batch
 
 
-def test_transform_with_state_next_gen_api(spark, sf_dir):
-    """Spark 4 transformWithStateInPandas (next-gen C6 path).
-
-    Requires the python protobuf runtime for the driver<->state-server
-    protocol; not installed in this container, so this skips there and
-    runs wherever the dependency exists. The declared stream_stateful
-    query PREFERS this API (transform_with_state_available gate) and
-    falls back to applyInPandasWithState with identical semantics when
-    protobuf is absent.
-    """
-    import tempfile as _tmp
-
-    import pytest as _pytest
-
-    _pytest.importorskip("google.protobuf.descriptor")
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-
-    class CountProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle):
-            self.n = handle.getValueState("n", "n BIGINT")
-
-        def handleInputRows(self, key, rows, timerValues):
-            n = self.n.get()[0] if self.n.exists() else 0
-            for pdf in rows:
-                n += len(pdf)
-            self.n.update((n,))
-            yield pd.DataFrame({"user_id": [key[0]], "n": [n]})
-
-        def close(self):
-            pass
-
-    res = stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=CountProcessor(),
-        outputStructType="user_id bigint, n bigint",
-        outputMode="Update",
-        timeMode="None",
-    )
-    q = (
-        res.writeStream.format("memory")
-        .queryName("tws_sink")
-        .outputMode("update")
-        .option("checkpointLocation", _tmp.mkdtemp(prefix="tws_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    total = sum(r.n for r in spark.table("tws_sink").collect())
-    assert total == spark.read.parquet(f"{sf_dir}/events.parquet").count()
-
-
-def test_rate_source_smoke(spark):
+def test_rate_source_smoke(spark, tmp_path):
     """The rate source (offline synthetic stream) starts and produces rows."""
-    import tempfile as _tmp
-
     stream = (
         spark.readStream.format("rate")
         .option("rowsPerSecond", 100)
@@ -196,7 +129,7 @@ def test_rate_source_smoke(spark):
         stream.writeStream.format("memory")
         .queryName("rate_sink")
         .outputMode("append")
-        .option("checkpointLocation", _tmp.mkdtemp(prefix="rate_"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
     try:
@@ -212,10 +145,8 @@ def test_rate_source_smoke(spark):
         q.stop()
 
 
-def test_foreach_batch_sink(spark, sf_dir):
+def test_foreach_batch_sink(spark, sf_dir, tmp_path):
     """foreachBatch: arbitrary batch logic per micro-batch (custom sinks)."""
-    import tempfile as _tmp
-
     seen = {}
 
     def handle(batch_df, batch_id):
@@ -229,28 +160,64 @@ def test_foreach_batch_sink(spark, sf_dir):
     )
     q = (
         stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", _tmp.mkdtemp(prefix="feb_"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120), "foreachBatch stream did not finish"
     assert sum(seen.values()) == spark.read.parquet(
         f"{sf_dir}/events.parquet"
     ).count()
 
 
-def test_stream_stateful_api_gate_matches_environment():
-    """The C6 builder must select transformWithStateInPandas exactly when
-    its protobuf dependency is importable (and the fallback otherwise) —
-    the capability probe may not drift from the real requirement."""
-    from mrs_mapreduce_spark.streaming.stateful import (
-        transform_with_state_available,
+def test_drain_timeout_is_loud_and_removes_checkpoint(
+    spark, sf_dir, monkeypatch
+):
+    """A drain that outlives DRAIN_TIMEOUT_S raises instead of returning a
+    partial sink, stops its query and leaves no checkpoint directory."""
+    import glob
+    import os
+
+    import pytest
+
+    from mrs_mapreduce_spark.streaming import sinks
+    from mrs_mapreduce_spark.streaming.source import events_stream
+
+    monkeypatch.setattr(sinks, "DRAIN_TIMEOUT_S", 0.001)
+    prefix = "mrs_drain_timeout_test_ckpt_"
+    writer = (
+        events_stream(spark, sf_dir)
+        .writeStream.format("memory")
+        .queryName("drain_timeout_sink")
+    )
+    with pytest.raises(TimeoutError, match="drain_timeout_sink"):
+        sinks._drain(writer, prefix)
+    assert not glob.glob(os.path.join(tempfile.gettempdir(), prefix + "*"))
+    assert not any(
+        q.name == "drain_timeout_sink" for q in spark.streams.active
     )
 
-    try:
-        from google.protobuf import descriptor  # noqa: F401
 
-        have_protobuf = True
-    except ImportError:
-        have_protobuf = False
-    assert transform_with_state_available() == have_protobuf
+def test_ewma_state_refuses_multi_batch_input(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The order-sensitive EWMA fold fails loudly when its input arrives in
+    more than one data-carrying micro-batch (cross-batch order would be
+    arrival order, not event time)."""
+    import pytest
+    from pyspark.sql.streaming import DataStreamReader
+
+    from mrs_mapreduce_spark.streaming.stateful import stream_ewma_state
+
+    split_dir = tmp_path / "split"
+    events = spark.read.parquet(f"{sf_dir}/events.parquet")
+    events.repartition(2).write.parquet(str(split_dir / "events.parquet"))
+    # one file per micro-batch: the two part files become two batches
+    schema = DataStreamReader.schema
+    monkeypatch.setattr(
+        DataStreamReader,
+        "schema",
+        lambda self, s: schema(self, s).option("maxFilesPerTrigger", 1),
+    )
+    with pytest.raises(RuntimeError, match="2 micro-batches"):
+        stream_ewma_state(spark, str(split_dir))
