@@ -306,16 +306,11 @@ def _lsh_candidates(bands_a: DataFrame, bands_b: DataFrame | None = None):
     )
 
 
-def _verify_pairs(
-    cand: DataFrame,
-    docs_a: DataFrame,
-    docs_b: DataFrame | None = None,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Exact-Jaccard verification of candidate pairs (RAW-corpus form).
+def _verify_pairs(cand: DataFrame, docs: DataFrame) -> DataFrame:
+    """Exact-Jaccard verification of candidate pairs (RAW-corpus form):
+    the pairs of ``docs`` with Jaccard >= 0.5.
 
-    One definition of the verify discipline (r10 review: pairs and
-    probe each carried a ~35-line copy): shingle TEXT never enters the
+    One definition of the verify discipline: shingle TEXT never enters the
     verify shuffles — hash to md5 at the scan (the dedup_substring
     discipline) so every consumer moves 16-byte keys; counts are
     unchanged (same md5 on both engines, and the oracle's text-keyed
@@ -334,33 +329,23 @@ def _verify_pairs(
     already bounded) verify through :func:`_verify_pairs_sets` instead,
     whose per-doc set arrays this raw form must never materialize.
 
-    ``docs_b`` None = self-join form (both pair sides from ``docs_a``).
-
-    r12: ``na`` is FREE in the intersection aggregation — the sa join
+    ``na`` is FREE in the intersection aggregation — the sa join
     explodes each candidate pair by ALL of a's shingles and the sb side
     is distinct per (doc_id, h), so count(*) per (doc_a, doc_b) group IS
     a's set size. That removes one of the two sizes joins (and one whole
     ssets subtree instance) from every verify plan.
     """
-    ssets_a = (
-        shingles(docs_a).select("doc_id", F.md5("sh").alias("h")).distinct()
+    ssets = (
+        shingles(docs).select("doc_id", F.md5("sh").alias("h")).distinct()
     )
-    if docs_b is None:
-        ssets_b = ssets_a
-    else:
-        ssets_b = (
-            shingles(docs_b)
-            .select("doc_id", F.md5("sh").alias("h"))
-            .distinct()
-        )
-    sizes_b = ssets_b.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    sizes = ssets.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     inter = (
         cand.join(
-            ssets_a.alias("sa").hint("merge"),
+            ssets.alias("sa").hint("merge"),
             F.col("sa.doc_id") == F.col("doc_a"),
         )
         .join(
-            ssets_b.alias("sb").hint("merge"),
+            ssets.alias("sb").hint("merge"),
             (F.col("sb.doc_id") == F.col("doc_b"))
             & (F.col("sb.h") == F.col("sa.h")),
             "left",
@@ -373,7 +358,7 @@ def _verify_pairs(
     )
     verified = (
         inter.join(
-            sizes_b.select(
+            sizes.select(
                 F.col("doc_id").alias("doc_b"), F.col("n").alias("nb")
             ).hint("merge"),
             "doc_b",
@@ -381,7 +366,7 @@ def _verify_pairs(
         .withColumn("union_n", F.col("na") + F.col("nb") - F.col("inter_n"))
         .withColumn("jac", F.col("inter_n") * 1.0 / F.col("union_n"))
     )
-    return verified.filter(F.col("jac") >= threshold).select(
+    return verified.filter(F.col("jac") >= 0.5).select(
         "doc_a", "doc_b", pround("jac", 4).alias("jaccard")
     )
 
@@ -565,7 +550,7 @@ def _simhash_fps(spark: SparkSession, d: DataFrame) -> DataFrame:
     collapsed blocked pipelines call this over REPRESENTATIVES only —
     fingerprinting the full corpus and semi-joining down afterwards is
     exact but wastes the dominant cost at replica-heavy tiers (the
-    tf x 16-bit vote expansion is ~#tokens x 16 rows; measured r6: the
+    tf x 16-bit vote expansion is ~#tokens x 16 rows; measured: the
     1000-copy tier stalled >30 min in full-corpus fingerprinting while
     the rep-only minhash twin finished in 39 s)."""
     tok = d.select("doc_id", F.explode(F.split("text", " ")).alias("w"))
@@ -779,10 +764,19 @@ def _word_jaccard(
     )
 
 
-def _collapsed_pair_edges(
+def _collapsed_parts(
     spark: SparkSession, sf_dir: str, docs: DataFrame | None = None
-) -> DataFrame:
-    """Connectivity-equivalent edge list with exact-duplicate mass collapsed.
+) -> tuple[DataFrame, DataFrame]:
+    """Connectivity-equivalent edges with exact-duplicate mass collapsed.
+
+    Returns ``(rep_pairs, star)``: the near-dup pair edges over content
+    REPRESENTATIVES, and the rep->copy star edges reconnecting exact
+    copies. Their union has the same components as the uncapped pair
+    graph. They stay un-unioned so :func:`component_labels` can
+    propagate labels over the rep graph ONLY and extend to copies with
+    one join instead of dragging the star edges through every
+    propagation round. Both come from the one collapse every dedup
+    query shares (:func:`_content_families`).
 
     ``docs``: run over an arbitrary (doc_id, text) frame instead of the
     documents table — the composed curation pipeline passes its
@@ -813,23 +807,6 @@ def _collapsed_pair_edges(
     dedup_exact shape) before the pair pipeline sees only distinct
     contents.
     """
-    rep_pairs, star = _collapsed_parts(spark, sf_dir, docs)
-    return rep_pairs.union(star)
-
-
-def _collapsed_parts(
-    spark: SparkSession, sf_dir: str, docs: DataFrame | None = None
-) -> tuple[DataFrame, DataFrame]:
-    """The two halves of :func:`_collapsed_pair_edges`, un-unioned.
-
-    Returns ``(rep_pairs, star)``: the near-dup pair edges over content
-    REPRESENTATIVES, and the rep->copy star edges reconnecting exact
-    copies. Split out so :func:`component_labels` can propagate labels
-    over the rep graph ONLY and extend to copies with one join instead
-    of dragging the star edges through every propagation round. Both
-    come from the one collapse every dedup query shares
-    (:func:`_content_families`).
-    """
     d = table(spark, sf_dir, "documents") if docs is None else docs
     fam, reps = _content_families(d)
     arr = _hset_arrays(reps).localCheckpoint(eager=True)
@@ -850,7 +827,8 @@ def component_labels(
     Exactly the labeling ``label_fn`` (default
     :func:`propagate_min_labels`; :func:`star_components` for the
     alternating-star builder — both share the (doc_id, lbl) = (node,
-    component-min) contract) produces over ``_collapsed_pair_edges``
+    component-min) contract) produces over the union of
+    :func:`_collapsed_parts`
     (lbl = min doc_id of the component, one row per graph NODE — docs
     in no edge are absent and consumers coalesce to doc_id), computed
     cheaper:
@@ -963,18 +941,14 @@ def _reach_ctes() -> str:
     comp AS (SELECT doc_id, min(lbl) AS lbl FROM reach GROUP BY doc_id)"""
 
 
-def propagate_min_labels(
-    sym: DataFrame,
-    max_rounds: int = 50,
-    checkpoint_every: int = 3,
-) -> DataFrame:
+def propagate_min_labels(sym: DataFrame, max_rounds: int = 50) -> DataFrame:
     """Min-label propagation to the exact fixpoint over a symmetric edge list.
 
     ``sym`` must contain both directions of every edge as (doc_a, doc_b).
     Returns (doc_id, lbl) with lbl = min node id of the component.
 
     Hardening for pathological graphs (long chains → rounds ~ diameter):
-    every ``checkpoint_every`` rounds the label frontier is eagerly
+    every third round the label frontier is eagerly
     ``localCheckpoint``'d so lineage stays bounded however many rounds
     run, and ``max_rounds`` is a loud-failure guard — an
     iteration-capped result silently presented as components would be a
@@ -1000,8 +974,8 @@ def propagate_min_labels(
     # Convergence via a potential function, not a new-vs-old join:
     # labels only ever DECREASE (new = min(old, propagated)) over a
     # fixed node set, so sum(lbl) strictly decreases iff any label
-    # changed — one tiny aggregate per round replaces the join+filter
-    # +count the r11 loop paid (a full extra shuffle per round).
+    # changed — one tiny aggregate per round instead of a join+filter
+    # +count (a full extra shuffle per round).
     # decimal(38,0): sum of n node ids can overflow int64 at corpus
     # scale and Spark's ANSI sum would throw mid-fixpoint.
     potential = F.sum(F.col("lbl").cast("decimal(38,0)")).alias("s")
@@ -1017,7 +991,7 @@ def propagate_min_labels(
             .groupBy("doc_id")
             .agg(F.min("lbl").alias("lbl"))
         )
-        if round_no % checkpoint_every == 0:
+        if round_no % 3 == 0:
             new_labels = new_labels.localCheckpoint(eager=True)
         else:
             new_labels = new_labels.cache()
@@ -1048,10 +1022,9 @@ def propagate_min_labels(
 def _rollup_labels(labels: DataFrame) -> DataFrame:
     """Roll a (doc_id, lbl) labeling up to one row per component.
 
-    One definition of the component-output discipline (r10 review: both
-    component builders carried a copy): numeric sort FIRST, then
-    stringify — a lexicographic sort of stringified ids disagrees with
-    the oracle's ORDER BY (the r3 red-row class).
+    One definition of the component-output discipline: numeric sort
+    FIRST, then stringify — a lexicographic sort of stringified ids
+    disagrees with the oracle's ORDER BY.
     """
     return labels.groupBy(F.col("lbl").alias("component")).agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -1100,10 +1073,10 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ``members`` is a ","-joined STRING, not array<long>: the external
     driver canonicalizes results with pandas ``sort_values``, which
-    cannot hash list cells (the r3 red row) — same flattening
-    discipline as agg_collect (operators/aggregates.py).
+    cannot hash list cells — same flattening discipline as agg_collect
+    (operators/aggregates.py).
 
-    Edges come from ``_collapsed_pair_edges`` — the uncapped pair graph
+    Edges come from ``_collapsed_parts`` — the uncapped pair graph
     with exact-duplicate mass collapsed to rep->copy stars; components
     (and hence this output) are provably identical to running over
     ``dedup_minhash_pairs`` directly, but the edge list stays linear in
@@ -1146,7 +1119,7 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     Sizes are a map-side-combined groupBy over the LABELED mass only
     (labels cover every node of every cluster, and label-clusters have
     >= 2 members, so label counts ARE cluster sizes — the corpus-sized
-    per-doc groupBy the r11 plan paid is redundant), joined back as a
+    per-doc groupBy is redundant), joined back as a
     plain equi-join on the component key (NOT a window — a count
     window would serialize each head cluster into one task, and the
     head cluster is exactly where dedup matters; the shuffle join gets
@@ -1277,7 +1250,7 @@ def dedup_against_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # other NULL docs. Without the coalesce, Spark's groupBy treats all
     # NULL hashes as ONE group (keeping min doc_id) while SQL equality
     # never matches NULL (keeping every one) — a latent builder/oracle
-    # divergence on any NULL-bearing fixture (r10 dedup review).
+    # divergence on any NULL-bearing fixture.
     h = F.coalesce(
         F.md5(fold_lower(F.trim(F.col("text")))),
         F.concat(F.lit("__null__"), F.col("doc_id").cast("string")),
@@ -1400,15 +1373,14 @@ def _lsh_index_table(spark: SparkSession, sf_dir: str) -> str:
     pure function of the immutable fixture, so re-invocation reuses the
     already-written table instead of (a) leaking one full bucketed copy
     per run and (b) dropping a fixed-name table out from under a prior
-    call's still-lazy DataFrame (ADVICE r7). The table name is derived
-    from the corpus path, so indexes for different sf_dirs coexist; a
+    call's still-lazy DataFrame. The table name is derived from the
+    corpus path, so indexes for different sf_dirs coexist; a
     REBUILT fixture (new mtime) rewrites in place — the one case where
     a prior handle was already invalid — after rmtree'ing the
     superseded copy, keeping at most one on-disk index per corpus per
     session.
     """
     import hashlib
-    import os
     import shutil
     import tempfile
 
@@ -1676,9 +1648,7 @@ def _minhash_eval_pairs(docs: DataFrame) -> DataFrame:
     )
 
 
-def star_components(
-    sym: DataFrame, max_rounds: int = 25, return_rounds: bool = False
-):
+def star_components(sym: DataFrame, max_rounds: int = 25) -> DataFrame:
     """Connected components via alternating large-star/small-star.
 
     ``sym`` must contain both directions of every edge as (doc_a, doc_b).
@@ -1707,7 +1677,7 @@ def star_components(
     edges = sym.filter(F.col("doc_a") != F.col("doc_b")).select(
         F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
     ).distinct().cache()
-    for round_no in range(1, max_rounds + 1):
+    for _ in range(max_rounds):
         # large-star over the symmetrized adjacency. No collect_set
         # anywhere: neighborhoods are never materialized per node (a
         # hub's adjacency would otherwise have to fit one task's
@@ -1755,7 +1725,7 @@ def star_components(
         edges.unpersist()
         edges = small
         if stable:
-            labels = (
+            return (
                 edges.select(F.col("u").alias("doc_id"),
                              F.col("v").alias("lbl"))
                 .union(
@@ -1765,7 +1735,6 @@ def star_components(
                 .groupBy("doc_id")
                 .agg(F.min("lbl").alias("lbl"))
             )
-            return (labels, round_no) if return_rounds else labels
     raise RuntimeError(
         f"star_components: no fixpoint after {max_rounds} rounds — "
         "raise max_rounds explicitly rather than trusting a truncated "
@@ -2436,8 +2405,8 @@ def _neardup_curate_oracle() -> str:
     base = _pairs_cte()
     # splice anchors must exist exactly once each, or the assembled SQL
     # silently drifts from the building blocks — fail at import instead.
-    # Explicit raise, not assert: the guard must survive ``python -O``
-    # (ADVICE r7), same discipline as _capped_oracle.
+    # Explicit raise, not assert: the guard must survive ``python -O``,
+    # same discipline as _capped_oracle.
     for anchor in (
         "FROM documents",
         "SELECT doc_a, doc_b,",
@@ -2503,7 +2472,7 @@ def _neardup_curate_oracle() -> str:
     hash to NEAR-dup — the chain GPT-3/LLaMA-class corpus reports
     actually describe: per-language p10..p90 length band, then MinHash
     LSH pair generation over the survivors with exact-copy mass
-    collapsed first (_collapsed_pair_edges over the filtered set — the
+    collapsed first (_collapsed_parts over the filtered set — the
     quality filter SHRINKS the pair problem before any pairwise work,
     which is why the stage order matters at 100 TB), min-label
     propagation to the exact component fixpoint (O(diameter) rounds,
@@ -2592,9 +2561,9 @@ def corpus_curate_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-dedup families over the canonicalized (not raw) text hash."""
     d = fan_out(table(spark, sf_dir, "documents"))
-    # ONE corpus scan builds the base + both perturbation variants
-    # (r12): per-row 3-struct explode with keep flags — the r11
-    # union-of-filters re-scanned the corpus per branch. Same row set;
+    # ONE corpus scan builds the base + both perturbation variants:
+    # per-row 3-struct explode with keep flags — a union of filters
+    # would re-scan the corpus per branch. Same row set;
     # downstream is a hash aggregation, so order is free.
     entry = F.explode(
         F.array(

@@ -278,10 +278,10 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 FRAME_SCHEMA = "doc_id bigint, frame_idx int, pixel int"
 
 
-def sample_frames(mm: DataFrame, every: int = 4, n_frames: int = 16) -> DataFrame:
-    """Frame-sampling stage: payload = n_frames 1-byte fake frames.
+def sample_frames(mm: DataFrame) -> DataFrame:
+    """Frame-sampling stage: payload = 16 1-byte fake frames.
 
-    Emits every ``every``-th frame as (doc_id, frame_idx, pixel) — the
+    Emits every 4th frame as (doc_id, frame_idx, pixel) — the
     1:n row explosion a real video sampler produces, with deterministic
     bytes so the output is SQL-checkable. A real ffmpeg seam would yield
     JPEG bytes per kept frame instead of one fake pixel.
@@ -293,7 +293,7 @@ def sample_frames(mm: DataFrame, every: int = 4, n_frames: int = 16) -> DataFram
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 if payload is None:  # no payload -> no frames
                     continue
-                for i in range(0, n_frames, every):
+                for i in range(0, 16, 4):
                     out_doc.append(doc_id)
                     out_idx.append(i)
                     out_px.append(payload[i])

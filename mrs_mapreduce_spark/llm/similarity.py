@@ -42,16 +42,15 @@ def sq_dist(a: str | Column, b: str | Column) -> Column:
     return F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x)
 
 
-def with_norm(df: DataFrame, vec_col: str = "embedding",
-              out: str = "nrm") -> DataFrame:
-    """Attach the vector's norm as a column.
+def with_norm(df: DataFrame) -> DataFrame:
+    """Attach the norm of ``embedding`` as column ``nrm``.
 
     Pairwise stages must precompute norms ONCE per vector (n rows) instead
     of inside the pair expression (n^2 evaluations) — measured 3x on
     dedup_embedding at sf0.1. sqrt of the same double on either engine is
     bit-identical, so oracles that spell the norm per pair still match.
     """
-    return df.withColumn(out, norm(vec_col))
+    return df.withColumn("nrm", norm("embedding"))
 
 
 def points(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -362,8 +361,9 @@ def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _srp_planes(n_planes: int = 8, dim: int = 64) -> list[list[float]]:
-    """Deterministic pseudo-random hyperplanes, identical in both engines.
+def _srp_planes(n_planes: int) -> list[list[float]]:
+    """Deterministic pseudo-random 64-dim hyperplanes, identical in both
+    engines.
 
     Generated by a fixed LCG and rounded to 3 decimals so the literal
     embedded in the Spark plan and in the oracle SQL parses to the exact
@@ -373,7 +373,7 @@ def _srp_planes(n_planes: int = 8, dim: int = 64) -> list[list[float]]:
     planes, x = [], 1
     for _ in range(n_planes):
         row = []
-        for _ in range(dim):
+        for _ in range(64):
             x = (1103515245 * x + 12345) % 2147483648
             row.append(round(x / 2147483648 * 2 - 1, 3))
         planes.append(row)
@@ -383,7 +383,7 @@ def _srp_planes(n_planes: int = 8, dim: int = 64) -> list[list[float]]:
 #: 12 planes from ONE LCG stream: rows 0..7 are the classic 8-bit SRP
 #: signature every LSH query keys on; rows 8..11 are E111's refinement
 #: bits. _srp_planes(12)[:8] == _srp_planes(8) by construction (the LCG
-#: runs row-by-row), asserted in tests — so there is exactly ONE source
+#: runs row-by-row) — so there is exactly ONE source
 #: of truth for the signature, never a second 8-plane copy that would
 #: have to be kept sign-threshold-identical by hand.
 _PLANES12 = _srp_planes(12)
@@ -1039,10 +1039,9 @@ def _pq_codes(sub: DataFrame, cb: DataFrame) -> DataFrame:
     )
 
 
-def _pq_lut(
-    sub: DataFrame, cb: DataFrame, n_queries: int | None = None
-) -> DataFrame:
-    """(l_q, l_m, l_k, lmicro): per-query ADC lookup table.
+def _pq_lut(sub: DataFrame, cb: DataFrame) -> DataFrame:
+    """(l_q, l_m, l_k, lmicro): ADC lookup table for the first ``_PQ_NQ``
+    vectors as queries.
 
     THE one definition of the query-side distance table — shared by
     similarity_pq_adc (flat ADC scan) and similarity_ivf_adc (cell-probe
@@ -1051,10 +1050,9 @@ def _pq_lut(
     the micro-unit int64 the scoring join sums so the aggregation is
     order-independent and oracle-exact.
     """
-    nq = _PQ_NQ if n_queries is None else n_queries
     lsq = sq_dist("sv", "cv")
     return (
-        sub.filter(F.col("vec_id") < nq)
+        sub.filter(F.col("vec_id") < _PQ_NQ)
         .join(F.broadcast(cb), F.col("m") == F.col("cb_m"))
         .select(
             F.col("vec_id").alias("l_q"),
@@ -1947,8 +1945,8 @@ def similarity_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _rp_signs(k: int = 8, d: int = 64) -> list[list[int]]:
-    """Deterministic ±1 random-projection matrix, PRF-derived.
+def _rp_signs() -> list[list[int]]:
+    """Deterministic 8 x 64 ±1 random-projection matrix, PRF-derived.
 
     Entry (j, i) is the parity of md5("rp:{j}:{i}") — reproducible in
     any engine/session with no RNG state (the same keyed-PRF discipline
@@ -1964,9 +1962,9 @@ def _rp_signs(k: int = 8, d: int = 64) -> list[list[int]]:
             % 2
             == 0
             else -1
-            for i in range(1, d + 1)
+            for i in range(1, 65)
         ]
-        for j in range(k)
+        for j in range(8)
     ]
 
 

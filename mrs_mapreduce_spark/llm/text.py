@@ -1824,7 +1824,7 @@ _QC_WEIGHT = (
 )
 
 
-def qc_sum_w(toks: str = "toks"):
+def qc_sum_w():
     """Integer classifier score: sum of PRF weights over word uni+bigrams.
 
     THE one definition of the E106 feature/score expression — the
@@ -1845,12 +1845,12 @@ def qc_sum_w(toks: str = "toks"):
         f"""
         coalesce(
         aggregate(
-          transform({toks}, w -> {uni_w}),
+          transform(toks, w -> {uni_w}),
           0L, (acc, x) -> acc + x)
         + aggregate(
           transform(
-            zip_with(slice({toks}, 1, greatest(size({toks}) - 1, 0)),
-                     slice({toks}, 2, greatest(size({toks}) - 1, 0)),
+            zip_with(slice(toks, 1, greatest(size(toks) - 1, 0)),
+                     slice(toks, 2, greatest(size(toks) - 1, 0)),
                      (a, b) -> concat(a, ' ', b)),
             f -> {big_w}),
           0L, (acc, x) -> acc + x),

@@ -911,8 +911,8 @@ def agg_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Welch's t for purchase-vs-view event values, one pass."""
     ev = table(spark, sf_dir, "events")
 
-    def arm(t: str, fn, col: str = "value"):
-        return fn(F.when(F.col("event_type") == t, F.col(col)))
+    def arm(t: str, fn):
+        return fn(F.when(F.col("event_type") == t, F.col("value")))
 
     s = ev.agg(
         F.count(arm("purchase", lambda c: c)).alias("n_a"),

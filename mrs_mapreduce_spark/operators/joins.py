@@ -51,7 +51,7 @@ def join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders.join(F.broadcast(cust), cust.c_custkey == orders.o_custkey)
         .join(li, li.l_orderkey == orders.o_orderkey)
         .groupBy("o_orderkey", "o_orderdate")
-        # exact int64 10^-4 units (the r11 money-sum discipline): the
+        # exact int64 10^-4 units (the money-sum discipline): the
         # top-10 SELECTION orders by this value, so a boundary flip
         # would change the returned row set, not just a cell
         .agg(pround(rev4() / 10000.0, 2).alias("rev"))
@@ -215,7 +215,7 @@ def join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     build-side predicate pushed below the join. The high-value filter is
     fixture-calibrated non-degeneracy (the original 'no orders at all'
     matched ZERO customers at every tier — a vacuous hash-of-nothing
-    witness, caught by the round-4 zero-row audit; smoke-guarded now).
+    witness, caught by the zero-row audit; smoke-guarded now).
     """,
 )
 def join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -344,8 +344,8 @@ def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     # correlated max(us) WHERE ts <= p.ts includes a same-microsecond
     # signup whatever its event_id, while a rows frame ordered by
     # (ts_ns, event_id) excluded same-ts signups sorting after the
-    # purchase (r11 joins review finding #1 — the tie class the
-    # forward/nearest siblings already handle). max == most-recent here
+    # purchase (the tie class the forward/nearest siblings already
+    # handle). max == most-recent here
     # because the carried value IS the timestamp (monotone in ts_ns);
     # a general payload would need max_by(struct(ts, payload)).
     w = (
@@ -398,45 +398,26 @@ def join_right(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    n_salts: int = 8,
-    how: str = "inner",
+    big: DataFrame, small: DataFrame, key: str, n_salts: int = 8
 ) -> DataFrame:
-    """Skew-buster join: salt the big side, replicate the small side.
+    """Skew-buster inner join: salt the big side, replicate the small side.
 
     For a hot key whose partition would straggle, append a deterministic
     salt (hash of the full row mod n_salts) to the big side's key and
-    join against the small side replicated n_salts times. Result is
-    row-identical to the plain join (tested) for the big-side-preserving
-    modes below, cost is n_salts x the small side. AQE's skew-join
-    handles moderate skew automatically; salting is for the pathological
-    single-key case (boilerplate documents, null keys, celebrity users).
-
-    ``how`` is restricted to modes where unmatched SMALL rows never
-    surface: a right/full outer would emit every unmatched small row
-    once PER REPLICA (n_salts copies), silently breaking the
-    row-identical contract (r11 joins review finding #3). Salt the
-    other side (swap the arguments) for a small-side-preserving join.
+    inner-join against the small side replicated n_salts times. Each big
+    row meets exactly one replica, so the result is row-identical to the
+    plain inner join (tested); cost is n_salts x the small side. AQE's
+    skew-join handles moderate skew automatically; salting is for the
+    pathological single-key case (boilerplate documents, null keys,
+    celebrity users).
     """
-    allowed = ("inner", "left", "left_outer", "leftouter", "semi",
-               "left_semi", "leftsemi", "anti", "left_anti", "leftanti",
-               "cross")
-    if how.lower() not in allowed:
-        raise ValueError(
-            f"salted_join(how={how!r}): replicated-small-side salting is "
-            f"only row-identical for {allowed}; a right/full outer emits "
-            "unmatched small rows once per replica — swap the sides "
-            "instead"
-        )
     salt = F.pmod(F.hash(*[F.col(c) for c in big.columns]), F.lit(n_salts))
     big_salted = big.withColumn("_salt", salt)
     salts = big.sparkSession.range(n_salts).select(
         F.col("id").cast("int").alias("_salt")
     )
     small_rep = small.crossJoin(F.broadcast(salts))
-    joined = big_salted.join(small_rep, [key, "_salt"], how)
+    joined = big_salted.join(small_rep, [key, "_salt"])
     return joined.drop("_salt")
 
 
@@ -616,9 +597,8 @@ def _nearest_signup(ev: DataFrame):
 
     THE one definition of the nearest-candidate computation —
     join_asof_nearest declares it and join_asof_tolerance gates it with
-    a tolerance; they previously carried verbatim copies (r11 joins
-    review finding #5), so a tie-discipline fix to one could silently
-    miss the other. Both oracles spell the identical composite
+    a tolerance; with two copies a tie-discipline fix to one could
+    silently miss the other. Both oracles spell the identical composite
     (ts, event_id) comparison this windowing implies.
     """
     from pyspark.sql.window import Window

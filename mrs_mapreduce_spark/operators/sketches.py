@@ -53,17 +53,16 @@ def words_of(docs: DataFrame) -> DataFrame:
     ).filter(F.col("w") != "")
 
 
-def cm_pairs(
-    df: DataFrame, key: str = "w", carry: tuple[str, ...] = ()
-) -> DataFrame:
-    """Fan each row to its d (seed, bucket) count-min coordinates.
+def cm_pairs(df: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
+    """Fan each row to the d (seed, bucket) count-min coordinates of its
+    ``w``.
 
     THE one definition of the sketch's hash-family fan-out (r10 review:
     it was pasted four times with drifting casts — build, two probe
     sites, and the shard-merge cells; a missed copy would silently
     break sketch/probe agreement). ``carry`` columns ride along.
     """
-    n = _n(key)
+    n = _n("w")
     return df.select(
         *carry,
         F.explode(
@@ -82,11 +81,10 @@ def cm_pairs(
     ).select(*carry, "sb.seed", "sb.bucket")
 
 
-def bloom_bits(
-    df: DataFrame, key: str = "w", carry: tuple[str, ...] = ()
-) -> DataFrame:
-    """Fan each row to its k bloom bit positions (shared build/probe)."""
-    n = _n(key)
+def bloom_bits(df: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
+    """Fan each row to the k bloom bit positions of its ``w`` (shared
+    build/probe)."""
+    n = _n("w")
     return df.select(
         *carry,
         F.explode(
@@ -101,9 +99,10 @@ def bloom_bits(
 
 
 def countmin_sketch(
-    occurrences: DataFrame, key: str = "w", weight: str | None = None
+    occurrences: DataFrame, weight: str | None = None
 ) -> DataFrame:
-    """(seed, bucket, cnt) — the full d x w count-min table as rows.
+    """(seed, bucket, cnt) — the full d x w count-min table of the ``w``
+    column as rows.
 
     One narrow projection fans each input row to d (seed, bucket) pairs;
     one partial-aggregated groupBy builds the table. The sketch is at
@@ -119,9 +118,7 @@ def countmin_sketch(
     """
     inc = F.col(weight) if weight else F.lit(1)
     pairs = cm_pairs(
-        occurrences.select(inc.alias("__inc"), F.col(key)),
-        key=key,
-        carry=("__inc",),
+        occurrences.select(inc.alias("__inc"), "w"), carry=("__inc",)
     )
     return pairs.groupBy("seed", "bucket").agg(
         F.sum("__inc").cast("long").alias("cnt")
@@ -399,10 +396,10 @@ def join_bloom_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HLL_M = 64
 
 
-def _hll_full_n(col: str = "w"):
-    """Unreduced 60-bit md5 integer (HLL keeps all bits; count-min's
-    ``_n`` reduces mod P — deliberately different)."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+def _hll_full_n():
+    """Unreduced 60-bit md5 integer of ``w`` (HLL keeps all bits;
+    count-min's ``_n`` reduces mod P — deliberately different)."""
+    return F.conv(F.substring(F.md5("w"), 1, 15), 16, 10).cast("long")
 
 
 def hll_rho(keys: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:

@@ -24,7 +24,6 @@ from .plans import executed_plan
 def duck_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
     """In-memory DuckDB with the fixture views registered (driver-style).
 
-    r10 gate review hardening:
     - ``TimeZone`` pinned UTC: Spark's session zone is pinned UTC
       (session.RUNTIME_CONFS), and _canon_value strips tzinfo — on a
       non-UTC host an unpinned DuckDB would localize TIMESTAMPTZ cells
@@ -61,9 +60,8 @@ def _canon_value(v):
         if math.isnan(v):
             return "NaN"
         # The driver hashes repr-level values: repr(-0.0) != repr(0.0),
-        # so negative zero MUST stay distinct here (the r8
-        # feature_standardize red row proved the old `v + 0.0` collapse
-        # made this sim blinder than the driver). A distinct marker —
+        # so negative zero MUST stay distinct here (collapsing it with
+        # `v + 0.0` made this sim blinder than the driver). A distinct marker —
         # not the float itself — because Python's -0.0 == 0.0 would
         # erase the difference in tuple comparison.
         if v == 0.0 and math.copysign(1.0, v) < 0.0:
@@ -73,7 +71,7 @@ def _canon_value(v):
         # aware values convert to UTC BEFORE the strip: Spark's session
         # zone is pinned UTC, so the naive twin of an instant is its
         # UTC wall clock — stripping a localized datetime on a non-UTC
-        # host would compare different wall clocks (r10 gate review)
+        # host would compare different wall clocks
         if v.tzinfo is not None:
             v = v.astimezone(_dt.timezone.utc)
         return v.replace(tzinfo=None).isoformat()
@@ -98,7 +96,7 @@ def _canon_rows(cols: list[str], rows: list[tuple]) -> list[tuple]:
 def _driver_shape_issues(side: str, cols: list[str], rows: list[tuple]) -> list[str]:
     """Run the driver's ACTUAL canonicalization op: pandas sort_values.
 
-    The r3 red row proved the external driver sorts results with
+    The external driver sorts results with
     ``pandas.DataFrame.sort_values`` over all columns, which raises
     ``TypeError: unhashable type`` on array/map cells — a failure mode the
     tuple-sort in ``_canon_rows`` cannot see. Reproduce it here so any
@@ -108,9 +106,9 @@ def _driver_shape_issues(side: str, cols: list[str], rows: list[tuple]) -> list[
     import numpy as np
     import pandas as pd
 
-    # direct cell walk first (ADVICE r4): pandas' multi-column
-    # sort_values factorizes (hashes) cells and raises TypeError on
-    # lists — but a SINGLE column sorts via argsort, where Python list
+    # direct cell walk first: pandas' multi-column sort_values
+    # factorizes (hashes) cells and raises TypeError on lists — but a
+    # SINGLE column sorts via argsort, where Python list
     # comparison succeeds, so a one-array-column result would slip
     # through the sort probe below. Flag container cells explicitly
     # instead of depending on pandas' sort implementation details
@@ -140,7 +138,7 @@ def _driver_shape_issues(side: str, cols: list[str], rows: list[tuple]) -> list[
 
 
 def _negzero_issues(side: str, cols: list[str], rows: list[tuple]) -> list[str]:
-    """Ban emitted ``-0.0`` registry-wide (the r8 feature_standardize class).
+    """Ban emitted ``-0.0`` registry-wide.
 
     A cell that rounds to negative zero means the value is
     indistinguishable from 0 at the declared precision while its SIGN is
@@ -161,7 +159,7 @@ def _negzero_issues(side: str, cols: list[str], rows: list[tuple]) -> list[str]:
             ):
                 issues.append(
                     f"{side} result column {cols[i]!r} emits -0.0 — "
-                    "sign-unstable zero (r8 feature_standardize class); "
+                    "sign-unstable zero; "
                     "emit a boolean witness or `+ 0.0` instead"
                 )
                 break
@@ -170,134 +168,11 @@ def _negzero_issues(side: str, cols: list[str], rows: list[tuple]) -> list[str]:
     return issues
 
 
-def _cells_close(ra: tuple, rb: tuple, tol: float) -> bool:
-    if len(ra) != len(rb):
-        return False
-    for x, y in zip(ra, rb):
-        if x == y:
-            continue
-        if (
-            isinstance(x, (int, float))
-            and isinstance(y, (int, float))
-            and not isinstance(x, bool)
-            and not isinstance(y, bool)
-            and abs(float(x) - float(y)) <= tol
-        ):
-            continue
-        return False
-    return True
-
-
-def _rows_close(a: list[tuple], b: list[tuple], tol: float) -> bool:
-    """Cell-wise comparison allowing ``tol`` absolute error on numerics.
-
-    Rows are matched on their NON-numeric cells first, then IN SORTED
-    ORDER within each group — a positional zip after repr-sorting would
-    misalign genuinely-close rows whenever a within-tolerance float
-    delta flips the canonical sort order between engines, and matching
-    each row against an UNSORTED pool greedily can reject sets that
-    have a valid pairing (r10 gate review: a=[1.0, 2.0] vs
-    b=[1.5, 0.5] at tol=0.5 — greedy pairs 1.0->1.5 then strands 2.0;
-    sorting both sides numerically makes in-order pairing the optimal
-    matching for interval tolerance on scalars).
-
-    Sorted in-order pairing is provably optimal only for a SINGLE
-    numeric column; with >= 2 numeric cells it can reject sets that
-    have a valid within-tolerance matching (ADVICE r10:
-    a=[(0,10),(1,0)] vs b=[(1,10),(0,0)] at tol=1 sorts a by (0,10)
-    first but b by (0,0) first). When in-order pairing fails on a
-    multi-numeric group, an exact maximum-bipartite-matching retry
-    (Kuhn's augmenting paths — polynomial, never the factorial blowup
-    naive backtracking risks on dense tolerance graphs; r12 advice)
-    decides the pairing — false negatives only shrink; a false green is
-    still impossible (every accepted pair passes _cells_close).
-    """
-    if len(a) != len(b):
-        return False
-
-    def key_of(r: tuple) -> tuple:
-        return tuple(
-            None
-            if isinstance(x, (int, float)) and not isinstance(x, bool)
-            else x
-            for x in r
-        )
-
-    def num_key(r: tuple) -> tuple:
-        return tuple(
-            float(x)
-            if isinstance(x, (int, float)) and not isinstance(x, bool)
-            else 0.0
-            for x in r
-        )
-
-    pool_a: dict[tuple, list[tuple]] = {}
-    pool_b: dict[tuple, list[tuple]] = {}
-    for r in a:
-        pool_a.setdefault(key_of(r), []).append(r)
-    for r in b:
-        pool_b.setdefault(key_of(r), []).append(r)
-    if set(pool_a) != set(pool_b):
-        return False
-    def perfect_matching(rows_a: list[tuple], rows_b: list[tuple]) -> bool:
-        """True iff a perfect within-tolerance pairing exists.
-
-        Kuhn's augmenting-path maximum matching over the _cells_close
-        adjacency: O(n * edges), so a dense 16x16 group costs ~4k edge
-        visits — the naive backtracking this replaces explored up to 16!
-        partial assignments when many pairs are close but no perfect
-        matching exists (it could effectively hang the gate on a FAILING
-        comparison; r12 advice).
-        """
-        n = len(rows_a)
-        adj = [
-            [j for j, rb in enumerate(rows_b) if _cells_close(ra, rb, tol)]
-            for ra in rows_a
-        ]
-        match_of_b: list[int | None] = [None] * n
-
-        def try_augment(i: int, seen: list[bool]) -> bool:
-            for j in adj[i]:
-                if not seen[j]:
-                    seen[j] = True
-                    if match_of_b[j] is None or try_augment(
-                        match_of_b[j], seen
-                    ):
-                        match_of_b[j] = i
-                        return True
-            return False
-
-        return all(try_augment(i, [False] * n) for i in range(n))
-
-    for k, rows_a in pool_a.items():
-        rows_b = pool_b[k]
-        if len(rows_a) != len(rows_b):
-            return False
-        sa = sorted(rows_a, key=num_key)
-        sb = sorted(rows_b, key=num_key)
-        if all(_cells_close(ra, rb, tol) for ra, rb in zip(sa, sb)):
-            continue
-        # in-order pairing failed: optimal only for one numeric column.
-        # Retry with exact bipartite matching; polynomial, so the cap is
-        # generous (128 rows ≈ 2M edge visits worst case) — beyond it
-        # keep the sorted verdict (false-negative-only, never a false
-        # green)
-        n_num = sum(
-            1
-            for x in sa[0]
-            if isinstance(x, (int, float)) and not isinstance(x, bool)
-        )
-        if n_num < 2 or len(sa) > 128 or not perfect_matching(sa, sb):
-            return False
-    return True
-
-
 #: DuckDB result type → Spark ``simpleString`` it must pair with for the
 #: driver's *type-sensitive* value hash to match. HUGEINT/UHUGEINT are
 #: deliberately absent: DuckDB's bare ``sum(int)`` is HUGEINT, which
 #: pandas/arrow widens to float64/object and the driver hash diverges even
-#: when the values are equal (the round-1 ``agg_pivot`` failure) — oracles
-#: must ``CAST(... AS BIGINT)`` instead.
+#: when the values are equal — oracles must ``CAST(... AS BIGINT)`` instead.
 _DUCK_TO_SPARK = {
     "BOOLEAN": "boolean",
     "TINYINT": "tinyint",
@@ -341,7 +216,7 @@ def _duck_type_to_spark(t) -> str:
 def _type_issues(schema: StructType, rel) -> list[str]:
     """Flag DuckDB↔Spark result-type pairs the driver's hash would split.
 
-    The driver's value hash is type-sensitive (ADVICE round 1): HUGEINT vs
+    The driver's value hash is type-sensitive: HUGEINT vs
     BIGINT hash-mismatches even with equal values. Compare the oracle's
     result types against the Spark schema by *hash kind* so a locally-green
     query predicts a driver-green query.
@@ -397,17 +272,13 @@ def compare(
     spark_df: DataFrame,
     con: duckdb.DuckDBPyConnection,
     sql: str,
-    float_tol: float = 0.0,
 ) -> CompareResult:
     """Run both sides and diff (count, column names, types, canonical values).
 
-    ``float_tol`` > 0 relaxes the value check: rows that differ only by
-    ≤ ``float_tol`` absolute error in numeric cells still pass. The default
-    0.0 mirrors the driver (exact hash); use a tolerance only for local
-    debugging of summation-order effects, never to declare a query.
+    Values compare exactly, as the driver's hash does.
     """
     rows = spark_df.collect()
-    return _compare_rows(name, spark_df.schema, rows, con, sql, float_tol)
+    return _compare_rows(name, spark_df.schema, rows, con, sql)
 
 
 def _compare_rows(
@@ -416,7 +287,6 @@ def _compare_rows(
     rows: list[Row],
     con: duckdb.DuckDBPyConnection,
     sql: str | None,
-    float_tol: float = 0.0,
 ) -> CompareResult:
     """:func:`compare` on Spark rows already collected."""
     if sql is None:
@@ -441,7 +311,7 @@ def _compare_rows(
     if not issues:
         cs = _canon_rows(s_cols, s_rows)
         cd = _canon_rows(d_cols, d_rows)
-        if cs != cd and not (float_tol > 0.0 and _rows_close(cs, cd, float_tol)):
+        if cs != cd:
             n_bad = sum(1 for a, b in zip(cs, cd) if a != b)
             issues.append(f"{n_bad}/{len(cs)} canonical rows differ")
             for a, b in zip(cs, cd):

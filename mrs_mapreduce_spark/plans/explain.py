@@ -5,11 +5,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def executed_plan(df: DataFrame, finalize: bool = False) -> str:
-    """The physical plan string; ``finalize`` executes first so AQE's
-    final plan (with codegen span markers ``*(n)``) is visible."""
-    if finalize:
-        df.collect()
+def executed_plan(df: DataFrame) -> str:
+    """The physical plan string (AQE's final plan once ``df`` has run)."""
     return df._jdf.queryExecution().executedPlan().toString()
 
 

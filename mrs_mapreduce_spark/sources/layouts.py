@@ -92,15 +92,13 @@ def zorder_key(cols: list[str]) -> Column:
     return reduce(lambda a, b: a.bitwiseOR(b), parts).alias("__zkey")
 
 
-def write_zordered(
-    df: DataFrame, path: str, cols: list[str], n_files: int = 16
-) -> None:
-    """Write ``df`` as parquet clustered by the z-order of ``cols``.
+def write_zordered(df: DataFrame, path: str, cols: list[str]) -> None:
+    """Write ``df`` as 16 parquet files clustered by the z-order of ``cols``.
 
     ``repartitionByRange`` on the z-key assigns contiguous z-ranges to
     files (range exchange = one shuffle, same cost class as any sorted
     write); ``sortWithinPartitions`` tightens row-group stats inside each
-    file. ``n_files`` scales with data volume — at 100 TB pick
+    file. The file count should scale with data volume — at 100 TB pick
     bytes/file ≈ 1 GB and let AQE coalesce stragglers.
     """
     bounds = _minmax_struct(df, cols)
@@ -109,7 +107,7 @@ def write_zordered(
     )
     keyed = scaled.withColumn("__zkey", zorder_key(cols))
     (
-        keyed.repartitionByRange(n_files, "__zkey")
+        keyed.repartitionByRange(16, "__zkey")
         .sortWithinPartitions("__zkey")
         .drop("__zkey", *[f"__z_{c}" for c in cols])
         .write.mode("overwrite")

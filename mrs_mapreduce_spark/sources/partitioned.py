@@ -9,10 +9,7 @@ co-located, shuffle-free joins.
 
 from __future__ import annotations
 
-import shutil
 import tempfile
-import uuid
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -71,39 +68,24 @@ def write_bucketed(
     bucket_cols: list[str],
     n_buckets: int = 8,
     sort_cols: list[str] | None = None,
-    location: str | None = None,
+    *,
+    location: str,
 ) -> None:
-    """Bucketed managed table: co-locates join/agg keys at write time.
+    """Bucketed external table at ``location``, a directory that does not
+    exist yet: co-locates join/agg keys at write time.
 
     Two tables bucketed identically on the join key sort-merge-join with
     ZERO exchange (asserted in tests) — the write-time analogue of the
     reference pre-partitioning datasets with the same parter so a
-    downstream reduce needs no re-shuffle.
+    downstream reduce needs no re-shuffle. Re-registering ``table_name``
+    at a new location leaves a handle on the old table readable: it pins
+    the old file listing, which stays on disk.
     """
     spark = df.sparkSession
     # the in-memory catalog forgets tables between sessions but their
-    # warehouse directories persist; drop the catalog entry (metadata
-    # only — the path option makes these EXTERNAL, so files survive)
+    # directories persist; drop the catalog entry (metadata only — the
+    # path option makes these EXTERNAL, so files survive)
     spark.sql(f"DROP TABLE IF EXISTS {table_name}")
-    if location is None:
-        # fresh unique directory per write, NEVER rmtree the previous
-        # one: a DataFrame handle from spark.table() pins the old file
-        # listing, and deleting those files in place fails the handle's
-        # next action with FileNotFoundException — the ADVICE-r7 class
-        # llm/dedup.py's _lsh_index_table memo exists to avoid (r10
-        # sources review). Old dirs leak into the tmp warehouse until
-        # the OS cleans it — bounded by session lifetime, and the only
-        # behavior where a rewrite can't break a live reader.
-        warehouse = spark.conf.get(
-            "spark.sql.warehouse.dir", "spark-warehouse"
-        )
-        location = str(
-            Path(warehouse.removeprefix("file:"))
-            / f"{table_name}_{uuid.uuid4().hex[:8]}"
-        )
-    elif Path(location).exists():
-        # explicit location = explicit caller contract: replace in place
-        shutil.rmtree(location)
     writer = (
         df.write.mode("overwrite")
         .option("path", location)

@@ -3,7 +3,7 @@
 dedup_components(_star) no longer materialize the full LSH pair list:
 exact copies are collapsed to one representative per distinct content
 before the pair pipeline, and copies reconnect via rep->copy star edges
-(llm/dedup.py::_collapsed_pair_edges). That is only sound if components
+(llm/dedup.py::_collapsed_parts). That is only sound if components
 over the collapsed graph EQUAL components over the uncapped pair graph —
 these tests pin the equality on corpora engineered to stress the three
 load-bearing claims:
@@ -23,7 +23,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from mrs_mapreduce_spark.llm.dedup import (
-    _collapsed_pair_edges,
     _collapsed_parts,
     _minhash_pairs,
     component_labels,
@@ -83,6 +82,11 @@ def _corpus_with_replicas() -> list[str | None]:
     return texts
 
 
+def _collapsed_edges(spark, sf: str):
+    rep_pairs, star = _collapsed_parts(spark, sf)
+    return rep_pairs.union(star)
+
+
 def _components_over(spark, edges) -> dict[int, int]:
     sym = edges.union(
         edges.select(
@@ -99,7 +103,7 @@ def test_collapsed_edges_match_uncapped_components(spark, tmp_path):
     truth = _components_over(
         spark, _minhash_pairs(spark, sf, cap=None).select("doc_a", "doc_b")
     )
-    collapsed = _components_over(spark, _collapsed_pair_edges(spark, sf))
+    collapsed = _components_over(spark, _collapsed_edges(spark, sf))
     assert collapsed == truth
     # the r12 shared path (propagation over reps only + star-copy join,
     # memoized) must produce the identical node->label map; fam_c's rep
@@ -125,7 +129,7 @@ def test_short_doc_copies_stay_isolated(spark, tmp_path):
         str(tmp_path / "sf"),
         ["hi there", "hi there", "hi there", "one", "one", None, None],
     )
-    edges = _collapsed_pair_edges(spark, sf)
+    edges = _collapsed_edges(spark, sf)
     assert edges.count() == 0  # no shingles anywhere => empty graph
     # NULL text (ids 5, 6) forms singleton families: no star edge, no label
     _, star = _collapsed_parts(spark, sf)

@@ -27,7 +27,7 @@ def test_partition_pruning(spark, sf_dir):
     assert back.count() == orders.filter(F.col("o_orderstatus") == "F").count()
 
 
-def test_bucketed_join_no_shuffle(spark, sf_dir):
+def test_bucketed_join_no_shuffle(spark, sf_dir, tmp_path):
     """Identically bucketed tables sort-merge-join without a shuffle.
 
     Broadcast is disabled for the check: at test scale AQE would broadcast
@@ -36,13 +36,17 @@ def test_bucketed_join_no_shuffle(spark, sf_dir):
     """
     orders = table(spark, sf_dir, "orders")
     cust = table(spark, sf_dir, "customer")
-    write_bucketed(orders, "b_orders", ["o_custkey"], 8, ["o_custkey"])
+    write_bucketed(
+        orders, "b_orders", ["o_custkey"], 8, ["o_custkey"],
+        location=str(tmp_path / "b_orders"),
+    )
     write_bucketed(
         cust.withColumnRenamed("c_custkey", "o_custkey"),
         "b_cust",
         ["o_custkey"],
         8,
         ["o_custkey"],
+        location=str(tmp_path / "b_cust"),
     )
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -169,7 +173,7 @@ def test_zorder_skips_on_every_clustered_dim(spark, sf_dir):
     orders = table(spark, sf_dir, "orders")
     base = tempfile.mkdtemp(prefix="mrs_zcmp_")
     z_path, lin_path = f"{base}/z", f"{base}/lin"
-    write_zordered(orders, z_path, ["o_custkey", "o_totalprice"], n_files=16)
+    write_zordered(orders, z_path, ["o_custkey", "o_totalprice"])
     (
         orders.repartitionByRange(16, "o_custkey")
         .sortWithinPartitions("o_custkey")
@@ -417,18 +421,24 @@ def test_zorder_nulls_go_to_bucket_zero(spark):
 
 
 def test_write_bucketed_rewrite_keeps_live_handle_valid(spark, tmp_path):
-    """r10 sources review: a rewrite of the same table name must not
-    delete the files under a previously obtained spark.table() handle
-    (the ADVICE-r7 FileNotFoundException class)."""
+    """Re-registering a table name at a new location must not delete
+    the files under a previously obtained spark.table() handle (which
+    would fail its next action with FileNotFoundException)."""
     from mrs_mapreduce_spark.sources.partitioned import write_bucketed
 
     df1 = spark.range(0, 100).withColumnRenamed("id", "k")
-    write_bucketed(df1, "t_live_handle", ["k"], n_buckets=2)
+    write_bucketed(
+        df1, "t_live_handle", ["k"], n_buckets=2,
+        location=str(tmp_path / "v1"),
+    )
     handle = spark.table("t_live_handle")
     assert handle.count() == 100
 
     df2 = spark.range(0, 50).withColumnRenamed("id", "k")
-    write_bucketed(df2, "t_live_handle", ["k"], n_buckets=2)
+    write_bucketed(
+        df2, "t_live_handle", ["k"], n_buckets=2,
+        location=str(tmp_path / "v2"),
+    )
     # the old handle still reads the OLD files (not FileNotFoundException)
     assert handle.count() == 100
     # and the catalog serves the new data

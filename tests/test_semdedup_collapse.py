@@ -32,7 +32,7 @@ from pyspark.sql import types as T
 from mrs_mapreduce_spark.llm.similarity import (
     _semdedup_victims,
     _semdedup_victims_pairwise,
-    with_norm,
+    norm,
 )
 
 _SCHEMA = T.StructType(
@@ -72,7 +72,7 @@ def _rows():
 
 def _assigned(spark, rows):
     # semdedup_cells output shape: (vec_id, cid, a, nrm)
-    return with_norm(spark.createDataFrame(rows, _SCHEMA), "a", "nrm")
+    return spark.createDataFrame(rows, _SCHEMA).withColumn("nrm", norm("a"))
 
 
 def _collect(df):
